@@ -4053,9 +4053,11 @@ u AS (
 ),
 hrefed AS (
   SELECT url,
-    regexp_extract(regexp_extract(html, '(?i)<link\b[^>]*\brel\s*=\s*["'']?canonical\b[^>]*/?>'),
-                   '(?i)\bhref\s*=\s*["'']([^"'']*)["'']', 1) AS href
-  FROM u
+    regexp_extract(tag, '(?i)\bhref\s*=\s*(?:"([^"]*)"|''([^'']*)'')', 1)
+      || regexp_extract(tag, '(?i)\bhref\s*=\s*(?:"([^"]*)"|''([^'']*)'')', 2) AS href
+  FROM (SELECT url,
+          regexp_extract(html, '(?i)<link\b[^>]*\brel\s*=\s*["'']?canonical\b[^>]*/?>') AS tag
+        FROM u)
 ),
 c AS (
   SELECT url,
@@ -4422,7 +4424,8 @@ tags AS (
 e0 AS (
   SELECT url,
     lower(regexp_extract(tag, '(?i)\bhreflang\s*=\s*["'']?([a-zA-Z0-9-]+)', 1)) AS lang,
-    regexp_extract(tag, '(?i)\bhref\s*=\s*["'']([^"'']*)["'']', 1) AS alt_url
+    regexp_extract(tag, '(?i)\bhref\s*=\s*(?:"([^"]*)"|''([^'']*)'')', 1)
+      || regexp_extract(tag, '(?i)\bhref\s*=\s*(?:"([^"]*)"|''([^'']*)'')', 2) AS alt_url
   FROM tags
 ),
 e AS (

@@ -150,6 +150,8 @@ def test_canonical_clusters_collapse_and_flags(spark):
         ("https://c.ex/p/1", '<link rel="canonical" href="/p/1">'),
         # dot-relative href: conservative self-canonical fallback
         ("https://a.ex/p/4", '<link rel="canonical" href="../p/4">'),
+        # apostrophe inside a double-quoted href is part of the URL
+        ("https://a.ex/p/5", '<link rel="canonical" href="https://a.ex/o\'brien">'),
     ]
     df = spark.createDataFrame(rows, "url string, html string")
     got = {r["canonical"]: (r["n_members"], r["representative"], r["n_cross_host"])
@@ -159,7 +161,8 @@ def test_canonical_clusters_collapse_and_flags(spark):
     assert got["https://a.ex/p/3"] == (1, "https://a.ex/p/3", 0)
     assert got["https://c.ex/p/1"] == (1, "https://c.ex/p/1", 0)  # resolved per-origin
     assert got["https://a.ex/p/4"] == (1, "https://a.ex/p/4", 0)  # dot-relative -> self
-    assert len(got) == 5
+    assert got["https://a.ex/o'brien"] == (1, "https://a.ex/p/5", 0)
+    assert len(got) == 6
 
 
 def test_canonical_case_and_quote_styles(spark):

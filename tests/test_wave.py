@@ -21,15 +21,18 @@ def inputs(spark, corpus_dir):
     return pages, seeds, robots, politeness
 
 
-@pytest.fixture(scope="module")
-def oracle_result(inputs):
-    pages, seeds, robots, politeness = inputs
+def _oracle(pages, seeds, robots, politeness, max_waves):
     pages_d = {r.url: (bytes(r.html).decode("utf-8") if r.html is not None else None) for r in
                pages.select("url", "html").collect()}
     seeds_l = [r.url for r in seeds.select("url").collect()]
     robots_d = {r.host: (list(r.disallow_prefixes), int(r.crawl_delay_ms)) for r in robots.collect()}
     pol_d = {r.host: (int(r.max_pages_per_wave), int(r.min_delay_ms)) for r in politeness.collect()}
-    return crawl_oracle(pages_d, seeds_l, robots_d, pol_d, max_waves=MAX_WAVES)
+    return crawl_oracle(pages_d, seeds_l, robots_d, pol_d, max_waves=max_waves)
+
+
+@pytest.fixture(scope="module")
+def oracle_result(inputs):
+    return _oracle(*inputs, max_waves=MAX_WAVES)
 
 
 @pytest.fixture(scope="module")
@@ -277,3 +280,69 @@ def test_url_hygiene_drops_before_scheduling(spark, inputs, oracle_result, tmp_p
     seen = {r.url for r in spark.read.parquet(paths["seen"]).collect()}
     assert "https://bad.ex/casino/promo" not in seen
     assert "https://bad.ex/a/b/c/d/e/f/g/h/i/leaf" not in seen
+
+
+def test_missing_pages_match_oracle(spark, inputs, tmp_path_factory):
+    """Seeds absent from the corpus (on a known host and on an unknown one)
+    take the misses side of the fetch union into the batch-sized extraction
+    stage: same order and seen set as the oracle, fetch_status='missing'."""
+    pages, seeds, robots, politeness = inputs
+    host = robots.first().host
+    absent = [f"https://{host}/ad/absent-1", f"https://{host}/ad/absent-2", "https://nowhere.example/x"]
+    seeds_m = seeds.select("url").unionByName(spark.createDataFrame([(u,) for u in absent], "url string"))
+    want_order, want_seen, _ = _oracle(pages, seeds_m, robots, politeness, max_waves=2)
+    assert set(absent) <= set(want_seen)
+
+    ckpt = str(tmp_path_factory.mktemp("ckpt_missing"))
+    paths = run_crawl(spark, pages, seeds_m, robots, politeness, ckpt, CrawlConfig(max_waves=2))
+    got_order = {(r.url, r.host, r.wave, r.rank) for r in spark.read.parquet(paths["order"]).collect()}
+    assert got_order == set(want_order)
+    got_seen = {r.url: r.wave for r in spark.read.parquet(paths["seen"]).collect()}
+    assert got_seen == want_seen
+    status = {r.url: r.fetch_status for r in spark.read.parquet(paths["results"])
+              .filter(F.col("url").isin(absent)).select("url", "fetch_status").collect()}
+    assert status == dict.fromkeys(absent, "missing")
+
+
+def test_run_crawl_restores_session_on_error(spark, inputs, tmp_path_factory, monkeypatch):
+    """A wave that raises leaves the session's scan-split and AQE-coalescing
+    confs as they were before run_crawl, and its schedule cache released."""
+    import webscraper_spark.plans.wave as wave_mod
+
+    keys = (
+        "spark.sql.files.maxPartitionBytes",
+        "spark.sql.files.openCostInBytes",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+    )
+    prev_coalesce = spark.conf.get(keys[2])
+    spark.conf.set(keys[2], "false")  # the crawl turns it on; it must come back off
+    try:
+        before = {k: spark.conf.get(k) for k in keys}
+        cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+        def boom(*_a, **_k):
+            raise RuntimeError("injected mid-wave failure")
+
+        monkeypatch.setattr(wave_mod, "expand_outlinks", boom)
+        pages, seeds, robots, politeness = inputs
+        ckpt = str(tmp_path_factory.mktemp("ckpt_raise"))
+        with pytest.raises(RuntimeError, match="injected"):
+            run_crawl(spark, pages, seeds, robots, politeness, ckpt, CrawlConfig(max_waves=2))
+        assert {k: spark.conf.get(k) for k in keys} == before
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
+    finally:
+        spark.conf.set(keys[2], prev_coalesce)
+
+
+def test_extract_partitions_sizing():
+    """max(slots, ceil(rows / rows_per_task)), slots = parallelism // task.cpus."""
+    from webscraper_spark.plans.wave import extract_partitions
+
+    per_task = 2 * 1024  # two 1024-row Arrow batches
+    assert extract_partitions(0, 4, "2", 1024) == 2  # empty batch: one task per slot
+    assert extract_partitions(per_task - 1, 4, "2", 1024) == 2  # under one task's rows
+    assert extract_partitions(2 * per_task + 1, 4, "2", 1024) == 3  # just past the slots
+    assert extract_partitions(100_000, 4, "2", 1024) == 49  # many rows: ceil(100000 / 2048)
+    assert extract_partitions(0, 8, None, 1024) == 8  # task.cpus unset = 1
+    assert extract_partitions(0, 8, "2", 1024) == 4  # task.cpus=2 halves the slots
+    assert extract_partitions(0, 1, "2", 1024) == 1  # never below one partition

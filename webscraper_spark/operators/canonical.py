@@ -36,8 +36,16 @@ from pyspark.sql import functions as F
 # lowercasing the document the way charset.py can).  RE2-safe, so the
 # DuckDB oracle replays both regexes verbatim.
 CANON_TAG = r"""(?i)<link\b[^>]*\brel\s*=\s*["']?canonical\b[^>]*/?>"""
-HREF_IN_TAG = r"""(?i)\bhref\s*=\s*["']([^"']*)["']"""
+# The closing quote matches the opening one, so a double-quoted href keeps
+# an apostrophe (/o'brien) and vice versa; exactly one group participates.
+HREF_IN_TAG = r"""(?i)\bhref\s*=\s*(?:"([^"]*)"|'([^']*)')"""
 _HOST = r"^[a-z]+://([^/:?#]+)"
+
+
+def href_in_tag(tag: Column) -> Column:
+    """The tag's quoted href value: the two quote-style groups coalesced
+    (a non-participating group extracts as '')."""
+    return F.concat(F.regexp_extract(tag, HREF_IN_TAG, 1), F.regexp_extract(tag, HREF_IN_TAG, 2))
 
 
 def canonical_of(url: Column, html: Column) -> Column:
@@ -50,7 +58,7 @@ def canonical_of(url: Column, html: Column) -> Column:
     Non-absolute, non-root-relative hrefs (dot-relative, garbage) fall
     back to self-canonical — the conservative read for a dedup key."""
     tag = F.regexp_extract(html, CANON_TAG, 0)
-    href = F.regexp_extract(tag, HREF_IN_TAG, 1)
+    href = href_in_tag(tag)
     origin = F.regexp_extract(url, r"^([a-z]+://[^/?#]+)", 1)
     return (
         F.when(href.rlike(r"^[a-z]+://"), href)

@@ -29,15 +29,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from webscraper_spark.operators.canonical import href_in_tag
+
 # Two-step matching (tag first, attributes second — the canonical.py
 # pattern) so attribute ORDER is free; (?i) + ["']? makes case and quote
-# style free too.  Both regexes are RE2-safe so the DuckDB oracle replays
-# them verbatim.  `\brel\s*=\s*["']?alternate` also matches
+# style free too.  The regexes (href: canonical.py's quote-matched
+# HREF_IN_TAG) are RE2-safe so the DuckDB oracle replays them verbatim.  `\brel\s*=\s*["']?alternate` also matches
 # rel="alternate stylesheet" tags — those carry no hreflang attribute and
 # are dropped by the lang!='' filter below.
 LINK_ALT_TAG = r"""(?i)<link\b[^>]*\brel\s*=\s*["']?alternate\b[^>]*>"""
 LANG_IN_TAG = r"""(?i)\bhreflang\s*=\s*["']?([a-zA-Z0-9-]+)"""
-HREF_IN_TAG = r"""(?i)\bhref\s*=\s*["']([^"']*)["']"""
 
 
 def hreflang_edges(
@@ -57,7 +58,7 @@ def hreflang_edges(
     return t.select(
         "url",
         F.lower(F.regexp_extract("tag", LANG_IN_TAG, 1)).alias("lang"),
-        F.regexp_extract("tag", HREF_IN_TAG, 1).alias("alt_url"),
+        href_in_tag(F.col("tag")).alias("alt_url"),
     ).filter((F.col("lang") != "") & (F.col("alt_url") != ""))
 
 

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from webscraper_spark.operators.robots import DEFAULT_DELAY_MS, DEFAULT_MAX_PAGES, robots_blocked
+
 WAVE_EPOCH_MS = 10_000_000  # simulated ms between wave starts
 
 
@@ -32,38 +34,38 @@ def rank_candidates(cand: DataFrame) -> DataFrame:
     return cand.withColumn("rank", F.row_number().over(w))
 
 
-def schedule_ranked(cand: DataFrame, budgets: DataFrame, wave: int) -> DataFrame:
-    """Rank + budget-gate + simulated clock in ONE relation: in_budget marks
-    the fetch batch; over-budget rows keep their discovery metadata and stay
-    in the frontier. One output -> one materialization per wave."""
-    # Hosts absent from the budgets table (discovered mid-crawl, after
-    # resolve_budgets ran) inherit the politeness '*' defaults, carried as
-    # the budgets row with host='*'; the literal (40, 1000) fires only when
-    # no '*' row exists at all (hand-built budgets in tests).
-    # Collapse '*' to exactly one row defensively: resolve_budgets emits one,
-    # but hand-built budgets tables could carry duplicates, and the star row
-    # cross-joins every candidate (a dup would silently duplicate the batch).
-    star = (
-        budgets.filter(F.col("host") == "*")
-        .groupBy()
-        .agg(
-            F.min("max_pages").alias("star_max"),
-            F.min("delay_ms").alias("star_delay"),
+def schedule_ranked(
+    cand: DataFrame, policy: DataFrame, wave: int, defaults: tuple[int, int] | None = None
+) -> DataFrame:
+    """Robots filter + rank + budget gate + simulated clock in ONE relation,
+    over ONE broadcast join of the host-policy table (host,
+    disallow_prefixes, max_pages, delay_ms) from resolve_budgets or
+    resolve_host_policy. in_budget marks the fetch batch; over-budget rows
+    keep their discovery metadata and stay in the frontier. One output ->
+    one materialization per wave.
+
+    defaults: the politeness '*' (max_pages, delay_ms), applied as literals
+    to hosts absent from the table (discovered mid-crawl, after the policy
+    was resolved). When omitted they are read from the table's '*' row —
+    one small job, so the crawl passes them in."""
+    if defaults is None:
+        star = policy.filter(F.col("host") == "*").groupBy().agg(F.min("max_pages"), F.min("delay_ms")).first()
+        defaults = (
+            DEFAULT_MAX_PAGES if star[0] is None else star[0],
+            DEFAULT_DELAY_MS if star[1] is None else star[1],
         )
-        .withColumn("_k", F.lit(1))
+    max_pages, delay_ms = defaults
+    rules = policy.filter(F.col("host") != "*")
+    allowed = (
+        cand.join(F.broadcast(rules), "host", "left")
+        .filter(~robots_blocked(F.col("url"), F.col("disallow_prefixes")))
+        .drop("disallow_prefixes")
     )
     ranked = (
-        rank_candidates(cand)
-        .join(F.broadcast(budgets.filter(F.col("host") != "*")), "host", "left")
-        .withColumn("_k", F.lit(1))
-        .join(F.broadcast(star), "_k", "left")
-        .drop("_k")
+        rank_candidates(allowed)
+        .withColumn("max_pages", F.coalesce(F.col("max_pages"), F.lit(max_pages)))
+        .withColumn("delay_ms", F.coalesce(F.col("delay_ms"), F.lit(delay_ms)))
     )
-    ranked = ranked.withColumn(
-        "max_pages", F.coalesce(F.col("max_pages"), F.col("star_max"), F.lit(40))
-    ).withColumn(
-        "delay_ms", F.coalesce(F.col("delay_ms"), F.col("star_delay"), F.lit(1000))
-    ).drop("star_max", "star_delay")
     return ranked.withColumn("in_budget", F.col("rank") <= F.col("max_pages")).withColumn(
         "sched_ms",
         F.when(
@@ -71,11 +73,3 @@ def schedule_ranked(cand: DataFrame, budgets: DataFrame, wave: int) -> DataFrame
             F.lit(wave).cast("long") * WAVE_EPOCH_MS + (F.col("rank") - 1).cast("long") * F.col("delay_ms"),
         ),
     )
-
-
-def schedule_wave(cand: DataFrame, budgets: DataFrame, wave: int) -> tuple[DataFrame, DataFrame]:
-    """(batch, deferred) split view over schedule_ranked."""
-    ranked = schedule_ranked(cand, budgets, wave)
-    batch = ranked.filter(F.col("in_budget"))
-    deferred = ranked.filter(~F.col("in_budget")).select("url", "host", "depth", "disc_wave", "disc_pos")
-    return batch, deferred

@@ -4,12 +4,20 @@ Each wave is one DataFrame job (north_rule: "each crawl wave is a DataFrame
 job"), mirroring the reference's page-batch loop
 (/root/reference/app/controllers/cars_controller.rb:140-337) as batch waves:
 
+  once per crawl:
+    host policy = robots rules + budgets + delays per host, resolved on the
+    driver; the politeness '*' defaults become literals      (ST1, ST6)
+
   wave w:
     1. candidates = frontier ANTI-JOIN seen            (J1, bloom-assisted)
-    2. robots filter                                   (ST6)
-    3. per-host rank + budget gate + simulated clock   (W1-W4, ST1)
+    2. ONE broadcast join of the host policy: robots filter, then
+       per-host rank, then budget gate + simulated clock  (ST6, W1-W4, ST1)
+    3. barrier: one aggregate over the persisted schedule materializes it
+       and returns the batch row count
     4. fetch = batch LEFT JOIN pages on canonical url  (S2 — sandbox fetch)
-    5. extract fields/outlinks, quarantine errors      (P1/P2/P5, F1-F19)
+    5. extract fields/outlinks, quarantine errors      (P1/P2/P5, F1-F19),
+       in a stage sized to the batch: max(slots, ceil(rows / rows_per_task))
+       partitions, not one task per corpus scan split
     6. new frontier = outlinks canonicalized, deduped, minus seen  (S3-S5)
     7. checkpoint: frontier/seen-delta/order/metrics parquet + manifest
        -> any wave is resumable (ST3/ST5)
@@ -39,7 +47,7 @@ from pyspark.sql import functions as F
 from webscraper_spark.functions.canon import canonicalize_url, url_hash, url_host
 from webscraper_spark.functions.extract import extracted_text, listing_text
 from webscraper_spark.functions.extract_pandas import with_extraction_arrow
-from webscraper_spark.operators.robots import apply_robots, resolve_budgets
+from webscraper_spark.operators.robots import resolve_host_policy
 from webscraper_spark.operators.schedule import schedule_ranked
 from webscraper_spark.operators.seen import anti_join_seen, build_bloom_table
 
@@ -141,13 +149,7 @@ def tune_scan_splits(spark: SparkSession, source: DataFrame) -> dict[str, str] |
     if total <= 0:
         return
     cores = spark.sparkContext.defaultParallelism
-    # Splits per core for the fetch+extract stage (scan→join→UDF→write is
-    # one fused stage, so scan splits bound its task concurrency). Every
-    # UDF task occupies TWO threads — a JVM side and a Python worker — so
-    # <1.0 values deliberately under-subscribe the advertised core count
-    # (WS_SPLITS_PER_CORE, default 2).
-    spc = float(os.environ.get("WS_SPLITS_PER_CORE", "1"))
-    mpb = min(max(int(total / max(cores * spc, 1)), 1 << 20), 128 << 20)
+    mpb = min(max(int(total / max(cores, 1)), 1 << 20), 128 << 20)
     # Return the prior values so the caller can restore them: these are
     # session-global confs sized to ONE corpus, and leaking 1MB splits into
     # later unrelated scans in the same session explodes their task counts.
@@ -156,6 +158,24 @@ def tune_scan_splits(spark: SparkSession, source: DataFrame) -> dict[str, str] |
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(mpb))
     spark.conf.set("spark.sql.files.openCostInBytes", str(max(min(mpb // 8, 4 << 20), 64 << 10)))
     return prev
+
+
+# Rows one extraction task takes: two Arrow batches of the session's
+# spark.sql.execution.arrow.maxRecordsPerBatch.
+ARROW_BATCHES_PER_TASK = 2
+
+
+def extract_partitions(batch_rows: int, parallelism: int, task_cpus: str | None, arrow_batch: int) -> int:
+    """Partitions of one wave's fetch+extract stage: max(slots,
+    ceil(batch_rows / rows_per_task)), where slots = parallelism //
+    spark.task.cpus (None = unset = 1) is how many tasks run at once.
+
+    Each task of that stage pays a fixed Python-worker cost (~0.33s on a
+    4-core host) whatever its row count, so a small batch runs in one wave
+    of tasks, and a large one in tasks of a few Arrow batches each."""
+    slots = max(parallelism // int(task_cpus or 1), 1)
+    rows_per_task = ARROW_BATCHES_PER_TASK * arrow_batch
+    return max(slots, -(-batch_rows // rows_per_task))
 
 
 def _wave_dir(ckpt_dir: str, wave: int) -> str:
@@ -287,7 +307,8 @@ def run_crawl(
     resume: bool = False,
 ) -> dict[str, str]:
     """Run the crawl to frontier exhaustion (or max_waves). Returns paths of
-    the accumulated order/seen/results/metrics tables."""
+    the accumulated order/seen/results/metrics tables. The session confs the
+    crawl tunes are restored on return, also when a wave raises."""
     cfg = config or CrawlConfig()
     os.makedirs(ckpt_dir, exist_ok=True)
 
@@ -311,31 +332,19 @@ def run_crawl(
         n_frontier = frontier.count()  # seed-table-sized job, milliseconds
         seen = spark.createDataFrame([], "url_hash long, url string, wave int")
 
-    hosts = pages.sparkSession.createDataFrame(
-        [], "host string"
-    )  # budgets resolved lazily from robots ∪ politeness hosts
-    all_hosts = (
-        robots.select("host").unionByName(politeness.filter(F.col("host") != "*").select("host")).distinct()
+    # robots rules + budgets + delays of every known host, resolved ONCE per
+    # crawl into a driver-local table; its '*' defaults become literals.
+    policy, policy_defaults = resolve_host_policy(robots, politeness)
+    # extract_partitions' session inputs: parallelism, task.cpus, Arrow batch
+    sc = spark.sparkContext
+    stage_conf = (
+        sc.defaultParallelism,
+        sc.getConf().get("spark.task.cpus"),
+        int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
     )
-    budgets = resolve_budgets(all_hosts, robots, politeness)
-    budgets = budgets.cache()
-    _ = hosts
 
     pages_slim = pages  # full table; Catalyst prunes columns per stage
-    prev_splits = tune_scan_splits(spark, pages)
-
     debug = os.environ.get("WS_DEBUG_TIMING", "0") == "1"
-
-    # AQE partition coalescing inside the wave loop: round 1 disabled it
-    # because the outlink-expansion shuffles were byte-small but
-    # compute-dense (regex canonicalization ran post-shuffle) and collapsed
-    # to 1-2 partitions. Canonicalization has since moved INTO the
-    # extraction UDF (pre-shuffle), so the post-shuffle work is cheap and
-    # coalescing now just removes hundreds of tiny-task dispatches per wave
-    # (WS_WAVE_COALESCE=0 restores the round-1 behaviour for A/B).
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev_coalesce = spark.conf.get(coalesce_key, "true")
-    spark.conf.set(coalesce_key, "false" if os.environ.get("WS_WAVE_COALESCE", "1") == "0" else "true")
 
     def _tick(label: str, t0: float) -> float:
         t1 = time.time()
@@ -343,157 +352,178 @@ def run_crawl(
             print(f"    [wave timing] {label}: {t1 - t0:.2f}s", file=sys.stderr)
         return t1
 
-    for wave in range(start_wave, cfg.max_waves):
-        # Empty frontier = crawl done, known from parquet footers (or the
-        # seed count) with ZERO Spark jobs — the former explicit
-        # count-the-schedule job cost a full per-wave driver barrier.
-        if n_frontier == 0:
-            break
-        wdir = _wave_dir(ckpt_dir, wave)
-        os.makedirs(wdir, exist_ok=True)
-        tw = time.time()
+    # Session-global confs sized to this crawl, restored in `finally`: the
+    # scan splits (tune_scan_splits) and AQE partition coalescing inside the
+    # wave loop. Round 1 disabled coalescing because the outlink-expansion
+    # shuffles were byte-small but compute-dense (regex canonicalization ran
+    # post-shuffle) and collapsed to 1-2 partitions. Canonicalization has
+    # since moved INTO the extraction UDF (pre-shuffle), so the post-shuffle
+    # work is cheap and coalescing just removes hundreds of tiny-task
+    # dispatches per wave.
+    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev_conf = {coalesce_key: spark.conf.get(coalesce_key, "true")}
+    sched = None
+    try:
+        prev_conf.update(tune_scan_splits(spark, pages) or {})
+        spark.conf.set(coalesce_key, "true")
 
-        # 1. candidates minus seen (bloom-assisted when configured)
-        bloom = build_bloom_table(seen, cfg.n_buckets) if cfg.use_bloom else None
-        cand = anti_join_seen(frontier, seen, bloom, cfg.n_buckets)
+        for wave in range(start_wave, cfg.max_waves):
+            # Empty frontier = crawl done, known from parquet footers (or the
+            # seed count) with ZERO Spark jobs.
+            if n_frontier == 0:
+                break
+            wdir = _wave_dir(ckpt_dir, wave)
+            os.makedirs(wdir, exist_ok=True)
+            tw = time.time()
 
-        # 2. robots
-        cand = apply_robots(cand, robots)
+            # 1. candidates minus seen (bloom-assisted when configured)
+            bloom = build_bloom_table(seen, cfg.n_buckets) if cfg.use_bloom else None
+            cand = anti_join_seen(frontier, seen, bloom, cfg.n_buckets)
 
-        # 2b. optional URL hygiene (codegen-only; see CrawlConfig). The
-        # frontier `depth` travels as a temporary rename around
-        # url_filter's same-named path-depth feature column.
-        if cfg.url_hygiene:
-            from webscraper_spark.operators.urlfilter import url_filter
+            # 1b. optional URL hygiene (codegen-only; see CrawlConfig). The
+            # frontier `depth` travels as a temporary rename around
+            # url_filter's same-named path-depth feature column.
+            if cfg.url_hygiene:
+                from webscraper_spark.operators.urlfilter import url_filter
 
-            cand = (
-                url_filter(cand.withColumnRenamed("depth", "_fdepth"))
-                .filter(F.col("verdict").startswith("keep"))
-                .select("url", "host", F.col("_fdepth").alias("depth"), "disc_wave", "disc_pos")
+                cand = (
+                    url_filter(cand.withColumnRenamed("depth", "_fdepth"))
+                    .filter(F.col("verdict").startswith("keep"))
+                    .select("url", "host", F.col("_fdepth").alias("depth"), "disc_wave", "disc_pos")
+                )
+
+            # 2-3. one broadcast join of the host policy: robots filter, then
+            # rank, then budget gate + simulated politeness clock.
+            # Persist the ranked schedule ONCE (memory, spill-to-disk): the
+            # schedule subtree (anti-join + policy join + skewed per-host
+            # window) would otherwise be re-executed by every consumer
+            # (broadcast build, miss anti-join, frontier merge). In-memory
+            # persist, NOT a parquet barrier — the schedule is recomputable
+            # from the frontier checkpoint, so durability buys nothing.
+            #
+            # The barrier: one aggregate over the persisted schedule counts
+            # the in-budget rows, and in doing so materializes the cache
+            # BEFORE the fetch job is submitted. Without it the fetch job's
+            # concurrent subtrees — the broadcast-build future for the batch
+            # side and the miss anti-join's shuffle stage — both pull on the
+            # COLD cache at once and duplicate/serialize the whole schedule
+            # computation: measured 115.2s -> 61.9s for the sf0.4 crawl at
+            # local[8]. The count it returns sizes the fetch stage below,
+            # picks the fetch-join strategy and ends the crawl on an empty
+            # batch before any fetch job is submitted.
+            sched = schedule_ranked(cand, policy, wave, policy_defaults).persist()
+            n_batch = sched.agg(F.count_if("in_budget")).first()[0]
+            tw = _tick(f"w{wave} schedule+barrier", tw)
+            if n_batch == 0:
+                # every frontier row was seen or robots-filtered — crawl done
+                shutil.rmtree(wdir, ignore_errors=True)
+                break
+            batch = sched.filter(F.col("in_budget"))
+            deferred = sched.filter(~F.col("in_budget")).select("url", "host", "depth", "disc_wave", "disc_pos")
+
+            # 4. fetch = join against the pages corpus on canonical url.
+            # The batch is ALWAYS the broadcast side — never let Catalyst
+            # broadcast the corpus (at 10^10 rows the corpus is only ever
+            # scanned; the batch hash table streams past it). Misses are
+            # recovered with a cheap anti-join on the small batch. A batch
+            # too big to broadcast flips to the shuffled-hash path.
+            small_batch = n_batch <= (
+                cfg.bucketed_broadcast_threshold if cfg.corpus_bucketed else cfg.broadcast_batch_threshold
+            )
+            batch_side = F.broadcast(batch) if small_batch else batch.hint("SHUFFLE_HASH")
+            hits = pages_slim.join(batch_side, "url", "inner").withColumn("fetch_status", F.lit("ok"))
+            misses = (
+                batch.join(pages_slim.select("url") if small_batch else pages_slim.select("url").hint("SHUFFLE_HASH"),
+                           "url", "left_anti")
+                .withColumn("warc_ts", F.lit(None).cast("timestamp"))
+                .withColumn("html", F.lit(None).cast("binary"))
+                .withColumn("text", F.lit(None).cast("string"))
+                .withColumn("lang", F.lit(None).cast("string"))
+                .withColumn("fetch_status", F.lit("missing"))
+            )
+            # Sized to the batch, not to the corpus scan: every task of the
+            # fused scan→join→UDF→write stage pays a fixed Python-worker
+            # cost, so a few hundred rows must not fan out over every scan
+            # split. coalesce merges partitions without a shuffle.
+            fetched = hits.unionByName(misses.select(*hits.columns)).coalesce(
+                extract_partitions(n_batch, *stage_conf)
             )
 
-        # 3. rank + budget + simulated politeness clock.
-        # Persist the ranked schedule ONCE (memory, spill-to-disk): the
-        # schedule subtree (anti-join + robots + skewed per-host window)
-        # would otherwise be re-executed by every consumer (broadcast build,
-        # miss anti-join, frontier merge). In-memory persist, NOT a parquet
-        # barrier — the schedule is recomputable from the frontier
-        # checkpoint, so durability buys nothing.
-        #
-        # The count() materializes the cache BEFORE the fetch job is
-        # submitted. It looks like a removable serial barrier (and a prior
-        # iteration removed it), but without it the fetch job's concurrent
-        # subtrees — the broadcast-build future for the batch side and the
-        # miss anti-join's shuffle stage — both pull on the COLD cache at
-        # once and duplicate/serialize the whole schedule computation:
-        # measured 115.2s -> 61.9s for the sf0.4 crawl at local[8]
-        # (same-window A/B, both probes healthy). The barrier job costs
-        # ~1-2s/wave, which tiny corpora notice (sf0.1 headline pays ~3s)
-        # but anything at scale earns back many times over — at 10^10 rows
-        # a duplicated schedule recompute is catastrophic, a count job is
-        # epsilon. WS_SCHED_BARRIER=0 restores the race for A/B.
-        sched = schedule_ranked(cand, budgets, wave).persist()
-        if os.environ.get("WS_SCHED_BARRIER", "1") == "1":
-            sched.count()
-        tw = _tick(f"w{wave} schedule+barrier", tw)
-        batch = sched.filter(F.col("in_budget"))
-        deferred = sched.filter(~F.col("in_budget")).select("url", "host", "depth", "disc_wave", "disc_pos")
-
-        # 4. fetch = join against the pages corpus on canonical url.
-        # The batch is ALWAYS the broadcast side — never let Catalyst
-        # broadcast the corpus (at 10^10 rows the corpus is only ever
-        # scanned; the batch hash table streams past it). Misses are
-        # recovered with a cheap anti-join on the small batch.
-        # Broadcastability is decided from the frontier row count (a free
-        # upper bound on the batch — footers/seed count, no job): a frontier
-        # too big to bound the batch flips to the shuffled-hash path, which
-        # is the safe choice at that scale anyway.
-        small_batch = n_frontier <= (
-            cfg.bucketed_broadcast_threshold if cfg.corpus_bucketed else cfg.broadcast_batch_threshold
-        )
-        batch_side = F.broadcast(batch) if small_batch else batch.hint("SHUFFLE_HASH")
-        hits = pages_slim.join(batch_side, "url", "inner").withColumn("fetch_status", F.lit("ok"))
-        misses = (
-            batch.join(pages_slim.select("url") if small_batch else pages_slim.select("url").hint("SHUFFLE_HASH"),
-                       "url", "left_anti")
-            .withColumn("warc_ts", F.lit(None).cast("timestamp"))
-            .withColumn("html", F.lit(None).cast("binary"))
-            .withColumn("text", F.lit(None).cast("string"))
-            .withColumn("lang", F.lit(None).cast("string"))
-            .withColumn("fetch_status", F.lit("missing"))
-        )
-        fetched = hits.unionByName(misses.select(*hits.columns))
-
-        # 5. extract (Arrow pandas-UDF engine — one Python evaluation per
-        # row; byte-identical to the native-expression engine by test)
-        fetched = with_extraction_arrow(fetched)
-        fetched = (
-            fetched.withColumn(
-                "extracted_text",
-                F.when(F.col("x_status") == "listing", listing_text())
-                .when(F.col("x_status") == "ok", extracted_text())
-                .otherwise(F.lit(None).cast("string")),
+            # 5. extract (Arrow pandas-UDF engine — one Python evaluation per
+            # row; byte-identical to the native-expression engine by test)
+            fetched = with_extraction_arrow(fetched)
+            fetched = (
+                fetched.withColumn(
+                    "extracted_text",
+                    F.when(F.col("x_status") == "listing", listing_text())
+                    .when(F.col("x_status") == "ok", extracted_text())
+                    .otherwise(F.lit(None).cast("string")),
+                )
+                .withColumn("wave", F.lit(wave))
+                .withColumn("fetch_bytes", F.coalesce(F.length("html").cast("long"), F.lit(0)))
+                # html/text are fully consumed by extraction — dropping them
+                # cuts the per-wave checkpoint from ~3KB/row to ~100B/row (at
+                # corpus scale the checkpoint must never re-store page bodies)
+                .drop("html", "text")
             )
-            .withColumn("wave", F.lit(wave))
-            .withColumn("fetch_bytes", F.coalesce(F.length("html").cast("long"), F.lit(0)))
-            # html/text are fully consumed by extraction — dropping them cuts
-            # the per-wave checkpoint from ~3KB/row to ~100B/row (at corpus
-            # scale the checkpoint must never re-store page bodies)
-            .drop("html", "text")
-        )
 
-        # materialize the wave once; everything below reuses it.
-        # (Deliberately NOT repartitioned before the write: rows carry
-        # ~3KB of array columns, and a round-robin repartition pays
-        # sort-before-repartition + a full shuffle of those bytes — measured
-        # 564 task-seconds for 529MB at sf0.4. Scan-split-count output files
-        # are the cheaper evil; finalize reads them once.)
-        fetched.write.mode("overwrite").parquet(os.path.join(wdir, "fetched"))
-        tw = _tick(f'w{wave} fetch+extract+write', tw)
-        # Batch size read back from the write's parquet footers (zero jobs):
-        # 0 means every frontier row was seen/robots-filtered — crawl done.
-        if _parquet_rows(os.path.join(wdir, "fetched")) == 0:
+            # materialize the wave once; everything below reuses it.
+            # (Deliberately NOT repartitioned before the write: rows carry
+            # ~3KB of array columns, and a round-robin repartition pays
+            # sort-before-repartition + a full shuffle of those bytes.)
+            fetched.write.mode("overwrite").parquet(os.path.join(wdir, "fetched"))
+            tw = _tick(f"w{wave} fetch+extract+write", tw)
+            fetched = spark.read.parquet(os.path.join(wdir, "fetched"))
+            tw = _tick(f"w{wave} fetched-footers+reread", tw)
+
+            # 6. outlinks -> next frontier. seen/order/results/metrics are all
+            # projections of the materialized `fetched` — no extra per-wave
+            # writes (finalized ONCE after the loop; at 10^10 scale these are
+            # metadata-only views over the wave files).
+            new_cand = expand_outlinks(fetched, wave)
+            seen_delta = fetched.select(
+                url_hash(F.col("url")).alias("url_hash"), "url", F.col("wave").cast("int").alias("wave")
+            )
+
+            # No seen anti-join here: already-fetched urls are eliminated by
+            # the next wave's anti-join anyway, and filtering now would
+            # broadcast/shuffle the whole seen set once more per wave. (The
+            # frontier checkpoint may therefore carry some seen urls — the
+            # crawl order/seen-set semantics are unchanged; oracle-verified.)
+            next_frontier = merge_frontier(deferred, new_cand)
+            next_frontier.write.mode("overwrite").parquet(os.path.join(wdir, "frontier"))
             sched.unpersist()
-            shutil.rmtree(wdir, ignore_errors=True)
-            break
-        fetched = spark.read.parquet(os.path.join(wdir, "fetched"))
-        tw = _tick(f'w{wave} fetched-footers+reread', tw)
+            tw = _tick(f"w{wave} frontier-merge+write", tw)
 
-        # 6. outlinks -> next frontier. seen/order/results/metrics are all
-        # projections of the materialized `fetched` — no extra per-wave
-        # writes (finalized ONCE after the loop; at 10^10 scale these are
-        # metadata-only views over the wave files).
-        new_cand = expand_outlinks(fetched, wave)
-        seen_delta = fetched.select(url_hash(F.col("url")).alias("url_hash"), "url", F.col("wave").cast("int").alias("wave"))
+            completed.append(wave)
+            _write_manifest(ckpt_dir, completed)
 
-        # No seen anti-join here: already-fetched urls are eliminated by the
-        # next wave's bloom-assisted anti-join anyway, and filtering now
-        # would broadcast/shuffle the whole seen set once more per wave.
-        # (The frontier checkpoint may therefore carry some seen urls — the
-        # crawl order/seen-set semantics are unchanged; oracle-verified.)
-        next_frontier = merge_frontier(deferred, new_cand)
-        next_frontier.write.mode("overwrite").parquet(os.path.join(wdir, "frontier"))
-        sched.unpersist()
-        tw = _tick(f'w{wave} frontier-merge+write', tw)
+            frontier = spark.read.parquet(os.path.join(wdir, "frontier"))
+            n_frontier = _parquet_rows(os.path.join(wdir, "frontier"))
+            seen = seen.unionByName(seen_delta)
+            tw = _tick(f"w{wave} manifest+frontier-footers", tw)
 
-        completed.append(wave)
-        _write_manifest(ckpt_dir, completed)
+        paths = _finalize(spark, ckpt_dir, completed)
+    finally:
+        # Restored only now: the finalize scans still read this corpus's
+        # wave files and want the tuned splits; anything after run_crawl is
+        # unrelated work that must not inherit them.
+        if sched is not None:
+            sched.unpersist()
+        for k, v in prev_conf.items():
+            spark.conf.set(k, v)
+    return paths
 
-        frontier = spark.read.parquet(os.path.join(wdir, "frontier"))
-        n_frontier = _parquet_rows(os.path.join(wdir, "frontier"))
-        seen = seen.unionByName(seen_delta)
-        tw = _tick(f'w{wave} manifest+frontier-footers', tw)
 
-    budgets.unpersist()
-    spark.conf.set(coalesce_key, prev_coalesce)
+def _finalize(spark: SparkSession, ckpt_dir: str, completed: list[int]) -> dict[str, str]:
+    """Derived views over all waves' fetched files.
 
-    # finalize: derived views over all waves' fetched files.
-    # `results` is served ZERO-COPY as a glob path over the wave files —
-    # re-writing the full extraction output would double the job's bytes
-    # (measured: the copy was ~50% of total wall at sf2.5). At cluster scale
-    # this is the Iceberg metadata-only view over the wave partitions; the
-    # glob is its sandbox equivalent. The wave files carry a superset of
-    # RESULT_COLS; parquet is columnar, so unread extras cost nothing.
+    `results` is served ZERO-COPY as a glob path over the wave files —
+    re-writing the full extraction output would double the job's bytes
+    (measured: the copy was ~50% of total wall at sf2.5). At cluster scale
+    this is the Iceberg metadata-only view over the wave partitions; the
+    glob is its sandbox equivalent. The wave files carry a superset of
+    RESULT_COLS; parquet is columnar, so unread extras cost nothing."""
     paths = {
         "ckpt_dir": ckpt_dir,
         "waves": json.dumps(completed),
@@ -502,48 +532,44 @@ def run_crawl(
         "seen": os.path.join(ckpt_dir, "seen"),
         "metrics": os.path.join(ckpt_dir, "metrics"),
     }
-    if completed:
-        # three small projections re-scan the wave files; a persist() here is
-        # a trap (columnar-cache build of the array columns cost 410s of GC
-        # at sf0.4 — parquet re-reads are far cheaper than caching fat rows).
-        # The writes are independent jobs over disjoint output paths —
-        # submitted from separate threads so they share the executor pool
-        # concurrently instead of serializing scan+write barriers.
-        from concurrent.futures import ThreadPoolExecutor
+    if not completed:
+        return paths
+    # three small projections re-scan the wave files; a persist() here is
+    # a trap (columnar-cache build of the array columns cost 410s of GC
+    # at sf0.4 — parquet re-reads are far cheaper than caching fat rows).
+    # The writes are independent jobs over disjoint output paths —
+    # submitted from separate threads so they share the executor pool
+    # concurrently instead of serializing scan+write barriers.
+    from concurrent.futures import ThreadPoolExecutor
 
-        all_fetched = spark.read.parquet(*[os.path.join(_wave_dir(ckpt_dir, w), "fetched") for w in completed])
+    all_fetched = spark.read.parquet(*[os.path.join(_wave_dir(ckpt_dir, w), "fetched") for w in completed])
 
-        def _w_order() -> None:
-            all_fetched.select(
-                "url", "host", "wave", F.col("rank").cast("int").alias("rank"), "sched_ms"
-            ).write.mode("overwrite").parquet(paths["order"])
+    def _w_order() -> None:
+        all_fetched.select(
+            "url", "host", "wave", F.col("rank").cast("int").alias("rank"), "sched_ms"
+        ).write.mode("overwrite").parquet(paths["order"])
 
-        def _w_seen() -> None:
-            all_fetched.select(
-                url_hash(F.col("url")).alias("url_hash"), "url", F.col("wave").cast("int").alias("wave")
-            ).write.mode("overwrite").parquet(paths["seen"])
+    def _w_seen() -> None:
+        all_fetched.select(
+            url_hash(F.col("url")).alias("url_hash"), "url", F.col("wave").cast("int").alias("wave")
+        ).write.mode("overwrite").parquet(paths["seen"])
 
-        def _w_metrics() -> None:
-            (
-                all_fetched.groupBy("wave", "host")
-                .agg(
-                    F.count("*").alias("urls_scheduled"),
-                    F.sum(F.when(F.col("x_status") == "ok", 1).otherwise(0)).alias("urls_ok"),
-                    F.sum(F.when(F.col("x_status") == "err", 1).otherwise(0)).alias("urls_err"),
-                    F.sum("fetch_bytes").alias("bytes_fetched"),
-                    F.sum(F.coalesce(F.size("x_outlinks"), F.lit(0)).cast("long")).alias("outlinks"),
-                )
-                .write.mode("overwrite")
-                .parquet(paths["metrics"])
+    def _w_metrics() -> None:
+        (
+            all_fetched.groupBy("wave", "host")
+            .agg(
+                F.count("*").alias("urls_scheduled"),
+                F.sum(F.when(F.col("x_status") == "ok", 1).otherwise(0)).alias("urls_ok"),
+                F.sum(F.when(F.col("x_status") == "err", 1).otherwise(0)).alias("urls_err"),
+                F.sum("fetch_bytes").alias("bytes_fetched"),
+                F.sum(F.coalesce(F.size("x_outlinks"), F.lit(0)).cast("long")).alias("outlinks"),
             )
+            .write.mode("overwrite")
+            .parquet(paths["metrics"])
+        )
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futures = [pool.submit(f) for f in (_w_order, _w_seen, _w_metrics)]
-            for fut in futures:
-                fut.result()
-    # Restore scan-split confs only now: the finalize scans above still read
-    # this corpus's wave files and want the tuned splits; anything after
-    # run_crawl is unrelated work that must not inherit them.
-    for k, v in (prev_splits or {}).items():
-        spark.conf.set(k, v)
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futures = [pool.submit(f) for f in (_w_order, _w_seen, _w_metrics)]
+        for fut in futures:
+            fut.result()
     return paths
