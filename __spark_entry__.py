@@ -18,6 +18,7 @@ Cross-engine parity rules baked into every oracle pair:
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 from collections.abc import Callable
@@ -37,7 +38,6 @@ from webscraper_spark.functions.derive import (  # noqa: E402
     with_typed,
 )
 from webscraper_spark.functions.derive import shopify_body  # noqa: E402
-from webscraper_spark.functions.extract import with_extraction  # noqa: E402
 from webscraper_spark.functions.shopify import hires_images, shopify_sheet  # noqa: E402
 from webscraper_spark.functions.pricing import (  # noqa: E402
     preis_12_s_expr,
@@ -4517,8 +4517,6 @@ def _q_stream_backoff_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle for a streaming stateful operator, possible because the fold
     is deterministic given all waves (cross-micro-batch state carry is
     pinned by tests/test_streaming.py)."""
-    import tempfile
-
     from webscraper_spark.streaming.stream import (
         run_stream_to_memory,
         stream_adaptive_backoff,
@@ -4534,14 +4532,18 @@ def _q_stream_backoff_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("ok"))
         .alias("status"),
     )
-    tmp = tempfile.mkdtemp(prefix="ws_stream_backoff_")
-    outcomes.write.mode("overwrite").parquet(tmp)
-    src = spark.readStream.schema("host string, wave long, status string").parquet(tmp)
     # unique sink name per invocation: bench/the driver run queries twice
     # in one session, and a stopped memory query's table lingers
     _q_stream_backoff_replay._n += 1  # type: ignore[attr-defined]
     name = f"stream_backoff_replay_{_q_stream_backoff_replay._n}"  # type: ignore[attr-defined]
-    run_stream_to_memory(stream_adaptive_backoff(src), name)
+    tmp = tempfile.mkdtemp(prefix="ws_stream_backoff_")
+    try:
+        outcomes.write.mode("overwrite").parquet(tmp)
+        src = spark.readStream.schema("host string, wave long, status string").parquet(tmp)
+        run_stream_to_memory(stream_adaptive_backoff(src), name)
+    finally:
+        # the memory sink already holds every output row
+        shutil.rmtree(tmp, ignore_errors=True)
     return spark.sql(f"SELECT host, wave, throttle_streak, delay_ms FROM {name}")
 
 

@@ -1,41 +1,14 @@
-"""Seen-set operator: bloom property tests + anti-join equivalence (J1/ST2)."""
+"""Seen-set operator: the exact anti-join (J1/ST2)."""
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import functions as F
 
-from webscraper_spark.operators.seen import NumpyBloom, anti_join_seen, build_bloom_table
-
-
-def test_bloom_no_false_negatives():
-    rng = np.random.default_rng(42)
-    keys = rng.integers(-(2**62), 2**62, size=50_000, dtype=np.int64)
-    bf = NumpyBloom(n_bits=50_000 * 12, k=5)
-    bf.add_many(keys)
-    assert bool(bf.contains_many(keys).all())
-
-
-def test_bloom_low_false_positive_rate():
-    rng = np.random.default_rng(7)
-    keys = rng.integers(-(2**62), 2**62, size=50_000, dtype=np.int64)
-    other = rng.integers(-(2**62), 2**62, size=50_000, dtype=np.int64)
-    other = np.setdiff1d(other, keys)
-    bf = NumpyBloom(n_bits=50_000 * 12, k=5)
-    bf.add_many(keys)
-    fpr = bf.contains_many(other).mean()
-    assert fpr < 0.01, fpr
-
-
-def test_bloom_roundtrip_bytes():
-    keys = np.arange(1000, dtype=np.int64) * 7919
-    bf = NumpyBloom(n_bits=1 << 14, k=4)
-    bf.add_many(keys)
-    bf2 = NumpyBloom.from_bytes(1 << 14, 4, bf.to_bytes())
-    assert bool(bf2.contains_many(keys).all())
+from webscraper_spark.operators.seen import anti_join_seen
 
 
 def test_anti_join_with_bloom_equals_exact(spark):
+    """candidates minus seen keeps exactly the candidates whose url is unseen."""
     cand = spark.range(0, 3000).select(
         F.concat(F.lit("https://h"), F.pmod("id", F.lit(7)), F.lit(".example/p/"), "id").alias("url"),
         F.concat(F.lit("h"), F.pmod("id", F.lit(7))).alias("host"),
@@ -49,7 +22,4 @@ def test_anti_join_with_bloom_equals_exact(spark):
         F.lit(0).alias("wave"),
     )
     exact = set(r.url for r in anti_join_seen(cand, seen).collect())
-    bloom = build_bloom_table(seen, n_buckets=16)
-    with_bloom = set(r.url for r in anti_join_seen(cand, seen, bloom, n_buckets=16).collect())
-    assert exact == with_bloom
     assert len(exact) == 2000  # every id % 3 != 0

@@ -147,3 +147,55 @@ def test_stream_adaptive_backoff_streak_across_microbatches(spark, tmp_path_fact
     assert got[("A", 2)] == (2, 400)    # streak carried across the batch boundary
     assert got[("A", 3)] == (0, 100)    # clean wave resets immediately
     assert all(got[("B", w)] == (0, 100) for w in (0, 1, 2))
+
+
+def test_stream_adaptive_backoff_params_match_batch(spark, tmp_path_factory):
+    """Non-default base delay, throttle ratio and shift cap reach the
+    streaming fold: at each host's latest wave it gives the batch
+    operator's (throttle_streak, delay_ms) for the same parameters. The
+    defaults would give other values on every host: A's streak of 4 is
+    capped at a shift of 2, and B's 1-in-3 throttle rate clears 1/10 but
+    not 1/2."""
+    from webscraper_spark.operators.backoff import adaptive_backoff
+    from webscraper_spark.streaming.stream import stream_adaptive_backoff
+
+    params = dict(base_delay_ms=50, err_num=1, err_den=2, max_shift=2)
+    d = str(tmp_path_factory.mktemp("backoff_params"))
+    schema = "host string, wave long, status string"
+    b1 = (
+        [("A", 0, "ok"), ("A", 0, "ok")]
+        + [("A", w, s) for w in (1, 2) for s in ("429", "ok")]
+        + [("B", w, s) for w in (0, 1, 2) for s in ("503", "ok", "ok")]
+        + [("C", w, "timeout") for w in (0, 1) for _ in range(2)]
+    )
+    b2 = [("A", w, s) for w in (3, 4) for s in ("ok", "503")]
+    for name, rows in (("b1", b1), ("b2", b2)):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(os.path.join(d, name))
+
+    src = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d + "/*")
+    run_stream_to_memory(stream_adaptive_backoff(src, **params), "backoff_params")
+    got = {(r.host, r.wave): (r.throttle_streak, r.delay_ms)
+           for r in spark.sql("SELECT * FROM backoff_params").collect()}
+
+    batch = adaptive_backoff(spark.read.schema(schema).parquet(d + "/*"), **params).collect()
+    want = {(r.host, r.latest_wave): (r.throttle_streak, r.delay_ms) for r in batch}
+    assert want == {("A", 4): (4, 200), ("B", 2): (0, 50), ("C", 1): (2, 200)}
+    assert {k: got[k] for k in want} == want
+
+
+def test_stream_backoff_replay_removes_its_temp_dir(spark, tmp_path, monkeypatch):
+    """The registry query stages its outcomes in a temp dir for readStream;
+    once the memory sink holds the rows the dir is gone."""
+    import tempfile
+
+    import __spark_entry__ as entry
+
+    sf_dir = tmp_path / "sf"
+    spark.range(0, 240).withColumnRenamed("id", "event_id").write.parquet(str(sf_dir / "events.parquet"))
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+
+    rows = entry._q_stream_backoff_replay(spark, str(sf_dir)).collect()
+    assert len(rows) == 6 * 4  # one row per (host, wave)
+    assert not list(scratch.glob("ws_stream_backoff_*"))

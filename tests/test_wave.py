@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from webscraper_spark.oracle.seq_oracle import crawl_oracle
+from webscraper_spark.plans import wave as wave_mod
 from webscraper_spark.plans.wave import CrawlConfig, run_crawl
 
 MAX_WAVES = 6
@@ -40,7 +41,7 @@ def engine_result(spark, inputs, tmp_path_factory):
     pages, seeds, robots, politeness = inputs
     ckpt = str(tmp_path_factory.mktemp("ckpt"))
     paths = run_crawl(spark, pages, seeds, robots, politeness, ckpt,
-                      CrawlConfig(max_waves=MAX_WAVES, use_bloom=False))
+                      CrawlConfig(max_waves=MAX_WAVES))
     return spark, paths
 
 
@@ -165,15 +166,6 @@ def test_resume_recovers_from_corrupt_manifest(spark, inputs, oracle_result, tmp
         read_manifest(ckpt)
 
 
-def test_bloom_path_identical(spark, inputs, oracle_result, tmp_path_factory):
-    pages, seeds, robots, politeness = inputs
-    ckpt = str(tmp_path_factory.mktemp("ckpt_bloom"))
-    paths = run_crawl(spark, pages, seeds, robots, politeness, ckpt,
-                      CrawlConfig(max_waves=MAX_WAVES, use_bloom=True, n_buckets=16))
-    got = {(r.url, r.host, r.wave, r.rank) for r in spark.read.parquet(paths["order"]).collect()}
-    assert got == set(oracle_result[0])
-
-
 def test_unknown_host_gets_politeness_defaults(spark):
     """Hosts discovered mid-crawl (absent from the budgets table) inherit the
     politeness '*' row, not hardcoded literals (resolve_budgets emits the
@@ -208,9 +200,9 @@ def test_unknown_host_gets_politeness_defaults(spark):
     assert all(r.delay_ms == 100 for r in known)
 
 
-def test_bucketed_corpus_join_identical(spark, corpus_dir, inputs, oracle_result, tmp_path_factory):
+def test_bucketed_corpus_join_identical(spark, corpus_dir, inputs, oracle_result, tmp_path_factory, monkeypatch):
     """The bucketed-corpus fetch path (pages as a bucketed catalog table,
-    bucketed_broadcast_threshold=0 so EVERY wave takes the bucket-aligned
+    BUCKETED_BROADCAST_BATCH_MAX=0 so EVERY wave takes the bucket-aligned
     shuffled-hash join instead of the batch broadcast) produces the identical
     crawl order + seen set — and its physical plan really is exchange-free on
     the corpus side (the Iceberg bucket(N, url) behavior this layout stands
@@ -228,9 +220,10 @@ def test_bucketed_corpus_join_identical(spark, corpus_dir, inputs, oracle_result
 
     _, seeds, robots, politeness = inputs
     ckpt = str(tmp_path_factory.mktemp("ckpt_bucketed"))
+    monkeypatch.setattr(wave_mod, "BUCKETED_BROADCAST_BATCH_MAX", 0)
     paths = run_crawl(
         spark, pages_b, seeds, robots, politeness, ckpt,
-        CrawlConfig(max_waves=MAX_WAVES, corpus_bucketed=True, bucketed_broadcast_threshold=0),
+        CrawlConfig(max_waves=MAX_WAVES, corpus_bucketed=True),
     )
     got_order = {(r.url, r.host, r.wave, r.rank) for r in spark.read.parquet(paths["order"]).collect()}
     assert got_order == set(oracle_result[0])

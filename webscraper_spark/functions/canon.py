@@ -49,12 +49,13 @@ def url_path(url: Column) -> Column:
 
 
 def url_hash(url: Column) -> Column:
-    """64-bit identity used by the seen-set / bloom layers."""
+    """64-bit url identity carried by the seen set."""
     return F.xxhash64(url)
 
 
 # ---------------------------------------------------------------------------
-# Arrow engine — same semantics, one compiled-regex match per URL.
+# Python engine — same semantics, one compiled-regex match per URL, called
+# per outlink inside the Arrow extraction UDF (extract_pandas.py).
 # The native expressions above re-evaluate the URL regex once per extracted
 # component (~8 matches/URL); at outlink-expansion volume (millions of links
 # per wave) that is the hot spot. Python's re matches ONCE and slices every
@@ -63,10 +64,6 @@ def url_hash(url: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 import re as _re
-
-import pandas as _pd
-from pyspark.sql import functions as _F
-from pyspark.sql import types as _T
 
 _URL_RE_PY = _re.compile(r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://([^/?#]*)([^?#]*)(\?[^#]*)?(#.*)?$")
 _PORT_RE_PY = _re.compile(r":[0-9]+$")
@@ -88,12 +85,6 @@ def _canon_host_py(u: str) -> tuple[str, str]:
     q = m.group(4) or ""
     q = "?" + "&".join(sorted(q[1:].split("&"))) if len(q) > 1 else ""
     return f"{scheme}://{auth}{path}{q}", host
-
-
-@_F.pandas_udf(_T.StructType([_T.StructField("url", _T.StringType()), _T.StructField("host", _T.StringType())]))
-def canon_host_arrow(raw: _pd.Series) -> _pd.DataFrame:
-    pairs = [(None, None) if u is None else _canon_host_py(u) for u in raw]
-    return _pd.DataFrame(pairs, columns=["url", "host"])
 
 
 # ---------------------------------------------------------------------------

@@ -9,7 +9,7 @@ job"), mirroring the reference's page-batch loop
     driver; the politeness '*' defaults become literals      (ST1, ST6)
 
   wave w:
-    1. candidates = frontier ANTI-JOIN seen            (J1, bloom-assisted)
+    1. candidates = frontier ANTI-JOIN seen            (J1)
     2. ONE broadcast join of the host policy: robots filter, then
        per-host rank, then budget gate + simulated clock  (ST6, W1-W4, ST1)
     3. barrier: one aggregate over the persisted schedule materializes it
@@ -49,7 +49,7 @@ from webscraper_spark.functions.extract import extracted_text, listing_text
 from webscraper_spark.functions.extract_pandas import with_extraction_arrow
 from webscraper_spark.operators.robots import resolve_host_policy
 from webscraper_spark.operators.schedule import schedule_ranked
-from webscraper_spark.operators.seen import anti_join_seen, build_bloom_table
+from webscraper_spark.operators.seen import anti_join_seen
 
 MAX_LINKS_PER_PAGE = 1024
 
@@ -65,34 +65,27 @@ RESULT_COLS = [
 ]
 
 
+# Fetch-join strategy, picked each wave from the observed batch row count.
+# Politeness-bounded batches (the normal crawl regime) broadcast: tiny
+# build, zero corpus movement. Above the threshold the driver-side broadcast
+# build becomes the serial bottleneck (it grows linearly with the batch), so
+# the join flips to a shuffled hash join — the sandbox stand-in for the
+# bucketed storage-partitioned join an Iceberg deployment would use
+# (bucket(url) on both sides; no corpus shuffle).
+BROADCAST_BATCH_MAX = 5_000_000
+# Corpus loaded as a bucketed catalog table (sources.synth.load_pages): a
+# url-equi-join exchanges ONLY the thin batch side — the corpus reads in
+# place (the Iceberg bucket(N, url) layout's behavior). The broadcast path's
+# costs (serial driver build, one deserialize+hash-build per executor) then
+# buy nothing, so the flip to the shuffled-hash join happens ~10x earlier.
+BUCKETED_BROADCAST_BATCH_MAX = 500_000
+
+
 @dataclass
 class CrawlConfig:
     max_waves: int = 16
-    # Bloom-assisted seen filtering: per-bucket bitsets broadcast in ~MBs
-    # where a raw 10^8+-row seen-set could not broadcast at all. OFF by
-    # default — below ~10M seen rows the bucket shuffles + Python probe
-    # stages cost more than the plain anti-join they replace (measured 5x at
-    # sandbox scale); flip on when the seen set outgrows broadcast range.
-    use_bloom: bool = False
-    n_buckets: int = 64
-    # Politeness-bounded batches (the normal crawl regime) broadcast: tiny
-    # build, zero corpus movement. Above the threshold the driver-side
-    # broadcast build becomes the serial bottleneck (it grows linearly with
-    # the batch), so the join flips to a shuffled hash join — the sandbox
-    # stand-in for the bucketed storage-partitioned join an Iceberg
-    # deployment would use (bucket(url) on both sides; no corpus shuffle).
-    # WS_BCAST_BATCH_MAX overrides (multi-executor A/B: a broadcast is built
-    # serially on the driver AND deserialized once per executor, so its
-    # break-even shrinks as executors multiply).
-    broadcast_batch_threshold: int = int(os.environ.get("WS_BCAST_BATCH_MAX", 5_000_000))
-    # Corpus loaded as a bucketed catalog table (sources.synth.load_pages):
-    # a url-equi-join exchanges ONLY the thin batch side — the corpus reads
-    # in place (the Iceberg bucket(N, url) layout's behavior). The broadcast
-    # path's costs (serial driver build, one deserialize+hash-build per
-    # executor) then buy nothing, so the flip to the shuffled-hash join
-    # happens ~10x earlier (WS_BCAST_BATCH_MAX_BUCKETED overrides).
+    # Pages is a bucketed catalog table: selects BUCKETED_BROADCAST_BATCH_MAX.
     corpus_bucketed: bool = False
-    bucketed_broadcast_threshold: int = int(os.environ.get("WS_BCAST_BATCH_MAX_BUCKETED", 500_000))
     # URL-quality hygiene applied to each wave's candidates BEFORE ranking
     # (operators/urlfilter.py: blocklist / path-depth / param-count /
     # digit-slug, first-failing-rule). A dropped URL never occupies a
@@ -376,9 +369,8 @@ def run_crawl(
             os.makedirs(wdir, exist_ok=True)
             tw = time.time()
 
-            # 1. candidates minus seen (bloom-assisted when configured)
-            bloom = build_bloom_table(seen, cfg.n_buckets) if cfg.use_bloom else None
-            cand = anti_join_seen(frontier, seen, bloom, cfg.n_buckets)
+            # 1. candidates minus seen
+            cand = anti_join_seen(frontier, seen)
 
             # 1b. optional URL hygiene (codegen-only; see CrawlConfig). The
             # frontier `depth` travels as a temporary rename around
@@ -427,9 +419,7 @@ def run_crawl(
             # scanned; the batch hash table streams past it). Misses are
             # recovered with a cheap anti-join on the small batch. A batch
             # too big to broadcast flips to the shuffled-hash path.
-            small_batch = n_batch <= (
-                cfg.bucketed_broadcast_threshold if cfg.corpus_bucketed else cfg.broadcast_batch_threshold
-            )
+            small_batch = n_batch <= (BUCKETED_BROADCAST_BATCH_MAX if cfg.corpus_bucketed else BROADCAST_BATCH_MAX)
             batch_side = F.broadcast(batch) if small_batch else batch.hint("SHUFFLE_HASH")
             hits = pages_slim.join(batch_side, "url", "inner").withColumn("fetch_status", F.lit("ok"))
             misses = (

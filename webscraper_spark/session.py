@@ -52,9 +52,8 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cores))
         # AQE: runtime re-planning, partition coalescing, skew-join splitting.
-        # (WS_NO_AQE=1 disables it — used to A/B plan-stability issues.)
-        .config("spark.sql.adaptive.enabled", "false" if os.environ.get("WS_NO_AQE") == "1" else "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", os.environ.get("WS_AQE_COALESCE", "true"))
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Runtime bloom-filter pushdown for big joins (the J1 anti-join path).
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
@@ -67,7 +66,7 @@ def get_spark(
         # 512 (45.4s) and 16384 (52.1s) are both worse. Batch size is a
         # per-core-cache constant, not a data-scale knob — 1024 holds at
         # 100TB too.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", os.environ.get("WS_ARROW_BATCH", "1024"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # Deterministic timestamps for oracle comparison (duckdb is UTC-naive).
         .config("spark.sql.session.timeZone", "UTC")
         # Local mode: the driver is the only JVM; give it the memory the

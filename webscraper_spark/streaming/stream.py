@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from webscraper_spark.functions.extract import with_extraction
+from webscraper_spark.operators.backoff import THROTTLE_STATUSES
 from webscraper_spark.schemas import PAGES
 
 
@@ -86,36 +87,20 @@ def stateful_politeness(candidates: DataFrame) -> DataFrame:
 
 _BACKOFF_OUT_SCHEMA = "host string, wave long, throttle_streak int, delay_ms long"
 _BACKOFF_STATE_SCHEMA = "streak int"
-_THROTTLE_STATUSES = ("429", "503", "timeout")
 
 
-def _backoff_fn(key: tuple, pdfs: Any, state: GroupState):
-    """Per-host AIMD fold: each wave in the micro-batch either extends the
-    throttle streak (>=10% throttle statuses) or resets it to 0; the
-    streak survives micro-batch boundaries in GroupState.
-
-    `pdfs` is an iterator of Arrow CHUNKS of the host's batch data — one
-    wave can span chunks, so the chunks are concatenated before the fold
-    (a per-chunk fold double-counted split waves)."""
-    (host,) = key
-    streak = state.get[0] if state.exists else 0
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    rows = []
-    for wave, grp in sorted(pdf.groupby("wave")):
-        n = len(grp)
-        n_thr = int(grp["status"].isin(_THROTTLE_STATUSES).sum())
-        streak = streak + 1 if n_thr * 10 >= n * 1 else 0
-        rows.append((host, int(wave), streak, 100 << min(streak, 6)))
-    state.update((streak,))
-    yield pd.DataFrame(rows, columns=["host", "wave", "throttle_streak", "delay_ms"])
-
-
-def stream_adaptive_backoff(outcomes: DataFrame) -> DataFrame:
+def stream_adaptive_backoff(
+    outcomes: DataFrame,
+    base_delay_ms: int = 100,
+    err_num: int = 1,
+    err_den: int = 10,
+    max_shift: int = 6,
+) -> DataFrame:
     """Streaming form of operators/backoff.adaptive_backoff (ST8 as true
     streaming state): outcomes is a streaming DF (host, wave, status);
     output one row per (host, wave) with the running throttle streak and
     the shifted delay, the streak carried across micro-batches in
-    GroupState.
+    GroupState. The parameters mean what they mean in adaptive_backoff.
 
     Semantics vs the batch operator: identical when each host's waves are
     consecutive and each wave arrives whole in one micro-batch (the crawl
@@ -123,10 +108,32 @@ def stream_adaptive_backoff(outcomes: DataFrame) -> DataFrame:
     streak from (latest_wave - last_clean) over the whole history; the
     streaming form folds it forward, which is what bounded state allows —
     per-host state is ONE integer however long the stream runs."""
+
+    def backoff_fn(key: tuple, pdfs: Any, state: GroupState):
+        """Per-host AIMD fold: each wave in the micro-batch either extends
+        the throttle streak (throttle statuses >= err_num/err_den of the
+        wave) or resets it to 0; the streak survives micro-batch boundaries
+        in GroupState.
+
+        `pdfs` is an iterator of Arrow CHUNKS of the host's batch data — one
+        wave can span chunks, so the chunks are concatenated before the fold
+        (a per-chunk fold double-counted split waves)."""
+        (host,) = key
+        streak = state.get[0] if state.exists else 0
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        rows = []
+        for wave, grp in sorted(pdf.groupby("wave")):
+            n = len(grp)
+            n_thr = int(grp["status"].isin(THROTTLE_STATUSES).sum())
+            streak = streak + 1 if n_thr * err_den >= n * err_num else 0
+            rows.append((host, int(wave), streak, base_delay_ms << min(streak, max_shift)))
+        state.update((streak,))
+        yield pd.DataFrame(rows, columns=["host", "wave", "throttle_streak", "delay_ms"])
+
     return (
         outcomes.groupBy("host")
         .applyInPandasWithState(
-            _backoff_fn,
+            backoff_fn,
             outputStructType=_BACKOFF_OUT_SCHEMA,
             stateStructType=_BACKOFF_STATE_SCHEMA,
             outputMode="append",
