@@ -4634,7 +4634,7 @@ parts AS (
 s AS (
   SELECT doc_id, url, base, q, frag,
     array_to_string(list_filter(string_split(q, '&'),
-      x -> NOT regexp_matches(x, '^(utm_[a-z]+|gclid|fbclid|ref|mc_eid)=')), '&') AS newq
+      x -> NOT regexp_matches(x, '^(utm_[a-z]+|gclid|fbclid|mc_eid)=')), '&') AS newq
   FROM parts
 )
 SELECT doc_id, url,

@@ -13,7 +13,7 @@ from webscraper_spark.sources.synth import corpus_params, materialize_corpus  # 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
 
 

@@ -5,16 +5,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from webscraper_spark.functions.extract import (
-    extracted_text,
-    listing_text,
-    with_extraction,
-)
+from webscraper_spark.functions.extract import extracted_text, listing_text
+from webscraper_spark.functions.extract_pandas import with_extraction_arrow
 
 
 def _extracted(spark, corpus_dir):
     pages = spark.read.parquet(corpus_dir["pages"])
-    return with_extraction(pages)
+    return with_extraction_arrow(pages)
 
 
 def test_detail_text_byte_identical(spark, corpus_dir):
@@ -80,7 +77,7 @@ def test_reference_regex_semantics(spark):
         "</body></html>"
     )
     df = spark.createDataFrame([(html.encode(),)], "html binary")
-    row = with_extraction(df).collect()[0]
+    row = with_extraction_arrow(df).collect()[0]
     assert row.x_km_cell == "12.345 km"
     assert row.x_power_cell == "110 kW (150 PS)"
     assert row.x_fuel == "Diesel"
@@ -91,41 +88,39 @@ def test_reference_regex_semantics(spark):
     assert row.x_dealer_city == "Hannover"
     assert row.x_phone == "+49 511 12345"
     assert row.x_category == "SUV"
+    assert row.x_dealer_street == "Hauptstrasse 7,"
+    assert row.x_dealer_name == "Autohaus X"
+    assert row.x_address_raw == "Hauptstrasse 7, 30159 Hannover"
 
 
 def test_outlinks_in_document_order(spark):
     html = b'<a href="https://h.example/b">x</a><a href="https://h.example/a">y</a>'
     df = spark.createDataFrame([(html,)], "html binary")
-    row = with_extraction(df).collect()[0]
+    row = with_extraction_arrow(df).collect()[0]
     assert row.x_outlinks == ["https://h.example/b", "https://h.example/a"]
+    assert row.x_outlinks_canon == ["https://h.example/b", "https://h.example/a"]
+    assert row.x_outlink_hosts == ["h.example", "h.example"]
 
 
-def test_extract_engines_agree(spark, corpus_dir):
-    """The Arrow pandas-UDF engine must agree with the native-expression
-    engine on every column for every page (maps compared as sorted entries)."""
-    from webscraper_spark.functions.extract_pandas import with_extraction_arrow
-
-    pages = spark.read.parquet(corpus_dir["pages"])
-    def norm(df):
-        return df.withColumn(
-            "x_attr_map", F.to_json(F.map_entries(F.col("x_attr_map")))
-        ).select(*sorted(df.columns))
-
-    na = norm(with_extraction(pages))
-    ar = norm(with_extraction_arrow(pages))
-    assert na.exceptAll(ar).count() == 0
-    assert ar.exceptAll(na).count() == 0
-
-
-def test_extract_engines_agree_on_null_html(spark):
-    from webscraper_spark.functions.extract_pandas import with_extraction_arrow
+def test_null_and_fieldless_html(spark):
+    """Null HTML yields null fields; a page without any extracted block
+    yields null scalars and empty collections. Both are status 'err'."""
+    from webscraper_spark.functions.extract_pandas import X_STRUCT
 
     df = spark.createDataFrame([("u1", None), ("u2", b"<html><body>x</body></html>")], "url string, html binary")
-    def norm(d):
-        return d.withColumn("x_attr_map", F.to_json(F.map_entries(F.col("x_attr_map")))).select(*sorted(d.columns))
-    a = norm(with_extraction(df)).collect()
-    b = norm(with_extraction_arrow(df)).collect()
-    assert sorted(map(str, a)) == sorted(map(str, b))
+    rows = {r.url: r for r in with_extraction_arrow(df).collect()}
+    names = [f.name for f in X_STRUCT.fields]
+    assert {n: rows["u1"][n] for n in names} == dict.fromkeys(names)
+    assert rows["u1"].x_status == "err"
+
+    arrays = ["x_features", "x_images", "x_outlinks", "x_outlinks_canon", "x_outlink_hosts"]
+    blank = rows["u2"]
+    assert blank.x_attr_map == {}
+    assert {n: blank[n] for n in arrays} == {n: [] for n in arrays}
+    assert blank.x_is_listing is False
+    scalars = [n for n in names if n not in arrays + ["x_attr_map", "x_is_listing"]]
+    assert {n: blank[n] for n in scalars} == dict.fromkeys(scalars)
+    assert blank.x_status == "err"
 
 
 # --- rel=canonical collapse (operators/canonical.py, SURVEY 2.10 L45) ---

@@ -14,7 +14,7 @@ from webscraper_spark.functions.derive import (
     with_tags,
     with_typed,
 )
-from webscraper_spark.functions.extract import with_extraction
+from webscraper_spark.functions.extract_pandas import with_extraction_arrow
 from webscraper_spark.functions.pricing import (
     preis_12_s_expr,
     price_dims,
@@ -27,7 +27,7 @@ from webscraper_spark.oracle.pricing_oracle import pricing, reselling_prices
 
 def _eligible_cars(spark, corpus_dir):
     pages = spark.read.parquet(corpus_dir["pages"])
-    ex = with_extraction(pages).filter(F.col("x_status") == "ok")
+    ex = with_extraction_arrow(pages).filter(F.col("x_status") == "ok")
     return with_car_pricing_inputs(with_typed(ex)).filter(eligibility())
 
 
@@ -72,7 +72,7 @@ def test_unpriceable_cars_dropped(spark, corpus_dir):
     """co2-missing cars are dropped at the pricing call (reference :395
     NoMethodError rescue) — verify they never reach the matrix."""
     pages = spark.read.parquet(corpus_dir["pages"])
-    ex = with_extraction(pages).filter(F.col("x_status") == "ok")
+    ex = with_extraction_arrow(pages).filter(F.col("x_status") == "ok")
     cars = with_car_pricing_inputs(with_typed(ex)).filter(eligibility())
     n_unpriceable = cars.filter(~F.col("priceable")).count()
     assert n_unpriceable > 0  # corpus has ~10% co2-missing
@@ -106,7 +106,7 @@ def test_tags_and_body(spark, corpus_dir):
 
 def test_eligibility_counts_sane(spark, corpus_dir):
     pages = spark.read.parquet(corpus_dir["pages"])
-    ex = with_extraction(pages).filter(F.col("x_status") == "ok")
+    ex = with_extraction_arrow(pages).filter(F.col("x_status") == "ok")
     typed = with_typed(ex)
     n_all = typed.count()
     n_elig = typed.filter(eligibility()).count()

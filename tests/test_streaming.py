@@ -29,10 +29,10 @@ def test_stream_extract_matches_batch(spark, pages_stream_dir):
     run_stream_to_memory(stream_extract(spark, pages_stream_dir), "sx")
     got = spark.sql("SELECT count(*) n, sum(CASE WHEN x_status='ok' THEN 1 ELSE 0 END) ok FROM sx").first()
     batch = spark.read.parquet(pages_stream_dir)
-    from webscraper_spark.functions.extract import with_extraction
+    from webscraper_spark.functions.extract_pandas import with_extraction_arrow
 
     want_n = batch.count()
-    want_ok = with_extraction(batch).filter(F.col("x_status") == "ok").count()
+    want_ok = with_extraction_arrow(batch).filter(F.col("x_status") == "ok").count()
     assert got.n == want_n and got.ok == want_ok
 
 
@@ -181,6 +181,29 @@ def test_stream_adaptive_backoff_params_match_batch(spark, tmp_path_factory):
     want = {(r.host, r.latest_wave): (r.throttle_streak, r.delay_ms) for r in batch}
     assert want == {("A", 4): (4, 200), ("B", 2): (0, 50), ("C", 1): (2, 200)}
     assert {k: got[k] for k in want} == want
+
+
+def test_stream_adaptive_backoff_rejects_out_of_order_wave(spark, tmp_path_factory):
+    """A wave at or before a host's last folded wave would be counted twice
+    into its streak: the fold raises, naming the host and both waves."""
+    from pyspark.errors import StreamingQueryException
+
+    from webscraper_spark.streaming.stream import stream_adaptive_backoff
+
+    d = str(tmp_path_factory.mktemp("backoff_out_of_order"))
+    schema = "host string, wave long, status string"
+    batches = (("b1", [("A", 0, "ok"), ("A", 1, "429")]), ("b2", [("A", 1, "429")]))
+    for name, rows in batches:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(os.path.join(d, name))
+
+    src = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d + "/*")
+    out = stream_adaptive_backoff(src)
+    q = out.writeStream.outputMode("append").format("memory").queryName("backoff_ooo").start()
+    try:
+        with pytest.raises(StreamingQueryException, match=r"host 'A' sent wave 1 after wave 1"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def test_stream_backoff_replay_removes_its_temp_dir(spark, tmp_path, monkeypatch):

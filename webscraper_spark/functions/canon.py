@@ -126,12 +126,15 @@ def registered_domain(host: Column) -> Column:
     )
 
 
-# Tracking parameters stripped by strip_tracking_params — the same set
+# Tracking parameters stripped by strip_tracking_params — the set
 # urlfilter.TRACKING_RE flags (its 'keep:strip_tracking' verdict is the
-# signal; this is the canonicalization it asks for). Public lists
-# (AdGuard's $removeparam rules) run to hundreds of entries; the set here
-# is the documented mechanism-sized stand-in, like urlfilter's blocklist.
-TRACKING_PARAM_RE = r"^(utm_[a-z]+|gclid|fbclid|ref|mc_eid)="
+# signal; this is the canonicalization it asks for) minus `ref`, which is
+# often functional (branch/tab/referral-content selectors): stripping it
+# could fetch a different resource, so urlfilter only flags it. Public
+# lists (AdGuard's $removeparam rules) run to hundreds of entries; the set
+# here is the documented mechanism-sized stand-in, like urlfilter's
+# blocklist.
+TRACKING_PARAM_RE = r"^(utm_[a-z]+|gclid|fbclid|mc_eid)="
 
 
 def strip_tracking_params(url: Column) -> Column:

@@ -1,231 +1,23 @@
-"""Vectorized HTML field extraction — JVM regexp expressions, zero Python.
+"""Ground-truth text rebuilt from extracted columns.
 
-Re-expresses the reference's per-ad CSS-selector + Ruby-regex extraction
-(/root/reference/app/controllers/cars_controller.rb:153-249 and
-car_dealers_controller.rb:163-272) as native Spark column expressions so the
-whole extraction stage stays inside whole-stage codegen. The Ruby regexes
-(SURVEY.md §2.7 F1-F19) are reproduced with identical semantics; `sub` (first
-occurrence) vs `gsub` (all) is honoured per call site.
-
-`extracted_text` rebuilds the byte-exact ground-truth `text` of the corpus
-(input_hint invariant: byte-identical extracted text per url).
+The fields come from the Arrow extraction UDF
+(`extract_pandas.with_extraction_arrow`). `extracted_text` and
+`listing_text` rebuild from them the byte-exact `text` of the corpus, for
+detail and listing pages respectively (input_hint invariant: byte-identical
+extracted text per url).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from webscraper_spark.functions.canon import canonicalize_url, url_host
+from webscraper_spark.functions.canon import url_host
 
 
 def _re1(col: Column, pattern: str, group: int = 1) -> Column:
     """regexp_extract with no-match -> NULL (Spark returns '' on no match)."""
     return F.nullif(F.regexp_extract(col, pattern, group), F.lit(""))
-
-
-def html_str(html: Column) -> Column:
-    """Decode the binary html column (UTF-8)."""
-    return html.cast("string")
-
-
-# --- field extractors over the decoded html string -------------------------
-
-def x_title(h: Column) -> Column:
-    return _re1(h, r'<h3 class="ad-title">([^<]*)</h3>')
-
-
-def x_category(h: Column) -> Column:
-    return _re1(h, r'<strong class="category">([^<]*)</strong>')
-
-
-def x_attributes(h: Column) -> Column:
-    """The headline attribute line (≙ reference `span.attributes` text,
-    car_dealers_controller.rb:163)."""
-    return _re1(h, r'<span class="attributes">([^<]*)</span>')
-
-
-def x_price_cell(h: Column) -> Column:
-    """'21.990 €' — strong.price text with ' Brutto' stripped (Ruby gsub,
-    car_dealers_controller.rb:169)."""
-    raw = _re1(h, r'<strong class="price">([^<]*)</strong>')
-    return F.regexp_replace(raw, r" Brutto", "")
-
-
-def x_km_cell(attrs: Column) -> Column:
-    """Ruby: attributes.match(/(\\d*[.]\\d{3}|\\d*) km/)[0] — keeps ' km'
-    (car_dealers_controller.rb:166)."""
-    return _re1(attrs, r"((?:\d*[.]\d{3}|\d*) km)")
-
-
-def x_power_cell(attrs: Column) -> Column:
-    """Ruby: attributes.match(/\\d*\\skW\\s.\\d*\\sPS./)[0]
-    (car_dealers_controller.rb:167)."""
-    return _re1(attrs, r"(\d*\skW\s.\d*\sPS.)")
-
-
-def x_fuel(attrs: Column) -> Column:
-    return _re1(attrs, r"(Benzin|Diesel|Elektro|Erdgas)")
-
-
-def x_transmission(attrs: Column) -> Column:
-    return _re1(attrs, r"(Automatik|Schaltgetriebe)")
-
-
-def x_ez(attrs: Column) -> Column:
-    """Ruby: attributes.match(/\\d{2}.\\d{4}/) (car_dealers_controller.rb:172).
-    NB '.' matches any char, exactly as in the reference."""
-    return _re1(attrs, r"(\d{2}.\d{4})")
-
-
-def x_consumption(h: Column) -> Column:
-    return _re1(h, r'<dd class="consumption">([^<]*)</dd>')
-
-
-def x_co2(h: Column) -> Column:
-    return _re1(h, r'<dd class="emission">([^<]*)</dd>')
-
-
-def x_damage(h: Column) -> Column:
-    return _re1(h, r'<span class="damaged">([^<]*)</span>')
-
-
-def x_country(h: Column) -> Column:
-    return _re1(h, r'<span class="countryVersion">([^<]*)</span>')
-
-
-def x_attr_map(h: Column) -> Column:
-    """dt/dd positional zip -> map (reference car_dealers_controller.rb:250-259,
-    J3). Plain '<dt>'/'<dd>' only match the additionalAttributes block (other
-    dd's carry class attributes)."""
-    dts = F.regexp_extract_all(h, F.lit(r"<dt>([^<]*)</dt>"), 1)
-    dds = F.regexp_extract_all(h, F.lit(r"<dd>([^<]*)</dd>"), 1)
-    return F.when(F.size(dts) == F.size(dds), F.map_from_arrays(dts, dds)).otherwise(
-        F.map_from_arrays(F.slice(dts, 1, F.least(F.size(dts), F.size(dds))),
-                          F.slice(dds, 1, F.least(F.size(dts), F.size(dds))))
-    )
-
-
-def x_features(h: Column) -> Column:
-    """<li> texts (reference collects 4 feature columns then concats,
-    car_dealers_controller.rb:265-269 — our corpus renders one list)."""
-    return F.regexp_extract_all(h, F.lit(r"<li>([^<]*)</li>"), 1)
-
-
-def x_images(h: Column) -> Column:
-    """Gallery image URLs from data-lazy attrs (reference
-    cars_controller.rb:164-165 reads ['data-lazy'] and prepends 'https:')."""
-    return F.transform(
-        F.regexp_extract_all(h, F.lit(r'data-lazy="([^"]+)"'), 1),
-        lambda u: F.concat(F.lit("https:"), u),
-    )
-
-
-def x_dealer_name(h: Column) -> Column:
-    return _re1(h, r"<address><strong>([^<]*)</strong>")
-
-
-def x_address_raw(h: Column) -> Column:
-    return _re1(h, r'<div class="addressData">([^<]*)</div>')
-
-
-def x_postal_code(addr: Column) -> Column:
-    """Ruby: .match(/\\d{5}/) (cars_controller.rb:239, F2)."""
-    return _re1(addr, r"(\d{5})")
-
-
-def x_city(addr: Column) -> Column:
-    """Ruby: .match(/[a-zA-Z]+(-)?\\D+$/) (cars_controller.rb:240, F3)."""
-    return _re1(addr, r"([a-zA-Z]+-?\D+$)")
-
-
-def x_street(addr: Column) -> Column:
-    """Ruby: .match(/^\\D*\\d*\\w(-|,)?\\w*/) (cars_controller.rb:241, F4)."""
-    return _re1(addr, r"(^\D*\d*\w(?:-|,)?\w*)")
-
-
-def x_phone(h: Column) -> Column:
-    """Ruby: .sub('Tel.: ','') — FIRST occurrence only (cars_controller.rb:242,
-    F5): regexp_replace would strip all, so anchor to the span start."""
-    raw = _re1(h, r'<span class="phone">([^<]*)</span>')
-    return F.regexp_replace(raw, r"^Tel\.: ", "")
-
-
-def x_dealer_rating(h: Column) -> Column:
-    """Star-span data-rating attribute (reference cars_controller.rb:243-244
-    reads ['data-rating'] behind a has_css? guard -> nullable)."""
-    return _re1(h, r'data-rating="([^"]+)"')
-
-
-def x_quantity_ratings(h: Column) -> Column:
-    """amount-of-ratings span text (reference cars_controller.rb:245)."""
-    return _re1(h, r'<span class="amount-of-ratings">([^<]*)</span>')
-
-
-def x_pubdate(h: Column) -> Column:
-    """Ruby: .match(/\\d{2}.\\d{2}.\\d{4}/) (cars_controller.rb:249, F6)."""
-    return _re1(h, r"Online seit (\d{2}.\d{2}.\d{4})")
-
-
-def x_outlinks(h: Column) -> Column:
-    """All href targets in document order (S5 link harvest;
-    cars_controller.rb:142 / car_dealers_controller.rb:150)."""
-    return F.regexp_extract_all(h, F.lit(r'href="([^"]+)"'), 1)
-
-
-def x_is_listing(h: Column) -> Column:
-    return h.contains('<ul class="resultList">')
-
-
-# --- full extraction stage --------------------------------------------------
-
-def with_extraction(df: DataFrame, html_col: str = "html") -> DataFrame:
-    """Append every extracted column + status. Input needs `html` (binary).
-
-    Cheap headline fields come first so the eligibility filter can gate the
-    heavier work, mirroring the reference's stage order
-    (car_dealers_controller.rb:163-185 extract-then-filter-then-deep-extract).
-    """
-    h = html_str(F.col(html_col))
-    attrs = x_attributes(h)
-    addr = x_address_raw(h)
-    out = (
-        df.withColumn("x_title", x_title(h))
-        .withColumn("x_attrs_line", attrs)
-        .withColumn("x_category", x_category(h))
-        .withColumn("x_price_cell", x_price_cell(h))
-        .withColumn("x_km_cell", x_km_cell(attrs))
-        .withColumn("x_power_cell", x_power_cell(attrs))
-        .withColumn("x_fuel", x_fuel(attrs))
-        .withColumn("x_transmission", x_transmission(attrs))
-        .withColumn("x_ez", x_ez(attrs))
-        .withColumn("x_consumption", x_consumption(h))
-        .withColumn("x_co2", x_co2(h))
-        .withColumn("x_damage", x_damage(h))
-        .withColumn("x_country", x_country(h))
-        .withColumn("x_attr_map", x_attr_map(h))
-        .withColumn("x_features", x_features(h))
-        .withColumn("x_images", x_images(h))
-        .withColumn("x_dealer_name", x_dealer_name(h))
-        .withColumn("x_address_raw", addr)
-        .withColumn("x_postal_code", x_postal_code(addr))
-        .withColumn("x_dealer_city", x_city(addr))
-        .withColumn("x_dealer_street", x_street(addr))
-        .withColumn("x_phone", x_phone(h))
-        .withColumn("x_dealer_rating", x_dealer_rating(h))
-        .withColumn("x_quantity_ratings", x_quantity_ratings(h))
-        .withColumn("x_pubdate", x_pubdate(h))
-        .withColumn("x_outlinks", x_outlinks(h))
-        .withColumn("x_outlinks_canon", F.transform(F.col("x_outlinks"), canonicalize_url))
-        .withColumn("x_outlink_hosts", F.transform(F.col("x_outlinks_canon"), url_host))
-        .withColumn("x_is_listing", x_is_listing(h))
-    )
-    status = (
-        F.when(F.col("x_is_listing"), F.lit("listing"))
-        .when(F.col("x_title").isNotNull() & F.col("x_price_cell").isNotNull() & F.col("x_km_cell").isNotNull(), "ok")
-        .otherwise("err")
-    )
-    return out.withColumn("x_status", status)
 
 
 def extracted_text() -> Column:
@@ -266,8 +58,6 @@ def extracted_text() -> Column:
 
 def listing_text() -> Column:
     """Ground-truth text for listing pages: LISTING|host|page|n_outlinks."""
-    from webscraper_spark.functions.canon import url_host
-
     page_no = _re1(F.col("url"), r"[?&]page=(\d+)")
     return F.concat_ws(
         "|", F.lit("LISTING"), url_host(F.col("url")), page_no, F.size(F.col("x_outlinks")).cast("string")

@@ -1,14 +1,14 @@
-r"""Arrow-vectorized pandas-UDF extraction engine (the input_hint path:
-"extract links/text from fetched HTML using vectorized pandas/Arrow UDFs
-with no per-row Python").
+r"""HTML field extraction: one Arrow-vectorized pandas UDF pass per batch
+(the input_hint path: "extract links/text from fetched HTML using
+vectorized pandas/Arrow UDFs with no per-row Python").
 
-Semantics are byte-identical to the native-expression engine in extract.py
-(enforced by test_extract_engines_agree); this one exists because ~15
-distinct full-document Java-regex passes cost ~2.5s each over a 200k-page
-corpus, while compiled-once Python regexes over an Arrow batch do all
-fields in a single pass per pattern at a fraction of the cost. The UDF is
-evaluated exactly once per row (Catalyst pulls Python UDFs into a single
-ArrowEvalPython node), then fields star-expand from the returned struct.
+It re-expresses the reference's per-ad CSS-selector + Ruby-regex
+extraction (cars_controller.rb:153-249, car_dealers_controller.rb:163-272).
+The Ruby regexes (SURVEY.md §2.7 F1-F19) are reproduced with identical
+semantics; `sub` (first occurrence) vs `gsub` (all) is honoured per call
+site. Each pattern runs over a whole Arrow batch at a time. The UDF is evaluated exactly once per row (Catalyst
+pulls Python UDFs into a single ArrowEvalPython node), then fields
+star-expand from the returned struct.
 """
 
 from __future__ import annotations
@@ -60,7 +60,7 @@ X_STRUCT = T.StructType(
     ]
 )
 
-# compiled once per executor; identical patterns to extract.py
+# compiled once per executor
 _P = {
     "title": re.compile(r'<h3 class="ad-title">([^<]*)</h3>'),
     "category": re.compile(r'<strong class="category">([^<]*)</strong>'),
@@ -159,8 +159,8 @@ def extract_all_udf(html_s: pd.Series) -> pd.DataFrame:
 
 
 def with_extraction_arrow(df: DataFrame, html_col: str = "html") -> DataFrame:
-    """Arrow-engine variant of extract.with_extraction: same output columns,
-    one Python evaluation per row."""
+    """Append every extracted `x_*` column plus `x_status` (listing / ok /
+    err). Input needs `html` (binary); one Python evaluation per row."""
     out = df.withColumn("_x", extract_all_udf(F.col(html_col).cast("string")))
     for f in X_STRUCT.fields:
         out = out.withColumn(f.name, F.col("_x")[f.name])

@@ -85,14 +85,16 @@ def hygiene_frontier(
     outcomes: (host, wave, status) recent fetch outcomes for the AIMD
       delay table, or None for flat base_delay_ms.
     strip_tracking: remove tracking query params (functions/canon.py
-      strip_tracking_params) BEFORE dedup, so the 100 utm-variants of
-      one article collapse into its fetch slot; with False they stay
-      distinct and surface as 'keep:strip_tracking' verdicts instead.
+      strip_tracking_params; never the often-functional `ref`) BEFORE
+      dedup, so the 100 utm-variants of one article collapse into its
+      fetch slot; with False they stay distinct and surface as
+      'keep:strip_tracking' verdicts instead.
 
     Returns (url, host, depth, disc_wave, disc_pos, verdict, rank,
     delay_ms, sched_ms): the per-host-FIFO schedule of the surviving
-    candidates. verdict is 'keep' (or 'keep:strip_tracking' when
-    strip_tracking=False left params in place); drop rows are gone.
+    candidates. verdict is 'keep', or 'keep:strip_tracking' when a
+    tracking parameter is left in place (strip_tracking=False, or a
+    flag-only `ref`); drop rows are gone.
     When redirect_edges is given, the result carries a `_redir_cache`
     release handle (the repo-wide `*_cache` convention).
     """

@@ -434,13 +434,17 @@ def run_crawl(
             # Sized to the batch, not to the corpus scan: every task of the
             # fused scan→join→UDF→write stage pays a fixed Python-worker
             # cost, so a few hundred rows must not fan out over every scan
-            # split. coalesce merges partitions without a shuffle.
-            fetched = hits.unionByName(misses.select(*hits.columns)).coalesce(
-                extract_partitions(n_batch, *stage_conf)
-            )
+            # split. coalesce merges partitions without a shuffle. Only on
+            # the broadcast path: coalescing shuffled-hash join partitions
+            # makes one task build many hash relations, each freed only when
+            # the task ends, and runs out of execution memory. A batch that
+            # big already needs hundreds of extraction partitions.
+            fetched = hits.unionByName(misses.select(*hits.columns))
+            if small_batch:
+                fetched = fetched.coalesce(extract_partitions(n_batch, *stage_conf))
 
             # 5. extract (Arrow pandas-UDF engine — one Python evaluation per
-            # row; byte-identical to the native-expression engine by test)
+            # row; text rebuilt from its columns below)
             fetched = with_extraction_arrow(fetched)
             fetched = (
                 fetched.withColumn(

@@ -4,7 +4,7 @@ rate limiting and late/dirty-data tolerance; here the same concepts run as
 real streams for deployments that feed pages continuously instead of in
 batch waves.
 
-- stream_extract: readStream over a pages directory -> the same codegen
+- stream_extract: readStream over a pages directory -> the same Arrow UDF
   extraction as the batch path -> sink (micro-batch ≙ crawl wave,
   foreachBatch-compatible).
 - stream_wave_metrics: windowed per-host counters with a watermark (late
@@ -24,17 +24,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from webscraper_spark.functions.extract import with_extraction
+from webscraper_spark.functions.extract_pandas import with_extraction_arrow
 from webscraper_spark.operators.backoff import THROTTLE_STATUSES
 from webscraper_spark.schemas import PAGES
 
 
 def stream_extract(spark: SparkSession, pages_dir: str) -> DataFrame:
     """Streaming extraction: each new parquet file of pages becomes a
-    micro-batch through the identical extraction expressions as the batch
-    engine (same codegen; zero Python)."""
+    micro-batch through the crawl's extraction UDF
+    (`with_extraction_arrow`)."""
     src = spark.readStream.schema(PAGES).parquet(pages_dir)
-    ex = with_extraction(src)
+    ex = with_extraction_arrow(src)
     return ex.select("url", "warc_ts", "lang", "x_status", "x_title", "x_price_cell", "x_outlinks")
 
 
@@ -86,7 +86,7 @@ def stateful_politeness(candidates: DataFrame) -> DataFrame:
 
 
 _BACKOFF_OUT_SCHEMA = "host string, wave long, throttle_streak int, delay_ms long"
-_BACKOFF_STATE_SCHEMA = "streak int"
+_BACKOFF_STATE_SCHEMA = "streak int, last_wave long"
 
 
 def stream_adaptive_backoff(
@@ -107,7 +107,10 @@ def stream_adaptive_backoff(
     loop's shape — a wave IS the micro-batch). The batch form infers the
     streak from (latest_wave - last_clean) over the whole history; the
     streaming form folds it forward, which is what bounded state allows —
-    per-host state is ONE integer however long the stream runs."""
+    per-host state is the streak and the last folded wave however long the
+    stream runs. A micro-batch that carries a wave at or before a host's
+    last folded wave raises ValueError: folding it again would count it
+    twice."""
 
     def backoff_fn(key: tuple, pdfs: Any, state: GroupState):
         """Per-host AIMD fold: each wave in the micro-batch either extends
@@ -119,15 +122,21 @@ def stream_adaptive_backoff(
         wave can span chunks, so the chunks are concatenated before the fold
         (a per-chunk fold double-counted split waves)."""
         (host,) = key
-        streak = state.get[0] if state.exists else 0
+        streak, last_wave = state.get if state.exists else (0, None)
         pdf = pd.concat(list(pdfs), ignore_index=True)
         rows = []
         for wave, grp in sorted(pdf.groupby("wave")):
+            if last_wave is not None and wave <= last_wave:
+                raise ValueError(
+                    f"stream_adaptive_backoff: host {host!r} sent wave {wave} "
+                    f"after wave {last_wave} was already folded"
+                )
+            last_wave = int(wave)
             n = len(grp)
             n_thr = int(grp["status"].isin(THROTTLE_STATUSES).sum())
             streak = streak + 1 if n_thr * err_den >= n * err_num else 0
             rows.append((host, int(wave), streak, base_delay_ms << min(streak, max_shift)))
-        state.update((streak,))
+        state.update((streak, last_wave))
         yield pd.DataFrame(rows, columns=["host", "wave", "throttle_streak", "delay_ms"])
 
     return (
