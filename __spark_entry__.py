@@ -3,8 +3,8 @@
 entry(spark)      — flagship: synthesize the sf0.001 crawl corpus, run the
                     wave engine, push eligible cars through tags + pricing and
                     return the 41-rows-per-car Shopify variant DataFrame.
-queries()         — one entry per implemented operator (SURVEY.md §2 +
-                    training-data ops), each (spark, sf_dir) -> DataFrame.
+queries()         — one entry per implemented operator (SURVEY.md §2),
+                    each (spark, sf_dir) -> DataFrame.
 oracle_sql()      — DuckDB-equivalent ANSI SQL per query (omitted for
                     genuinely non-SQL-expressible ops -> rows-only check).
 
@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from webscraper_spark.functions.canon import canonicalize_url, url_host  # noqa: E402
+from webscraper_spark.functions.canon import canonicalize_url, h60, url_host  # noqa: E402
 from webscraper_spark.functions.derive import (  # noqa: E402
     eligibility,
     preis_tag,
@@ -50,29 +50,20 @@ from webscraper_spark.functions.text import (  # noqa: E402
     PII_PATTERNS,
     PII_PLACEHOLDERS,
     curation_decision,
-    dup_token_frac,
     fingerprint64,
     langid,
     pii_count,
     pii_scrub,
     quality_score,
     token_count,
-    top_ngram_frac,
-    top_token_frac,
 )
-from webscraper_spark.operators.cluster import neardup_components  # noqa: E402
 from webscraper_spark.operators.dedup import (  # noqa: E402
     exact_duplicates,
-    h60,
     minhash_lsh_pairs,
     contamination_overlap,
     ngram_jaccard_pairs,
     simhash_pairs,
     tokens,
-)
-from webscraper_spark.operators.pack import (  # noqa: E402
-    pack_sequences,
-    stratified_sample,
 )
 from webscraper_spark.operators.simsearch import (  # noqa: E402
     brute_force_topk,
@@ -803,46 +794,6 @@ GROUP BY inv.doc_id, inv.n_sh
 """
 
 
-def _q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc TF-IDF top-3 keyterms (L23 in SURVEY §2.10) with the
-    rational BM25-style idf — scores built only from IEEE +,-,*,/ so the
-    gate can hash-compare the doubles (operators/keyterms.py)."""
-    from webscraper_spark.operators.keyterms import tfidf_topk
-
-    docs = spark.read.parquet(_t(sf_dir, "documents"))
-    out = tfidf_topk(docs, k=3)
-    return out.select(
-        "doc_id", "term", "tf", "df", F.round("score", 6).alias("score"), "rank"
-    )
-
-
-def _sql_tfidf_topk() -> str:
-    return """
-WITH toked AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE string_split_regex(trim(text), '\\s+') END AS toks
-  FROM documents
-),
-terms AS (SELECT doc_id, unnest(toks) AS term FROM toked),
-tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY doc_id, term),
-dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-nd AS (SELECT count(*)::DOUBLE AS n FROM documents),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf, dft.df,
-         tf.tf::DOUBLE * ((SELECT n FROM nd) - dft.df::DOUBLE + 0.5::DOUBLE)
-             / (dft.df::DOUBLE + 0.5::DOUBLE) AS score
-  FROM tf JOIN dft USING (term)
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rank
-  FROM scored
-)
-SELECT doc_id, term, tf, df, round(score, 6) AS score, rank
-FROM ranked WHERE rank <= 3
-"""
-
-
 def _q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style corpus-level repeated-span removal (L24 in SURVEY §2.10):
     10-token blocks, any block with corpus df>=2 dropped everywhere, docs
@@ -1103,66 +1054,6 @@ FROM (
   SELECT CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split, n_chars
   FROM (SELECT {_sql_h60("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS b, n_chars FROM documents)
 ) GROUP BY split
-"""
-
-
-def _q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed sequence packing (operators/pack.py): docs hash-sharded
-    8 ways, laid end-to-end per shard in doc_id order, assigned to
-    512-token packs by running-sum arithmetic — the standard parallel
-    approximation of greedy packing (parallelism == n_shards)."""
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    return pack_sequences(d, context_len=512, n_shards=8)
-
-
-def _sql_sequence_packing() -> str:
-    return f"""
-WITH toked AS (
-  SELECT doc_id,
-         {_sql_h60("'pack:' || CAST(doc_id AS VARCHAR)")} % 8 AS shard,
-         CASE WHEN trim(text) = '' THEN 0
-              ELSE CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) END AS n_tokens
-  FROM documents
-),
-cum AS (
-  SELECT doc_id, shard, n_tokens,
-         COALESCE(SUM(n_tokens) OVER (
-           PARTITION BY shard ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS tokens_before
-  FROM toked
-)
-SELECT doc_id, shard, CAST(floor(tokens_before / 512) AS BIGINT) AS pack_id,
-       CAST(tokens_before % 512 AS BIGINT) AS pack_offset, n_tokens
-FROM cum
-"""
-
-
-# Binary-exact rates only (0.25/0.5/0.75): int(rate * 1e6) must round the
-# same way in both engines' literal folding.
-_MIX_RATES = {"src0": 0.25, "src1": 0.5, "src2": 0.75}
-
-
-def _q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic domain-mix downsample (operators/pack.py): keep a doc
-    iff h60('mix:'||doc_id) mod 1e6 < rate(source)*1e6; unlisted sources
-    keep everything. Returns the kept (doc_id, source) set so the gate
-    value-hashes every sampling decision."""
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    return stratified_sample(d, _MIX_RATES).select("doc_id", "source")
-
-
-def _sql_domain_mix() -> str:
-    arms = " ".join(
-        f"WHEN source = '{src}' THEN b < {int(rate * 1_000_000)}"
-        for src, rate in sorted(_MIX_RATES.items())
-    )
-    return f"""
-SELECT doc_id, source FROM (
-  SELECT doc_id, source,
-         {_sql_h60("'mix:' || CAST(doc_id AS VARCHAR)")} % 1000000 AS b
-  FROM documents
-)
-WHERE CASE {arms} ELSE TRUE END
 """
 
 
@@ -1628,7 +1519,7 @@ SELECT q_id, vec_id, nn_rank FROM (
 
 
 def _sql_h60(expr: str) -> str:
-    """DuckDB rendition of dedup.h60: first 15 md5 hex chars as BIGINT."""
+    """DuckDB rendition of canon.h60: first 15 md5 hex chars as BIGINT."""
     return (
         f"list_reduce(list_transform(string_split(substr(md5({expr}),1,15),''), "
         "c -> CAST(strpos('0123456789abcdef', c) AS BIGINT) - 1), (a,b) -> a*16+b)"
@@ -1695,43 +1586,6 @@ verified AS (
   JOIN shingled sb ON sb.doc_id = c.id_b
 )
 SELECT id_a, id_b, round(j, 6) AS jaccard FROM verified WHERE j >= 0.5::DOUBLE
-"""
-
-
-def _q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clustering end-to-end: MinHash-LSH pair graph -> connected
-    components (large-star/small-star, operators/cluster.py) -> every doc
-    labelled with its cluster's canonical min doc_id (singletons map to
-    themselves — the keep-set is doc_id == component_id)."""
-    docs = _docs_with_planted_dups(spark, sf_dir)
-    pairs = minhash_lsh_pairs(docs, threshold=0.5)
-    return neardup_components(pairs, docs, "doc_id")
-
-
-def _sql_neardup_clusters() -> str:
-    """Full independent replay: the entire minhash-LSH pair pipeline (nested
-    WITH, zero shared code with the engine) + a recursive-CTE transitive
-    closure taking min reachable id per doc — verifies the O(log n)
-    star-contraction against plain fixpoint reachability."""
-    inner = _sql_minhash_lsh()
-    return f"""
-WITH RECURSIVE doc_ids AS (
-  SELECT doc_id FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id FROM documents WHERE doc_id < 20
-),
-pairs AS ({inner}),
-cc_edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b AS u, id_a AS v FROM pairs
-),
-walk(id, comp) AS (
-  SELECT doc_id, doc_id FROM doc_ids
-  UNION
-  SELECT e.u, w.comp FROM walk w JOIN cc_edges e ON e.v = w.id
-)
-SELECT id AS doc_id, MIN(comp) AS component_id FROM walk GROUP BY id
 """
 
 
@@ -1868,54 +1722,6 @@ SELECT q_id, vec_id, nn_rank FROM (
          row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS nn_rank
   FROM scored
 ) WHERE nn_rank <= 5
-"""
-
-
-def _q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from webscraper_spark.operators.multimodal import decode_features, synth_media
-
-    return decode_features(synth_media(spark, 256)).select("media_id", "kind", "n_bytes", "width", "height", "status")
-
-
-# The fake decoder (multimodal.py:_fake_decode) reads the ASCII bytes of the
-# sha2-hex payload, so the projected integer features are pure hex-digest
-# arithmetic DuckDB reproduces independently: width/height are the first two
-# hex chars' ASCII codes mod 64 + 1. Only the float `feat` vector (np.float32
-# chunk means) stays outside SQL, and the query doesn't project it.
-def _q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from webscraper_spark.operators.multimodal import resize_plan, synth_media
-
-    return resize_plan(synth_media(spark, 256))
-
-
-def _sql_multimodal_resize() -> str:
-    """The fake resizer emits sha256(payload || '32x32') where payload is the
-    sha2-hex of the id — a pure hash chain DuckDB replays; resized_h60 is
-    the digest's first 15 hex chars as BIGINT (the h60 parse, sans md5)."""
-    parse = (
-        "list_reduce(list_transform(string_split(substr(sha256(sha256(CAST(media_id AS VARCHAR)) || '32x32'), 1, 15), ''), "
-        "c -> CAST(strpos('0123456789abcdef', c) AS BIGINT) - 1), (a, b) -> a * 16 + b)"
-    )
-    return f"""
-SELECT media_id,
-       CASE media_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-       CAST(32 AS INTEGER) AS width,
-       CAST(32 AS INTEGER) AS height,
-       CAST(64 AS BIGINT) AS n_bytes,
-       {parse} AS resized_h60,
-       'ok' AS status
-FROM range(256) t(media_id)
-"""
-
-
-_SQL_MULTIMODAL = """
-SELECT media_id,
-       CASE media_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-       CAST(64 AS BIGINT) AS n_bytes,
-       CAST(ascii(substr(sha256(CAST(media_id AS VARCHAR)), 1, 1)) % 64 + 1 AS INTEGER) AS width,
-       CAST(ascii(substr(sha256(CAST(media_id AS VARCHAR)), 2, 1)) % 64 + 1 AS INTEGER) AS height,
-       'ok' AS status
-FROM range(256) t(media_id)
 """
 
 
@@ -2084,88 +1890,6 @@ seen0 AS (SELECT NULL::VARCHAR AS url WHERE false)"""]
         parts.append(_sql_crawl_wave_ctes(w))
     final = " UNION ALL ".join(f"SELECT url, host, wave, rank, sched_ms FROM ord{w}" for w in range(waves))
     return "WITH " + ",".join(parts) + "\n" + final
-
-
-def _q_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style unigram-LM in-domain scoring (L27 in SURVEY §2.10):
-    add-one-smoothed unigram model trained on the 'src0' reference slice,
-    every document scored by arithmetic-mean likelihood (bit-reproducible
-    integer numerator / single IEEE division — see operators/lm.py)."""
-    from webscraper_spark.operators.lm import unigram_lm_score
-
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    return unigram_lm_score(d, F.col("source") == "src0")
-
-
-_SQL_UNIGRAM_LM = r"""
-WITH toked AS (
-  SELECT doc_id, source,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE string_split_regex(trim(text), '\s+') END AS toks
-  FROM documents
-),
-exploded AS (SELECT doc_id, source, term FROM toked, unnest(toks) AS u(term)),
-vocab AS (SELECT term, count(*)::BIGINT AS cnt FROM exploded
-          WHERE source = 'src0' GROUP BY term),
-scal AS (SELECT (coalesce(sum(cnt), 0) + count(*))::BIGINT AS denom FROM vocab),
-tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM exploded GROUP BY doc_id, term),
-per_doc AS (
-  SELECT tf.doc_id, sum(tf.tf)::BIGINT AS n_tok,
-         sum(tf.tf * (coalesce(v.cnt, 0) + 1))::BIGINT AS lm_num
-  FROM tf LEFT JOIN vocab v USING (term) GROUP BY tf.doc_id
-)
-SELECT d.doc_id,
-       coalesce(p.n_tok, 0)::BIGINT AS n_tok,
-       coalesce(p.lm_num, 0)::BIGINT AS lm_num,
-       CASE WHEN coalesce(p.n_tok, 0) = 0 THEN 0.0::DOUBLE
-            ELSE p.lm_num::DOUBLE / (p.n_tok * s.denom)::DOUBLE END AS lm_score
-FROM documents d LEFT JOIN per_doc p ON d.doc_id = p.doc_id, scal s
-"""
-
-
-def _q_mirror_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-host mirror detection (L28 in SURVEY §2.10): sources act as
-    hosts; every doc_id < 100 is re-hosted onto 'mirror-<source>' (the
-    planted mirrors), then operators/mirror.py finds host pairs sharing
-    >= 3 content fingerprints with a host-degree boilerplate cap."""
-    from webscraper_spark.operators.mirror import mirror_host_pairs
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id", "source", "text")
-    planted = d.filter(F.col("doc_id") < 100).select(
-        (F.col("doc_id") + 3000000).alias("doc_id"),
-        F.concat(F.lit("mirror-"), F.col("source")).alias("source"),
-        F.col("text"),
-    )
-    pages = d.unionByName(planted).select(F.col("source").alias("host"), "text")
-    return mirror_host_pairs(pages, min_shared=3, max_hosts_per_fp=20)
-
-
-def _sql_mirror_hosts(min_shared: int = 3, max_hosts_per_fp: int = 20) -> str:
-    """Independent DuckDB replay: same planted mirrors, same h60 content
-    fingerprint, same degree cap and containment overlap."""
-    fp = _sql_h60("'mirror:' || text")
-    return f"""
-WITH pages AS (
-  SELECT source AS host, text FROM documents
-  UNION ALL
-  SELECT 'mirror-' || source AS host, text FROM documents WHERE doc_id < 100
-),
-hf AS (SELECT DISTINCT host, {fp} AS fp FROM pages),
-deg AS (SELECT fp FROM (SELECT fp, count(*) AS n_hosts FROM hf GROUP BY fp)
-        WHERE n_hosts BETWEEN 2 AND {max_hosts_per_fp}),
-hf2 AS (SELECT hf.host, hf.fp FROM hf JOIN deg USING (fp)),
-sizes AS (SELECT host, count(*)::BIGINT AS n FROM hf2 GROUP BY host),
-shared AS (
-  SELECT a.host AS host_a, b.host AS host_b, count(*)::BIGINT AS shared
-  FROM hf2 a JOIN hf2 b ON a.fp = b.fp AND a.host < b.host
-  GROUP BY 1, 2 HAVING count(*) >= {min_shared}
-)
-SELECT s.host_a, s.host_b, s.shared, sa.n AS n_a, sb.n AS n_b,
-       s.shared::DOUBLE / least(sa.n, sb.n)::DOUBLE AS overlap
-FROM shared s
-JOIN sizes sa ON s.host_a = sa.host
-JOIN sizes sb ON s.host_b = sb.host
-"""
 
 
 def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2678,71 +2402,6 @@ FROM ranked
 """
 
 
-def _q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """jusText-style boilerplate removal (L31 in SURVEY §2.10): documents
-    wrapped in synthetic nav/ad/footer chrome, then block-scored (words,
-    integer link-density cross-multiplication) and reassembled
-    (operators/boilerplate.py) — all codegen, no shuffle, no floats."""
-    from webscraper_spark.operators.boilerplate import strip_boilerplate
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select(
-        "doc_id",
-        F.concat(
-            F.lit('<div class="nav"><a href="/">Home</a> <a href="/a">About us page</a></div><p>'),
-            F.col("text"),
-            F.lit("</p><div><a>Buy now cheap deals</a> <a>click here now</a></div>"),
-            F.lit("<footer>Copyright 2026 <a>terms</a></footer>"),
-        ).alias("html"),
-    )
-    return strip_boilerplate(d)
-
-
-_SQL_BOILERPLATE = r"""
-WITH pages AS (
-  SELECT doc_id,
-         '<div class="nav"><a href="/">Home</a> <a href="/a">About us page</a></div><p>'
-         || text ||
-         '</p><div><a>Buy now cheap deals</a> <a>click here now</a></div>'
-         || '<footer>Copyright 2026 <a>terms</a></footer>' AS html
-  FROM documents
-),
-split0 AS (
-  SELECT doc_id,
-         string_split_regex(html,
-           '</?(?:p|div|nav|footer|header|aside|section|article|ul|ol|li|h[1-6]|table|tr|td|br)\b[^>]*>'
-         ) AS arr
-  FROM pages
-),
-blocks0 AS (
-  SELECT doc_id, pos - 1 AS block_pos, arr[pos] AS block
-  FROM split0, unnest(generate_series(1, len(arr))) AS t(pos)
-),
-blocks AS (
-  SELECT doc_id, block_pos::BIGINT AS block_pos,
-         trim(regexp_replace(regexp_replace(block, '(?s)<[^>]*>', ' ', 'g'), '\s+', ' ', 'g')) AS text,
-         coalesce(list_aggregate(
-           list_transform(regexp_extract_all(block, '(?s)<a\b[^>]*>(.*?)</a>', 1),
-             x -> length(trim(regexp_replace(regexp_replace(x, '(?s)<[^>]*>', ' ', 'g'), '\s+', ' ', 'g')))),
-           'sum'), 0)::BIGINT AS link_chars
-  FROM blocks0
-),
-scored AS (
-  SELECT doc_id, block_pos, text,
-         len(string_split_regex(text, '\s+'))::BIGINT AS n_words,
-         length(text)::BIGINT AS text_chars, link_chars
-  FROM blocks WHERE text <> ''
-),
-verd AS (
-  SELECT *, (n_words >= 5 AND link_chars * 5 <= text_chars * 2) AS keep FROM scored
-)
-SELECT doc_id,
-       count(*)::BIGINT AS n_blocks,
-       sum(CASE WHEN keep THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-       coalesce(string_agg(CASE WHEN keep THEN text END, ' ' ORDER BY block_pos), '') AS main_text
-FROM verd GROUP BY doc_id
-"""
-
-
 def _cdx_url_expr():
     """Deterministic capture-URL synth exercising every SURT rule: mixed
     case, a www. label, an explicit port, unsorted query params, a
@@ -2991,49 +2650,6 @@ SELECT coalesce(prev.url, curr.url) AS url,
             WHEN prev.fp <> curr.fp THEN 'changed'
             ELSE 'unchanged' END AS verdict
 FROM prev FULL OUTER JOIN curr ON prev.url = curr.url
-"""
-
-
-def _q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style hashed-bigram importance weights (L34 in SURVEY §2.10):
-    target = the English slice of the corpus, raw = everything; per-doc
-    fixed-point integer sum of per-bucket likelihood ratios
-    (operators/dsir.py) — replayed bit-for-bit by the oracle's integer
-    CTE chain."""
-    from webscraper_spark.operators.dsir import importance_weights
-
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    return importance_weights(d, F.col("lang") == "en", n_buckets=512)
-
-
-def _sql_dsir_importance(n_buckets: int = 512, q_scale: int = 1 << 16) -> str:
-    h = _sql_h60("'dsir:' || gram")
-    return rf"""
-WITH toked AS (
-  SELECT doc_id, lang,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE string_split_regex(trim(text), '\s+') END AS toks
-  FROM documents
-),
-grams AS (
-  SELECT doc_id, (CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS is_t,
-         toks[i] || ' ' || toks[i + 1] AS gram
-  FROM toked, unnest(generate_series(1, len(toks) - 1)) AS t(i)
-  WHERE len(toks) >= 2
-),
-bucketed AS (SELECT doc_id, is_t, (({h}) % {n_buckets})::BIGINT AS bucket FROM grams),
-bb AS (SELECT bucket, sum(is_t)::BIGINT AS cnt_t, count(*)::BIGINT AS cnt_s
-       FROM bucketed GROUP BY bucket),
-tot AS (SELECT sum(cnt_t)::BIGINT AS tot_t, sum(cnt_s)::BIGINT AS tot_s FROM bb),
-w AS (SELECT bucket,
-             (((cnt_t + 1) * (tot_s + {n_buckets}) * {q_scale})
-              // ((cnt_s + 1) * (tot_t + {n_buckets})))::BIGINT AS weight
-      FROM bb, tot),
-sc AS (SELECT doc_id, count(*)::BIGINT AS n_grams, sum(weight)::BIGINT AS score
-       FROM bucketed JOIN w USING (bucket) GROUP BY doc_id)
-SELECT d.doc_id, coalesce(sc.n_grams, 0)::BIGINT AS n_grams,
-       coalesce(sc.score, 0)::BIGINT AS score
-FROM (SELECT DISTINCT doc_id FROM documents) d LEFT JOIN sc USING (doc_id)
 """
 
 
@@ -5005,17 +4621,12 @@ FROM ranked
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Query registry, ordered by driver-correctness priority.
+    """Query registry: name -> (spark, sf_dir) -> DataFrame.
 
-    The driver oracles roughly the first 50 entries in dict order
-    (CORRECTNESS_r04.json covered exactly registry entries 1-50), so the
-    ordering here is deliberate: queries that have never received a
-    driver-verified correctness row come FIRST, then queries last verified
-    in round 3, then the 50 that went green in round 4.  New queries are
-    inserted at the very front.  Keep oracle_sql() in the same order.
+    oracle_sql() has the same keys in the same order
+    (tests/test_registry.py checks this).
     """
     return {
-        # --- new in round 5 ---
         "crawl_wave_hygiene": _q_crawl_wave_hygiene,
         "cms_topk_candidates": _q_cms_topk_candidates,
         "robots_sitemaps": _q_robots_sitemaps,
@@ -5024,14 +4635,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_backoff_replay": _q_stream_backoff_replay,
         "sitemap_refetch": _q_sitemap_refetch,
         "trustrank": _q_trustrank,
-        # --- never driver-oracled before round 5 (judge-verified r4) ---
-        "neardup_clusters": _q_neardup_clusters,
         "repetition_metrics": _q_repetition_metrics,
         "cdx_index": _q_cdx_index,
         "anchor_text_agg": _q_anchor_text,
         "corpus_rollup": _q_corpus_rollup,
         "crawl_delta": _q_crawl_delta,
-        "dsir_importance": _q_dsir_importance,
         "url_filter": _q_url_filter,
         "mime_route": _q_mime_route,
         "group_quantiles": _q_group_quantiles,
@@ -5055,7 +4663,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_chunking": _q_doc_chunking,
         "registered_domain": _q_registered_domain,
         "hreflang_clusters": _q_hreflang_clusters,
-        # --- last driver-verified in round 3 ---
         "embedding_cosine_topk": _q_embedding_topk,
         "minhash_lsh_pairs": _q_minhash_lsh,
         "simhash_pairs": _q_simhash,
@@ -5063,10 +4670,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_lsh_ann": _q_ann_lsh,
         "embedding_ivf_ann": _q_ivf_ann,
         "embedding_near_dup": _q_embedding_near_dup,
-        "multimodal_features": _q_multimodal_features,
-        "multimodal_resize": _q_multimodal_resize,
         "crawl_wave_e2e": _q_crawl_wave,
-        # --- driver-verified green in round 4 (CORRECTNESS_r04.json) ---
         "tpch_q1_pricing_summary": _q_tpch_q1,
         "eligibility_filter": _q_eligibility_filter,
         "anti_join_seen": _q_anti_join_seen,
@@ -5094,7 +4698,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "exact_dedup_groups": _q_exact_dedup,
         "ngram_jaccard_pairs": _q_ngram_jaccard,
         "contamination_check": _q_contamination,
-        "tfidf_topk": _q_tfidf_topk,
         "span_dedup": _q_span_dedup,
         "recrawl_priority": _q_recrawl_priority,
         "semantic_dedup": _q_semantic_dedup,
@@ -5102,8 +4705,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vocab_topk": _q_vocab_topk,
         "dataset_split": _q_dataset_split,
         "curation_decision": _q_curation_decision,
-        "unigram_lm_score": _q_unigram_lm,
-        "mirror_hosts": _q_mirror_hosts,
         "pagerank": _q_pagerank,
         "hll_distinct": _q_hll_distinct,
         "robots_parse": _q_robots_parse,
@@ -5111,22 +4712,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sitemap_parse": _q_sitemap_parse,
         "warc_roundtrip": _q_warc_roundtrip,
         "budget_apportion": _q_budget_apportion,
-        "boilerplate_strip": _q_boilerplate,
-        "sequence_packing": _q_sequence_packing,
-        "domain_mix_sample": _q_domain_mix,
         "token_count": _q_token_count,
         "quality_score": _q_quality_score,
         "langid_stopwords": _q_langid,
-        # --- round-5, deliberately after the driver's ~50-query window
-        # (oracle-checked in the committed check_entry artifacts) ---
         "ngram_containment": _q_ngram_containment,
     }
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL, in the same order as queries() — see its docstring."""
+    """DuckDB oracle SQL per query, keyed and ordered as queries()."""
     return {
-        # --- new in round 5 ---
         "crawl_wave_hygiene": _SQL_HYGIENE,
         "cms_topk_candidates": _sql_cms_topk_candidates(),
         "robots_sitemaps": _SQL_ROBOTS_SITEMAPS,
@@ -5135,14 +4730,11 @@ def oracle_sql() -> dict[str, str]:
         "stream_backoff_replay": _SQL_STREAM_BACKOFF,
         "sitemap_refetch": _SQL_SITEMAP_REFETCH,
         "trustrank": _sql_trustrank(),
-        # --- never driver-oracled before round 5 ---
-        "neardup_clusters": _sql_neardup_clusters(),
         "repetition_metrics": _SQL_REPETITION,
         "cdx_index": _SQL_CDX_INDEX,
         "anchor_text_agg": _sql_anchor_text(),
         "corpus_rollup": _SQL_CORPUS_ROLLUP,
         "crawl_delta": _sql_crawl_delta(),
-        "dsir_importance": _sql_dsir_importance(),
         "url_filter": _sql_url_filter(),
         "mime_route": _sql_mime_route(),
         "group_quantiles": _SQL_GROUP_QUANTILES,
@@ -5166,7 +4758,6 @@ def oracle_sql() -> dict[str, str]:
         "doc_chunking": _SQL_DOC_CHUNKING,
         "registered_domain": _sql_registered_domain(),
         "hreflang_clusters": _SQL_HREFLANG,
-        # --- last driver-verified in round 3 ---
         "embedding_cosine_topk": _SQL_EMBEDDING_TOPK,
         "minhash_lsh_pairs": _sql_minhash_lsh(),
         "simhash_pairs": _sql_simhash(),
@@ -5174,10 +4765,7 @@ def oracle_sql() -> dict[str, str]:
         "embedding_lsh_ann": _sql_ann_lsh(),
         "embedding_ivf_ann": _sql_ivf_ann(),
         "embedding_near_dup": _sql_embedding_near_dup(),
-        "multimodal_features": _SQL_MULTIMODAL,
-        "multimodal_resize": _sql_multimodal_resize(),
         "crawl_wave_e2e": _sql_crawl_wave(),
-        # --- driver-verified green in round 4 ---
         "tpch_q1_pricing_summary": _SQL_TPCH_Q1,
         "eligibility_filter": _SQL_ELIGIBILITY,
         "anti_join_seen": _SQL_ANTI_JOIN,
@@ -5205,7 +4793,6 @@ def oracle_sql() -> dict[str, str]:
         "exact_dedup_groups": _SQL_EXACT_DEDUP,
         "ngram_jaccard_pairs": _sql_ngram_jaccard(),
         "contamination_check": _sql_contamination(),
-        "tfidf_topk": _sql_tfidf_topk(),
         "span_dedup": _SQL_SPAN_DEDUP,
         "recrawl_priority": _SQL_RECRAWL,
         "semantic_dedup": _sql_semantic_dedup(),
@@ -5213,8 +4800,6 @@ def oracle_sql() -> dict[str, str]:
         "vocab_topk": _SQL_VOCAB_TOPK,
         "dataset_split": _sql_dataset_split(),
         "curation_decision": _sql_curation_decision(),
-        "unigram_lm_score": _SQL_UNIGRAM_LM,
-        "mirror_hosts": _sql_mirror_hosts(),
         "pagerank": _sql_pagerank(),
         "hll_distinct": _sql_hll_distinct(),
         "robots_parse": _SQL_ROBOTS_PARSE,
@@ -5222,9 +4807,6 @@ def oracle_sql() -> dict[str, str]:
         "sitemap_parse": _SQL_SITEMAP_PARSE,
         "warc_roundtrip": _SQL_WARC_ROUNDTRIP,
         "budget_apportion": _SQL_BUDGET_APPORTION,
-        "boilerplate_strip": _SQL_BOILERPLATE,
-        "sequence_packing": _sql_sequence_packing(),
-        "domain_mix_sample": _sql_domain_mix(),
         "token_count": _SQL_TOKEN_COUNT,
         "quality_score": _SQL_QUALITY,
         "langid_stopwords": _SQL_LANGID,

@@ -603,13 +603,13 @@ def main() -> None:
         "sessionize_events", "exact_dedup_groups", "minhash_lsh_pairs",
         "quality_score", "langid_stopwords", "embedding_cosine_topk",
         "embedding_lsh_ann", "embedding_ivf_ann", "embedding_near_dup",
-        "simhash_pairs", "token_count", "neardup_clusters", "repetition_metrics",
+        "simhash_pairs", "token_count", "repetition_metrics",
         "pii_scrub", "vocab_topk", "dataset_split", "curation_decision",
-        "contamination_check", "tfidf_topk", "span_dedup", "recrawl_priority",
-        "unigram_lm_score", "mirror_hosts", "pagerank", "hll_distinct",
+        "contamination_check", "span_dedup", "recrawl_priority",
+        "pagerank", "hll_distinct",
         "robots_decision", "sitemap_parse", "warc_roundtrip", "budget_apportion",
-        "boilerplate_strip", "cdx_index", "anchor_text_agg", "corpus_rollup",
-        "crawl_delta", "dsir_importance", "url_filter", "mime_route",
+        "cdx_index", "anchor_text_agg", "corpus_rollup",
+        "crawl_delta", "url_filter", "mime_route",
         "group_quantiles", "quality_threshold", "degree_cap", "text_normalize",
         "event_window_rates", "feed_parse", "json_props_extract",
         "redirect_resolve", "cms_heavy_hitters", "url_templates", "host_spam",
@@ -641,7 +641,7 @@ def main() -> None:
     udf_bound = {
         "minhash_lsh_pairs", "simhash_pairs", "embedding_cosine_topk",
         "embedding_lsh_ann", "embedding_ivf_ann", "embedding_near_dup",
-        "neardup_clusters", "warc_roundtrip", "cdx_index", "text_normalize",
+        "warc_roundtrip", "cdx_index", "text_normalize",
     }
     base_reps = int(os.environ.get("BENCH_QUERY_REPS", "2"))
     for name in bench_queries:

@@ -1,7 +1,6 @@
 """Tests for the CDX capture index (operators/cdx.py, SURVEY 2.1 S13),
 anchor-text aggregation (operators/graph.py anchor_profile, 2.10 L32),
-crawl snapshot delta (operators/delta.py, L33), and DSIR importance
-weights (operators/dsir.py, L34)."""
+and crawl snapshot delta (operators/delta.py, L33)."""
 
 from __future__ import annotations
 
@@ -12,7 +11,6 @@ from pyspark.sql import functions as F
 
 from webscraper_spark.operators.cdx import build_cdx_index, surt_key
 from webscraper_spark.operators.delta import delta_summary, snapshot_delta
-from webscraper_spark.operators.dsir import importance_weights
 from webscraper_spark.operators.graph import anchor_profile
 from webscraper_spark.sources.warc import build_warc, read_warc
 
@@ -120,73 +118,3 @@ def test_snapshot_delta_verdicts(spark):
         ).collect()
     }
     assert summ == {("h", "unchanged"): 1, ("h", "changed"): 1, ("h", "removed"): 1, ("h", "added"): 1}
-
-
-# ---------------------------------------------------------------- DSIR
-
-
-def _h60_py(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def _py_dsir(docs, n_buckets=64, q=1 << 16):
-    """docs: list of (doc_id, is_target, text). Mirrors the operator's
-    integer arithmetic exactly."""
-    grams = []
-    for did, is_t, text in docs:
-        toks = text.split()
-        for a, b in zip(toks, toks[1:]):
-            grams.append((did, is_t, _h60_py(f"dsir:{a} {b}") % n_buckets))
-    cnt_t = Counter(b for _, t, b in grams if t)
-    cnt_s = Counter(b for _, _, b in grams)
-    tot_t, tot_s = sum(cnt_t.values()), sum(cnt_s.values())
-    w = {
-        b: ((cnt_t.get(b, 0) + 1) * (tot_s + n_buckets) * q)
-        // ((cnt_s[b] + 1) * (tot_t + n_buckets))
-        for b in cnt_s
-    }
-    out = {did: [0, 0] for did, _, _ in docs}
-    for did, _, b in grams:
-        out[did][0] += 1
-        out[did][1] += w[b]
-    return {did: tuple(v) for did, v in out.items()}
-
-
-def test_dsir_matches_python_exactly(spark):
-    docs = [
-        (0, 1, "the quick brown fox jumps over the lazy dog"),
-        (1, 1, "the quick red fox runs fast"),
-        (2, 0, "der schnelle braune fuchs springt"),
-        (3, 0, "la rapida volpe marrone salta sopra il cane"),
-        (4, 0, "the quick brown fox again the quick brown fox"),
-        (5, 0, "one"),  # <2 tokens -> 0 grams, score 0
-        (6, 0, ""),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, t int, text string")
-    got = {
-        r["doc_id"]: (r["n_grams"], r["score"])
-        for r in importance_weights(df, F.col("t") == 1, n_buckets=64).collect()
-    }
-    assert got == _py_dsir(docs)  # integer-exact, no tolerance
-    assert got[5] == (0, 0) and got[6] == (0, 0)
-
-
-def test_dsir_orders_target_like_docs_first(spark):
-    # Disjoint vocabularies + enough buckets that collisions don't blur
-    # the ratio signal: every doc sharing the target vocabulary must
-    # out-score every doc that shares none of it.
-    tgt_text = "alpha beta gamma delta epsilon zeta eta theta"
-    off_text = "uno dos tres cuatro cinco seis siete ocho"
-    docs = (
-        [(i, 1, tgt_text) for i in range(4)]
-        + [(10, 0, tgt_text + " iota kappa")]  # raw doc in target style
-        + [(20 + i, 0, off_text) for i in range(4)]
-    )
-    df = spark.createDataFrame(docs, "doc_id long, t int, text string")
-    got = {
-        r["doc_id"]: r["score"] / r["n_grams"]
-        for r in importance_weights(df, F.col("t") == 1, n_buckets=4096).collect()
-    }
-    worst_tgt = min(got[i] for i in (0, 1, 2, 3, 10))
-    best_off = max(got[20 + i] for i in range(4))
-    assert worst_tgt > best_off

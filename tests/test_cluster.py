@@ -1,8 +1,7 @@
-"""Connected components (near-dup clustering) + repetition metrics."""
+"""Repetition metrics (functions/text.py)."""
 
 from __future__ import annotations
 
-import random
 from collections import Counter
 
 from pyspark.sql import functions as F
@@ -13,65 +12,6 @@ from webscraper_spark.functions.text import (
     top_ngram_frac,
     top_token_frac,
 )
-from webscraper_spark.operators.cluster import connected_components, neardup_components
-
-
-def _union_find_components(n_nodes, edges):
-    parent = list(range(n_nodes))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, v in edges:
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[max(ru, rv)] = min(ru, rv)
-    # roots are component minima (we always parent the larger root under
-    # the smaller), so find(x) IS the canonical min id
-    return {x: find(x) for x in range(n_nodes)}
-
-
-def test_connected_components_matches_union_find(spark):
-    rng = random.Random(42)
-    n = 300
-    edges = sorted({tuple(sorted((rng.randrange(n), rng.randrange(n))))
-                    for _ in range(250)} - {(i, i) for i in range(n)})
-    expected = _union_find_components(n, edges)
-    df = spark.createDataFrame(edges, "id_a: long, id_b: long")
-    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    nodes_in_edges = {x for e in edges for x in e}
-    assert set(got) == nodes_in_edges
-    for x in nodes_in_edges:
-        assert got[x] == expected[x], f"node {x}: {got[x]} != {expected[x]}"
-
-
-def test_connected_components_long_chain_converges_logarithmically(spark):
-    # A 200-node path is the worst case for min-label propagation
-    # (O(diameter) = 200 rounds); large-star/small-star must do it in O(log n).
-    chain = [(i, i + 1) for i in range(199)]
-    df = spark.createDataFrame(chain, "id_a: long, id_b: long")
-    cc = connected_components(df)
-    rows = cc.collect()
-    assert len(rows) == 200
-    assert all(r["component"] == 0 for r in rows)
-    assert cc._n_rounds <= 15, f"took {cc._n_rounds} rounds for a 200-chain"
-
-
-def test_neardup_components_singletons_and_clusters(spark):
-    pairs = spark.createDataFrame([(1, 5), (5, 9), (3, 7)], "id_a: long, id_b: long")
-    docs = spark.createDataFrame([(i,) for i in range(10)], "doc_id: long")
-    got = {r["doc_id"]: r["component_id"] for r in neardup_components(pairs, docs).collect()}
-    assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4, 5: 1, 6: 6, 7: 3, 8: 8, 9: 1}
-
-
-def test_connected_components_empty_edges(spark):
-    pairs = spark.createDataFrame([], "id_a: long, id_b: long")
-    docs = spark.createDataFrame([(i,) for i in range(4)], "doc_id: long")
-    got = {r["doc_id"]: r["component_id"] for r in neardup_components(pairs, docs).collect()}
-    assert got == {0: 0, 1: 1, 2: 2, 3: 3}
 
 
 def _py_metrics(text):

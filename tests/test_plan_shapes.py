@@ -59,19 +59,6 @@ def test_anchor_profile_topk_uses_window_group_limit(spark):
     assert "WindowGroupLimit" in plan
 
 
-def test_dsir_weight_table_is_broadcast(spark):
-    from webscraper_spark.operators.dsir import importance_weights
-
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over dog %d" % i) for i in range(32)],
-        "doc_id long, text string",
-    )
-    plan = _plan(importance_weights(docs, F.lit(True), n_buckets=32))
-    # grams join weights must be broadcast (B-row weight table), never a
-    # sort-merge shuffle of the gram stream against it.
-    assert "BroadcastHashJoin" in plan
-
-
 def test_quantile_threshold_join_is_broadcast(spark):
     from webscraper_spark.operators.quantiles import quantile_threshold_filter
 

@@ -109,6 +109,29 @@ def test_stream_seen_dedup_across_microbatches(spark, tmp_path_factory):
     assert sum("/p" in u for u in urls) == 1
 
 
+def test_stream_seen_key_is_batch_url_hash(spark, tmp_path_factory):
+    """The stream keys on the batch seen set's url_hash, so a MERGE on
+    url_hash matches rows across the two engines."""
+    import datetime as dt
+
+    from webscraper_spark.functions.canon import url_hash
+    from webscraper_spark.streaming.stream import stream_seen_dedup
+
+    url = "https://a.ex/p?a=1&b=2"  # already canonical
+    d = str(tmp_path_factory.mktemp("seen_key_stream"))
+    schema = "url string, warc_ts timestamp"
+    spark.createDataFrame([(url, dt.datetime(2020, 9, 1))], schema).write.mode("append").parquet(d)
+    q = (
+        stream_seen_dedup(spark.readStream.schema(schema).parquet(d), within="1 hour")
+        .writeStream.outputMode("append").format("memory").queryName("seen_key").start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    got = [r["url_hash"] for r in spark.sql("SELECT url_hash FROM seen_key").collect()]
+    want = spark.range(1).select(url_hash(F.lit(url)).alias("h")).first()["h"]
+    assert got == [want]
+
+
 def test_stream_adaptive_backoff_streak_across_microbatches(spark, tmp_path_factory):
     """AIMD streak survives the micro-batch boundary: host A ends batch 1
     with streak 1 (wave 1 throttled), batch 2's throttled wave 2 must

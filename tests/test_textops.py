@@ -1,4 +1,4 @@
-"""Dedup family, text analysis, similarity search, multimodal plumbing."""
+"""Dedup family, text analysis, similarity search."""
 
 from __future__ import annotations
 
@@ -19,7 +19,6 @@ from webscraper_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
-from webscraper_spark.operators.multimodal import decode_features, frame_sample_plan, synth_media
 from webscraper_spark.operators.simsearch import brute_force_topk, lsh_ann_topk
 
 
@@ -206,35 +205,6 @@ def test_lsh_candidate_selectivity(spark):
     assert planted_hits >= 18, planted_hits
 
 
-def test_multimodal_plumbing(spark):
-    media = synth_media(spark, 99)
-    feats = decode_features(media)
-    rows = feats.collect()
-    assert len(rows) == 99
-    assert all(r.status == "ok" and len(r.feat) == 8 for r in rows)
-    again = {r.media_id: r.feat for r in decode_features(media).collect()}
-    for r in rows:
-        assert again[r.media_id] == r.feat  # deterministic fake decode
-    plan = frame_sample_plan(media)
-    assert plan.count() > 0
-    assert plan.filter(F.col("frame_idx") % 10 != 0).count() == 0
-
-
-def test_multimodal_null_payload_and_stub(spark):
-    media = synth_media(spark, 5).withColumn(
-        "payload", F.when(F.col("media_id") == 0, F.lit(None).cast("binary")).otherwise(F.col("payload"))
-    )
-    rows = decode_features(media).collect()
-    assert sum(r.status == "null_payload" for r in rows) == 1
-    import importlib.util
-
-    if importlib.util.find_spec("PIL") is None:
-        # no PIL in the container: the real-decoder path must fail loudly,
-        # not silently fall back to the stub
-        with pytest.raises(Exception, match="NotImplementedError|real image/audio decode"):
-            decode_features(media, require_real_decoder=True).collect()
-
-
 def test_lsh_ann_dim768(spark):
     """High-dim plan viability: 16x768 hyperplanes must NOT live in the plan
     (the expression encoding exploded here); numpy-matmul bucketer handles
@@ -367,31 +337,6 @@ def test_embedding_near_dup_pairs(spark, emb):
     assert embedding_near_dup_pairs(e, dim=64, threshold=0.9).count() == 0
 
 
-def test_multimodal_resize_plan(spark):
-    """Resize stage: one row out per row in, target dims on every ok row,
-    deterministic sha-chain output, null-payload path, real-resizer gate."""
-    import hashlib
-
-    from webscraper_spark.operators.multimodal import resize_plan
-
-    media = synth_media(spark, 6).withColumn(
-        "payload", F.when(F.col("media_id") == 0, F.lit(None).cast("binary")).otherwise(F.col("payload"))
-    )
-    rows = {r.media_id: r for r in resize_plan(media, 32, 32).collect()}
-    assert len(rows) == 6
-    assert rows[0].status == "null_payload" and rows[0].width == 0
-    for mid in range(1, 6):
-        r = rows[mid]
-        assert (r.width, r.height, r.status) == (32, 32, "ok")
-        want = hashlib.sha256(hashlib.sha256(str(mid).encode()).hexdigest().encode() + b"32x32").hexdigest()
-        assert r.resized_h60 == int(want[:15], 16)
-    import importlib.util
-
-    if importlib.util.find_spec("PIL") is None:
-        with pytest.raises(Exception, match="NotImplementedError|real image resize"):
-            resize_plan(media, require_real_resizer=True).collect()
-
-
 def test_pii_scrub_and_counts(spark):
     """pii_count / pii_scrub vs a hand-checked fixture: counts per pattern
     on the raw text, placeholders in the scrubbed text, non-PII text
@@ -486,60 +431,6 @@ def test_repetition_stats_empty_string_first_element(spark):
     assert got[2] == (1, 3)
 
 
-def test_sequence_packing_arithmetic_and_parallelism_invariance(spark):
-    """pack_sequences vs a hand-rolled python oracle, and bit-stability
-    across repartitioning (the in-shard order key is doc_id, never
-    partition order)."""
-    import hashlib
-
-    from webscraper_spark.operators.pack import pack_sequences
-
-    rows = [(i, "tok " * ((i * 37) % 100 + 1)) for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in pack_sequences(df, context_len=64, n_shards=4).collect()}
-    assert len(got) == 200
-
-    def h60(s: str) -> int:
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-    by_shard: dict[int, list[int]] = {}
-    for i, _t in rows:
-        by_shard.setdefault(h60(f"pack:{i}") % 4, []).append(i)
-    for shard, ids in by_shard.items():
-        before = 0
-        for i in sorted(ids):
-            n_tok = (i * 37) % 100 + 1
-            r = got[i]
-            assert (r.shard, r.pack_id, r.pack_offset, r.n_tokens) == (
-                shard, before // 64, before % 64, n_tok,
-            ), (i, r)
-            before += n_tok
-
-    again = {
-        r.doc_id: (r.shard, r.pack_id, r.pack_offset)
-        for r in pack_sequences(df.repartition(13), context_len=64, n_shards=4).collect()
-    }
-    assert again == {k: (v.shard, v.pack_id, v.pack_offset) for k, v in got.items()}
-
-
-def test_stratified_sample_rates_and_determinism(spark):
-    """domain-mix sampling keeps ~rate per listed source, everything for
-    unlisted sources, and the same rows on every run."""
-    from webscraper_spark.operators.pack import stratified_sample
-
-    rows = [(i, f"src{i % 4}") for i in range(4000)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    rates = {"src0": 0.25, "src1": 0.5}
-    kept = stratified_sample(df, rates).groupBy("source").count().collect()
-    by_src = {r.source: r["count"] for r in kept}
-    assert by_src["src2"] == 1000 and by_src["src3"] == 1000  # unlisted: all
-    assert abs(by_src["src0"] - 250) < 60, by_src
-    assert abs(by_src["src1"] - 500) < 80, by_src
-    ids1 = {r.doc_id for r in stratified_sample(df, rates).select("doc_id").collect()}
-    ids2 = {r.doc_id for r in stratified_sample(df.repartition(7), rates).select("doc_id").collect()}
-    assert ids1 == ids2
-
-
 def test_ngram_jaccard_max_df_drops_boilerplate(spark):
     """max_df posting-list cap: a boilerplate prefix shared by every doc
     stops generating candidate pairs, planted near-dups survive, and
@@ -584,34 +475,6 @@ def test_contamination_overlap_flags_eval_members(spark):
     # doc 2 shingles(n=3): {abc, bcd, cdx, dxy}; eval grams {abc,bcd,cde,def}
     assert got[2].n_sh == 4 and got[2].hits == 2
     assert got[2].contam_frac == pytest.approx(0.5)
-
-
-def test_tfidf_topk_ranks_discriminative_terms(spark):
-    """Each doc's unique term outranks the corpus-wide term; scores match
-    the rational-idf formula exactly; ties break on term asc."""
-    from webscraper_spark.operators.keyterms import tfidf_topk
-
-    rows = [(i, f"common common uniq{i} uniq{i} uniq{i}") for i in range(4)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = tfidf_topk(df, k=2).collect()
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    n = 4.0
-    for i in range(4):
-        terms = sorted(by_doc[i], key=lambda r: r.rank)
-        assert [r.term for r in terms] == [f"uniq{i}", "common"]
-        # uniq: tf=3, df=1 -> 3*(4-1+0.5)/1.5 = 7.0; common: tf=2, df=4 -> 2*0.5/4.5
-        assert terms[0].score == pytest.approx(3 * (n - 1 + 0.5) / 1.5)
-        assert terms[1].score == pytest.approx(2 * (n - 4 + 0.5) / 4.5)
-    # diamond materialized: both the df aggregate and the join probe read
-    # the cached tf relation instead of recomputing the token explode
-    out2 = tfidf_topk(df, k=2)
-    assert out2._tf_cache.is_cached
-    s = out2._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-    assert s.count("InMemoryTableScan") >= 2, s
-    out2._tf_cache.unpersist()
 
 
 def test_span_dedup_removes_repeated_blocks_preserves_order(spark):

@@ -298,8 +298,9 @@ def test_missing_pages_match_oracle(spark, inputs, tmp_path_factory):
 
 
 def test_run_crawl_restores_session_on_error(spark, inputs, tmp_path_factory, monkeypatch):
-    """A wave that raises leaves the session's scan-split and AQE-coalescing
-    confs as they were before run_crawl, and its schedule cache released."""
+    """run_crawl sets no session conf: every conf is as it was before a
+    crawl that succeeds and before one that raises, the scan-split and
+    AQE-coalescing keys included, and the schedule cache is released."""
     import webscraper_spark.plans.wave as wave_mod
 
     keys = (
@@ -308,20 +309,26 @@ def test_run_crawl_restores_session_on_error(spark, inputs, tmp_path_factory, mo
         "spark.sql.adaptive.coalescePartitions.enabled",
     )
     prev_coalesce = spark.conf.get(keys[2])
-    spark.conf.set(keys[2], "false")  # the crawl turns it on; it must come back off
+    spark.conf.set(keys[2], "false")  # a crawl that turned it on would show
     try:
         before = {k: spark.conf.get(k) for k in keys}
+        all_before = spark.conf.getAll
         cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
+        pages, seeds, robots, politeness = inputs
+
+        run_crawl(spark, pages, seeds, robots, politeness,
+                  str(tmp_path_factory.mktemp("ckpt_ok")), CrawlConfig(max_waves=1))
+        assert spark.conf.getAll == all_before
 
         def boom(*_a, **_k):
             raise RuntimeError("injected mid-wave failure")
 
         monkeypatch.setattr(wave_mod, "expand_outlinks", boom)
-        pages, seeds, robots, politeness = inputs
         ckpt = str(tmp_path_factory.mktemp("ckpt_raise"))
         with pytest.raises(RuntimeError, match="injected"):
             run_crawl(spark, pages, seeds, robots, politeness, ckpt, CrawlConfig(max_waves=2))
         assert {k: spark.conf.get(k) for k in keys} == before
+        assert spark.conf.getAll == all_before
         assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
     finally:
         spark.conf.set(keys[2], prev_coalesce)

@@ -10,7 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from webscraper_spark.operators.dedup import h60, shingle_hashes, tokens
+from webscraper_spark.functions.canon import h60
+from webscraper_spark.operators.dedup import shingle_hashes, tokens
 
 # Tiny deterministic stopword profiles (public common-word lists).
 STOPWORDS = {

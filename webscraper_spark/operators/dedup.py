@@ -20,23 +20,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from webscraper_spark.functions.canon import h60
+
 MERSENNE31 = (1 << 31) - 1  # 31-bit domain: a*h+b never overflows int64 (ANSI mode)
 _MINHASH_A = [3, 5, 7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43, 47, 53, 59]
 _MINHASH_B = [7919, 104729, 1299709, 15485863, 32452843, 49979687, 67867967, 86028121,
               100663319, 122949829, 141650939, 160481183, 179424673, 198491317, 217645177, 236887691]
-
-
-def h60(col: Column) -> Column:
-    """60-bit string hash: first 15 hex chars of md5, as a positive long.
-
-    md5 is available native-codegen in Spark AND recomputable in ANSI SQL
-    engines (the DuckDB oracle parses the same hex prefix), so every
-    hash-derived operator output (minhash signatures, LSH band buckets,
-    fingerprints) is independently verifiable by the correctness gate —
-    xxhash64 was faster but proprietary-to-Spark, making the dedup family
-    unauditable. 60 bits keeps the value positive in signed-64 systems.
-    """
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def tokens(text: Column) -> Column:

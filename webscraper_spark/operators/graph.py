@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from webscraper_spark.operators.dedup import h60
+from webscraper_spark.functions.canon import h60
 
 
 def pagerank_fixed_point(

@@ -10,8 +10,7 @@ the resolution must be a set-oriented job, not a per-URL loop).
 
 Naive resolution is an O(max_hops) sequence of joins — 16 sequential
 shuffles for a 16-hop cap. Pointer jumping halves the chain length per
-round (the classic PRAM list-ranking trick, same family as the
-large-star/small-star connected-components operator in cluster.py):
+round (the classic PRAM list-ranking trick):
 after round k every src points 2^(k+1) hops ahead (or at its terminal),
 so a `max_hops` cap costs ceil(log2(max_hops)) self-joins. Each round is
 one equi-join keyed on the current target — AQE handles the skew of many

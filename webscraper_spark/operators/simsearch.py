@@ -149,7 +149,7 @@ def train_centroids(df: DataFrame, n_cells: int = 16,
     codebook drops in as any (cell_id, cvec) DataFrame of the same shape;
     the hash-sample keeps the whole pipeline recomputable by the ANSI-SQL
     oracle (md5 on both engines), which k-means iterations would not be."""
-    from webscraper_spark.operators.dedup import h60
+    from webscraper_spark.functions.canon import h60
 
     return (
         df.select(F.col(id_col).alias("cell_id"), F.col(vec_col).alias("cvec"))
@@ -178,7 +178,7 @@ def train_centroids_kmeans(
     plain h60 sample — tested); train_centroids stays available for paths
     that must be recomputable by the ANSI-SQL correctness oracle, which
     k-means iterations would not be."""
-    from webscraper_spark.operators.dedup import h60
+    from webscraper_spark.functions.canon import h60
 
     rows = (
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))

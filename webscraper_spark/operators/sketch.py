@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from webscraper_spark.operators.dedup import h60
+from webscraper_spark.functions.canon import h60
 
 
 def _alpha(m: int) -> float:

@@ -13,11 +13,10 @@ and the seen anti-join (J1) do.
 
 Design: every feature is a codegen expression over the raw URL string —
 no UDF, no parse tree. Integer arithmetic only (digit-density compares
-via cross-multiplication, like boilerplate.py's link-density rule), so
-the DuckDB oracle replays verdicts bit-for-bit. First-failing-rule
-verdict string, same contract as text.py `curation_decision`: one
-filter() on `verdict = 'keep'` drives the frontier, and the per-rule
-breakdown stays auditable.
+via cross-multiplication), so the DuckDB oracle replays verdicts
+bit-for-bit. First-failing-rule verdict string: one filter() on
+`verdict = 'keep'` drives the frontier, and the per-rule breakdown stays
+auditable.
 
 Scale notes: a narrow projection — no shuffle, no join; runs fused into
 whatever scan feeds it. The blocklist lives in ONE compiled regex

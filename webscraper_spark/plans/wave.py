@@ -117,42 +117,6 @@ def _parquet_rows(path: str) -> int:
     return sum(pq.read_metadata(f).num_rows for f in files)
 
 
-def tune_scan_splits(spark: SparkSession, source: DataFrame) -> dict[str, str] | None:
-    """Size file-scan splits so the corpus scan parallelizes to the cluster.
-
-    The default maxPartitionBytes=128MB / openCostInBytes=4MB bin-packs a
-    small-file corpus into 1-2 input partitions, serializing the fetch-join +
-    extraction stage (the CPU-heavy stage of every wave) regardless of core
-    count. Target ~1 split per core (more splits amplify per-task overhead —
-    Arrow stream setup + parquet writer open/close dominated 2-splits-per-core
-    runs); clamp to [1MB, 128MB] so at real scale (100TB ≈ 800k default
-    splits already ≫ cores) this converges to the stock default and is a
-    no-op.
-    """
-    try:
-        # Hadoop may return 'file:///p', 'file:/p' or a bare path — parse the
-        # scheme robustly (a naive f[7:] mangled single-slash forms and
-        # silently dropped them from the size total).
-        from urllib.parse import urlparse
-
-        files = [urlparse(f).path if f.startswith("file:") else f for f in source.inputFiles()]
-        total = sum(os.path.getsize(f) for f in files if os.path.exists(f))
-    except Exception:
-        return
-    if total <= 0:
-        return
-    cores = spark.sparkContext.defaultParallelism
-    mpb = min(max(int(total / max(cores, 1)), 1 << 20), 128 << 20)
-    # Return the prior values so the caller can restore them: these are
-    # session-global confs sized to ONE corpus, and leaking 1MB splits into
-    # later unrelated scans in the same session explodes their task counts.
-    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
-    prev = {k: spark.conf.get(k) for k in keys}
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(mpb))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(max(min(mpb // 8, 4 << 20), 64 << 10)))
-    return prev
-
-
 # Rows one extraction task takes: two Arrow batches of the session's
 # spark.sql.execution.arrow.maxRecordsPerBatch.
 ARROW_BATCHES_PER_TASK = 2
@@ -300,8 +264,9 @@ def run_crawl(
     resume: bool = False,
 ) -> dict[str, str]:
     """Run the crawl to frontier exhaustion (or max_waves). Returns paths of
-    the accumulated order/seen/results/metrics tables. The session confs the
-    crawl tunes are restored on return, also when a wave raises."""
+    the accumulated order/seen/results/metrics tables. The crawl sets no
+    session conf, so the caller's session is unchanged on return, also
+    when a wave raises."""
     cfg = config or CrawlConfig()
     os.makedirs(ckpt_dir, exist_ok=True)
 
@@ -345,21 +310,8 @@ def run_crawl(
             print(f"    [wave timing] {label}: {t1 - t0:.2f}s", file=sys.stderr)
         return t1
 
-    # Session-global confs sized to this crawl, restored in `finally`: the
-    # scan splits (tune_scan_splits) and AQE partition coalescing inside the
-    # wave loop. Round 1 disabled coalescing because the outlink-expansion
-    # shuffles were byte-small but compute-dense (regex canonicalization ran
-    # post-shuffle) and collapsed to 1-2 partitions. Canonicalization has
-    # since moved INTO the extraction UDF (pre-shuffle), so the post-shuffle
-    # work is cheap and coalescing just removes hundreds of tiny-task
-    # dispatches per wave.
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev_conf = {coalesce_key: spark.conf.get(coalesce_key, "true")}
     sched = None
     try:
-        prev_conf.update(tune_scan_splits(spark, pages) or {})
-        spark.conf.set(coalesce_key, "true")
-
         for wave in range(start_wave, cfg.max_waves):
             # Empty frontier = crawl done, known from parquet footers (or the
             # seed count) with ZERO Spark jobs.
@@ -499,13 +451,8 @@ def run_crawl(
 
         paths = _finalize(spark, ckpt_dir, completed)
     finally:
-        # Restored only now: the finalize scans still read this corpus's
-        # wave files and want the tuned splits; anything after run_crawl is
-        # unrelated work that must not inherit them.
         if sched is not None:
             sched.unpersist()
-        for k, v in prev_conf.items():
-            spark.conf.set(k, v)
     return paths
 
 

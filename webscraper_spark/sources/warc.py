@@ -11,7 +11,7 @@ and has no archive ingestion; this is the S12 source row (SURVEY §2.1).
 
 Spark shape: one input row per WARC file blob (binary), `mapInPandas`
 with an Arrow-batched Python parser — the sanctioned slow path for
-byte-format decoding (same contract as operators/multimodal.py): the
+byte-format decoding: the
 per-record work is a memoryview slice walk, a few hundred ns/record, and
 the unit of parallelism is the file, matching how WARC archives shard at
 petabyte scale (thousands of ~1 GB files). Synthesis (`build_warc`) is

@@ -177,18 +177,15 @@ def stream_seen_dedup(
     stays bounded because the watermark ages out keys (an unbounded
     `dropDuplicates` would hold every URL ever seen in the state store;
     at 10^10 URLs that is the difference between a working stream and
-    an OOM). Candidates need (url, warc_ts); the canonical hash is
-    computed with the SAME canonicalize+h60 path as the batch seen-set,
-    so a URL dedups identically whichever engine sees it first.
+    an OOM). Candidates need (url, warc_ts); the key is
+    url_hash(canonicalize_url(url)), the same key the batch seen-set
+    carries, so a URL dedups identically whichever engine sees it first.
 
     Late arrivals past the horizon CAN re-emit a url (the documented
     watermark trade-off; the downstream Iceberg MERGE is idempotent on
     url_hash, which is the standard exactly-once pattern).
     """
-    from webscraper_spark.functions.canon import canonicalize_url
-    from webscraper_spark.operators.dedup import h60
+    from webscraper_spark.functions.canon import canonicalize_url, url_hash
 
-    keyed = candidates.withColumn(
-        "url_hash", h60(canonicalize_url(F.col("url")))
-    )
+    keyed = candidates.withColumn("url_hash", url_hash(canonicalize_url(F.col("url"))))
     return keyed.withWatermark(ts_col, within).dropDuplicatesWithinWatermark(["url_hash"])
