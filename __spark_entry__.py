@@ -65,13 +65,6 @@ from webscraper_spark.operators.dedup import (  # noqa: E402
     simhash_pairs,
     tokens,
 )
-from webscraper_spark.operators.simsearch import (  # noqa: E402
-    brute_force_topk,
-    ivf_topk,
-    lsh_ann_topk,
-    train_centroids,
-)
-
 RUN_DATE = "2020-09-01"
 _STOP = {
     "en": ("the", "a", "of", "and", "to", "in", "is", "it", "that", "for"),
@@ -875,66 +868,6 @@ FROM scored
 """
 
 
-def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDedup semantic dedup (L26 in SURVEY §2.10): h60-sample codebook
-    cells, within-cell rounded-cosine pairs, greedy keep-lowest-id
-    (operators/dedup.py semantic_dedup). Same 20 planted near-copies as
-    embedding_near_dup, so the drop list is exactly the plants."""
-    from webscraper_spark.operators.dedup import semantic_dedup
-
-    e = spark.read.parquet(_t(sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    planted = e.filter(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("embedding", 1) + F.lit(0.05)),
-            F.slice("embedding", 2, 63),
-        ).alias("embedding"),
-    )
-    return semantic_dedup(e.unionByName(planted), n_cells=16, threshold=0.9)
-
-
-def _sql_semantic_dedup(n_cells: int = 16, threshold: float = 0.9) -> str:
-    """Independent DuckDB replay: same planted copies, same h60-ordered
-    codebook over the unioned corpus, same rounded-cosine cell assignment
-    (ties to the smaller cell_id), within-cell pairs, keep-lowest-id."""
-    h = _sql_h60("CAST(vec_id AS VARCHAR)")
-    return f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000,
-         list_concat([embedding[1]::DOUBLE + 0.05], (embedding::DOUBLE[])[2:])
-  FROM embeddings WHERE vec_id < 20
-),
-cent AS (
-  SELECT vec_id AS cell_id, emb AS cvec FROM (
-    SELECT vec_id, emb, row_number() OVER (ORDER BY {h}, vec_id) AS rk FROM e
-  ) WHERE rk <= {n_cells}
-),
-assign AS (
-  SELECT vec_id, emb, cell_id AS cell FROM (
-    SELECT e.vec_id, e.emb, c.cell_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY round(list_cosine_similarity(e.emb, c.cvec), 6) DESC, c.cell_id) AS rk
-    FROM e CROSS JOIN cent c
-  ) WHERE rk = 1
-),
-pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         round(list_cosine_similarity(a.emb, b.emb), 6) AS cos
-  FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
-),
-dropped AS (
-  SELECT id_b AS vec_id, min(id_a) AS dup_of, max(cos) AS max_cos
-  FROM pairs WHERE cos >= {threshold} GROUP BY id_b
-)
-SELECT a.vec_id, a.cell, d.dup_of IS NULL AS keep, d.dup_of, d.max_cos
-FROM assign a LEFT JOIN dropped d ON a.vec_id = d.vec_id
-"""
-
-
 def _planted_pii_suffix_spark():
     sid = F.col("doc_id").cast("string")
     return F.concat(
@@ -1084,26 +1017,6 @@ v AS (
   FROM q JOIN r ON q.doc_id = r.doc_id
 )
 SELECT doc_id, verdict, CAST(verdict = 'keep' AS BIGINT) AS keep FROM v
-"""
-
-
-def _q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(_t(sf_dir, "embeddings")).withColumn("embedding", F.col("embedding").cast("array<double>"))
-    q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    return brute_force_topk(e, q, k=5).select("q_id", "vec_id", F.col("rank").cast("long").alias("nn_rank"))
-
-
-_SQL_EMBEDDING_TOPK = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-q AS (SELECT vec_id AS q_id, emb AS q_vec FROM e WHERE vec_id < 5),
-scored AS (
-  SELECT q.q_id, e.vec_id, round(list_cosine_similarity(e.emb, q.q_vec), 6) AS cos
-  FROM e CROSS JOIN q
-)
-SELECT q_id, vec_id, nn_rank FROM (
-  SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS nn_rank
-  FROM scored
-) WHERE nn_rank <= 5
 """
 
 
@@ -1354,10 +1267,9 @@ FROM cars
 #
 # The dedup/fingerprint family hashes with h60 (15-hex-char md5 prefix,
 # operators/dedup.py) precisely so DuckDB can recompute every stage
-# independently: shingling, minhash permutations, LSH banding, SimHash
-# majority votes (FNV-1a over ASCII chars, HUGEINT mod-2^64), and the
-# sign-LSH hyperplane chain (LCG states via recursive CTE). These oracles
-# are full reimplementations, not snapshots.
+# independently: shingling, minhash permutations, LSH banding and SimHash
+# majority votes (FNV-1a over ASCII chars, HUGEINT mod-2^64). These
+# oracles are full reimplementations, not snapshots.
 
 def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(_docs_with_planted_dups(spark, sf_dir), threshold=0.5).select(
@@ -1374,148 +1286,6 @@ def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spark.read.parquet(_t(sf_dir, "documents"))
     return d.select("doc_id", fingerprint64(F.col("text")).alias("fp64"))
-
-
-def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH ANN over the embeddings table + 20 planted near-copies: at
-    the selective 16-bit-band defaults a uniform-random corpus has no
-    genuinely-near neighbours to retrieve (only self collides), so the
-    plants give the gate non-trivial retrievals to verify."""
-    e = spark.read.parquet(_t(sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    planted = e.filter(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("embedding", 1) + F.lit(0.05)),
-            F.slice("embedding", 2, 63),
-        ).alias("embedding"),
-    )
-    q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    return lsh_ann_topk(e.unionByName(planted), q, dim=64, k=5).select(
-        "q_id", "vec_id", F.col("rank").cast("long").alias("nn_rank")
-    )
-
-
-def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup over the embeddings table + 20 planted
-    near-copies (first component nudged by 0.05 — the raw table's max
-    pairwise cosine is ~0.51, so the threshold isolates exactly the plants
-    the LSH buckets recover)."""
-    from webscraper_spark.operators.dedup import embedding_near_dup_pairs
-
-    e = spark.read.parquet(_t(sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    planted = e.filter(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("embedding", 1) + F.lit(0.05)),
-            F.slice("embedding", 2, 63),
-        ).alias("embedding"),
-    )
-    return embedding_near_dup_pairs(e.unionByName(planted), dim=64, threshold=0.9)
-
-
-def _sql_embedding_near_dup(threshold: float = 0.9) -> str:
-    """Independent DuckDB replay: same LCG hyperplane chain as the ANN
-    oracle (128 planes -> 8 bands x 16 big-endian sign bits), same planted
-    near-copies, band-bucket candidate pairs, exact rounded-cosine filter."""
-    return f"""
-WITH RECURSIVE lcg(p, i, st) AS (
-  SELECT p, 0, (CAST(p + 1 AS HUGEINT) * 11400714819323198485::HUGEINT)
-               % 18446744073709551616::HUGEINT
-  FROM UNNEST(generate_series(0, 127)) AS t(p)
-  UNION ALL
-  SELECT p, i + 1,
-         (st * 6364136223846793005::HUGEINT + 1442695040888963407::HUGEINT)
-         % 18446744073709551616::HUGEINT
-  FROM lcg WHERE i < 64
-),
-planes AS (
-  SELECT p, list(CAST(st // 2048 AS DOUBLE) / 9007199254740992.0 * 2.0 - 1.0 ORDER BY i) AS vec
-  FROM lcg WHERE i >= 1 GROUP BY p
-),
-e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000,
-         list_concat([embedding[1]::DOUBLE + 0.05], (embedding::DOUBLE[])[2:])
-  FROM embeddings WHERE vec_id < 20
-),
-bits AS (
-  SELECT e.vec_id, p.p, CASE WHEN list_dot_product(e.emb, p.vec) >= 0 THEN 1 ELSE 0 END AS bit
-  FROM e CROSS JOIN planes p
-),
-buckets AS (
-  SELECT vec_id, p // 16 AS band,
-         sum(bit * (1 << (15 - (p % 16)))) AS bucket
-  FROM bits GROUP BY vec_id, p // 16
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM buckets a JOIN buckets b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-)
-SELECT id_a, id_b, cos FROM (
-  SELECT cand.id_a, cand.id_b,
-         round(list_cosine_similarity(ea.emb, eb.emb), 6) AS cos
-  FROM cand
-  JOIN e ea ON ea.vec_id = cand.id_a
-  JOIN e eb ON eb.vec_id = cand.id_b
-) WHERE cos >= {threshold}
-"""
-
-
-def _q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(_t(sf_dir, "embeddings")).withColumn("embedding", F.col("embedding").cast("array<double>"))
-    q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    # Explicit h60-sample codebook: the DuckDB oracle replays this exact
-    # sample. The library DEFAULT is the trained k-means codebook
-    # (train_centroids_kmeans), whose Lloyd's iterations an ANSI-SQL oracle
-    # cannot recompute — its recall guarantees are pytest-verified instead
-    # (test_ivf_trained_codebook_beats_sample).
-    cb = train_centroids(e.select("vec_id", F.col("embedding").alias("vec")), 16)
-    return ivf_topk(e, q, k=5, n_cells=16, n_probe=4, codebook=cb).select(
-        "q_id", "vec_id", F.col("rank").cast("long").alias("nn_rank")
-    )
-
-
-def _sql_ivf_ann(n_cells: int = 16, n_probe: int = 4, k: int = 5) -> str:
-    """Independent DuckDB replay of the whole IVF chain: same h60-ordered
-    codebook sample, same rounded-cosine cell assignment and query probe
-    (ties to the smaller cell_id), same candidate re-rank."""
-    h = _sql_h60("CAST(vec_id AS VARCHAR)")
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-cent AS (
-  SELECT vec_id AS cell_id, emb AS cvec FROM (
-    SELECT vec_id, emb, row_number() OVER (ORDER BY {h}, vec_id) AS rk FROM e
-  ) WHERE rk <= {n_cells}
-),
-assign AS (
-  SELECT vec_id, emb, cell_id FROM (
-    SELECT e.vec_id, e.emb, c.cell_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY round(list_cosine_similarity(e.emb, c.cvec), 6) DESC, c.cell_id) AS rk
-    FROM e CROSS JOIN cent c
-  ) WHERE rk = 1
-),
-probe AS (
-  SELECT q_id, q_vec, cell_id FROM (
-    SELECT q.vec_id AS q_id, q.emb AS q_vec, c.cell_id,
-           row_number() OVER (PARTITION BY q.vec_id
-                              ORDER BY round(list_cosine_similarity(q.emb, c.cvec), 6) DESC, c.cell_id) AS rk
-    FROM e q CROSS JOIN cent c WHERE q.vec_id < 5
-  ) WHERE rk <= {n_probe}
-)
-SELECT q_id, vec_id, nn_rank FROM (
-  SELECT p.q_id, a.vec_id,
-         row_number() OVER (PARTITION BY p.q_id
-                            ORDER BY round(list_cosine_similarity(a.emb, p.q_vec), 6) DESC, a.vec_id) AS nn_rank
-  FROM assign a JOIN probe p USING (cell_id)
-) WHERE nn_rank <= {k}
-"""
 
 
 def _sql_h60(expr: str) -> str:
@@ -1666,62 +1436,6 @@ def _sql_fingerprint() -> str:
     return f"""
 WITH {docs_shingles}
 SELECT doc_id, {fp} AS fp64 FROM shingled
-"""
-
-
-def _sql_ann_lsh() -> str:
-    """Sign-LSH ANN oracle: replays simsearch._hyperplane's LCG chain with
-    HUGEINT mod-2^64 arithmetic in a recursive CTE, buckets corpus + query
-    vectors by sign bits (bands=8, 16 planes/band, big-endian), then exact
-    rounded-cosine top-5 over candidates."""
-    return """
-WITH RECURSIVE lcg(p, i, st) AS (
-  SELECT p, 0, (CAST(p + 1 AS HUGEINT) * 11400714819323198485::HUGEINT)
-               % 18446744073709551616::HUGEINT
-  FROM UNNEST(generate_series(0, 127)) AS t(p)
-  UNION ALL
-  SELECT p, i + 1,
-         (st * 6364136223846793005::HUGEINT + 1442695040888963407::HUGEINT)
-         % 18446744073709551616::HUGEINT
-  FROM lcg WHERE i < 64
-),
-planes AS (
-  SELECT p, list(CAST(st // 2048 AS DOUBLE) / 9007199254740992.0 * 2.0 - 1.0 ORDER BY i) AS vec
-  FROM lcg WHERE i >= 1 GROUP BY p
-),
-e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000,
-         list_concat([embedding[1]::DOUBLE + 0.05], (embedding::DOUBLE[])[2:])
-  FROM embeddings WHERE vec_id < 20
-),
-bits AS (
-  SELECT e.vec_id, p.p, CASE WHEN list_dot_product(e.emb, p.vec) >= 0 THEN 1 ELSE 0 END AS bit
-  FROM e CROSS JOIN planes p
-),
-buckets AS (
-  SELECT vec_id, p // 16 AS band,
-         sum(bit * (1 << (15 - (p % 16)))) AS bucket
-  FROM bits GROUP BY vec_id, p // 16
-),
-cand AS (
-  SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS vec_id
-  FROM buckets c JOIN buckets q ON c.band = q.band AND c.bucket = q.bucket
-  WHERE q.vec_id < 5
-),
-scored AS (
-  SELECT cand.q_id, cand.vec_id,
-         round(list_cosine_similarity(ce.emb, qe.emb), 6) AS cos
-  FROM cand
-  JOIN e ce ON ce.vec_id = cand.vec_id
-  JOIN e qe ON qe.vec_id = cand.q_id
-)
-SELECT q_id, vec_id, nn_rank FROM (
-  SELECT q_id, vec_id,
-         row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS nn_rank
-  FROM scored
-) WHERE nn_rank <= 5
 """
 
 
@@ -2030,47 +1744,6 @@ def _sql_trustrank(n_iter: int = 8, scale: int = 10**12, d_num: int = 85, d_den:
 )"""
         )
     return "WITH " + ",\n".join(parts) + f"\nSELECT node, rank FROM r{n_iter}"
-
-
-def _q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL cardinality sketch (L30 in SURVEY §2.10): distinct-text count
-    of the documents table with 1024 integer-exact registers
-    (operators/sketch.py) — the one emitted double is a single division
-    of two exact operands."""
-    from webscraper_spark.operators.sketch import hll_distinct
-
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    return hll_distinct(d, F.concat(F.lit("hll:"), F.col("text")), p=10)
-
-
-def _sql_hll_distinct(p: int = 10) -> str:
-    from webscraper_spark.operators.sketch import _alpha
-
-    m = 1 << p
-    rem = 60 - p
-    mod = 1 << rem
-    two_pow = 1 << (rem + 1)
-    numer = _alpha(m) * m * m * float(two_pow)  # same Python-computed literal as Spark's F.lit
-    h = _sql_h60("'hll:' || text")
-    return f"""
-WITH hashed AS (SELECT {h} AS h FROM documents),
-regs AS (
-  SELECT h // {mod} AS bucket,
-         max(CASE WHEN h % {mod} = 0 THEN {rem + 1}
-                  ELSE {rem + 1} - length(bin(h % {mod})) END)::BIGINT AS register
-  FROM hashed GROUP BY bucket
-),
-agg AS (
-  SELECT count(*)::BIGINT AS n_filled,
-         sum(1::BIGINT << ({rem + 1} - register))::BIGINT AS sum_filled
-  FROM regs
-)
-SELECT {m}::BIGINT AS m,
-       (sum_filled + ({m} - n_filled) * {two_pow})::BIGINT AS sum_int,
-       ({m} - n_filled)::BIGINT AS n_zero_buckets,
-       {numer!r}::DOUBLE / (sum_filled + ({m} - n_filled) * {two_pow})::DOUBLE AS estimate_raw
-FROM agg
-"""
 
 
 def _robots_synth_spark(spark: SparkSession, sf_dir: str):
@@ -2801,30 +2474,6 @@ FROM documents
 """
 
 
-def _q_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact type-1 quantiles per (source, lang) (A6 in SURVEY §2.4):
-    n_chars p50/p90/p99 as the element at rank ceil(q*n) — integer-exact,
-    engine-independent (no interpolation, no sketch), via one window
-    shuffle (operators/quantiles.py)."""
-    from webscraper_spark.operators.quantiles import exact_group_quantiles
-
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    return exact_group_quantiles(d, ["source", "lang"], "n_chars", (0.5, 0.9, 0.99))
-
-
-_SQL_GROUP_QUANTILES = """
-WITH r AS (
-  SELECT source, lang, n_chars,
-         row_number() OVER (PARTITION BY source, lang ORDER BY n_chars) AS rnk,
-         count(*) OVER (PARTITION BY source, lang) AS n
-  FROM documents
-)
-SELECT source, lang, q AS q_permille, n_chars AS value
-FROM r, (VALUES (500), (900), (990)) qs(q)
-WHERE rnk = (q * n + 999) // 1000
-"""
-
-
 def _q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities (L37 in SURVEY §2.10): the same synthetic
     outlink graph as `pagerank`, 8 power iterations with integer
@@ -2902,42 +2551,6 @@ def _sql_hits(n_iter: int = 8, scale: int = 10**6) -> str:
     )
 
 
-def _q_quality_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language dynamic quality thresholding (L36 in SURVEY §2.10):
-    keep each language's top decile by quality score — threshold = the
-    group's exact type-1 p90 (an element of the data, engine-exact),
-    computed by the RLE quantile plan and broadcast back
-    (operators/quantiles.py quantile_threshold_filter)."""
-    from webscraper_spark.operators.quantiles import quantile_threshold_filter
-
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    scored = d.select(
-        "doc_id", "lang", quality_score(F.col("text")).alias("quality")
-    )
-    return quantile_threshold_filter(scored, ["lang"], "quality", 0.9).select(
-        "doc_id", "lang", "quality", "threshold", "kept"
-    )
-
-
-def _sql_quality_threshold() -> str:
-    return f"""
-WITH q AS ({_SQL_QUALITY}),
-j AS (
-  SELECT d.doc_id, d.lang, q.quality
-  FROM documents d JOIN q ON d.doc_id = q.doc_id
-),
-r AS (
-  SELECT lang, quality,
-         row_number() OVER (PARTITION BY lang ORDER BY quality) AS rnk,
-         count(*) OVER (PARTITION BY lang) AS n
-  FROM j
-),
-t AS (SELECT lang, quality AS threshold FROM r WHERE rnk = (900 * n + 999) // 1000)
-SELECT j.doc_id, j.lang, j.quality, t.threshold, j.quality >= t.threshold AS kept
-FROM j JOIN t USING (lang)
-"""
-
-
 def _q_degree_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Super-node degree capping (L39 in SURVEY §2.10): a deliberately
     skewed graph — EVERY document links to node 0, plus 2 hash-derived
@@ -2988,48 +2601,6 @@ SELECT src, dst FROM r WHERE rnk <= 16
 """
 
 
-def _q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode normalization (L38 in SURVEY §2.10): corpus text planted
-    with decomposed accents (e+U+0301), C0 control bytes, and whitespace
-    soup; cleaned by the codegen regexp chain and NFC-composed by the
-    Arrow-batched UDF (functions/normalize.py) — DuckDB's nfc_normalize
-    replays the composition byte-for-byte."""
-    from webscraper_spark.functions.normalize import normalize_text
-
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    i = F.col("doc_id")
-    messy = F.concat(
-        F.when(i % 5 == 0, F.lit("\x07\x01")).otherwise(F.lit("")),
-        F.col("text"),
-        F.when(i % 2 == 0, F.lit("  spaced\tout")).otherwise(F.lit("")),
-        # decomposed e+U+0301: NFC must actually compose it
-        F.when(i % 3 == 0, F.lit(" cafe\u0301")).otherwise(F.lit("")),
-    )
-    out = normalize_text(messy)
-    return d.select("doc_id", out.alias("norm_text"), F.length(out).cast("long").alias("n_norm"))
-
-
-def _sql_text_normalize() -> str:
-    return r"""
-WITH messy AS (
-  SELECT doc_id,
-    (CASE WHEN doc_id % 5 = 0 THEN chr(7) || chr(1) ELSE '' END)
-    || text
-    || (CASE WHEN doc_id % 2 = 0 THEN '  spaced' || chr(9) || 'out' ELSE '' END)
-    || (CASE WHEN doc_id % 3 = 0 THEN ' cafe' || chr(769) ELSE '' END) AS t
-  FROM documents
-),
-norm AS (
-  SELECT doc_id,
-    nfc_normalize(trim(regexp_replace(
-      regexp_replace(t, '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-      '\s+', ' ', 'g'))) AS norm_text
-  FROM messy
-)
-SELECT doc_id, norm_text, length(norm_text)::BIGINT AS n_norm FROM norm
-"""
-
-
 def _q_event_window_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window event rates (A7 in SURVEY §2.4): per event_type x
     6-hour bucket — event count, EXACT distinct users, and an integer-
@@ -3039,8 +2610,7 @@ def _q_event_window_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT start avoids session-timezone rendering entirely);
     (b) value mass sums CAST(floor(value*1000) AS BIGINT) — summing the
     raw doubles is addition-order-dependent and unverifiable;
-    (c) countDistinct is exact (Spark expands it to a two-level agg;
-    the HLL sketch family — L30 — is the approximate path at 100 TB)."""
+    (c) countDistinct is exact (Spark expands it to a two-level agg)."""
     d = spark.read.parquet(_t(sf_dir, "events"))
     # ANSI mode forbids CAST(timestamp AS LONG); unix_seconds is the
     # sanctioned epoch accessor (NTZ -> LTZ cast is exact: session tz is
@@ -3253,132 +2823,6 @@ SELECT src, dst AS final, hops,
        CASE WHEN hops > {max_hops} THEN 'cycle' ELSE 'resolved' END AS status
 FROM m{rounds}"""
     )
-
-
-_CMS_D, _CMS_W, _CMS_K = 4, 2048, 25
-
-
-def _q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min-sketch heavy hitters (L41 in SURVEY §2.10): the events
-    stream mapped to a geometric host distribution (host rank = trailing
-    zeros of event_id: host0-* gets ~n/2 of the stream, host1-* ~n/4,
-    ...), sketched into 4x2048 exact integer counters in one pass, then
-    point-queried for the top-25 hosts (operators/sketch.py cms_topk —
-    the d*w sketch broadcasts into the candidate join). Registers use
-    the auditable h60 cells, so the oracle rebuilds the identical
-    counter table — collisions and all — where Spark's own
-    count_min_sketch() blob could not be replayed."""
-    from webscraper_spark.operators.sketch import cms_topk
-
-    d = spark.read.parquet(_t(sf_dir, "events"))
-    i = F.col("event_id").cast("long")
-    tz = F.when(i % (1 << 10) == 0, F.lit(10))
-    for b in range(9, 0, -1):
-        tz = tz.when(i % (1 << b) == 0, F.lit(b))
-    tz = tz.otherwise(F.lit(0))
-    host = F.concat(
-        F.lit("host"), tz.cast("string"), F.lit("-"),
-        (i % 37).cast("string"), F.lit(".example.com"),
-    )
-    stream = d.select(host.alias("item"))
-    return cms_topk(stream, F.col("item"), d=_CMS_D, w=_CMS_W, k=_CMS_K)
-
-
-def _sql_cms_heavy_hitters() -> str:
-    rs = ", ".join(str(r) for r in range(_CMS_D))
-    tz_case = "CASE " + " ".join(
-        f"WHEN event_id % {1 << b} = 0 THEN {b}" for b in range(10, 0, -1)
-    ) + " ELSE 0 END"
-    h = _sql_h60("'cms' || r::VARCHAR || ':' || item")
-    return f"""
-WITH stream AS (
-  SELECT 'host' || ({tz_case})::VARCHAR || '-' || (event_id % 37)::VARCHAR
-         || '.example.com' AS item
-  FROM events
-),
-cells AS (
-  SELECT item, r, ({h}) % {_CMS_W} AS bucket
-  FROM stream, unnest([{rs}]) AS t(r)
-),
-sketch AS (SELECT r, bucket, count(*)::BIGINT AS cnt FROM cells GROUP BY r, bucket),
-cand AS (SELECT DISTINCT item FROM stream),
-cc AS (
-  SELECT item, r, ({h}) % {_CMS_W} AS bucket
-  FROM cand, unnest([{rs}]) AS t(r)
-),
-est AS (
-  SELECT item, min(coalesce(cnt, 0))::BIGINT AS est
-  FROM cc LEFT JOIN sketch USING (r, bucket) GROUP BY item
-)
-SELECT item, est FROM est ORDER BY est DESC, item LIMIT {_CMS_K}
-"""
-
-
-def _q_cms_topk_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CMS top-k with an EXPLICIT candidate list (round-4 verdict #6,
-    the corpus-scale posture for operators/sketch.py cms_topk): the
-    candidate universe is the bounded host table (11 ranks x 37 shards
-    = 407 rows, built by spark.range without scanning the stream), so
-    the plan contains NO stream-sized distinct — the stream contributes
-    only the fixed 4x2048 sketch aggregate and the candidates join the
-    broadcast sketch (tests/test_plan_shapes.py pins the shape).
-    Candidates absent from the stream estimate at most collision noise,
-    never vanish — the oracle replays the same cells, collisions and
-    all."""
-    from webscraper_spark.operators.sketch import cms_topk
-
-    d = spark.read.parquet(_t(sf_dir, "events"))
-    i = F.col("event_id").cast("long")
-    tz = F.when(i % (1 << 10) == 0, F.lit(10))
-    for b in range(9, 0, -1):
-        tz = tz.when(i % (1 << b) == 0, F.lit(b))
-    tz = tz.otherwise(F.lit(0))
-    host = F.concat(
-        F.lit("host"), tz.cast("string"), F.lit("-"),
-        (i % 37).cast("string"), F.lit(".example.com"),
-    )
-    stream = d.select(host.alias("item"))
-    cand = spark.range(11 * 37).select(
-        F.concat(
-            F.lit("host"), (F.col("id") % 11).cast("string"), F.lit("-"),
-            F.expr("id div 11").cast("string"), F.lit(".example.com"),
-        ).alias("item")
-    )
-    return cms_topk(stream, F.col("item"), candidates=cand, d=_CMS_D, w=_CMS_W, k=_CMS_K)
-
-
-def _sql_cms_topk_candidates() -> str:
-    rs = ", ".join(str(r) for r in range(_CMS_D))
-    tz_case = "CASE " + " ".join(
-        f"WHEN event_id % {1 << b} = 0 THEN {b}" for b in range(10, 0, -1)
-    ) + " ELSE 0 END"
-    h = _sql_h60("'cms' || r::VARCHAR || ':' || item")
-    return f"""
-WITH stream AS (
-  SELECT 'host' || ({tz_case})::VARCHAR || '-' || (event_id % 37)::VARCHAR
-         || '.example.com' AS item
-  FROM events
-),
-cells AS (
-  SELECT item, r, ({h}) % {_CMS_W} AS bucket
-  FROM stream, unnest([{rs}]) AS t(r)
-),
-sketch AS (SELECT r, bucket, count(*)::BIGINT AS cnt FROM cells GROUP BY r, bucket),
-cand AS (
-  SELECT 'host' || (g % 11)::VARCHAR || '-' || (g // 11)::VARCHAR
-         || '.example.com' AS item
-  FROM generate_series(0, 406) AS t(g)
-),
-cc AS (
-  SELECT item, r, ({h}) % {_CMS_W} AS bucket
-  FROM cand, unnest([{rs}]) AS t(r)
-),
-est AS (
-  SELECT item, min(coalesce(cnt, 0))::BIGINT AS est
-  FROM cc LEFT JOIN sketch USING (r, bucket) GROUP BY item
-)
-SELECT item, est FROM est ORDER BY est DESC, item LIMIT {_CMS_K}
-"""
 
 
 def _q_url_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4628,7 +4072,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """
     return {
         "crawl_wave_hygiene": _q_crawl_wave_hygiene,
-        "cms_topk_candidates": _q_cms_topk_candidates,
         "robots_sitemaps": _q_robots_sitemaps,
         "bom_charset_sniff": _q_bom_charset,
         "strip_tracking": _q_strip_tracking,
@@ -4642,16 +4085,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_delta": _q_crawl_delta,
         "url_filter": _q_url_filter,
         "mime_route": _q_mime_route,
-        "group_quantiles": _q_group_quantiles,
         "hits_scores": _q_hits,
-        "quality_threshold": _q_quality_threshold,
         "degree_cap": _q_degree_cap,
-        "text_normalize": _q_text_normalize,
         "event_window_rates": _q_event_window_rates,
         "feed_parse": _q_feed_parse,
         "json_props_extract": _q_json_props,
         "redirect_resolve": _q_redirect_resolve,
-        "cms_heavy_hitters": _q_cms_heavy_hitters,
         "url_templates": _q_url_templates,
         "host_spam": _q_host_spam,
         "lang_pivot": _q_lang_pivot,
@@ -4663,13 +4102,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_chunking": _q_doc_chunking,
         "registered_domain": _q_registered_domain,
         "hreflang_clusters": _q_hreflang_clusters,
-        "embedding_cosine_topk": _q_embedding_topk,
         "minhash_lsh_pairs": _q_minhash_lsh,
         "simhash_pairs": _q_simhash,
         "doc_fingerprint": _q_fingerprint,
-        "embedding_lsh_ann": _q_ann_lsh,
-        "embedding_ivf_ann": _q_ivf_ann,
-        "embedding_near_dup": _q_embedding_near_dup,
         "crawl_wave_e2e": _q_crawl_wave,
         "tpch_q1_pricing_summary": _q_tpch_q1,
         "eligibility_filter": _q_eligibility_filter,
@@ -4700,13 +4135,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "contamination_check": _q_contamination,
         "span_dedup": _q_span_dedup,
         "recrawl_priority": _q_recrawl_priority,
-        "semantic_dedup": _q_semantic_dedup,
         "pii_scrub": _q_pii_scrub,
         "vocab_topk": _q_vocab_topk,
         "dataset_split": _q_dataset_split,
         "curation_decision": _q_curation_decision,
         "pagerank": _q_pagerank,
-        "hll_distinct": _q_hll_distinct,
         "robots_parse": _q_robots_parse,
         "robots_decision": _q_robots_decision,
         "sitemap_parse": _q_sitemap_parse,
@@ -4723,7 +4156,6 @@ def oracle_sql() -> dict[str, str]:
     """DuckDB oracle SQL per query, keyed and ordered as queries()."""
     return {
         "crawl_wave_hygiene": _SQL_HYGIENE,
-        "cms_topk_candidates": _sql_cms_topk_candidates(),
         "robots_sitemaps": _SQL_ROBOTS_SITEMAPS,
         "bom_charset_sniff": _sql_bom_charset(),
         "strip_tracking": _SQL_STRIP_TRACKING,
@@ -4737,16 +4169,12 @@ def oracle_sql() -> dict[str, str]:
         "crawl_delta": _sql_crawl_delta(),
         "url_filter": _sql_url_filter(),
         "mime_route": _sql_mime_route(),
-        "group_quantiles": _SQL_GROUP_QUANTILES,
         "hits_scores": _sql_hits(),
-        "quality_threshold": _sql_quality_threshold(),
         "degree_cap": _sql_degree_cap(),
-        "text_normalize": _sql_text_normalize(),
         "event_window_rates": _SQL_EVENT_WINDOW_RATES,
         "feed_parse": _SQL_FEED_PARSE,
         "json_props_extract": _SQL_JSON_PROPS,
         "redirect_resolve": _sql_redirect_resolve(),
-        "cms_heavy_hitters": _sql_cms_heavy_hitters(),
         "url_templates": _SQL_URL_TEMPLATES,
         "host_spam": _sql_host_spam(),
         "lang_pivot": _sql_lang_pivot(),
@@ -4758,13 +4186,9 @@ def oracle_sql() -> dict[str, str]:
         "doc_chunking": _SQL_DOC_CHUNKING,
         "registered_domain": _sql_registered_domain(),
         "hreflang_clusters": _SQL_HREFLANG,
-        "embedding_cosine_topk": _SQL_EMBEDDING_TOPK,
         "minhash_lsh_pairs": _sql_minhash_lsh(),
         "simhash_pairs": _sql_simhash(),
         "doc_fingerprint": _sql_fingerprint(),
-        "embedding_lsh_ann": _sql_ann_lsh(),
-        "embedding_ivf_ann": _sql_ivf_ann(),
-        "embedding_near_dup": _sql_embedding_near_dup(),
         "crawl_wave_e2e": _sql_crawl_wave(),
         "tpch_q1_pricing_summary": _SQL_TPCH_Q1,
         "eligibility_filter": _SQL_ELIGIBILITY,
@@ -4795,13 +4219,11 @@ def oracle_sql() -> dict[str, str]:
         "contamination_check": _sql_contamination(),
         "span_dedup": _SQL_SPAN_DEDUP,
         "recrawl_priority": _SQL_RECRAWL,
-        "semantic_dedup": _sql_semantic_dedup(),
         "pii_scrub": _sql_pii_scrub(),
         "vocab_topk": _SQL_VOCAB_TOPK,
         "dataset_split": _sql_dataset_split(),
         "curation_decision": _sql_curation_decision(),
         "pagerank": _sql_pagerank(),
-        "hll_distinct": _sql_hll_distinct(),
         "robots_parse": _SQL_ROBOTS_PARSE,
         "robots_decision": _SQL_ROBOTS_DECISION,
         "sitemap_parse": _SQL_SITEMAP_PARSE,

@@ -601,25 +601,23 @@ def main() -> None:
         "tpch_q1_pricing_summary", "eligibility_filter", "anti_join_seen",
         "frontier_rank_per_host", "url_canonicalize", "cross_join_pricing_matrix",
         "sessionize_events", "exact_dedup_groups", "minhash_lsh_pairs",
-        "quality_score", "langid_stopwords", "embedding_cosine_topk",
-        "embedding_lsh_ann", "embedding_ivf_ann", "embedding_near_dup",
+        "quality_score", "langid_stopwords",
         "simhash_pairs", "token_count", "repetition_metrics",
         "pii_scrub", "vocab_topk", "dataset_split", "curation_decision",
         "contamination_check", "span_dedup", "recrawl_priority",
-        "pagerank", "hll_distinct",
+        "pagerank",
         "robots_decision", "sitemap_parse", "warc_roundtrip", "budget_apportion",
         "cdx_index", "anchor_text_agg", "corpus_rollup",
         "crawl_delta", "url_filter", "mime_route",
-        "group_quantiles", "quality_threshold", "degree_cap", "text_normalize",
+        "degree_cap",
         "event_window_rates", "feed_parse", "json_props_extract",
-        "redirect_resolve", "cms_heavy_hitters", "url_templates", "host_spam",
+        "redirect_resolve", "url_templates", "host_spam",
         "lang_pivot", "script_detect", "canonical_collapse",
         "adaptive_backoff", "charset_sniff", "coverage_audit", "doc_chunking",
         "registered_domain", "hreflang_clusters",
-        # round 5: the hygiene-wave integration pass, the broadcast-only
-        # CMS point-query (explicit candidate list), robots Sitemap:
+        # round 5: the hygiene-wave integration pass, robots Sitemap:
         # harvest, and BOM-first charset sniffing
-        "crawl_wave_hygiene", "cms_topk_candidates",
+        "crawl_wave_hygiene",
         "robots_sitemaps", "bom_charset_sniff", "strip_tracking",
         "sitemap_refetch",
         # hits_scores deliberately absent: its 16 per-iteration driver
@@ -639,9 +637,7 @@ def main() -> None:
     # min-of-3 (host noise hid a 3x regression behind min-of-2 once); all
     # reps land in the JSON so regressions can't hide behind the min.
     udf_bound = {
-        "minhash_lsh_pairs", "simhash_pairs", "embedding_cosine_topk",
-        "embedding_lsh_ann", "embedding_ivf_ann", "embedding_near_dup",
-        "warc_roundtrip", "cdx_index", "text_normalize",
+        "minhash_lsh_pairs", "simhash_pairs", "warc_roundtrip", "cdx_index",
     }
     base_reps = int(os.environ.get("BENCH_QUERY_REPS", "2"))
     for name in bench_queries:

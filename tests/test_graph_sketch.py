@@ -1,15 +1,13 @@
-"""Tests for fixed-point PageRank (operators/graph.py) and the HLL
-cardinality sketch (operators/sketch.py) — SURVEY 2.10 L29/L30."""
+"""Tests for fixed-point PageRank, HITS, degree capping and host-spam
+scoring (operators/graph.py) and redirect resolution
+(operators/redirects.py) — SURVEY 2.10."""
 
 from __future__ import annotations
 
 import hashlib
 from collections import Counter, defaultdict
 
-from pyspark.sql import functions as F
-
 from webscraper_spark.operators.graph import pagerank_fixed_point
-from webscraper_spark.operators.sketch import _alpha, hll_distinct
 
 
 def _py_pagerank(edges, n_iter=8, d_num=85, d_den=100, scale=10**12):
@@ -54,40 +52,6 @@ def test_pagerank_star_mass_concentrates(spark):
 
 def _h60_py(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def _py_hll(values, p=10):
-    rem_bits = 60 - p
-    regs = defaultdict(int)
-    for v in values:
-        h = _h60_py(v)
-        b, rem = h >> rem_bits, h % (1 << rem_bits)
-        rho = rem_bits + 1 if rem == 0 else rem_bits + 1 - rem.bit_length()
-        regs[b] = max(regs[b], rho)
-    m = 1 << p
-    s = sum(1 << (rem_bits + 1 - regs.get(b, 0)) for b in range(m))
-    return s, m - len(regs)
-
-
-def test_hll_registers_match_python(spark):
-    vals = [f"value-{i}" for i in range(3000)]
-    df = spark.createDataFrame([(v,) for v in vals], "v string")
-    row = hll_distinct(df, F.col("v")).collect()[0]
-    sum_int, zeros = _py_hll(vals)
-    assert row["m"] == 1024
-    assert row["sum_int"] == sum_int
-    assert row["n_zero_buckets"] == zeros
-    assert row["estimate_raw"] == _alpha(1024) * 1024 * 1024 * float(1 << 51) / sum_int
-
-
-def test_hll_estimate_accuracy(spark):
-    # sf0.1 documents: ~5k distinct texts > 2.5m = 2560, the raw-estimator
-    # regime (below it, textbook HLL switches to linear counting — which
-    # the operator deliberately leaves to the caller, see sketch.py).
-    d = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    exact = d.select("text").distinct().count()
-    est = hll_distinct(d, F.concat(F.lit("hll:"), F.col("text"))).collect()[0]["estimate_raw"]
-    assert abs(est - exact) / exact < 0.10  # ~3 sigma of the 1024-register error
 
 
 # ---------------------------------------------------------------- HITS
@@ -228,56 +192,6 @@ def test_redirects_overcap_chain_and_invariance(spark):
     assert ga[100][2] == "cycle"            # dist 10 > cap, hops clamped at 2^3
     assert ga[106] == (110, 4, "resolved")  # dist exactly at the cap
     assert ga[105][2] == "cycle"            # dist 5: resolved final, over cap
-
-
-# --- count-min sketch heavy hitters (operators/sketch.py, SURVEY 2.10 L41) ---
-
-def _py_cms_topk(values, cands, d, w, k):
-    from collections import Counter
-
-    sketch = Counter()
-    for v in values:
-        for r in range(d):
-            sketch[(r, _h60_py(f"cms{r}:{v}") % w)] += 1
-    est = {c: min(sketch.get((r, _h60_py(f"cms{r}:{c}") % w), 0) for r in range(d))
-           for c in cands}
-    return sorted(est.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-
-
-def test_cms_exact_when_no_collisions(spark):
-    from webscraper_spark.operators.sketch import cms_topk
-
-    values = ["a"] * 50 + ["b"] * 30 + ["c"] * 7 + ["d"] * 2
-    df = spark.createDataFrame([(v,) for v in values], "item string")
-    got = [(r["item"], r["est"]) for r in cms_topk(df, F.col("item"), w=1024, k=3).collect()]
-    # 4 items in 1024 buckets: estimates are the exact counts
-    assert got == [("a", 50), ("b", 30), ("c", 7)]
-
-
-def test_cms_collisions_match_python_replay(spark):
-    from webscraper_spark.operators.sketch import cms_topk
-
-    values = [f"v{i % 23}" for i in range(700)]
-    cands = sorted({f"v{i}" for i in range(23)})
-    df = spark.createDataFrame([(v,) for v in values], "item string")
-    got = [(r["item"], r["est"]) for r in cms_topk(df, F.col("item"), d=3, w=8, k=10).collect()]
-    # w=8 forces collisions: estimates are upper-biased but bit-identical
-    # to the python CMS replay (exact integer registers, same h60 cells)
-    assert got == _py_cms_topk(values, cands, d=3, w=8, k=10)
-    exact = {v: values.count(v) for v in cands}
-    for item, est in got:
-        assert est >= exact[item]  # CMS never underestimates
-
-
-def test_cms_external_candidate_absent_estimates_zero(spark):
-    from webscraper_spark.operators.sketch import cms_topk
-
-    df = spark.createDataFrame([("x",), ("x",), ("y",)], "item string")
-    cands = spark.createDataFrame([("x",), ("zzz",)], "item string")
-    got = {r["item"]: r["est"] for r in
-           cms_topk(df, F.col("item"), candidates=cands, w=1024, k=10).collect()}
-    assert got["x"] == 2
-    assert got["zzz"] == 0  # absent candidate -> empty cells -> 0, not dropped
 
 
 # --- link-farm host scoring (operators/graph.py, SURVEY 2.10 L43) ---

@@ -59,24 +59,18 @@ def test_anchor_profile_topk_uses_window_group_limit(spark):
     assert "WindowGroupLimit" in plan
 
 
-def test_quantile_threshold_join_is_broadcast(spark):
-    from webscraper_spark.operators.quantiles import quantile_threshold_filter
+def test_extraction_is_one_arrow_udf_in_one_projection(spark):
+    # one Python evaluation per row, its struct fields unpacked after the
+    # input columns, then the derived status
+    from webscraper_spark.functions.extract_pandas import X_STRUCT, with_extraction_arrow
 
     df = spark.createDataFrame(
-        [("en", i, i % 10) for i in range(64)], "lang string, doc_id long, score long"
+        [(i, f"https://h.ex/{i}", bytearray(b"<h1>t</h1>")) for i in range(4)],
+        "doc_id long, url string, html binary",
     )
-    plan = _plan(quantile_threshold_filter(df, ["lang"], "score", 0.9))
-    assert "BroadcastHashJoin" in plan
-
-
-def test_clean_text_is_codegen_nfc_is_arrow(spark):
-    from webscraper_spark.functions.normalize import clean_text, normalize_text
-
-    df = spark.createDataFrame([("some text",)], "t string")
-    assert "EvalPython" not in _plan(df.select(clean_text("t")))
-    full = _plan(df.select(normalize_text("t")))
-    assert "ArrowEvalPython" in full          # NFC is the Arrow path...
-    assert "BatchEvalPython" not in full      # ...never row-at-a-time Python
+    out = with_extraction_arrow(df)
+    assert _plan(out).count("ArrowEvalPython") == 1
+    assert out.columns == df.columns + X_STRUCT.fieldNames() + ["x_status"]
 
 
 def test_pivot_explicit_values_single_pass(spark):
@@ -106,33 +100,6 @@ def test_template_mining_is_codegen_single_agg(spark):
     plan = _plan(url_templates(_urls(spark)))
     assert "EvalPython" not in plan          # regex masking is codegen
     assert plan.count("Exchange") == 1       # one shuffle: the group-by
-
-
-def test_cms_sketch_partial_aggregates(spark):
-    from webscraper_spark.operators.sketch import cms_topk
-
-    df = spark.createDataFrame([(f"h{i % 9}",) for i in range(50)], "item string")
-    plan = _plan(cms_topk(df, F.col("item"), d=4, w=64, k=5))
-    assert "EvalPython" not in plan
-    assert "BroadcastHashJoin" in plan       # d*w sketch broadcast into point query
-
-
-def test_cms_topk_with_candidates_skips_stream_distinct(spark):
-    """`candidates=None` falls back to a full distinct of the stream —
-    the shuffle the sketch exists to avoid. With an explicit candidate
-    list the stream contributes ONLY the fixed d*w sketch aggregate: one
-    fewer aggregate pair in the plan, and the broadcast point-query."""
-    from webscraper_spark.operators.sketch import cms_topk
-
-    df = spark.createDataFrame([(f"h{i % 9}",) for i in range(50)], "item string")
-    cand = spark.createDataFrame([(f"h{i}",) for i in range(9)], "item string")
-    p_default = _plan(cms_topk(df, F.col("item"), d=4, w=64, k=5))
-    p_cand = _plan(cms_topk(df, F.col("item"), candidates=cand, d=4, w=64, k=5))
-    assert "BroadcastHashJoin" in p_cand
-    assert "EvalPython" not in p_cand
-    # sketch agg + estimate agg only; the default plan carries the extra
-    # stream-distinct aggregate on top
-    assert p_cand.count("HashAggregate") < p_default.count("HashAggregate")
 
 
 def test_chunking_is_codegen_no_shuffle(spark):

@@ -1,8 +1,7 @@
-"""Dedup family, text analysis, similarity search."""
+"""Dedup family and text analysis."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,7 +18,6 @@ from webscraper_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
-from webscraper_spark.operators.simsearch import brute_force_topk, lsh_ann_topk
 
 
 @pytest.fixture(scope="module")
@@ -119,222 +117,6 @@ def test_quality_and_langid_deterministic(spark, docs):
     langs = a.groupBy("l").count().collect()
     top = max(langs, key=lambda r: r["count"])
     assert top.l == "en"
-
-
-@pytest.fixture(scope="module")
-def emb(spark, sf01_dir):
-    return spark.read.parquet(f"{sf01_dir}/embeddings.parquet")
-
-
-def test_brute_force_topk_matches_numpy(spark, emb):
-    queries = emb.limit(5).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    got = brute_force_topk(emb, queries, k=5).collect()
-    base = {r.vec_id: np.array(r.embedding, dtype=np.float64) for r in emb.collect()}
-    for q in queries.collect():
-        qv = np.array(q.q_vec, dtype=np.float64)
-        cos = {
-            vid: float(v @ qv / (np.linalg.norm(v) * np.linalg.norm(qv))) for vid, v in base.items()
-        }
-        want = sorted(cos, key=lambda vid: (-round(cos[vid], 9), vid))[:5]
-        mine = [r.vec_id for r in sorted((g for g in got if g.q_id == q.q_id), key=lambda r: r.rank)]
-        assert mine[0] == q.q_id  # self is top-1
-        assert set(mine) == set(want), (q.q_id, mine, want)
-
-
-def _clustered_emb(spark, n: int, dim: int, n_clusters: int):
-    """Deterministic clustered corpus: near neighbours genuinely near (the
-    regime ANN recall is defined over — on uniform-random vectors the
-    'nearest' neighbours sit at cos~0.5 and a selective LSH correctly
-    returns almost nothing)."""
-    import math
-
-    rows = []
-    for i in range(n):
-        c = i % n_clusters
-        base = [math.sin(0.1 * (c + 1) * (j + 1)) for j in range(dim)]
-        noise = [((i * 2654435761 + j * 40503) % 1000) / 5000.0 - 0.1 for j in range(dim)]
-        rows.append((i, [float(b + 0.05 * w) for b, w in zip(base, noise)]))
-    return spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-
-
-def test_lsh_ann_recall(spark):
-    emb64 = _clustered_emb(spark, 200, 64, 8)
-    queries = emb64.limit(10).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    brute = brute_force_topk(emb64, queries, k=10).collect()
-    ann = lsh_ann_topk(emb64, queries, dim=64, k=10).collect()
-    recalls = []
-    for qid in {r.q_id for r in brute}:
-        b = {r.vec_id for r in brute if r.q_id == qid}
-        a = {r.vec_id for r in ann if r.q_id == qid}
-        recalls.append(len(a & b) / len(b))
-    assert sum(recalls) / len(recalls) >= 0.5, recalls
-
-
-def test_lsh_ann_self_on_random_corpus(spark, emb):
-    """Uniform-random corpus: every query still collides with itself in all
-    bands (identical sign bits), so self comes back as rank-1 even though
-    the selective buckets admit few random candidates."""
-    queries = emb.limit(10).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    ann = lsh_ann_topk(emb, queries, dim=64, k=10).collect()
-    for qid in {r.q_id for r in ann}:
-        top1 = min((r for r in ann if r.q_id == qid), key=lambda r: r.rank)
-        assert top1.vec_id == qid
-
-
-def test_lsh_candidate_selectivity(spark):
-    """The north-scale property the 16-bit-band defaults buy: candidate
-    pairs from the band self-join stay ≪ n²/2 on a few-thousand-row corpus
-    (2-bit bands collided ~90% of ALL pairs -> degenerate n² join), while
-    planted near-identical pairs still surface as candidates."""
-    import numpy as np
-
-    from webscraper_spark.operators.dedup import sign_lsh_candidate_pairs
-
-    rng = np.random.default_rng(0)
-    n, dim = 3000, 64
-    mat = rng.normal(size=(n, dim))
-    rows = [(i, [float(x) for x in mat[i]]) for i in range(n)]
-    # 20 planted near-copies (tiny perturbation -> cos ~0.9999)
-    rows += [(1_000_000 + i, [float(x + 0.01) for x in mat[i]]) for i in range(20)]
-    base = spark.createDataFrame(rows, "id long, vec array<double>")
-    cand = sign_lsh_candidate_pairs(base, dim=dim).collect()
-    got = {(r.id_a, r.id_b) for r in cand}
-    n_tot = n + 20
-    assert len(got) <= (n_tot * (n_tot - 1) // 2) * 0.01, len(got)  # ≪ n²/2
-    planted_hits = sum((i, 1_000_000 + i) in got for i in range(20))
-    assert planted_hits >= 18, planted_hits
-
-
-def test_lsh_ann_dim768(spark):
-    """High-dim plan viability: 16x768 hyperplanes must NOT live in the plan
-    (the expression encoding exploded here); numpy-matmul bucketer handles
-    dim 768 with sane recall on clustered vectors."""
-    import math
-
-    n, dim, n_clusters = 120, 768, 6
-    rows = []
-    for i in range(n):
-        c = i % n_clusters
-        base = [math.sin(0.1 * c * (j + 1)) for j in range(dim)]
-        noise = [((i * 2654435761 + j * 40503) % 1000) / 5000.0 - 0.1 for j in range(dim)]
-        rows.append((i, [float(b + 0.05 * w) for b, w in zip(base, noise)]))
-    emb768 = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-    queries = emb768.limit(4).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    brute = brute_force_topk(emb768, queries, k=10).collect()
-    ann = lsh_ann_topk(emb768, queries, dim=dim, k=10).collect()
-    recalls = []
-    for qid in {r.q_id for r in brute}:
-        b = {r.vec_id for r in brute if r.q_id == qid}
-        a = {r.vec_id for r in ann if r.q_id == qid}
-        recalls.append(len(a & b) / len(b))
-    assert sum(recalls) / len(recalls) >= 0.5, recalls
-    # null and wrong-dim vectors bucket to NULL (dropped), not an error
-    from webscraper_spark.operators.simsearch import sign_lsh_bucket_udf
-
-    weird = spark.createDataFrame([(1, None), (2, [1.0] * 3)], "vec_id int, embedding array<float>")
-    got = weird.select(sign_lsh_bucket_udf(dim)(F.col("embedding")).alias("b")).collect()
-    assert all(r.b is None for r in got)
-
-
-def test_ivf_ann_recall_self_and_codebook(spark, emb):
-    """IVF chain: deterministic h60-sampled codebook of exactly n_cells
-    corpus vectors; every query's own vector survives probing (its assigned
-    cell is probe #1) so self is top-1; recall vs brute force is sane; null
-    and wrong-dim vectors route to NULL cells (dropped), not an error."""
-    from webscraper_spark.operators.simsearch import ivf_cells_udf, ivf_topk, train_centroids
-
-    queries = emb.limit(10).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    brute = brute_force_topk(emb, queries, k=10).collect()
-    ann = ivf_topk(emb, queries, k=10, n_cells=16, n_probe=6).collect()
-    recalls = []
-    for qid in {r.q_id for r in brute}:
-        b = {r.vec_id for r in brute if r.q_id == qid}
-        a = {r.vec_id for r in ann if r.q_id == qid}
-        recalls.append(len(a & b) / len(b))
-    assert sum(recalls) / len(recalls) >= 0.5, recalls
-    for qid in {r.q_id for r in ann}:
-        top1 = min((r for r in ann if r.q_id == qid), key=lambda r: r.rank)
-        assert top1.vec_id == qid  # self survives probing
-
-    base = emb.select(F.col("vec_id"), F.col("embedding").alias("vec"))
-    cents = train_centroids(base, 16).collect()
-    corpus_ids = {r.vec_id for r in base.select("vec_id").collect()}
-    assert len(cents) == 16 and {r.cell_id for r in cents} <= corpus_ids
-    # rerunning training yields the identical codebook (hash order, no RNG)
-    assert {r.cell_id for r in train_centroids(base, 16).collect()} == {r.cell_id for r in cents}
-
-    import numpy as np
-
-    ids = np.array([r.cell_id for r in cents])
-    mat = np.array([list(r.cvec) for r in cents], dtype=np.float64)
-    weird = spark.createDataFrame([(1, None), (2, [1.0] * 3)], "vec_id int, embedding array<float>")
-    got = weird.select(ivf_cells_udf(ids, mat, 2)(F.col("embedding")).alias("c")).collect()
-    assert all(r.c is None for r in got)
-
-
-def test_ivf_trained_codebook_beats_sample(spark):
-    """train_centroids_kmeans (deterministic Lloyd's over the h60 sample)
-    must beat the plain h60-sample codebook on recall for diffuse clustered
-    data at n_probe=1 — boundary points split across arbitrary sample
-    centroids, while trained centroids sit at cluster means. Everything is
-    seed-free, so the margin is a fixed number, not a statistical one."""
-    import math
-
-    from webscraper_spark.operators.simsearch import ivf_topk, train_centroids, train_centroids_kmeans
-
-    n, dim, ncl, noise_scale, n_cells = 400, 16, 8, 0.7, 8
-    rows = []
-    for i in range(n):
-        c = i % ncl
-        base = [math.sin(0.1 * (c + 1) * (j + 1)) for j in range(dim)]
-        noise = [((i * 2654435761 + j * 40503) % 1000) / 500.0 - 1.0 for j in range(dim)]
-        rows.append((i, [float(b + noise_scale * w) for b, w in zip(base, noise)]))
-    emb16 = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-    base_df = emb16.select("vec_id", F.col("embedding").alias("vec"))
-    queries = emb16.limit(24).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    brute = brute_force_topk(emb16, queries, k=10).collect()
-
-    def recall(codebook):
-        ann = ivf_topk(emb16, queries, k=10, n_cells=n_cells, n_probe=1, codebook=codebook).collect()
-        recs = []
-        for qid in {r.q_id for r in brute}:
-            b = {r.vec_id for r in brute if r.q_id == qid}
-            a = {r.vec_id for r in ann if r.q_id == qid}
-            recs.append(len(a & b) / len(b))
-        return sum(recs) / len(recs)
-
-    cb = train_centroids_kmeans(base_df, n_cells=n_cells, id_col="vec_id", vec_col="vec")
-    r_trained = recall(cb)
-    r_sample = recall(train_centroids(base_df, n_cells, id_col="vec_id", vec_col="vec"))
-    assert r_trained >= 0.95, r_trained
-    assert r_trained > r_sample + 0.03, (r_trained, r_sample)
-    # the library DEFAULT path (codebook=None) IS the trained codebook —
-    # deterministic training means identical recall, not just similar
-    assert recall(None) == r_trained
-    # retraining yields the identical codebook (h60-ordered sample + fixed
-    # iterations + first-max ties: no RNG anywhere)
-    cb2 = train_centroids_kmeans(base_df, n_cells=n_cells, id_col="vec_id", vec_col="vec")
-    assert sorted(map(tuple, cb.collect())) == sorted(map(tuple, cb2.collect()))
-
-
-def test_embedding_near_dup_pairs(spark, emb):
-    """Planted near-copies (first component +0.05) are recovered as near-dup
-    pairs by the LSH-bucketed path; the raw corpus (max pairwise cosine
-    ~0.5) contributes none."""
-    from webscraper_spark.operators.dedup import embedding_near_dup_pairs
-
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    planted = e.filter(F.col("vec_id") < 10).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.concat(F.array(F.element_at("embedding", 1) + F.lit(0.05)),
-                 F.slice("embedding", 2, 63)).alias("embedding"),
-    )
-    pairs = embedding_near_dup_pairs(e.unionByName(planted), dim=64, threshold=0.9).collect()
-    got = {(r.id_a, r.id_b) for r in pairs}
-    assert got == {(i, i + 1000000) for i in range(10)}
-    assert all(r.cos >= 0.9 for r in pairs)
-    # no pairs at all in the raw corpus at this threshold
-    assert embedding_near_dup_pairs(e, dim=64, threshold=0.9).count() == 0
 
 
 def test_pii_scrub_and_counts(spark):
@@ -528,33 +310,6 @@ def test_recrawl_priority_orders_by_change_rate_times_staleness(spark):
     assert got[10].n_changes == 6 and got[20].n_changes == 0
     # all three pages share host 0 (ids % 10 == 0): ranks are 1,2,3
     assert sorted(r.host_rank for r in got.values()) == [1, 2, 3]
-
-
-def test_semantic_dedup_drops_planted_copies_keeps_originals(spark):
-    """Planted near-copies (cos ~0.999 to their source) are dropped with
-    dup_of pointing at the lower-id original; originals and unrelated
-    vectors keep=true; every input row appears exactly once."""
-    from webscraper_spark.operators.dedup import semantic_dedup
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    planted = e.filter(F.col("vec_id") < 5).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(F.array(F.element_at("embedding", 1) + F.lit(0.05)),
-                 F.slice("embedding", 2, 63)).alias("embedding"))
-    allv = e.unionByName(planted)
-    out = semantic_dedup(allv, n_cells=8, threshold=0.9).collect()
-    assert len(out) == allv.count()
-    by_id = {r.vec_id: r for r in out}
-    dropped = [r for r in out if not r.keep]
-    # every planted copy lands in its source's cell (nearly identical
-    # vectors assign identically) and is dropped in favour of the original
-    for i in range(5):
-        assert by_id[100000 + i].keep is False
-        assert by_id[100000 + i].dup_of == i
-        assert by_id[100000 + i].max_cos >= 0.99
-        assert by_id[i].keep is True
-    assert len(dropped) == 5  # raw corpus max pairwise cos ~0.5 < threshold
 
 
 # --- Unicode script composition (functions/text.py, SURVEY 2.10 L44) ---

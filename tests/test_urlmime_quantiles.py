@@ -1,15 +1,10 @@
 """Tests for URL-quality filtering (operators/urlfilter.py, SURVEY 2.10
-L35), MIME sniffing/routing (operators/mime.py, 2.1 S14), and exact
-group quantiles (operators/quantiles.py, 2.4 A6)."""
+L35), MIME sniffing/routing (operators/mime.py, 2.1 S14) and URL
+template mining (operators/templates.py, L42)."""
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import functions as F
-
 from webscraper_spark.operators.mime import route_by_mime, sniff_mime
-from webscraper_spark.operators.quantiles import exact_group_quantiles
 from webscraper_spark.operators.urlfilter import url_filter
 
 
@@ -81,80 +76,6 @@ def test_sniff_mime_is_prefix_only(spark):
     assert df.select(sniff_mime("payload").alias("m")).collect()[0]["m"] == (
         "application/octet-stream"
     )
-
-
-# ---------------------------------------------------------------- quantiles
-
-
-def _py_type1(vals, q):
-    s = sorted(vals)
-    return s[math.ceil(q * len(s)) - 1]
-
-
-def test_exact_group_quantiles_both_plans_match_python(spark):
-    rows = []
-    for g in ("a", "b"):
-        for i in range(1, 138 if g == "a" else 61):
-            rows.append((g, (i * 7919) % 97))  # ties guaranteed (mod 97)
-    df = spark.createDataFrame(rows, "grp string, v long")
-    by_group = {"a": [v for g, v in rows if g == "a"], "b": [v for g, v in rows if g == "b"]}
-    for pre in (False, True):
-        out = exact_group_quantiles(df, ["grp"], "v", (0.5, 0.9, 0.99), pre_aggregated=pre)
-        got = {(r["grp"], r["q_permille"]): r["value"] for r in out.collect()}
-        for g, vals in by_group.items():
-            for q, pm in ((0.5, 500), (0.9, 900), (0.99, 990)):
-                assert got[(g, pm)] == _py_type1(vals, q), (pre, g, q)
-
-
-def test_exact_group_quantiles_single_row_group(spark):
-    df = spark.createDataFrame([("g", 42)], "grp string, v long")
-    out = exact_group_quantiles(df, ["grp"], "v", (0.5, 0.99)).collect()
-    assert {(r["q_permille"], r["value"]) for r in out} == {(500, 42), (990, 42)}
-
-
-def test_quantile_threshold_filter_matches_python(spark):
-    from webscraper_spark.operators.quantiles import quantile_threshold_filter
-
-    rows = []
-    for g, n in (("en", 97), ("de", 41)):
-        for i in range(n):
-            rows.append((g, i, ((i * 7919) % 50)))  # heavy ties
-    df = spark.createDataFrame(rows, "lang string, doc_id long, score long")
-    out = quantile_threshold_filter(df, ["lang"], "score", 0.9).collect()
-    by_g = {}
-    for g, _, s in rows:
-        by_g.setdefault(g, []).append(s)
-    thr = {g: _py_type1(v, 0.9) for g, v in by_g.items()}
-    assert len(out) == len(rows)  # every row kept, flagged
-    for r in out:
-        assert r["threshold"] == thr[r["lang"]]
-        assert r["kept"] == (r["score"] >= thr[r["lang"]])
-
-
-# ---------------------------------------------------------------- normalize
-
-
-def test_normalize_text(spark):
-    from webscraper_spark.functions.normalize import nfc, normalize_text
-
-    cases = [
-        ("cafe\u0301", "caf\u00e9"),            # NFC composes e + U+0301
-        ("caf\u00e9", "caf\u00e9"),             # already composed: identity
-        ("a\x07b\x00c", "abc"),                 # control strip
-        ("  a\t\tb \n c  ", "a b c"),           # ws collapse + trim
-        ("\x1f x\u0301 ", "x\u0301"),           # combining mark survives cleanup
-        (None, None),
-        ("", ""),
-    ]
-    df = spark.createDataFrame([(i, s) for i, (s, _) in enumerate(cases)], "i long, t string")
-    got = {r["i"]: r["o"] for r in df.select("i", normalize_text("t").alias("o")).collect()}
-    for i, (inp, want) in enumerate(cases):
-        assert got[i] == want, (i, inp, got[i], want)
-
-    # NFKC is opt-in: the fi-ligature folds under NFKC, not NFC
-    df2 = spark.createDataFrame([("\ufb01sh",)], "t string")
-    assert df2.select(nfc("t").alias("o")).collect()[0]["o"] == "\ufb01sh"
-    assert df2.select(nfc("t", form="NFKC").alias("o")).collect()[0]["o"] == "fish"
 
 
 # --- URL template mining / trap detection (operators/templates.py, L42) ---

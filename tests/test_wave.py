@@ -200,6 +200,39 @@ def test_unknown_host_gets_politeness_defaults(spark):
     assert all(r.delay_ms == 100 for r in known)
 
 
+def test_duplicate_host_policy_rows_rejected(spark):
+    """Two robots or politeness rows for one host would give it one policy
+    row per pair of rows, and schedule_ranked would rank each of its URLs
+    once per policy row. resolve_host_policy refuses them by name; duplicate
+    '*' rows still collapse to their minimum."""
+    from webscraper_spark.operators.robots import resolve_host_policy
+
+    def tables(robots_rows, politeness_rows):
+        return (
+            spark.createDataFrame(robots_rows, "host string, disallow_prefixes array<string>, crawl_delay_ms long"),
+            spark.createDataFrame(politeness_rows, "host string, max_pages_per_wave long, min_delay_ms long"),
+        )
+
+    robots_dup = tables(
+        [("a.ex", ["/private"], 0), ("a.ex", [], 0), ("b.ex", [], 0)],
+        [("*", 7, 350), ("b.ex", 2, 100)],
+    )
+    with pytest.raises(ValueError, match=r"host\(s\): a\.ex$"):
+        resolve_host_policy(*robots_dup)
+    politeness_dup = tables(
+        [("a.ex", [], 0), ("b.ex", [], 0)],
+        [("*", 7, 350), ("a.ex", 2, 100), ("a.ex", 3, 100), ("b.ex", 2, 100), ("b.ex", 4, 50)],
+    )
+    with pytest.raises(ValueError, match=r"host\(s\): a\.ex, b\.ex$"):
+        resolve_host_policy(*politeness_dup)
+
+    policy, defaults = resolve_host_policy(*tables(
+        [("a.ex", ["/private"], 0)], [("*", 7, 350), ("*", 5, 400), ("a.ex", 2, 100)],
+    ))
+    assert defaults == (5, 350)
+    assert [(r.host, r.max_pages, r.delay_ms) for r in policy.collect()] == [("a.ex", 2, 100)]
+
+
 def test_bucketed_corpus_join_identical(spark, corpus_dir, inputs, oracle_result, tmp_path_factory, monkeypatch):
     """The bucketed-corpus fetch path (pages as a bucketed catalog table,
     BUCKETED_BROADCAST_BATCH_MAX=0 so EVERY wave takes the bucket-aligned
@@ -229,50 +262,6 @@ def test_bucketed_corpus_join_identical(spark, corpus_dir, inputs, oracle_result
     assert got_order == set(oracle_result[0])
     got_seen = {r.url: r.wave for r in spark.read.parquet(paths["seen"]).collect()}
     assert got_seen == oracle_result[1]
-
-
-def test_url_hygiene_drops_before_scheduling(spark, inputs, oracle_result, tmp_path_factory):
-    """CrawlConfig(url_hygiene=True): drop-verdict URLs never occupy a
-    fetch slot or an order row. The corpus itself contains URLs the
-    digit-slug rule targets (auto-generated numeric /ad/NNNN slugs), so
-    the hygienic crawl is a strict SUB-crawl of the reference order:
-    every fetched URL passes the filter, no URL outside
-    oracle ∪ polluted-seeds ever appears (dropping pages only removes
-    discovery paths), and the drop-verdict seeds never reach the order
-    while the keep:strip_tracking one does."""
-    from webscraper_spark.operators.urlfilter import url_filter
-
-    pages, seeds, robots, politeness = inputs
-    keep_url = "https://bad.ex/landing?utm_source=mail"
-    bad = spark.createDataFrame(
-        [
-            ("https://bad.ex/casino/promo",),                  # drop:blocklist
-            ("https://bad.ex/a/b/c/d/e/f/g/h/i/leaf",),        # drop:depth (10)
-            (keep_url,),                                       # keep:strip_tracking
-        ],
-        "url string",
-    )
-    ckpt = str(tmp_path_factory.mktemp("ckpt_hygiene"))
-    paths = run_crawl(
-        spark, pages, seeds.select("url").unionByName(bad), robots, politeness, ckpt,
-        CrawlConfig(max_waves=MAX_WAVES, url_hygiene=True),
-    )
-    order = spark.read.parquet(paths["order"])
-    got = {(r.url, r.host, r.wave, r.rank) for r in order.collect()}
-    assert len(got) > 0
-    # every fetched URL passes the filter — zero drop verdicts slipped in
-    fetched_verdicts = url_filter(order.select("url")).select("verdict").distinct().collect()
-    assert all(r.verdict.startswith("keep") for r in fetched_verdicts)
-    # sub-crawl: nothing outside the reference-reachable set + kept seed
-    oracle_urls = {u for (u, _h, _w, _r) in oracle_result[0]}
-    assert {u for (u, _h, _w, _r) in got} <= oracle_urls | {keep_url}
-    # the corpus really exercises the rule (some reference URLs dropped)
-    assert {u for (u, _h, _w, _r) in got} < oracle_urls | {keep_url}
-    # kept tracking seed is the sole bad.ex candidate: wave-0 rank 1
-    assert (keep_url, "bad.ex", 0, 1) in got
-    seen = {r.url for r in spark.read.parquet(paths["seen"]).collect()}
-    assert "https://bad.ex/casino/promo" not in seen
-    assert "https://bad.ex/a/b/c/d/e/f/g/h/i/leaf" not in seen
 
 
 def test_missing_pages_match_oracle(spark, inputs, tmp_path_factory):

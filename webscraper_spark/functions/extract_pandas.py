@@ -162,12 +162,10 @@ def with_extraction_arrow(df: DataFrame, html_col: str = "html") -> DataFrame:
     """Append every extracted `x_*` column plus `x_status` (listing / ok /
     err). Input needs `html` (binary); one Python evaluation per row."""
     out = df.withColumn("_x", extract_all_udf(F.col(html_col).cast("string")))
-    for f in X_STRUCT.fields:
-        out = out.withColumn(f.name, F.col("_x")[f.name])
-    out = out.drop("_x")
+    x = F.col("_x")
     status: Column = (
-        F.when(F.col("x_is_listing"), F.lit("listing"))
-        .when(F.col("x_title").isNotNull() & F.col("x_price_cell").isNotNull() & F.col("x_km_cell").isNotNull(), "ok")
+        F.when(x["x_is_listing"], F.lit("listing"))
+        .when(x["x_title"].isNotNull() & x["x_price_cell"].isNotNull() & x["x_km_cell"].isNotNull(), "ok")
         .otherwise("err")
     )
-    return out.withColumn("x_status", status)
+    return out.select(*df.columns, *[x[n].alias(n) for n in X_STRUCT.fieldNames()], status.alias("x_status"))

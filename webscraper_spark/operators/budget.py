@@ -8,7 +8,7 @@ an integer budget is the classic apportionment problem; this implements
 Hamilton's largest-remainder method because it is exactly representable
 in integer arithmetic end-to-end (floor quotas + ranked remainders), so
 the result is bit-identical in any engine — same discipline as the
-fixed-point PageRank (graph.py) and the HLL register sum (sketch.py).
+fixed-point PageRank (graph.py).
 
 Algorithm: quota_i = budget * w_i / W (exact integer floor); the
 leftover = budget - sum(floor quotas) seats go one each to the largest

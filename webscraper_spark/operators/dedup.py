@@ -1,10 +1,9 @@
 """Deduplication family for web-text corpora — exact, MinHash+LSH, SimHash,
-n-gram Jaccard, embedding-cosine near-dup.
+n-gram Jaccard.
 
 All hot paths are native column expressions (hashing, shingling, signatures
 via F.transform/F.array_min — inside codegen); only SimHash's 64-bit
-majority-vote and the embedding bucketer borrowed from simsearch use pandas
-UDFs (Arrow-vectorized numpy, no per-row Python).
+majority-vote is a pandas UDF (Arrow-vectorized numpy, no per-row Python).
 
 Scale design: MinHash-LSH is the 100 TB path — band buckets shard the
 candidate space so the self-join is |bucket|² per bucket instead of n²;
@@ -244,72 +243,6 @@ def span_dedup(
     )
 
 
-def semantic_dedup(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    n_cells: int = 16, threshold: float = 0.9,
-    codebook: DataFrame | None = None,
-) -> DataFrame:
-    """SemDedup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup over
-    an embedding column — cluster the corpus into codebook cells, compare
-    cosines only WITHIN a cell, drop every vector that has a
-    smaller-id near-neighbour (cos >= threshold) in its cell.
-
-    The greedy keep-lowest-id rule (not full connected components —
-    operators/cluster.py has that when cluster ids are needed) is the
-    paper's per-cluster policy and is order-free: a vector's fate depends
-    only on the SET of its in-cell neighbours, never on visit order.
-
-    Scale shape: cell assignment is an embarrassingly-parallel map
-    (codebook rides in the router closure — config-sized, never a data
-    join); the only shuffle is the per-cell self-join, |cell|² per cell
-    instead of n² — the same sharding argument as MinHash-LSH bands.
-    Default codebook is the h60 sample (train_centroids) so the whole
-    chain stays recomputable by the ANSI-SQL oracle; pass the trained
-    k-means codebook (train_centroids_kmeans) for better cell balance
-    when oracle-expressibility is not required.
-
-    Output: one row per input vector —
-      (vec_id, cell, keep, dup_of nullable, max_cos nullable).
-    """
-    from webscraper_spark.operators.simsearch import (
-        cosine, ivf_cells_udf, train_centroids,
-    )
-
-    base = df.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    )
-    if codebook is None:
-        codebook = train_centroids(base, n_cells, id_col="vec_id", vec_col="vec")
-    cent_rows = sorted(codebook.collect(), key=lambda r: r["cell_id"])
-    cent_ids = np.asarray([r["cell_id"] for r in cent_rows], dtype=np.int64)
-    cent_mat = np.asarray([list(r["cvec"]) for r in cent_rows], dtype=np.float64)
-
-    assigned = base.withColumn(
-        "cell", ivf_cells_udf(cent_ids, cent_mat, 1)(F.col("vec")).getItem(0)
-    )
-    a = assigned.select(F.col("vec_id").alias("id_a"), F.col("vec").alias("va"), "cell")
-    b = assigned.select(F.col("vec_id").alias("id_b"), F.col("vec").alias("vb"), "cell")
-    pairs = (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.round(cosine(F.col("va"), F.col("vb")), 6))
-        .filter(F.col("cos") >= threshold)
-    )
-    dropped = pairs.groupBy(F.col("id_b").alias("vec_id")).agg(
-        F.min("id_a").alias("dup_of"), F.max("cos").alias("max_cos")
-    )
-    return (
-        assigned.select("vec_id", "cell")
-        .join(dropped, "vec_id", "left")
-        .select(
-            "vec_id", "cell",
-            F.col("dup_of").isNull().alias("keep"),
-            "dup_of", "max_cos",
-        )
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -504,52 +437,6 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     )
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return cand.withColumn("hamming", ham).filter(F.col("hamming") <= max_hamming).select("id_a", "id_b", "hamming")
-
-
-def sign_lsh_candidate_pairs(
-    base: DataFrame, dim: int, n_planes: int = 128, bands: int = 8
-) -> DataFrame:
-    """Sign-LSH candidate pair stage over (id, vec) rows: id-only self-join
-    within (band, bucket). Exposed separately so the candidate count — the
-    quantity that decides whether the join is sharded or degenerate-n² at
-    corpus scale — is directly testable (see test_lsh_candidate_selectivity)."""
-    from webscraper_spark.operators.simsearch import sign_lsh_bucket_udf
-
-    buckets = sign_lsh_bucket_udf(dim, n_planes, bands)
-    banded = base.select("id", F.posexplode(buckets(F.col("vec"))).alias("band", "bucket"))
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame, dim: int, threshold: float = 0.9,
-    n_planes: int = 128, bands: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs (id_a < id_b, rounded cosine >=
-    threshold). Scale path: sign-LSH band buckets shard the candidate space
-    — a candidate pair must share at least one of `bands` band buckets, so
-    the self-join is per-bucket instead of n², and it carries ids only
-    (vectors are fetched back once for the exact-cosine verify), mirroring
-    minhash_lsh_pairs' thin-join shape. Recall follows the LSH collision
-    bound: near-identical vectors agree on almost every sign bit; 16-bit
-    bands (defaults) collide random pairs at ~2^-16 per band, so candidates
-    stay ≪ n²/2 (asserted at few-thousand-row scale in tests)."""
-    from webscraper_spark.operators.simsearch import cosine
-
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    cand = sign_lsh_candidate_pairs(base, dim, n_planes, bands)
-    va = base.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
-    vb = base.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
-    scored = cand.join(va, "id_a").join(vb, "id_b").withColumn(
-        "cos", F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6)
-    )
-    return scored.filter(F.col("cos") >= threshold).select("id_a", "id_b", "cos")
 
 
 def ngram_containment_pairs(

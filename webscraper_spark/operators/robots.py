@@ -11,6 +11,8 @@ and each wave joins it once, as a broadcast, before ranking.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -100,11 +102,19 @@ def resolve_host_policy(robots: DataFrame, politeness: DataFrame) -> tuple[DataF
     (its broadcast runs no Spark job), and the '*' defaults come back as
     plain values for schedule_ranked to apply as literals. A broadcast table
     passes through the driver anyway; collecting it once replaces a
-    broadcast job per table per wave."""
+    broadcast job per table per wave.
+
+    Raises ValueError when robots or politeness has more than one row for a
+    host: the joins would give that host one policy row per pair of its
+    rows, and every candidate of the host would be scheduled once per row.
+    Duplicate '*' rows are allowed and collapse to their minimum."""
     spark = politeness.sparkSession
     hosts = robots.select("host").unionByName(politeness.select("host")).distinct()
     policy = resolve_budgets(hosts, robots, politeness).toArrow()
     host_names = policy.column("host").to_pylist()
+    dups = sorted(h for h, n in Counter(host_names).items() if n > 1)
+    if dups:
+        raise ValueError(f"more than one robots or politeness row for host(s): {', '.join(dups)}")
     star = host_names.index("*")
     defaults = (policy.column("max_pages")[star].as_py(), policy.column("delay_ms")[star].as_py())
     return spark.createDataFrame(policy.filter([h != "*" for h in host_names])), defaults

@@ -86,19 +86,6 @@ class CrawlConfig:
     max_waves: int = 16
     # Pages is a bucketed catalog table: selects BUCKETED_BROADCAST_BATCH_MAX.
     corpus_bucketed: bool = False
-    # URL-quality hygiene applied to each wave's candidates BEFORE ranking
-    # (operators/urlfilter.py: blocklist / path-depth / param-count /
-    # digit-slug, first-failing-rule). A dropped URL never occupies a
-    # fetch slot, never enters the order table, and is dropped every wave
-    # it reappears (its verdict is a pure function of the URL). OFF by
-    # default: the crawl-order oracle (oracle/seq_oracle.py) models the
-    # reference, which fetches every harvested href
-    # (/root/reference/app/controllers/cars_controller.rb:137-142). The
-    # heavier hygiene stages (redirect resolution, canonical collapse,
-    # trap mining, backoff) run BETWEEN waves over crawl metadata via
-    # plans/hygiene.py — in-loop they would re-pay their joins per wave
-    # for inputs that only change per wave.
-    url_hygiene: bool = False
 
 
 def _parquet_rows(path: str) -> int:
@@ -324,18 +311,6 @@ def run_crawl(
             # 1. candidates minus seen
             cand = anti_join_seen(frontier, seen)
 
-            # 1b. optional URL hygiene (codegen-only; see CrawlConfig). The
-            # frontier `depth` travels as a temporary rename around
-            # url_filter's same-named path-depth feature column.
-            if cfg.url_hygiene:
-                from webscraper_spark.operators.urlfilter import url_filter
-
-                cand = (
-                    url_filter(cand.withColumnRenamed("depth", "_fdepth"))
-                    .filter(F.col("verdict").startswith("keep"))
-                    .select("url", "host", F.col("_fdepth").alias("depth"), "disc_wave", "disc_pos")
-                )
-
             # 2-3. one broadcast join of the host policy: robots filter, then
             # rank, then budget gate + simulated politeness clock.
             # Persist the ranked schedule ONCE (memory, spill-to-disk): the
@@ -377,11 +352,14 @@ def run_crawl(
             misses = (
                 batch.join(pages_slim.select("url") if small_batch else pages_slim.select("url").hint("SHUFFLE_HASH"),
                            "url", "left_anti")
-                .withColumn("warc_ts", F.lit(None).cast("timestamp"))
-                .withColumn("html", F.lit(None).cast("binary"))
-                .withColumn("text", F.lit(None).cast("string"))
-                .withColumn("lang", F.lit(None).cast("string"))
-                .withColumn("fetch_status", F.lit("missing"))
+                .select(
+                    "*",
+                    F.lit(None).cast("timestamp").alias("warc_ts"),
+                    F.lit(None).cast("binary").alias("html"),
+                    F.lit(None).cast("string").alias("text"),
+                    F.lit(None).cast("string").alias("lang"),
+                    F.lit("missing").alias("fetch_status"),
+                )
             )
             # Sized to the batch, not to the corpus scan: every task of the
             # fused scan→join→UDF→write stage pays a fixed Python-worker
@@ -398,19 +376,17 @@ def run_crawl(
             # 5. extract (Arrow pandas-UDF engine — one Python evaluation per
             # row; text rebuilt from its columns below)
             fetched = with_extraction_arrow(fetched)
-            fetched = (
-                fetched.withColumn(
-                    "extracted_text",
-                    F.when(F.col("x_status") == "listing", listing_text())
-                    .when(F.col("x_status") == "ok", extracted_text())
-                    .otherwise(F.lit(None).cast("string")),
-                )
-                .withColumn("wave", F.lit(wave))
-                .withColumn("fetch_bytes", F.coalesce(F.length("html").cast("long"), F.lit(0)))
+            fetched = fetched.select(
                 # html/text are fully consumed by extraction — dropping them
                 # cuts the per-wave checkpoint from ~3KB/row to ~100B/row (at
                 # corpus scale the checkpoint must never re-store page bodies)
-                .drop("html", "text")
+                *[c for c in fetched.columns if c not in ("html", "text")],
+                F.when(F.col("x_status") == "listing", listing_text())
+                .when(F.col("x_status") == "ok", extracted_text())
+                .otherwise(F.lit(None).cast("string"))
+                .alias("extracted_text"),
+                F.lit(wave).alias("wave"),
+                F.coalesce(F.length("html").cast("long"), F.lit(0)).alias("fetch_bytes"),
             )
 
             # materialize the wave once; everything below reuses it.
