@@ -17,6 +17,7 @@ Cross-engine parity rules baked into every oracle pair:
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import sys
@@ -46,54 +47,53 @@ from webscraper_spark.functions.pricing import (  # noqa: E402
     variant_rows,
     with_car_pricing_inputs,
 )
-from webscraper_spark.functions.text import (  # noqa: E402
-    PII_PATTERNS,
-    PII_PLACEHOLDERS,
-    curation_decision,
-    fingerprint64,
-    langid,
-    pii_count,
-    pii_scrub,
-    quality_score,
-    token_count,
-)
-from webscraper_spark.operators.dedup import (  # noqa: E402
-    exact_duplicates,
-    minhash_lsh_pairs,
-    contamination_overlap,
-    ngram_jaccard_pairs,
-    simhash_pairs,
-    tokens,
-)
 RUN_DATE = "2020-09-01"
-_STOP = {
-    "en": ("the", "a", "of", "and", "to", "in", "is", "it", "that", "for"),
-    "de": ("der", "die", "das", "und", "ist", "ein", "eine", "zu", "mit", "von"),
-    "es": ("el", "la", "de", "y", "que", "en", "un", "una", "es", "los"),
-    "fr": ("le", "la", "de", "et", "que", "en", "un", "une", "est", "les"),
-}
 
 
 def _t(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _token_count(text: F.Column) -> F.Column:
+    """Whitespace token count of trimmed text; '' -> 0."""
+    t = F.trim(text)
+    return F.size(F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))).cast("long")
+
+
 # ---------------------------------------------------------------------------
 # entry — flagship crawl + dealer pipeline at sf0.001
 # ---------------------------------------------------------------------------
 
-def entry(spark: SparkSession) -> DataFrame:
+def _corpus_cache(sf: float) -> str:
+    return os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache", f"corpus_sf{sf}")
+
+
+def _ckpt_dir(prefix: str) -> str:
+    """A fresh temp checkpoint dir, removed at interpreter exit: the
+    DataFrames a crawl returns read its wave files lazily, so it cannot be
+    removed before they are consumed."""
+    ckpt = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
+    return ckpt
+
+
+def _crawl_cached_corpus(spark: SparkSession, sf: float, prefix: str) -> dict[str, str]:
+    """The 3-wave crawl over the cached synthetic corpus at `sf`; returns
+    run_crawl's output paths."""
     from webscraper_spark.plans.wave import CrawlConfig, run_crawl
     from webscraper_spark.sources.synth import load_pages, materialize_corpus
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache", "corpus_sf0.001")
+    cache = _corpus_cache(sf)
     os.makedirs(cache, exist_ok=True)
-    paths = materialize_corpus(spark, 0.001, cache)
+    paths = materialize_corpus(spark, sf, cache)
     load = lambda n: spark.read.parquet(paths[n])  # noqa: E731
     pages, bucketed = load_pages(spark, paths["pages"])
-    ckpt = tempfile.mkdtemp(prefix="entry_ckpt_")
-    out = run_crawl(spark, pages, load("seeds"), load("robots"), load("politeness"),
-                    ckpt, CrawlConfig(max_waves=3, corpus_bucketed=bucketed))
+    return run_crawl(spark, pages, load("seeds"), load("robots"), load("politeness"),
+                     _ckpt_dir(prefix), CrawlConfig(max_waves=3, corpus_bucketed=bucketed))
+
+
+def entry(spark: SparkSession) -> DataFrame:
+    out = _crawl_cached_corpus(spark, 0.001, "entry_ckpt_")
     results = spark.read.parquet(out["results"]).filter(F.col("x_status") == "ok")
     cars = with_car_pricing_inputs(with_typed(results)).filter(eligibility())
     cars = with_tags(with_identity(cars)).withColumn("preis_tag", preis_tag(preis_12_s_expr())).withColumn(
@@ -562,271 +562,6 @@ FROM orders
 """
 
 
-def _docs_with_planted_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    dup = d.filter(F.col("doc_id") < 20).select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
-    return d.select("doc_id", "text").unionByName(dup)
-
-
-def _q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return exact_duplicates(_docs_with_planted_dups(spark, sf_dir)).select("h", "n_dups", "keep_id")
-
-
-_SQL_EXACT_DEDUP = """
-WITH all_docs AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id < 20
-)
-SELECT md5(text) AS h, count(*) AS n_dups, min(doc_id) AS keep_id
-FROM all_docs GROUP BY md5(text) HAVING count(*) > 1
-"""
-
-
-def _q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    return d.select("doc_id", token_count(F.col("text")).alias("n_tok"))
-
-
-_SQL_TOKEN_COUNT = """
-SELECT doc_id,
-       CASE WHEN trim(text) = '' THEN 0
-            ELSE CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) END AS n_tok
-FROM documents
-"""
-
-
-def _q_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition gates (top-token / duplicate-token / top-bigram
-    fractions) — per-doc, shuffle-free: one materialized tokenization, one
-    combined sorted-run fold per gram order (functions/text.py
-    repetition_metrics; 10x over the per-metric fold form)."""
-    from webscraper_spark.functions.text import repetition_metrics
-
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    return repetition_metrics(d)
-
-
-# Independent DuckDB replay: unnest + group-by multiplicity counts (vs the
-# engine's sort+run-length fold — different algorithm, same answer).
-_SQL_REPETITION = """
-WITH toked AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE string_split_regex(trim(text), '\\s+') END AS toks
-  FROM documents
-),
-tok_counts AS (
-  SELECT doc_id, tok, count(*) AS c
-  FROM (SELECT doc_id, unnest(toks) AS tok FROM toked) GROUP BY doc_id, tok
-),
-tok_stats AS (
-  SELECT doc_id, max(c) AS top_c, sum(c) AS n, count(*) AS n_distinct
-  FROM tok_counts GROUP BY doc_id
-),
-bi AS (
-  SELECT doc_id,
-         CASE WHEN len(toks) < 2 THEN []::VARCHAR[]
-              ELSE list_transform(generate_series(1, len(toks) - 1),
-                                  i -> array_to_string(toks[i:i+1], ' ')) END AS bgs
-  FROM toked
-),
-bi_counts AS (
-  SELECT doc_id, bg, count(*) AS c
-  FROM (SELECT doc_id, unnest(bgs) AS bg FROM bi) GROUP BY doc_id, bg
-),
-bi_stats AS (
-  SELECT doc_id, max(c) AS top_c, sum(c) AS n FROM bi_counts GROUP BY doc_id
-)
-SELECT t.doc_id,
-       CAST(coalesce(ts.n, 0) AS BIGINT) AS n_toks,
-       round(CASE WHEN coalesce(ts.n, 0) = 0 THEN 0.0
-                  ELSE ts.top_c::DOUBLE / ts.n END, 6) AS top_tok_frac,
-       round(CASE WHEN coalesce(ts.n, 0) = 0 THEN 0.0
-                  ELSE (ts.n - ts.n_distinct)::DOUBLE / ts.n END, 6) AS dup_tok_frac,
-       round(CASE WHEN coalesce(bs.n, 0) = 0 THEN 0.0
-                  ELSE bs.top_c::DOUBLE / bs.n END, 6) AS top_bigram_frac
-FROM toked t
-LEFT JOIN tok_stats ts USING (doc_id)
-LEFT JOIN bi_stats bs USING (doc_id)
-"""
-
-
-def _sql_stop_ratio(lang: str) -> str:
-    words = ", ".join(f"'{w}'" for w in _STOP[lang])
-    return (
-        f"(CASE WHEN len(string_split_regex(trim(text), '\\s+')) = 0 THEN 0.0::DOUBLE "
-        f"ELSE CAST(len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x IN ({words}))) AS DOUBLE) "
-        f"/ len(string_split_regex(trim(text), '\\s+')) END)"
-    )
-
-
-def _q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    return d.select("doc_id", quality_score(F.col("text")).alias("quality"))
-
-
-# Tokens guarded exactly like Spark's dedup.tokens (trim()='' -> [] — DuckDB
-# string_split_regex('') would yield [''] and shift n_tok); mean word length
-# totals the SPLIT tokens' lengths (Spark tokenizes on \s+, so stripping only
-# ASCII spaces from the raw text would miscount around tabs/newlines).
-_SQL_QUALITY = f"""
-SELECT doc_id, round(
-    0.4::DOUBLE * least(CAST(len(toks) AS DOUBLE) / 64.0::DOUBLE, 1.0::DOUBLE)
-  + 0.3::DOUBLE * least(
-      (CASE WHEN len(toks) = 0 THEN 0.0::DOUBLE
-            ELSE CAST(len(list_filter(list_transform(toks, t -> lower(t)),
-                                      x -> x IN ({", ".join(f"'{w}'" for w in _STOP['en'])}))) AS DOUBLE)
-                 / len(toks) END) * 5.0::DOUBLE, 1.0::DOUBLE)
-  + 0.15::DOUBLE * (CASE WHEN len(toks) > 0 AND
-        (CAST(coalesce(list_sum(list_transform(toks, t -> len(t))), 0) AS DOUBLE)
-         / len(toks)) BETWEEN 3.0::DOUBLE AND 10.0::DOUBLE
-        THEN 1.0::DOUBLE ELSE 0.5::DOUBLE END)
-  + 0.15::DOUBLE * greatest(0.0::DOUBLE, 1.0::DOUBLE - (CASE WHEN len(text) = 0 THEN 0.0::DOUBLE ELSE
-        CAST(len(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS DOUBLE) / len(text) END) * 4.0::DOUBLE)
-, 6) AS quality
-FROM (
-  SELECT doc_id, text,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE string_split_regex(trim(text), '\\s+') END AS toks
-  FROM documents
-)
-"""
-
-
-def _q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    return d.select("doc_id", langid(F.col("text")).alias("lang_pred"))
-
-
-_SQL_LANGID = f"""
-SELECT doc_id,
-  CASE WHEN greatest(r_en, r_de, r_es, r_fr) = 0 THEN 'und'
-       WHEN r_en = greatest(r_en, r_de, r_es, r_fr) THEN 'en'
-       WHEN r_de = greatest(r_en, r_de, r_es, r_fr) THEN 'de'
-       WHEN r_es = greatest(r_en, r_de, r_es, r_fr) THEN 'es'
-       ELSE 'fr' END AS lang_pred
-FROM (
-  SELECT doc_id, {_sql_stop_ratio('en')} AS r_en, {_sql_stop_ratio('de')} AS r_de,
-         {_sql_stop_ratio('es')} AS r_es, {_sql_stop_ratio('fr')} AS r_fr
-  FROM documents
-)
-"""
-
-
-def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (inverted shingle index ->
-    pair-intersection counts -> |A∩B|/|A∪B|) — the exact variant the LSH
-    path approximates; L4 in SURVEY §2.10."""
-    docs = _docs_with_planted_dups(spark, sf_dir)
-    p = ngram_jaccard_pairs(docs, n=3, threshold=0.5)
-    return p.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def _sql_ngram_jaccard() -> str:
-    """Independent DuckDB replay of the inverted-index exact Jaccard (same
-    guarded shingle CTE the minhash oracle uses; the threshold filters the
-    UNROUNDED ratio exactly like the engine, rounding only the output)."""
-    return f"""
-WITH {_SQL_DOC_SHINGLES},
-inv AS (SELECT doc_id, unnest(sh) AS g FROM shingled),
-pair_inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-  FROM inv a JOIN inv b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-sizes AS (SELECT doc_id, len(sh) AS n FROM shingled)
-SELECT id_a, id_b,
-       round(inter::DOUBLE / (sa.n + sb.n - inter), 6) AS jaccard
-FROM pair_inter p
-JOIN sizes sa ON sa.doc_id = p.id_a
-JOIN sizes sb ON sb.doc_id = p.id_b
-WHERE inter::DOUBLE / (sa.n + sb.n - inter) >= 0.5::DOUBLE
-"""
-
-
-def _q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (L22 in SURVEY §2.10): flag training docs
-    whose word 5-grams overlap a deterministic ~1% 'benchmark' slice
-    (doc_id % 97 == 0) of the corpus. Eval grams broadcast; the training
-    side never shuffles for the membership test (operators/dedup.py
-    contamination_overlap)."""
-    docs = spark.read.parquet(_t(sf_dir, "documents"))
-    ev = docs.filter(F.col("doc_id") % 97 == 0)
-    out = contamination_overlap(docs, ev, n=5)
-    return out.select(
-        "doc_id", "n_sh", "hits", F.round("contam_frac", 6).alias("contam_frac")
-    )
-
-
-def _sql_contamination() -> str:
-    """Independent DuckDB replay: same tokenization/shingle CTE shape as the
-    jaccard oracle but at n=5, eval = doc_id % 97 = 0."""
-    return """
-WITH toked AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE string_split_regex(trim(text), '\\s+') END AS toks
-  FROM documents
-),
-shingled AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(toks) <= 4 THEN [array_to_string(toks, ' ')]
-              ELSE list_transform(generate_series(1, len(toks) - 4),
-                                  i -> array_to_string(toks[i:i+4], ' ')) END) AS sh
-  FROM toked
-),
-ev_grams AS (
-  SELECT DISTINCT unnest(sh) AS g FROM shingled WHERE doc_id % 97 = 0
-),
-inv AS (SELECT doc_id, len(sh) AS n_sh, unnest(sh) AS g FROM shingled)
-SELECT inv.doc_id, inv.n_sh, count(*) AS hits,
-       round(count(*)::DOUBLE / inv.n_sh, 6) AS contam_frac
-FROM inv JOIN ev_grams USING (g)
-GROUP BY inv.doc_id, inv.n_sh
-"""
-
-
-def _q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style corpus-level repeated-span removal (L24 in SURVEY §2.10):
-    10-token blocks, any block with corpus df>=2 dropped everywhere, docs
-    reassembled in order (operators/dedup.py span_dedup — chunking inside
-    codegen, map-side-combinable block frequency, anti-join removal).
-    Exact integer/string output; cf. C4 (Raffel et al. 2020 §2.2)."""
-    from webscraper_spark.operators.dedup import span_dedup
-
-    docs = spark.read.parquet(_t(sf_dir, "documents"))
-    return span_dedup(docs, block=10, min_df=2)
-
-
-_SQL_SPAN_DEDUP = r"""
-WITH toked AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE string_split_regex(trim(text), '\s+') END AS toks
-  FROM documents
-),
-blocks AS (
-  SELECT doc_id, g.bi::BIGINT AS bi,
-         array_to_string(toks[g.bi*10+1 : g.bi*10+10], ' ') AS blk
-  FROM toked, LATERAL (SELECT unnest(range((len(toks)+9)//10)) AS bi) g
-),
-boiler AS (SELECT blk FROM blocks GROUP BY blk HAVING count(*) >= 2),
-kept AS (SELECT b.* FROM blocks b ANTI JOIN boiler USING (blk)),
-reasm AS (
-  SELECT doc_id, string_agg(blk, ' ' ORDER BY bi) AS clean_text,
-         count(*) AS blocks_kept
-  FROM kept GROUP BY doc_id
-),
-totals AS (SELECT doc_id, (len(toks)+9)//10 AS blocks_total FROM toked)
-SELECT t.doc_id,
-       coalesce(r.clean_text, '') AS clean_text,
-       coalesce(r.blocks_kept, 0)::BIGINT AS blocks_kept,
-       (t.blocks_total - coalesce(r.blocks_kept, 0))::BIGINT AS blocks_removed
-FROM totals t LEFT JOIN reasm r USING (doc_id)
-"""
-
-
 def _q_recrawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Freshness-driven recrawl scheduling (change-rate x staleness,
     Cho & Garcia-Molina 2003 proportional policy) ranked per host shard
@@ -865,158 +600,6 @@ SELECT page_id, host, n_obs, n_changes, span_days, change_rate, staleness_days,
        row_number() OVER (PARTITION BY host
                           ORDER BY change_rate * staleness_days DESC, page_id) AS host_rank
 FROM scored
-"""
-
-
-def _planted_pii_suffix_spark():
-    sid = F.col("doc_id").cast("string")
-    return F.concat(
-        F.lit(" contact user"), sid, F.lit("@crawl-example.com or admin"), sid,
-        F.lit("@web.example.org from host 10."),
-        (F.col("doc_id") % 200).cast("string"), F.lit("."),
-        ((F.col("doc_id") * 7) % 200).cast("string"), F.lit("."),
-        (F.col("doc_id") % 250).cast("string"),
-        F.lit(" tel +4915"), (F.col("doc_id") % 100000 + 100000).cast("string"),
-    )
-
-
-def _q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII redaction pass: per-pattern match counts on the raw text +
-    md5 of the scrubbed text (email -> [EMAIL], ipv4 -> [IP], phone ->
-    [PHONE]) — all chained codegen regexps, no Python. The synthetic corpus
-    carries no PII, so every 5th doc gets a deterministic planted contact
-    line (2 emails, 1 ipv4, 1 phone) built identically in the oracle."""
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id", "text")
-    d = d.withColumn(
-        "text",
-        F.when(F.col("doc_id") % 5 == 0, F.concat(F.col("text"), _planted_pii_suffix_spark()))
-        .otherwise(F.col("text")),
-    )
-    t = F.col("text")
-    return d.select(
-        "doc_id",
-        pii_count(t, "email").alias("n_email"),
-        pii_count(t, "ipv4").alias("n_ipv4"),
-        pii_count(t, "phone").alias("n_phone"),
-        F.md5(pii_scrub(t)).alias("scrub_md5"),
-    )
-
-
-def _sql_pii_scrub() -> str:
-    # Built by concatenation, not f-string: the regexes contain {m,n}
-    # quantifier braces. Single-quoted DuckDB strings pass backslashes
-    # through verbatim, and the simple ASCII patterns parse identically in
-    # RE2 and Java regex (no lookaround/backreferences).
-    em, ip, ph = PII_PATTERNS["email"], PII_PATTERNS["ipv4"], PII_PATTERNS["phone"]
-    scrub = ("regexp_replace(regexp_replace(regexp_replace(text, '" + em + "', '"
-             + PII_PLACEHOLDERS["email"] + "', 'g'), '" + ip + "', '"
-             + PII_PLACEHOLDERS["ipv4"] + "', 'g'), '" + ph + "', '"
-             + PII_PLACEHOLDERS["phone"] + "', 'g')")
-    return """
-WITH pii_docs AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 5 = 0 THEN text
-              || ' contact user' || CAST(doc_id AS VARCHAR)
-              || '@crawl-example.com or admin' || CAST(doc_id AS VARCHAR)
-              || '@web.example.org from host 10.' || CAST(doc_id % 200 AS VARCHAR)
-              || '.' || CAST((doc_id * 7) % 200 AS VARCHAR)
-              || '.' || CAST(doc_id % 250 AS VARCHAR)
-              || ' tel +4915' || CAST(doc_id % 100000 + 100000 AS VARCHAR)
-         ELSE text END AS text
-  FROM documents
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text, '""" + em + """')) AS BIGINT) AS n_email,
-       CAST(len(regexp_extract_all(text, '""" + ip + """')) AS BIGINT) AS n_ipv4,
-       CAST(len(regexp_extract_all(text, '""" + ph + """')) AS BIGINT) AS n_phone,
-       md5(""" + scrub + """) AS scrub_md5
-FROM pii_docs
-"""
-
-
-def _q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global token-frequency dictionary, top 100 by (count desc, token asc).
-    Scale path: explode -> hash-aggregate (map-side combinable) ->
-    TakeOrderedAndProject (per-partition partial top-k, no global sort);
-    the row_number window runs over only the 100 surviving rows."""
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    counts = (
-        d.select(F.explode(tokens(F.col("text"))).alias("tok"))
-        .groupBy("tok").agg(F.count("*").alias("cnt"))
-    )
-    top = counts.orderBy(F.desc("cnt"), F.asc("tok")).limit(100)
-    w = Window.orderBy(F.desc("cnt"), F.asc("tok"))
-    return top.withColumn("rank", F.row_number().over(w).cast("long")).select("rank", "tok", "cnt")
-
-
-_SQL_VOCAB_TOPK = r"""
-WITH toked AS (
-  SELECT CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE string_split_regex(trim(text), '\s+') END AS toks
-  FROM documents
-),
-counts AS (
-  SELECT tok, count(*) AS cnt
-  FROM (SELECT unnest(toks) AS tok FROM toked) GROUP BY tok
-)
-SELECT CAST(row_number() OVER (ORDER BY cnt DESC, tok ASC) AS BIGINT) AS rank, tok, cnt
-FROM counts
-QUALIFY row_number() OVER (ORDER BY cnt DESC, tok ASC) <= 100
-"""
-
-
-def _q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-based train/val/test split (80/10/10 by
-    h60('split:'||doc_id) mod 100) — reproducible across runs and engines,
-    no RNG; aggregated to per-split doc and char totals."""
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    b = h60(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))) % 100
-    split = F.when(b < 80, "train").when(b < 90, "val").otherwise("test")
-    return (
-        d.select(split.alias("split"), "n_chars")
-        .groupBy("split")
-        .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars"))
-    )
-
-
-def _sql_dataset_split() -> str:
-    # Function (not module-level f-string): _sql_h60 is defined further down.
-    return f"""
-SELECT split, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-FROM (
-  SELECT CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split, n_chars
-  FROM (SELECT {_sql_h60("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS b, n_chars FROM documents)
-) GROUP BY split
-"""
-
-
-def _q_curation_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pretraining curation filter chain as one decision column: first
-    failing rule of quality >= 0.5, top-token-frac <= 0.35, dup-token-frac
-    <= 0.75 (functions/text.py curation_decision) — the keep/drop verdict a
-    corpus-curation job writes next to each document."""
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    dec = curation_decision(F.col("text"))
-    return d.select(
-        "doc_id", dec.alias("verdict"), (dec == "keep").cast("long").alias("keep"),
-    )
-
-
-def _sql_curation_decision() -> str:
-    """Composes the (independently algorithmically different) quality and
-    repetition oracles and replays the first-failing-rule chain."""
-    return f"""
-WITH q AS ({_SQL_QUALITY}),
-r AS ({_SQL_REPETITION}),
-v AS (
-  SELECT q.doc_id,
-         CASE WHEN q.quality < 0.5::DOUBLE THEN 'low_quality'
-              WHEN r.top_tok_frac > 0.35::DOUBLE THEN 'repetitive_top_token'
-              WHEN r.dup_tok_frac > 0.75::DOUBLE THEN 'repetitive_dup_tokens'
-              ELSE 'keep' END AS verdict
-  FROM q JOIN r ON q.doc_id = r.doc_id
-)
-SELECT doc_id, verdict, CAST(verdict = 'keep' AS BIGINT) AS keep FROM v
 """
 
 
@@ -1263,31 +846,6 @@ FROM cars
 """
 
 
-# --- hash-pipeline queries: oracled via DuckDB reimplementation -------------
-#
-# The dedup/fingerprint family hashes with h60 (15-hex-char md5 prefix,
-# operators/dedup.py) precisely so DuckDB can recompute every stage
-# independently: shingling, minhash permutations, LSH banding and SimHash
-# majority votes (FNV-1a over ASCII chars, HUGEINT mod-2^64). These
-# oracles are full reimplementations, not snapshots.
-
-def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_lsh_pairs(_docs_with_planted_dups(spark, sf_dir), threshold=0.5).select(
-        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
-    )
-
-
-def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash_pairs(_docs_with_planted_dups(spark, sf_dir), max_hamming=8).select(
-        "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
-    )
-
-
-def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    return d.select("doc_id", fingerprint64(F.col("text")).alias("fp64"))
-
-
 def _sql_h60(expr: str) -> str:
     """DuckDB rendition of canon.h60: first 15 md5 hex chars as BIGINT."""
     return (
@@ -1296,174 +854,22 @@ def _sql_h60(expr: str) -> str:
     )
 
 
-# Shared doc CTEs: guarded tokens + distinct 3-gram shingles, mirroring
-# dedup.tokens / dedup.shingles (empty text -> [] tokens -> [''] shingle).
-_SQL_DOC_SHINGLES = """
-all_docs AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id < 20
-),
-toked AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE string_split_regex(trim(text), '\\s+') END AS toks
-  FROM all_docs
-),
-shingled AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(toks) <= 2 THEN [array_to_string(toks, ' ')]
-              ELSE list_transform(generate_series(1, len(toks) - 2),
-                                  i -> array_to_string(toks[i:i+2], ' ')) END) AS sh
-  FROM toked
-)
-"""
-
-
-def _sql_minhash_lsh() -> str:
-    from webscraper_spark.operators.dedup import _MINHASH_A, _MINHASH_B, MERSENNE31
-
-    sig_terms = ", ".join(
-        f"list_min(list_transform(hs, h -> ((h % {MERSENNE31}) * {_MINHASH_A[j]} + {_MINHASH_B[j]}) % {MERSENNE31}))"
-        for j in range(16)
-    )
-    bucket = _sql_h60(
-        "array_to_string(list_transform(sig[b*4+1:b*4+4], x -> CAST(x AS VARCHAR)), ',')"
-    )
-    return f"""
-WITH {_SQL_DOC_SHINGLES},
-hashed AS (
-  SELECT doc_id, sh, list_transform(sh, s -> {_sql_h60('s')}) AS hs FROM shingled
-),
-sigs AS (
-  SELECT doc_id, sh, [{sig_terms}] AS sig FROM hashed
-),
-banded AS (
-  SELECT doc_id, b, {bucket} AS bucket
-  FROM sigs CROSS JOIN UNNEST([0,1,2,3]) AS t(b)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM banded a JOIN banded b
-    ON a.b = b.b AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-),
-verified AS (
-  SELECT c.id_a, c.id_b,
-         CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-           / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) AS j
-  FROM cand c
-  JOIN shingled sa ON sa.doc_id = c.id_a
-  JOIN shingled sb ON sb.doc_id = c.id_b
-)
-SELECT id_a, id_b, round(j, 6) AS jaccard FROM verified WHERE j >= 0.5::DOUBLE
-"""
-
-
-# FNV-1a 64-bit over ASCII chars, HUGEINT mod-2^64 arithmetic (the xor only
-# touches the low byte, so it stays in BIGINT range).
-_SQL_FNV = (
-    "list_reduce(list_prepend(14695981039346656037::HUGEINT, "
-    "list_transform(string_split({tok}, ''), c -> CAST(ascii(c) AS BIGINT))), "
-    "(h, ch) -> ((h - (h % 256) + xor((h % 256)::BIGINT, ch)::HUGEINT) "
-    "* 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT)"
-)
-
-
-def _sql_simhash() -> str:
-    fnv = _SQL_FNV.format(tok="tok")
-    return f"""
-WITH all_docs AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id < 20
-),
-toked AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE string_split_regex(trim(text), '\\s+') END AS toks
-  FROM all_docs
-),
-tok_hash AS (
-  SELECT doc_id, {fnv} AS h
-  FROM (SELECT doc_id, unnest(toks) AS tok FROM toked)
-),
-votes AS (
-  SELECT doc_id, b,
-         sum(CASE WHEN (h // (1::HUGEINT << b)) % 2 = 1 THEN 1 ELSE -1 END) AS v
-  FROM tok_hash CROSS JOIN UNNEST(generate_series(0, 63)) AS t(b)
-  GROUP BY doc_id, b
-),
-sh_u AS (
-  SELECT doc_id, sum(CASE WHEN v > 0 THEN (1::HUGEINT << b) ELSE 0::HUGEINT END) AS shu
-  FROM votes GROUP BY doc_id
-),
-sh AS (
-  SELECT d.doc_id,
-         CAST(coalesce(CASE WHEN s.shu >= 9223372036854775808::HUGEINT
-                            THEN s.shu - 18446744073709551616::HUGEINT
-                            ELSE s.shu END, 0) AS BIGINT) AS simhash
-  FROM all_docs d LEFT JOIN sh_u s ON d.doc_id = s.doc_id
-),
-seg AS (
-  SELECT doc_id, simhash, s AS seg, (simhash >> (16 * s)) & 65535 AS key
-  FROM sh CROSS JOIN UNNEST([0,1,2,3]) AS t(s)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         a.simhash AS sh_a, b.simhash AS sh_b
-  FROM seg a JOIN seg b
-    ON a.seg = b.seg AND a.key = b.key AND a.doc_id < b.doc_id
-)
-SELECT id_a, id_b, CAST(bit_count(xor(sh_a, sh_b)) AS BIGINT) AS hamming
-FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= 8
-"""
-
-
-def _sql_fingerprint() -> str:
-    docs_shingles = _SQL_DOC_SHINGLES.replace(
-        """all_docs AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id < 20
-),""",
-        "all_docs AS (SELECT doc_id, text FROM documents),",
-    )
-    fp = _sql_h60(
-        "array_to_string(list_transform(list_sort(list_transform(sh, s -> "
-        + _sql_h60("s")
-        + "))[1:8], x -> CAST(x AS VARCHAR)), ',')"
-    )
-    return f"""
-WITH {docs_shingles}
-SELECT doc_id, {fp} AS fp64 FROM shingled
-"""
-
-
 def _q_crawl_wave(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end crawl on the synthetic corpus. Oracled: _sql_crawl_wave()
     replays the ENTIRE 3-wave crawl (canonicalization, seen anti-join,
     robots, per-host rank, budgets, politeness clock, href extraction,
     outlink dedup, frontier merge) as one DuckDB query over the same cached
     corpus parquet — the north-rule 'crawl ordering + URL-seen set'
-    invariant, machine-checked end to end."""
-    from webscraper_spark.plans.wave import CrawlConfig, run_crawl
-    from webscraper_spark.sources.synth import load_pages, materialize_corpus
-
-    sf = 0.001 if "0.001" in sf_dir else 0.01
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache", f"corpus_sf{sf}")
-    os.makedirs(cache, exist_ok=True)
-    paths = materialize_corpus(spark, sf, cache)
-    load = lambda n: spark.read.parquet(paths[n])  # noqa: E731
-    pages, bucketed = load_pages(spark, paths["pages"])
-    ckpt = tempfile.mkdtemp(prefix="qcrawl_")
-    out = run_crawl(spark, pages, load("seeds"), load("robots"), load("politeness"),
-                    ckpt, CrawlConfig(max_waves=3, corpus_bucketed=bucketed))
+    invariant, machine-checked end to end. The corpus is the oracle's
+    (sf0.01) whatever `sf_dir` is: oracle_sql() takes no scale."""
+    out = _crawl_cached_corpus(spark, _CRAWL_WAVE_SF, "qcrawl_")
     return spark.read.parquet(out["order"]).select(
         "url", "host", F.col("wave").cast("long").alias("wave"),
         F.col("rank").cast("long").alias("rank"), "sched_ms"
     )
 
 
+_CRAWL_WAVE_SF = 0.01
 _CANON_RE = r"^([a-zA-Z][a-zA-Z0-9+.-]*)://([^/?#]*)([^?#]*)(\?[^#]*)?(#.*)?$"
 _WAVE_EPOCH_MS = 10_000_000
 _MAX_LINKS = 1024
@@ -1569,7 +975,7 @@ def _sql_crawl_wave(waves: int = 3) -> str:
     (materialized by _q_crawl_wave from the same deterministic generator).
     Verifies plans/wave.py end to end: crawl order, URL-seen set, per-host
     ranks and simulated politeness clock — zero shared code with the engine."""
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache", "corpus_sf0.01")
+    cache = _corpus_cache(_CRAWL_WAVE_SF)
     re_ = _CANON_RE
     parts = [f"""
 pages AS (SELECT url, decode(html) AS html_s FROM read_parquet('{cache}/pages/*.parquet')),
@@ -2045,7 +1451,7 @@ def _q_budget_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from webscraper_spark.operators.budget import apportion_budget
 
     d = spark.read.parquet(_t(sf_dir, "documents"))
-    hosts = d.groupBy("source").agg(F.sum(token_count(F.col("text"))).alias("weight"))
+    hosts = d.groupBy("source").agg(F.sum(_token_count(F.col("text"))).alias("weight"))
     return apportion_budget(hosts, budget=9973, host_col="source", weight_col="weight")
 
 
@@ -2246,7 +1652,7 @@ def _q_corpus_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.grouping_id().alias("gid"),
             F.count("*").alias("n_docs"),
             F.sum("n_chars").alias("sum_chars"),
-            F.sum(token_count(F.col("text"))).alias("sum_tokens"),
+            F.sum(_token_count(F.col("text"))).alias("sum_tokens"),
         )
         .select("source", "lang", "gid", "n_docs", "sum_chars", "sum_tokens")
     )
@@ -2997,60 +2403,6 @@ def _sql_lang_pivot() -> str:
     return f"SELECT source,\n  {cells}\nFROM documents GROUP BY source"
 
 
-def _q_script_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode script composition (L44 in SURVEY §2.10): documents
-    planted with Han blocks, a pure-Han rewrite, and a Cyrillic+Arabic
-    suffix by doc_id%4, profiled into per-script codepoint counts,
-    dominant script (fixed tie-break), and an integer-cross-multiplied
-    90% is_mixed flag (functions/text.py script_profile — all codegen
-    regexp, the standard pre-langid router: langid() assumes a
-    space-tokenized alphabet and is meaningless on Han text). Oracle
-    uses RE2's \\p{Latin}-family classes, verified char-equivalent to
-    Java's \\p{IsLatin} family."""
-    from webscraper_spark.functions.text import script_profile
-
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    m = F.col("doc_id") % 4
-    tx = (
-        F.when(m == 0, F.col("text"))
-        .when(m == 1, F.concat(F.col("text"), F.lit(" "), F.repeat(F.lit("北京大学"), 40)))
-        .when(m == 2, F.repeat(F.lit("汉字文本"), 30))
-        .otherwise(F.concat(F.col("text"), F.lit(" мир мир سلام")))
-    )
-    p = script_profile(tx)
-    return d.select("doc_id", *[c.alias(n) for n, c in p.items()])
-
-
-_SQL_SCRIPT_DETECT = r"""
-WITH t AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 4 = 0 THEN text
-         WHEN doc_id % 4 = 1 THEN text || ' ' || repeat('北京大学', 40)
-         WHEN doc_id % 4 = 2 THEN repeat('汉字文本', 30)
-         ELSE text || ' мир мир سلام' END AS tx
-  FROM documents
-),
-c AS (
-  SELECT doc_id,
-    length(regexp_replace(tx, '[^\p{Latin}]', '', 'g'))::BIGINT AS n_latin,
-    length(regexp_replace(tx, '[^\p{Cyrillic}]', '', 'g'))::BIGINT AS n_cyrillic,
-    length(regexp_replace(tx, '[^\p{Han}]', '', 'g'))::BIGINT AS n_han,
-    length(regexp_replace(tx, '[^\p{Arabic}]', '', 'g'))::BIGINT AS n_arabic
-  FROM t
-)
-SELECT doc_id, n_latin, n_cyrillic, n_han, n_arabic,
-  CASE WHEN n_latin + n_cyrillic + n_han + n_arabic = 0 THEN 'none'
-       WHEN n_latin >= n_cyrillic AND n_latin >= n_han AND n_latin >= n_arabic THEN 'latin'
-       WHEN n_cyrillic >= n_han AND n_cyrillic >= n_arabic THEN 'cyrillic'
-       WHEN n_han >= n_arabic THEN 'han'
-       ELSE 'arabic' END AS dominant_script,
-  (n_latin + n_cyrillic + n_han + n_arabic > 0
-   AND greatest(n_latin, n_cyrillic, n_han, n_arabic) * 10
-       < (n_latin + n_cyrillic + n_han + n_arabic) * 9) AS is_mixed
-FROM c
-"""
-
-
 def _q_canonical_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rel=canonical collapse (L45 in SURVEY §2.10): 6-page blocks per
     host — a canonical target with explicit self-link, two query-string
@@ -3307,43 +2659,6 @@ SELECT host,
        sum(CASE WHEN in_sitemap AND NOT in_crawl THEN 1 ELSE 0 END)::BIGINT AS n_gap,
        sum(CASE WHEN NOT in_sitemap AND in_crawl THEN 1 ELSE 0 END)::BIGINT AS n_orphan
 FROM j GROUP BY host
-"""
-
-
-def _q_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-window document chunking with overlap (L48 in SURVEY
-    §2.10): documents split into 48-token windows advancing 32 tokens
-    (16-token overlap) — the step between the cleaned corpus and
-    sequence packing (operators/chunk.py; tokenize once, integer-ceil
-    chunk count, explode + slice). Oracle replays with DuckDB list
-    slicing."""
-    from webscraper_spark.operators.chunk import chunk_documents
-
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    return chunk_documents(d, max_tokens=48, stride=32)
-
-
-_SQL_DOC_CHUNKING = r"""
-WITH toked AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE string_split_regex(trim(text), '\s+') END AS toks
-  FROM documents
-),
-sized AS (
-  SELECT doc_id, toks, len(toks) AS n,
-         ((greatest(len(toks) - 48, 0) + 31) // 32 + 1)::BIGINT AS n_chunks
-  FROM toked WHERE len(toks) > 0
-),
-chunks AS (
-  SELECT doc_id, (k - 1)::BIGINT AS chunk_id, ((k - 1) * 32)::BIGINT AS start_tok,
-         toks[(k - 1) * 32 + 1 : (k - 1) * 32 + 48] AS piece
-  FROM sized, unnest(generate_series(1, n_chunks)) AS t(k)
-)
-SELECT doc_id, chunk_id, start_tok,
-       len(piece)::BIGINT AS n_chunk_toks,
-       array_to_string(piece, ' ') AS chunk_text
-FROM chunks
 """
 
 
@@ -3703,73 +3018,6 @@ FROM s
 """
 
 
-def _q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric shingle containment (operators/dedup.py
-    ngram_containment_pairs — Broder's C(A|B), the direction-aware
-    companion to ngram_jaccard): the corpus doubled into
-    (article, article+boilerplate-suffix) pairs, so every block plants a
-    genuine containment relation whose direction the operator must
-    recover; the df<=32 posting cap drops the suffix shingles (present
-    in every wrapper — exactly the boilerplate the cap exists for), so
-    containment is measured over the discriminative space. Registered
-    AFTER the driver's ~50-query correctness window on purpose; the
-    committed check_entry artifacts carry its oracle check."""
-    from webscraper_spark.operators.dedup import ngram_containment_pairs
-
-    docs = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id", "text")
-    i = F.col("doc_id").cast("long")
-    suffix = " zq1 zq2 zq3 zq4 zq5 zq6 zq7 zq8 zq9 zq10"
-    a = docs.select((i * 2).alias("doc_id"), "text")
-    b = docs.select(
-        (i * 2 + 1).alias("doc_id"), F.concat(F.col("text"), F.lit(suffix)).alias("text")
-    )
-    return ngram_containment_pairs(a.unionByName(b), threshold=0.9, max_df=32)
-
-
-_SQL_NGRAM_CONTAINMENT = r"""
-WITH docs2 AS (
-  SELECT doc_id * 2 AS doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id * 2 + 1,
-         text || ' zq1 zq2 zq3 zq4 zq5 zq6 zq7 zq8 zq9 zq10'
-  FROM documents
-),
-toked AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE string_split_regex(trim(text), '\s+') END AS toks
-  FROM docs2
-),
-shingled AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(toks) <= 2 THEN [array_to_string(toks, ' ')]
-              ELSE list_transform(generate_series(1, len(toks) - 2),
-                                  i -> array_to_string(toks[i:i+2], ' ')) END) AS sh
-  FROM toked
-),
-inv0 AS (SELECT doc_id, unnest(sh) AS g FROM shingled),
-rare AS (SELECT g FROM inv0 GROUP BY g HAVING count(*) <= 32),
-inv AS (SELECT doc_id, g FROM inv0 JOIN rare USING (g)),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM inv GROUP BY doc_id),
-pair_inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-  FROM inv a JOIN inv b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-j AS (
-  SELECT id_a, id_b,
-         inter::DOUBLE / sa.n_sh AS ca, inter::DOUBLE / sb.n_sh AS cb
-  FROM pair_inter p
-  JOIN sizes sa ON sa.doc_id = p.id_a
-  JOIN sizes sb ON sb.doc_id = p.id_b
-)
-SELECT id_a, id_b, round(ca, 6) AS c_a_in_b, round(cb, 6) AS c_b_in_a,
-       CASE WHEN ca >= 0.9 AND cb >= 0.9 THEN 'dup'
-            WHEN ca >= 0.9 THEN 'a_in_b' ELSE 'b_in_a' END AS relation
-FROM j WHERE ca >= 0.9 OR cb >= 0.9
-"""
-
-
 def _q_robots_sitemaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sitemap: directive harvest from robots.txt (sitemaps.org
     extension; RFC 9309 §2.2.4 'other records'): 25 hosts whose files
@@ -4078,7 +3326,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_backoff_replay": _q_stream_backoff_replay,
         "sitemap_refetch": _q_sitemap_refetch,
         "trustrank": _q_trustrank,
-        "repetition_metrics": _q_repetition_metrics,
         "cdx_index": _q_cdx_index,
         "anchor_text_agg": _q_anchor_text,
         "corpus_rollup": _q_corpus_rollup,
@@ -4094,17 +3341,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_templates": _q_url_templates,
         "host_spam": _q_host_spam,
         "lang_pivot": _q_lang_pivot,
-        "script_detect": _q_script_detect,
         "canonical_collapse": _q_canonical_collapse,
         "adaptive_backoff": _q_adaptive_backoff,
         "charset_sniff": _q_charset_sniff,
         "coverage_audit": _q_coverage_audit,
-        "doc_chunking": _q_doc_chunking,
         "registered_domain": _q_registered_domain,
         "hreflang_clusters": _q_hreflang_clusters,
-        "minhash_lsh_pairs": _q_minhash_lsh,
-        "simhash_pairs": _q_simhash,
-        "doc_fingerprint": _q_fingerprint,
         "crawl_wave_e2e": _q_crawl_wave,
         "tpch_q1_pricing_summary": _q_tpch_q1,
         "eligibility_filter": _q_eligibility_filter,
@@ -4130,25 +3372,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sessionize_events": _q_sessionize,
         "wave_metrics_agg": _q_wave_metrics,
         "running_total_window": _q_running_sum,
-        "exact_dedup_groups": _q_exact_dedup,
-        "ngram_jaccard_pairs": _q_ngram_jaccard,
-        "contamination_check": _q_contamination,
-        "span_dedup": _q_span_dedup,
         "recrawl_priority": _q_recrawl_priority,
-        "pii_scrub": _q_pii_scrub,
-        "vocab_topk": _q_vocab_topk,
-        "dataset_split": _q_dataset_split,
-        "curation_decision": _q_curation_decision,
         "pagerank": _q_pagerank,
         "robots_parse": _q_robots_parse,
         "robots_decision": _q_robots_decision,
         "sitemap_parse": _q_sitemap_parse,
         "warc_roundtrip": _q_warc_roundtrip,
         "budget_apportion": _q_budget_apportion,
-        "token_count": _q_token_count,
-        "quality_score": _q_quality_score,
-        "langid_stopwords": _q_langid,
-        "ngram_containment": _q_ngram_containment,
     }
 
 
@@ -4162,7 +3392,6 @@ def oracle_sql() -> dict[str, str]:
         "stream_backoff_replay": _SQL_STREAM_BACKOFF,
         "sitemap_refetch": _SQL_SITEMAP_REFETCH,
         "trustrank": _sql_trustrank(),
-        "repetition_metrics": _SQL_REPETITION,
         "cdx_index": _SQL_CDX_INDEX,
         "anchor_text_agg": _sql_anchor_text(),
         "corpus_rollup": _SQL_CORPUS_ROLLUP,
@@ -4178,17 +3407,12 @@ def oracle_sql() -> dict[str, str]:
         "url_templates": _SQL_URL_TEMPLATES,
         "host_spam": _sql_host_spam(),
         "lang_pivot": _sql_lang_pivot(),
-        "script_detect": _SQL_SCRIPT_DETECT,
         "canonical_collapse": _SQL_CANONICAL_COLLAPSE,
         "adaptive_backoff": _SQL_ADAPTIVE_BACKOFF,
         "charset_sniff": _SQL_CHARSET_SNIFF,
         "coverage_audit": _SQL_COVERAGE_AUDIT,
-        "doc_chunking": _SQL_DOC_CHUNKING,
         "registered_domain": _sql_registered_domain(),
         "hreflang_clusters": _SQL_HREFLANG,
-        "minhash_lsh_pairs": _sql_minhash_lsh(),
-        "simhash_pairs": _sql_simhash(),
-        "doc_fingerprint": _sql_fingerprint(),
         "crawl_wave_e2e": _sql_crawl_wave(),
         "tpch_q1_pricing_summary": _SQL_TPCH_Q1,
         "eligibility_filter": _SQL_ELIGIBILITY,
@@ -4214,23 +3438,11 @@ def oracle_sql() -> dict[str, str]:
         "sessionize_events": _SQL_SESSIONIZE,
         "wave_metrics_agg": _SQL_WAVE_METRICS,
         "running_total_window": _SQL_RUNNING_SUM,
-        "exact_dedup_groups": _SQL_EXACT_DEDUP,
-        "ngram_jaccard_pairs": _sql_ngram_jaccard(),
-        "contamination_check": _sql_contamination(),
-        "span_dedup": _SQL_SPAN_DEDUP,
         "recrawl_priority": _SQL_RECRAWL,
-        "pii_scrub": _sql_pii_scrub(),
-        "vocab_topk": _SQL_VOCAB_TOPK,
-        "dataset_split": _sql_dataset_split(),
-        "curation_decision": _sql_curation_decision(),
         "pagerank": _sql_pagerank(),
         "robots_parse": _SQL_ROBOTS_PARSE,
         "robots_decision": _SQL_ROBOTS_DECISION,
         "sitemap_parse": _SQL_SITEMAP_PARSE,
         "warc_roundtrip": _SQL_WARC_ROUNDTRIP,
         "budget_apportion": _SQL_BUDGET_APPORTION,
-        "token_count": _SQL_TOKEN_COUNT,
-        "quality_score": _SQL_QUALITY,
-        "langid_stopwords": _SQL_LANGID,
-        "ngram_containment": _SQL_NGRAM_CONTAINMENT,
     }

@@ -600,11 +600,7 @@ def main() -> None:
     bench_queries = [
         "tpch_q1_pricing_summary", "eligibility_filter", "anti_join_seen",
         "frontier_rank_per_host", "url_canonicalize", "cross_join_pricing_matrix",
-        "sessionize_events", "exact_dedup_groups", "minhash_lsh_pairs",
-        "quality_score", "langid_stopwords",
-        "simhash_pairs", "token_count", "repetition_metrics",
-        "pii_scrub", "vocab_topk", "dataset_split", "curation_decision",
-        "contamination_check", "span_dedup", "recrawl_priority",
+        "sessionize_events", "recrawl_priority",
         "pagerank",
         "robots_decision", "sitemap_parse", "warc_roundtrip", "budget_apportion",
         "cdx_index", "anchor_text_agg", "corpus_rollup",
@@ -612,8 +608,8 @@ def main() -> None:
         "degree_cap",
         "event_window_rates", "feed_parse", "json_props_extract",
         "redirect_resolve", "url_templates", "host_spam",
-        "lang_pivot", "script_detect", "canonical_collapse",
-        "adaptive_backoff", "charset_sniff", "coverage_audit", "doc_chunking",
+        "lang_pivot", "canonical_collapse",
+        "adaptive_backoff", "charset_sniff", "coverage_audit",
         "registered_domain", "hreflang_clusters",
         # round 5: the hygiene-wave integration pass, robots Sitemap:
         # harvest, and BOM-first charset sniffing
@@ -626,19 +622,13 @@ def main() -> None:
         # stream_backoff_replay deliberately absent: it measures stream
         # machinery setup (temp write + query start/stop), not operator
         # throughput; adaptive_backoff is the benchmarked batch form.
-        # ngram_jaccard_pairs deliberately absent: it's the exact
-        # small-scale verification variant (the synthetic corpus's 31-word
-        # vocab makes shingles collide heavily); minhash_lsh_pairs is the
-        # benchmarked scale path.
     ]
     # Min over reps per query: single-shot numbers on this shared host swing
     # 2-3x with neighbour load (see scaling notes), and the first run of a
     # query also pays its codegen compile. The pandas-UDF-bound family gets
     # min-of-3 (host noise hid a 3x regression behind min-of-2 once); all
     # reps land in the JSON so regressions can't hide behind the min.
-    udf_bound = {
-        "minhash_lsh_pairs", "simhash_pairs", "warc_roundtrip", "cdx_index",
-    }
+    udf_bound = {"warc_roundtrip", "cdx_index"}
     base_reps = int(os.environ.get("BENCH_QUERY_REPS", "2"))
     for name in bench_queries:
         reps_n = max(base_reps, 3) if name in udf_bound else base_reps

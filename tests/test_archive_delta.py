@@ -1,6 +1,7 @@
 """Tests for the CDX capture index (operators/cdx.py, SURVEY 2.1 S13),
 anchor-text aggregation (operators/graph.py anchor_profile, 2.10 L32),
-and crawl snapshot delta (operators/delta.py, L33)."""
+crawl snapshot delta (operators/delta.py, L33) and recrawl priority
+(operators/freshness.py)."""
 
 from __future__ import annotations
 
@@ -118,3 +119,33 @@ def test_snapshot_delta_verdicts(spark):
         ).collect()
     }
     assert summ == {("h", "unchanged"): 1, ("h", "changed"): 1, ("h", "removed"): 1, ("h", "added"): 1}
+
+
+# ---------------------------------------------------------------- recrawl priority
+
+def test_recrawl_priority_orders_by_change_rate_times_staleness(spark):
+    """Hot-and-stale pages outrank cold or freshly-fetched ones within a
+    host shard; 'now' is the corpus max ts, never the wall clock."""
+    import datetime as dt
+
+    from webscraper_spark.operators.freshness import recrawl_priority
+
+    t0 = dt.datetime(2024, 1, 1)
+    day = dt.timedelta(days=1)
+    rows = []
+    # page 10: changes every observed day, last seen day 5 (stale 5d at now=day 10)
+    for d in range(6):
+        rows.append((10, t0 + d * day, "purchase"))
+    # page 20: never changes, same span
+    for d in range(6):
+        rows.append((20, t0 + d * day, "view"))
+    # page 30: changes often but fetched at 'now' (staleness 0)
+    for d in range(11):
+        rows.append((30, t0 + d * day, "error"))
+    df = spark.createDataFrame(rows, "page_id long, ts timestamp, event_type string")
+    got = {r.page_id: r for r in recrawl_priority(df).collect()}
+    assert got[10].host_rank == 1 and got[10].priority > 0
+    assert got[20].priority == 0.0 and got[30].staleness_days == 0.0
+    assert got[10].n_changes == 6 and got[20].n_changes == 0
+    # all three pages share host 0 (ids % 10 == 0): ranks are 1,2,3
+    assert sorted(r.host_rank for r in got.values()) == [1, 2, 3]

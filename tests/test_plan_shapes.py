@@ -102,18 +102,6 @@ def test_template_mining_is_codegen_single_agg(spark):
     assert plan.count("Exchange") == 1       # one shuffle: the group-by
 
 
-def test_chunking_is_codegen_no_shuffle(spark):
-    from webscraper_spark.operators.chunk import chunk_documents
-
-    df = spark.createDataFrame(
-        [(i, " ".join(f"w{j}" for j in range(80))) for i in range(8)],
-        "doc_id long, text string",
-    )
-    plan = _plan(chunk_documents(df, max_tokens=32, stride=16))
-    assert "EvalPython" not in plan
-    assert "Exchange" not in plan            # pure per-row explode, no shuffle
-
-
 def test_charset_and_backoff_are_codegen(spark):
     from webscraper_spark.operators.backoff import adaptive_backoff
     from webscraper_spark.operators.charset import charset_report

@@ -1,8 +1,8 @@
 r"""Declared-charset sniffing and per-host encoding report.
 
 Common-Crawl-scale HTML is ~5% non-UTF-8 (WHATWG's own telemetry), and
-every downstream text operator in this engine (extraction, dedup,
-langid) assumes decoded UTF-8 — so the pipeline needs a router that
+every downstream text operator in this engine (extraction, link
+harvest) assumes decoded UTF-8 — so the pipeline needs a router that
 reads each page's DECLARED encoding and sends non-UTF-8 pages to a
 transcode lane before extraction, exactly like mime.py routes by magic
 bytes. The reference never meets the problem (Selenium hands it decoded
