@@ -18,6 +18,7 @@ Cross-engine parity rules baked into every oracle pair:
 from __future__ import annotations
 
 import atexit
+import json
 import os
 import shutil
 import sys
@@ -29,7 +30,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from webscraper_spark.functions.canon import canonicalize_url, h60, url_host  # noqa: E402
+from webscraper_spark.functions.canon import canonicalize_url, url_host  # noqa: E402
 from webscraper_spark.functions.derive import (  # noqa: E402
     eligibility,
     preis_tag,
@@ -93,8 +94,11 @@ def _crawl_cached_corpus(spark: SparkSession, sf: float, prefix: str) -> dict[st
 
 
 def entry(spark: SparkSession) -> DataFrame:
+    from webscraper_spark.plans.wave import fetched_paths
+
     out = _crawl_cached_corpus(spark, 0.001, "entry_ckpt_")
-    results = spark.read.parquet(out["results"]).filter(F.col("x_status") == "ok")
+    fetched = fetched_paths(out["ckpt_dir"], json.loads(out["waves"]))
+    results = spark.read.parquet(*fetched).filter(F.col("x_status") == "ok")
     cars = with_car_pricing_inputs(with_typed(results)).filter(eligibility())
     cars = with_tags(with_identity(cars)).withColumn("preis_tag", preis_tag(preis_12_s_expr())).withColumn(
         "tags", tags_string()
@@ -562,47 +566,6 @@ FROM orders
 """
 
 
-def _q_recrawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Freshness-driven recrawl scheduling (change-rate x staleness,
-    Cho & Garcia-Molina 2003 proportional policy) ranked per host shard
-    (operators/freshness.py). The events table is the fetch-observation
-    log; all time math is exact unix_micros integers so the doubles are
-    bit-reproducible in the gate."""
-    from webscraper_spark.operators.freshness import recrawl_priority
-
-    ev = spark.read.parquet(_t(sf_dir, "events")).select(
-        F.col("user_id").alias("page_id"),
-        F.col("ts").cast("timestamp").alias("ts"),
-        "event_type",
-    )
-    return recrawl_priority(ev)
-
-
-_SQL_RECRAWL = """
-WITH obs AS (SELECT user_id AS page_id, epoch_us(ts) AS us, event_type FROM events),
-per_page AS (
-  SELECT page_id, count(*) AS n_obs,
-         sum(CASE WHEN event_type IN ('purchase','error') THEN 1 ELSE 0 END)::BIGINT AS n_changes,
-         min(us) AS first_us, max(us) AS last_us
-  FROM obs GROUP BY page_id
-),
-nowt AS (SELECT max(us) AS now_us FROM obs),
-scored AS (
-  SELECT page_id, n_obs, n_changes,
-         greatest((last_us - first_us) / 86400000000.0, 1.0) AS span_days,
-         n_changes / greatest((last_us - first_us) / 86400000000.0, 1.0) AS change_rate,
-         (now_us - last_us) / 86400000000.0 AS staleness_days,
-         (page_id % 10)::BIGINT AS host
-  FROM per_page, nowt
-)
-SELECT page_id, host, n_obs, n_changes, span_days, change_rate, staleness_days,
-       change_rate * staleness_days AS priority,
-       row_number() OVER (PARTITION BY host
-                          ORDER BY change_rate * staleness_days DESC, page_id) AS host_rank
-FROM scored
-"""
-
-
 def _synth_gallery(n_img) -> F.Column:
     """Deterministic per-car gallery of '$_27.jpg' URLs (mirrors the synth
     corpus shape). Guarded: F.sequence(1, 0) yields DESCENDING [1, 0]."""
@@ -846,14 +809,6 @@ FROM cars
 """
 
 
-def _sql_h60(expr: str) -> str:
-    """DuckDB rendition of canon.h60: first 15 md5 hex chars as BIGINT."""
-    return (
-        f"list_reduce(list_transform(string_split(substr(md5({expr}),1,15),''), "
-        "c -> CAST(strpos('0123456789abcdef', c) AS BIGINT) - 1), (a,b) -> a*16+b)"
-    )
-
-
 def _q_crawl_wave(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end crawl on the synthetic corpus. Oracled: _sql_crawl_wave()
     replays the ENTIRE 3-wave crawl (canonicalization, seen anti-join,
@@ -1010,146 +965,6 @@ seen0 AS (SELECT NULL::VARCHAR AS url WHERE false)"""]
         parts.append(_sql_crawl_wave_ctes(w))
     final = " UNION ALL ".join(f"SELECT url, host, wave, rank, sched_ms FROM ord{w}" for w in range(waves))
     return "WITH " + ",".join(parts) + "\n" + final
-
-
-def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-graph PageRank (L29 in SURVEY §2.10): deterministic synthetic
-    outlink graph (3 h60-derived outlinks per document), 8 power
-    iterations in fixed-point integer arithmetic (operators/graph.py) so
-    an 8-CTE DuckDB chain replays every rank bit-for-bit."""
-    from webscraper_spark.operators.graph import pagerank_fixed_point
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    n = d.agg(F.max("doc_id")).collect()[0][0] + 1
-    edges = d.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.array(
-                *[
-                    h60(
-                        F.concat(
-                            F.lit("edge:"), F.col("doc_id").cast("string"), F.lit(f":{i}")
-                        )
-                    )
-                    % F.lit(n)
-                    for i in (1, 2, 3)
-                ]
-            )
-        ).alias("dst"),
-    )
-    return pagerank_fixed_point(edges, n_iter=8)
-
-
-def _sql_pagerank(n_iter: int = 8, scale: int = 10**12, d_num: int = 85, d_den: int = 100) -> str:
-    """Independent DuckDB replay: same synthetic edges, the power iteration
-    unrolled into n_iter chained CTEs of pure integer arithmetic."""
-    hashes = ", ".join(
-        "(" + _sql_h60("'edge:' || CAST(doc_id AS VARCHAR) || ':%d'" % i) + ")"
-        for i in (1, 2, 3)
-    )
-    parts = [
-        f"nd AS (SELECT max(doc_id) + 1 AS n FROM documents)",
-        f"""edges AS (
-  SELECT doc_id AS src, h % (SELECT n FROM nd) AS dst
-  FROM documents, unnest([{hashes}]) AS u(h)
-)""",
-        "nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)",
-        "cnt AS (SELECT count(*)::BIGINT AS n_nodes FROM nodes)",
-        "deg AS (SELECT src, count(*)::BIGINT AS deg FROM edges GROUP BY src)",
-        f"r0 AS (SELECT node, ({scale} // n_nodes)::BIGINT AS rank FROM nodes, cnt)",
-    ]
-    base = f"(({d_den - d_num} * {scale}) // {d_den}) // n_nodes"
-    for k in range(1, n_iter + 1):
-        parts.append(
-            f"""s{k} AS (
-  SELECT e.dst AS node, sum(r.rank // d.deg)::BIGINT AS c
-  FROM edges e JOIN r{k - 1} r ON e.src = r.node JOIN deg d ON e.src = d.src
-  GROUP BY e.dst
-)"""
-        )
-        parts.append(
-            f"""r{k} AS (
-  SELECT n.node,
-         ({base} + ({d_num} * coalesce(s.c, 0)) // {d_den})::BIGINT AS rank
-  FROM nodes n LEFT JOIN s{k} s ON n.node = s.node, cnt
-)"""
-        )
-    return "WITH " + ",\n".join(parts) + f"\nSELECT node, rank FROM r{n_iter}"
-
-
-def _q_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TrustRank (operators/graph.py trustrank_fixed_point — Gyongyi &
-    Garcia-Molina's seeded-teleport PageRank, the global spam-demotion
-    signal whose local approximation is host_spam): the SAME synthetic
-    outlink graph as the pagerank query, trusted seeds = every 17th
-    document, 8 fixed-point integer iterations replayed by the oracle as
-    8 chained CTEs with the seed CASE in place of the uniform base."""
-    from webscraper_spark.operators.graph import trustrank_fixed_point
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    n = d.agg(F.max("doc_id")).collect()[0][0] + 1
-    edges = d.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.array(
-                *[
-                    h60(
-                        F.concat(
-                            F.lit("edge:"), F.col("doc_id").cast("string"), F.lit(f":{i}")
-                        )
-                    )
-                    % F.lit(n)
-                    for i in (1, 2, 3)
-                ]
-            )
-        ).alias("dst"),
-    )
-    seeds = d.filter(F.col("doc_id") % 17 == 0).select(F.col("doc_id").alias("node"))
-    return trustrank_fixed_point(edges, seeds, n_iter=8)
-
-
-def _sql_trustrank(n_iter: int = 8, scale: int = 10**12, d_num: int = 85, d_den: int = 100) -> str:
-    """Independent DuckDB replay of trustrank: pagerank's unrolled chain
-    with the seed-restricted base/init (seed set = doc_id % 17 == 0)."""
-    hashes = ", ".join(
-        "(" + _sql_h60("'edge:' || CAST(doc_id AS VARCHAR) || ':%d'" % i) + ")"
-        for i in (1, 2, 3)
-    )
-    parts = [
-        "nd AS (SELECT max(doc_id) + 1 AS n FROM documents)",
-        f"""edges AS (
-  SELECT doc_id AS src, h % (SELECT n FROM nd) AS dst
-  FROM documents, unnest([{hashes}]) AS u(h)
-)""",
-        "seeds AS (SELECT doc_id AS node FROM documents WHERE doc_id % 17 = 0)",
-        "scnt AS (SELECT count(*)::BIGINT AS n_seeds FROM seeds)",
-        """nodes AS (
-  SELECT node, max(s)::BIGINT AS seed FROM (
-    SELECT src AS node, 0 AS s FROM edges
-    UNION ALL SELECT dst, 0 FROM edges
-    UNION ALL SELECT node, 1 FROM seeds
-  ) GROUP BY node
-)""",
-        "deg AS (SELECT src, count(*)::BIGINT AS deg FROM edges GROUP BY src)",
-        f"r0 AS (SELECT node, (seed * ({scale} // n_seeds))::BIGINT AS rank FROM nodes, scnt)",
-    ]
-    base_seed = f"((({d_den - d_num} * {scale}) // {d_den}) // n_seeds)"
-    for k in range(1, n_iter + 1):
-        parts.append(
-            f"""s{k} AS (
-  SELECT e.dst AS node, sum(r.rank // d.deg)::BIGINT AS c
-  FROM edges e JOIN r{k - 1} r ON e.src = r.node JOIN deg d ON e.src = d.src
-  GROUP BY e.dst
-)"""
-        )
-        parts.append(
-            f"""r{k} AS (
-  SELECT n.node,
-         (n.seed * {base_seed} + ({d_num} * coalesce(s.c, 0)) // {d_den})::BIGINT AS rank
-  FROM nodes n LEFT JOIN s{k} s ON n.node = s.node, scnt
-)"""
-        )
-    return "WITH " + ",\n".join(parts) + f"\nSELECT node, rank FROM r{n_iter}"
 
 
 def _robots_synth_spark(spark: SparkSession, sf_dir: str):
@@ -1443,44 +1258,6 @@ FROM documents
 """
 
 
-def _q_budget_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-budget apportionment (W5 in SURVEY §2.6): a global budget of
-    9973 pages (prime — forces remainders) split across sources by token
-    mass via Hamilton's largest-remainder method, integer-exact end to end
-    (operators/budget.py). sum(quota) == 9973 exactly."""
-    from webscraper_spark.operators.budget import apportion_budget
-
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    hosts = d.groupBy("source").agg(F.sum(_token_count(F.col("text"))).alias("weight"))
-    return apportion_budget(hosts, budget=9973, host_col="source", weight_col="weight")
-
-
-_SQL_BUDGET_APPORTION = r"""
-WITH toked AS (
-  SELECT source,
-         CASE WHEN trim(text) = '' THEN 0
-              ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tok
-  FROM documents
-),
-w AS (SELECT source AS host, sum(n_tok)::BIGINT AS weight FROM toked GROUP BY source),
-tot AS (SELECT sum(weight)::BIGINT AS wt FROM w),
-scored AS (
-  SELECT host, weight,
-         ((9973 * weight) // wt)::BIGINT AS base_quota,
-         ((9973 * weight) % wt)::BIGINT AS rem
-  FROM w, tot
-),
-lo AS (SELECT 9973 - sum(base_quota) AS leftover FROM scored),
-ranked AS (
-  SELECT *, row_number() OVER (ORDER BY rem DESC, host ASC) AS rr FROM scored
-)
-SELECT host, weight, base_quota,
-       (CASE WHEN rr <= (SELECT leftover FROM lo) THEN 1 ELSE 0 END)::BIGINT AS extra,
-       (base_quota + CASE WHEN rr <= (SELECT leftover FROM lo) THEN 1 ELSE 0 END)::BIGINT AS quota
-FROM ranked
-"""
-
-
 def _cdx_url_expr():
     """Deterministic capture-URL synth exercising every SURT rule: mixed
     case, a www. label, an explicit port, unsorted query params, a
@@ -1578,66 +1355,6 @@ FROM keyed
 """
 
 
-_ANCHOR_VOCAB = ["home", "click here", "read more", "next page",
-                 "official site", "photos", "contact", "blog"]
-
-
-def _q_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inbound anchor-text aggregation (L32 in SURVEY §2.10): a synthetic
-    link graph (4 outlinks per doc, targets h60-bucketed into 211 pages,
-    anchors drawn from an 8-phrase vocabulary by hash) aggregated into a
-    per-target anchor document — inlink count, distinct anchors, top-3
-    anchors by frequency (operators/graph.py anchor_profile)."""
-    from webscraper_spark.operators.graph import anchor_profile
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    vocab = F.array(*[F.lit(v) for v in _ANCHOR_VOCAB])
-    links = F.array(
-        *[
-            F.struct(
-                (
-                    h60(F.concat(F.lit("ad:"), F.col("doc_id").cast("string"), F.lit(f":{i}")))
-                    % 211
-                ).alias("dst"),
-                F.element_at(
-                    vocab,
-                    (
-                        h60(F.concat(F.lit("at:"), F.col("doc_id").cast("string"), F.lit(f":{i}")))
-                        % 8
-                    ).cast("int")
-                    + 1,
-                ).alias("anchor"),
-            )
-            for i in (1, 2, 3, 4)
-        ]
-    )
-    edges = d.select(F.col("doc_id").alias("src"), F.explode(links).alias("l")).select(
-        "src", F.col("l.dst").alias("dst"), F.col("l.anchor").alias("anchor")
-    )
-    return anchor_profile(edges, k=3)
-
-
-def _sql_anchor_text() -> str:
-    vocab = "[" + ", ".join(f"'{v}'" for v in _ANCHOR_VOCAB) + "]"
-    hd = _sql_h60("'ad:' || CAST(doc_id AS VARCHAR) || ':' || i::VARCHAR")
-    ha = _sql_h60("'at:' || CAST(doc_id AS VARCHAR) || ':' || i::VARCHAR")
-    return f"""
-WITH e AS (
-  SELECT doc_id AS src,
-         (({hd}) % 211)::BIGINT AS dst,
-         ({vocab})[(({ha}) % 8 + 1)::INT] AS anchor
-  FROM documents, unnest([1, 2, 3, 4]) AS u(i)
-),
-c AS (SELECT dst, anchor, count(*)::BIGINT AS cnt FROM e GROUP BY dst, anchor),
-r AS (SELECT *, row_number() OVER (PARTITION BY dst ORDER BY cnt DESC, anchor ASC) AS rnk FROM c),
-t AS (SELECT dst, string_agg(anchor, '|' ORDER BY rnk) AS top_anchors
-      FROM r WHERE rnk <= 3 GROUP BY dst)
-SELECT c.dst, sum(c.cnt)::BIGINT AS inlinks, count(*)::BIGINT AS n_anchors, t.top_anchors
-FROM c JOIN t USING (dst)
-GROUP BY c.dst, t.top_anchors
-"""
-
-
 def _q_corpus_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus coverage report via ROLLUP (A5 in SURVEY §2.4): doc count,
     char mass, and token mass per (source, lang), per source, and grand
@@ -1666,69 +1383,6 @@ SELECT source, lang, grouping(source, lang)::BIGINT AS gid,
                 ELSE len(string_split_regex(trim(text), '\s+')) END)::BIGINT AS sum_tokens
 FROM documents
 GROUP BY ROLLUP (source, lang)
-"""
-
-
-def _q_crawl_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl snapshot delta (L33 in SURVEY §2.10): two deterministic
-    snapshots of the corpus — run B drops every 7th URL, rewrites every
-    5th payload, and discovers a new URL per 9th doc — full-outer joined
-    on url with h60 content fingerprints into per-URL verdicts
-    added/removed/changed/unchanged (operators/delta.py)."""
-    from webscraper_spark.operators.delta import snapshot_delta
-
-    d = spark.read.parquet(_t(sf_dir, "documents"))
-    url = F.concat(
-        F.lit("https://h"), (F.col("doc_id") % 20).cast("string"),
-        F.lit(".example/d"), F.col("doc_id").cast("string"),
-    )
-    prev = d.select(url.alias("url"), h60(F.concat(F.lit("fp:"), F.col("text"))).alias("fp"))
-    curr_kept = d.filter(F.col("doc_id") % 7 != 0).select(
-        url.alias("url"),
-        h60(
-            F.concat(
-                F.lit("fp:"),
-                F.col("text"),
-                F.when(F.col("doc_id") % 5 == 0, F.lit(" v2")).otherwise(F.lit("")),
-            )
-        ).alias("fp"),
-    )
-    curr_new = d.filter(F.col("doc_id") % 9 == 0).select(
-        F.concat(
-            F.lit("https://h"), (F.col("doc_id") % 20).cast("string"),
-            F.lit(".example/new"), F.col("doc_id").cast("string"),
-        ).alias("url"),
-        h60(F.concat(F.lit("fp:new:"), F.col("doc_id").cast("string"))).alias("fp"),
-    )
-    return snapshot_delta(prev, curr_kept.unionAll(curr_new))
-
-
-def _sql_crawl_delta() -> str:
-    fp_prev = _sql_h60("'fp:' || text")
-    fp_curr = _sql_h60("'fp:' || text || CASE WHEN doc_id % 5 = 0 THEN ' v2' ELSE '' END")
-    fp_new = _sql_h60("'fp:new:' || CAST(doc_id AS VARCHAR)")
-    return f"""
-WITH prev AS (
-  SELECT 'https://h' || (doc_id % 20)::VARCHAR || '.example/d' || doc_id::VARCHAR AS url,
-         ({fp_prev})::BIGINT AS fp
-  FROM documents
-),
-curr AS (
-  SELECT 'https://h' || (doc_id % 20)::VARCHAR || '.example/d' || doc_id::VARCHAR AS url,
-         ({fp_curr})::BIGINT AS fp
-  FROM documents WHERE doc_id % 7 <> 0
-  UNION ALL
-  SELECT 'https://h' || (doc_id % 20)::VARCHAR || '.example/new' || doc_id::VARCHAR AS url,
-         ({fp_new})::BIGINT AS fp
-  FROM documents WHERE doc_id % 9 = 0
-)
-SELECT coalesce(prev.url, curr.url) AS url,
-       prev.fp AS fp_prev, curr.fp AS fp_curr,
-       CASE WHEN prev.fp IS NULL THEN 'added'
-            WHEN curr.fp IS NULL THEN 'removed'
-            WHEN prev.fp <> curr.fp THEN 'changed'
-            ELSE 'unchanged' END AS verdict
-FROM prev FULL OUTER JOIN curr ON prev.url = curr.url
 """
 
 
@@ -1877,133 +1531,6 @@ SELECT doc_id,
         WHEN doc_id % 8 = 6 THEN octet_length(encode('  <html><body>'))
         ELSE octet_length(encode('plain ')) END)::BIGINT AS n_bytes
 FROM documents
-"""
-
-
-def _q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs & authorities (L37 in SURVEY §2.10): the same synthetic
-    outlink graph as `pagerank`, 8 power iterations with integer
-    max-normalization (operators/graph.py hits_fixed_point) — every hub
-    and authority score replayed bit-for-bit by the oracle's chained
-    integer CTEs."""
-    from webscraper_spark.operators.graph import hits_fixed_point
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    n = d.agg(F.max("doc_id")).collect()[0][0] + 1
-    edges = d.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.array(
-                *[
-                    h60(
-                        F.concat(
-                            F.lit("edge:"), F.col("doc_id").cast("string"), F.lit(f":{i}")
-                        )
-                    )
-                    % F.lit(n)
-                    for i in (1, 2, 3)
-                ]
-            )
-        ).alias("dst"),
-    )
-    return hits_fixed_point(edges, n_iter=8)
-
-
-def _sql_hits(n_iter: int = 8, scale: int = 10**6) -> str:
-    """DuckDB replay of hits_fixed_point: per iteration, an inbound-sum +
-    max-normalize pair for authorities then the same for hubs, all
-    integer arithmetic. Every chained CTE is MATERIALIZED: DuckDB
-    inlines multiply-referenced CTEs by default, and the a{k}/h{k} chain
-    (each referenced twice) would otherwise expand to 2^n_iter copies of
-    the whole prefix — thousands of parquet opens (observed as 'Too many
-    open files')."""
-    hashes = ", ".join(
-        "(" + _sql_h60("'edge:' || CAST(doc_id AS VARCHAR) || ':%d'" % i) + ")"
-        for i in (1, 2, 3)
-    )
-    parts = [
-        "nd AS MATERIALIZED (SELECT max(doc_id) + 1 AS n FROM documents)",
-        f"""edges AS MATERIALIZED (
-  SELECT doc_id AS src, h % (SELECT n FROM nd) AS dst
-  FROM documents, unnest([{hashes}]) AS u(h)
-)""",
-        "nodes AS MATERIALIZED (SELECT src AS node FROM edges UNION SELECT dst FROM edges)",
-        f"h0 AS MATERIALIZED (SELECT node, {scale}::BIGINT AS hub FROM nodes)",
-    ]
-    for k in range(1, n_iter + 1):
-        parts += [
-            f"""a{k}r AS MATERIALIZED (
-  SELECT e.dst AS node, sum(h.hub)::BIGINT AS a
-  FROM edges e JOIN h{k - 1} h ON e.src = h.node GROUP BY e.dst
-)""",
-            f"a{k}m AS MATERIALIZED (SELECT greatest(max(a), 1)::BIGINT AS m FROM a{k}r)",
-            f"""a{k} AS MATERIALIZED (
-  SELECT n.node, ((coalesce(r.a, 0) * {scale}) // m)::BIGINT AS auth
-  FROM nodes n LEFT JOIN a{k}r r ON n.node = r.node, a{k}m
-)""",
-            f"""h{k}r AS MATERIALIZED (
-  SELECT e.src AS node, sum(a.auth)::BIGINT AS h
-  FROM edges e JOIN a{k} a ON e.dst = a.node GROUP BY e.src
-)""",
-            f"h{k}m AS MATERIALIZED (SELECT greatest(max(h), 1)::BIGINT AS m FROM h{k}r)",
-            f"""h{k} AS MATERIALIZED (
-  SELECT n.node, ((coalesce(r.h, 0) * {scale}) // m)::BIGINT AS hub
-  FROM nodes n LEFT JOIN h{k}r r ON n.node = r.node, h{k}m
-)""",
-        ]
-    return (
-        "WITH " + ",\n".join(parts)
-        + f"\nSELECT h.node, h.hub, a.auth FROM h{n_iter} h JOIN a{n_iter} a ON h.node = a.node"
-    )
-
-
-def _q_degree_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Super-node degree capping (L39 in SURVEY §2.10): a deliberately
-    skewed graph — EVERY document links to node 0, plus 2 hash-derived
-    outlinks — capped to 16 inbound edges per target by deterministic
-    h60 rank (operators/graph.py cap_degree; WindowGroupLimit collapses
-    the super-node map-side). The oracle replays the hash rank, so the
-    exact kept-edge SET is verified, not just counts."""
-    from webscraper_spark.operators.graph import cap_degree
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    n = d.agg(F.max("doc_id")).collect()[0][0] + 1
-    hashed = d.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.array(
-                *[
-                    h60(
-                        F.concat(F.lit("edge:"), F.col("doc_id").cast("string"), F.lit(f":{i}"))
-                    )
-                    % F.lit(n)
-                    for i in (1, 2)
-                ]
-            )
-        ).alias("dst"),
-    )
-    star = d.select(F.col("doc_id").alias("src"), F.lit(0).cast("long").alias("dst"))
-    return cap_degree(star.unionByName(hashed), k=16)
-
-
-def _sql_degree_cap() -> str:
-    h1 = _sql_h60("'edge:' || CAST(doc_id AS VARCHAR) || ':1'")
-    h2 = _sql_h60("'edge:' || CAST(doc_id AS VARCHAR) || ':2'")
-    rk = _sql_h60("'degcap:' || CAST(src AS VARCHAR) || '>' || CAST(dst AS VARCHAR)")
-    return f"""
-WITH nd AS (SELECT max(doc_id) + 1 AS n FROM documents),
-e AS (
-  SELECT doc_id AS src, 0::BIGINT AS dst FROM documents
-  UNION ALL
-  SELECT doc_id AS src, h % (SELECT n FROM nd) AS dst
-  FROM documents, unnest([({h1}), ({h2})]) AS u(h)
-),
-r AS (
-  SELECT src, dst,
-         row_number() OVER (PARTITION BY dst ORDER BY ({rk}) ASC, src ASC, dst ASC) AS rnk
-  FROM e
-)
-SELECT src, dst FROM r WHERE rnk <= 16
 """
 
 
@@ -2302,69 +1829,6 @@ SELECT host, template, n_urls,
   example,
   (n_urls >= 20 AND length(template) - length(replace(template, '{', '')) >= 2) AS is_trap
 FROM a
-"""
-
-
-def _q_host_spam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-farm host scoring (L43 in SURVEY §2.10): an organic host
-    graph (h60-derived random out-links over 50 hosts, low reciprocity)
-    plus a planted K5 farm ring (f0..f4 fully inter-linked) — scored
-    per host into out/in degree, reciprocated out-links, and an integer
-    cross-multiplied >=3/4-reciprocity farm verdict
-    (operators/graph.py host_spam_score). The farm hosts flag; the
-    organic hosts don't, whatever their degree."""
-    from webscraper_spark.operators.graph import host_spam_score
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    i = F.col("doc_id").cast("long")
-    # Organic out-links target a 5000-host space (srcs are only h0-h49):
-    # most organic edges CANNOT reciprocate, and the ones that can are
-    # rare at any driver/bench sf — with a 50-host target space the
-    # random graph saturated reciprocity at sf0.1 and flagged every
-    # organic host (code-review catch).
-    org = d.select(
-        F.concat(F.lit("h"), (i % 50).cast("string")).alias("src"),
-        F.concat(
-            F.lit("h"),
-            (h60(F.concat(F.lit("lnk:"), i.cast("string"))) % 5000).cast("string"),
-        ).alias("dst"),
-    )
-    fa, fb = i % 5, F.expr("doc_id div 5") % 5
-    farm = d.filter(fa != fb).select(
-        F.concat(F.lit("f"), fa.cast("string")).alias("src"),
-        F.concat(F.lit("f"), fb.cast("string")).alias("dst"),
-    )
-    return host_spam_score(org.unionByName(farm), min_out=4)
-
-
-def _sql_host_spam(min_out: int = 4, recip_num: int = 3, recip_den: int = 4) -> str:
-    h = _sql_h60("'lnk:' || CAST(doc_id AS VARCHAR)")
-    return f"""
-WITH raw AS (
-  SELECT 'h' || (doc_id % 50)::VARCHAR AS src,
-         'h' || (({h}) % 5000)::VARCHAR AS dst
-  FROM documents
-  UNION ALL
-  SELECT 'f' || (doc_id % 5)::VARCHAR, 'f' || ((doc_id // 5) % 5)::VARCHAR
-  FROM documents WHERE (doc_id % 5) <> ((doc_id // 5) % 5)
-),
-e AS (SELECT DISTINCT src, dst FROM raw WHERE src <> dst),
-r AS (SELECT e.src, e.dst FROM e JOIN e x ON e.src = x.dst AND e.dst = x.src),
-outd AS (SELECT src AS host, count(*)::BIGINT AS out_deg FROM e GROUP BY src),
-ind AS (SELECT dst AS host, count(*)::BIGINT AS in_deg FROM e GROUP BY dst),
-rc AS (SELECT src AS host, count(*)::BIGINT AS recip_out FROM r GROUP BY src),
-hosts AS (SELECT src AS host FROM e UNION SELECT dst FROM e)
-SELECT h.host,
-       coalesce(outd.out_deg, 0)::BIGINT AS out_deg,
-       coalesce(ind.in_deg, 0)::BIGINT AS in_deg,
-       coalesce(rc.recip_out, 0)::BIGINT AS recip_out,
-       (coalesce(outd.out_deg, 0) >= {min_out}
-        AND coalesce(rc.recip_out, 0) * {recip_den} >= coalesce(outd.out_deg, 0) * {recip_num})
-         AS is_farm
-FROM hosts h
-LEFT JOIN outd ON h.host = outd.host
-LEFT JOIN ind ON h.host = ind.host
-LEFT JOIN rc ON h.host = rc.host
 """
 
 
@@ -2825,12 +2289,12 @@ FROM agg a LEFT JOIN rc ON a.url = rc.url
 
 def _q_sitemap_refetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sitemaps-protocol recrawl classification (operators/sitemap.py
-    sitemap_refetch — the publisher-hint half of recrawl scheduling,
-    complementing freshness.py's statistics half): entries planted with
-    every state — lastmod after the fetch (stale), lastmod before it
-    (fresh), elapsed daily changefreq (due), yearly/absent/'never'
-    changefreq (fresh), 'always' (due), and a never-crawled entry
-    (uncrawled). Fixed as_of instant, all-integer millis comparisons."""
+    sitemap_refetch, from the publisher's lastmod/changefreq hints):
+    entries planted with every state — lastmod after the fetch (stale),
+    lastmod before it (fresh), elapsed daily changefreq (due),
+    yearly/absent/'never' changefreq (fresh), 'always' (due), and a
+    never-crawled entry (uncrawled). Fixed as_of instant, all-integer
+    millis comparisons."""
     from webscraper_spark.operators.sitemap import sitemap_refetch
 
     d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
@@ -3325,21 +2789,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "strip_tracking": _q_strip_tracking,
         "stream_backoff_replay": _q_stream_backoff_replay,
         "sitemap_refetch": _q_sitemap_refetch,
-        "trustrank": _q_trustrank,
         "cdx_index": _q_cdx_index,
-        "anchor_text_agg": _q_anchor_text,
         "corpus_rollup": _q_corpus_rollup,
-        "crawl_delta": _q_crawl_delta,
         "url_filter": _q_url_filter,
         "mime_route": _q_mime_route,
-        "hits_scores": _q_hits,
-        "degree_cap": _q_degree_cap,
         "event_window_rates": _q_event_window_rates,
         "feed_parse": _q_feed_parse,
         "json_props_extract": _q_json_props,
         "redirect_resolve": _q_redirect_resolve,
         "url_templates": _q_url_templates,
-        "host_spam": _q_host_spam,
         "lang_pivot": _q_lang_pivot,
         "canonical_collapse": _q_canonical_collapse,
         "adaptive_backoff": _q_adaptive_backoff,
@@ -3372,13 +2830,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sessionize_events": _q_sessionize,
         "wave_metrics_agg": _q_wave_metrics,
         "running_total_window": _q_running_sum,
-        "recrawl_priority": _q_recrawl_priority,
-        "pagerank": _q_pagerank,
         "robots_parse": _q_robots_parse,
         "robots_decision": _q_robots_decision,
         "sitemap_parse": _q_sitemap_parse,
         "warc_roundtrip": _q_warc_roundtrip,
-        "budget_apportion": _q_budget_apportion,
     }
 
 
@@ -3391,21 +2846,15 @@ def oracle_sql() -> dict[str, str]:
         "strip_tracking": _SQL_STRIP_TRACKING,
         "stream_backoff_replay": _SQL_STREAM_BACKOFF,
         "sitemap_refetch": _SQL_SITEMAP_REFETCH,
-        "trustrank": _sql_trustrank(),
         "cdx_index": _SQL_CDX_INDEX,
-        "anchor_text_agg": _sql_anchor_text(),
         "corpus_rollup": _SQL_CORPUS_ROLLUP,
-        "crawl_delta": _sql_crawl_delta(),
         "url_filter": _sql_url_filter(),
         "mime_route": _sql_mime_route(),
-        "hits_scores": _sql_hits(),
-        "degree_cap": _sql_degree_cap(),
         "event_window_rates": _SQL_EVENT_WINDOW_RATES,
         "feed_parse": _SQL_FEED_PARSE,
         "json_props_extract": _SQL_JSON_PROPS,
         "redirect_resolve": _sql_redirect_resolve(),
         "url_templates": _SQL_URL_TEMPLATES,
-        "host_spam": _sql_host_spam(),
         "lang_pivot": _sql_lang_pivot(),
         "canonical_collapse": _SQL_CANONICAL_COLLAPSE,
         "adaptive_backoff": _SQL_ADAPTIVE_BACKOFF,
@@ -3438,11 +2887,8 @@ def oracle_sql() -> dict[str, str]:
         "sessionize_events": _SQL_SESSIONIZE,
         "wave_metrics_agg": _SQL_WAVE_METRICS,
         "running_total_window": _SQL_RUNNING_SUM,
-        "recrawl_priority": _SQL_RECRAWL,
-        "pagerank": _sql_pagerank(),
         "robots_parse": _SQL_ROBOTS_PARSE,
         "robots_decision": _SQL_ROBOTS_DECISION,
         "sitemap_parse": _SQL_SITEMAP_PARSE,
         "warc_roundtrip": _SQL_WARC_ROUNDTRIP,
-        "budget_apportion": _SQL_BUDGET_APPORTION,
     }

@@ -600,14 +600,11 @@ def main() -> None:
     bench_queries = [
         "tpch_q1_pricing_summary", "eligibility_filter", "anti_join_seen",
         "frontier_rank_per_host", "url_canonicalize", "cross_join_pricing_matrix",
-        "sessionize_events", "recrawl_priority",
-        "pagerank",
-        "robots_decision", "sitemap_parse", "warc_roundtrip", "budget_apportion",
-        "cdx_index", "anchor_text_agg", "corpus_rollup",
-        "crawl_delta", "url_filter", "mime_route",
-        "degree_cap",
+        "sessionize_events",
+        "robots_decision", "sitemap_parse", "warc_roundtrip",
+        "cdx_index", "corpus_rollup", "url_filter", "mime_route",
         "event_window_rates", "feed_parse", "json_props_extract",
-        "redirect_resolve", "url_templates", "host_spam",
+        "redirect_resolve", "url_templates",
         "lang_pivot", "canonical_collapse",
         "adaptive_backoff", "charset_sniff", "coverage_audit",
         "registered_domain", "hreflang_clusters",
@@ -616,9 +613,6 @@ def main() -> None:
         "crawl_wave_hygiene",
         "robots_sitemaps", "bom_charset_sniff", "strip_tracking",
         "sitemap_refetch",
-        # hits_scores deliberately absent: its 16 per-iteration driver
-        # actions make it a latency query, not a throughput query —
-        # pagerank is the benchmarked graph-family representative.
         # stream_backoff_replay deliberately absent: it measures stream
         # machinery setup (temp write + query start/stop), not operator
         # throughput; adaptive_backoff is the benchmarked batch form.

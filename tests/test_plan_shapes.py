@@ -1,10 +1,9 @@
 """Physical-plan regression tests for the round-4 operator batch.
 
 The scale claims in the operator docstrings ("pure codegen", "no
-shuffle", "WindowGroupLimit collapses the super-node map-side",
-"broadcast weight table") are properties of the PLAN, not of small-scale
-output — so they get asserted here directly, the same way correctness is
-asserted by oracles. A regression that silently introduces a Python eval
+shuffle") are properties of the PLAN, not of small-scale output — so
+they get asserted here directly, the same way correctness is asserted
+by oracles. A regression that silently introduces a Python eval
 node or an extra Exchange into these operators would pass every value
 test and still be 100x slower at 100 TB.
 """
@@ -13,7 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from webscraper_spark.operators.graph import anchor_profile, cap_degree
 from webscraper_spark.operators.mime import route_by_mime
 from webscraper_spark.operators.urlfilter import url_filter
 
@@ -40,23 +38,6 @@ def test_mime_route_is_pure_codegen(spark):
     plan = _plan(route_by_mime(df))
     assert "EvalPython" not in plan
     assert "Exchange" not in plan
-
-
-def test_cap_degree_uses_window_group_limit(spark):
-    edges = spark.createDataFrame([(i, i % 3) for i in range(64)], "src long, dst long")
-    plan = _plan(cap_degree(edges, k=4))
-    # rank<=k rewritten to WindowGroupLimit: per-map-task top-k BEFORE the
-    # shuffle — the property that absorbs 10^7-inlink super-nodes.
-    assert "WindowGroupLimit" in plan
-    assert "EvalPython" not in plan
-
-
-def test_anchor_profile_topk_uses_window_group_limit(spark):
-    edges = spark.createDataFrame(
-        [(i, i % 3, ["a", "b"][i % 2]) for i in range(64)], "src long, dst long, anchor string"
-    )
-    plan = _plan(anchor_profile(edges, k=2))
-    assert "WindowGroupLimit" in plan
 
 
 def test_extraction_is_one_arrow_udf_in_one_projection(spark):

@@ -3,12 +3,15 @@ invariant, byte-identical per-url extraction, and checkpoint resume (ST5)."""
 
 from __future__ import annotations
 
+import glob
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
 from webscraper_spark.oracle.seq_oracle import crawl_oracle
 from webscraper_spark.plans import wave as wave_mod
-from webscraper_spark.plans.wave import CrawlConfig, run_crawl
+from webscraper_spark.plans.wave import CrawlConfig, fetched_paths, run_crawl
 
 MAX_WAVES = 6
 
@@ -20,6 +23,10 @@ def inputs(spark, corpus_dir):
     robots = spark.read.parquet(corpus_dir["robots"])
     politeness = spark.read.parquet(corpus_dir["politeness"])
     return pages, seeds, robots, politeness
+
+
+def _results(spark, paths):
+    return spark.read.parquet(*fetched_paths(paths["ckpt_dir"], json.loads(paths["waves"])))
 
 
 def _oracle(pages, seeds, robots, politeness, max_waves):
@@ -116,10 +123,18 @@ def test_extracted_text_byte_identical_per_url(engine_result, inputs):
     pages.text for every fetched page with ground truth."""
     spark, paths = engine_result
     pages = inputs[0]
-    res = spark.read.parquet(paths["results"]).filter(F.col("fetch_status") == "ok")
+    res = _results(spark, paths).filter(F.col("fetch_status") == "ok")
     joined = res.select("url", "extracted_text").join(pages.select("url", "text"), "url")
     bad = joined.filter(~F.col("extracted_text").eqNullSafe(F.col("text")))
     assert bad.count() == 0
+
+
+def test_fetched_paths_cover_the_results_glob(engine_result):
+    """The listed wave dirs that entry() and these tests read are exactly
+    the dirs the `results` glob matches."""
+    _, paths = engine_result
+    listed = fetched_paths(paths["ckpt_dir"], json.loads(paths["waves"]))
+    assert listed and sorted(listed) == sorted(glob.glob(paths["results"]))
 
 
 def test_resume_identical_to_straight_run(spark, inputs, oracle_result, tmp_path_factory):
@@ -281,7 +296,7 @@ def test_missing_pages_match_oracle(spark, inputs, tmp_path_factory):
     assert got_order == set(want_order)
     got_seen = {r.url: r.wave for r in spark.read.parquet(paths["seen"]).collect()}
     assert got_seen == want_seen
-    status = {r.url: r.fetch_status for r in spark.read.parquet(paths["results"])
+    status = {r.url: r.fetch_status for r in _results(spark, paths)
               .filter(F.col("url").isin(absent)).select("url", "fetch_status").collect()}
     assert status == dict.fromkeys(absent, "missing")
 

@@ -53,17 +53,6 @@ def url_hash(url: Column) -> Column:
     return F.xxhash64(url)
 
 
-def h60(col: Column) -> Column:
-    """60-bit string hash: first 15 hex chars of md5, as a positive long.
-
-    Unlike url_hash (xxhash64, Spark-only), md5 is recomputable in ANSI SQL
-    engines, so every h60-derived output (synthetic link graphs, content
-    fingerprints) is independently verifiable by the DuckDB oracle. 60 bits
-    keeps the value positive in signed-64 systems.
-    """
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 # ---------------------------------------------------------------------------
 # Python engine — same semantics, one compiled-regex match per URL, called
 # per outlink inside the Arrow extraction UDF (extract_pandas.py).

@@ -3,10 +3,9 @@
 News-heavy crawls discover fresh URLs from feeds faster than from
 sitemaps (publishers update feeds within seconds of posting; Google's
 "feedfetcher" and Common Crawl's news crawl both work this way). A feed
-entry also carries the publication timestamp the freshness scheduler
-(operators/freshness.py) treats as a change observation. The reference
-app has no feed handling; this is S15 in SURVEY §2.1, the sibling of the
-sitemap source (S11) with the same design rules: pure-codegen
+entry also carries its publication timestamp. The reference app has no
+feed handling; this is S15 in SURVEY §2.1, the sibling of the sitemap
+source (S11) with the same design rules: pure-codegen
 `regexp_extract_all` + explode (no Python, survives malformed XML,
 DuckDB-replayable), elements bounded by closing tags with (?s) dotall.
 
@@ -39,8 +38,7 @@ def parse_feed(feeds: DataFrame, xml_col: str = "feed_xml", host_col: str = "hos
 
     `published` stays a string: RSS pubDate is RFC 822 ("Mon, 02 Jan
     2026 15:04:05 GMT") and Atom updated is ISO 8601 — parsing to
-    timestamp is locale/format policy the caller owns (the freshness
-    operator takes observations, not wall-clock authority). entry_pos is
+    timestamp is locale/format policy the caller owns. entry_pos is
     document order within the feed, per dialect."""
     nullif = lambda c: F.when(c == "", None).otherwise(c)  # noqa: E731
 

@@ -16,8 +16,7 @@ Two outputs:
   HTML (no parser).
 - `hreflang_clusters`: per declaring URL: edition count, distinct
   languages, reciprocal count, and `all_reciprocal` — the deploy-bug
-  flag. Reciprocity is one swapped-key self-join on (url, alt_url),
-  the same shape as the link-farm check (graph.py host_spam_score).
+  flag. Reciprocity is one swapped-key self-join on (url, alt_url).
 
 The x-default pseudo-language is kept as a normal entry ('x-default'
 is what the attribute literally says; routing treats it as the

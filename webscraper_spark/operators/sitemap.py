@@ -4,10 +4,10 @@ Sitemaps (sitemaps.org protocol, referenced by RFC 9309's Sitemap field)
 are the crawl scheduler's second discovery channel next to outlink
 harvest: a host publishes <urlset> documents (or <sitemapindex> documents
 pointing at more sitemaps) listing canonical URLs with optional lastmod /
-changefreq / priority hints — exactly the inputs freshness-driven recrawl
-scheduling (operators/freshness.py) wants. The reference app has no
-sitemap handling (it crawls two fixed sites); this extends the
-beyond-reference crawl family (SURVEY §2.1 S11).
+changefreq / priority hints, which sitemap_refetch turns into recrawl
+decisions. The reference app has no sitemap handling (it crawls two
+fixed sites); this extends the beyond-reference crawl family (SURVEY
+§2.1 S11).
 
 Parsing is pure codegen column work — `regexp_extract_all` over the XML
 body, then explode — so it distributes over millions of sitemap bodies
@@ -119,9 +119,7 @@ def sitemap_refetch(
     entries: DataFrame, crawled: DataFrame, as_of: str
 ) -> DataFrame:
     """Classify sitemap entries against the crawl record into refetch
-    states — the Sitemaps-protocol-driven half of recrawl scheduling
-    (the statistics-driven half is freshness.py recrawl_priority; a real
-    scheduler unions both, publisher hints first since they are free).
+    states from the publisher's Sitemaps-protocol hints.
 
     entries: parse_sitemap output (host, loc, lastmod, changefreq,
       priority, ...). crawled: (url, fetched_ts) last-success record.

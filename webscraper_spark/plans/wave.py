@@ -126,6 +126,14 @@ def _wave_dir(ckpt_dir: str, wave: int) -> str:
     return os.path.join(ckpt_dir, f"wave={wave}")
 
 
+def fetched_paths(ckpt_dir: str, waves: list[int]) -> list[str]:
+    """The `fetched` dirs of the given waves. Reading this list rather than
+    the `wave=*/fetched` glob keeps Spark from probing the glob for a
+    streaming sink's metadata directory, which logs a warning and a stack
+    trace on every read."""
+    return [os.path.join(_wave_dir(ckpt_dir, w), "fetched") for w in waves]
+
+
 def _manifest_path(ckpt_dir: str) -> str:
     return os.path.join(ckpt_dir, "manifest.json")
 
@@ -184,16 +192,12 @@ def read_manifest(ckpt_dir: str) -> list[int]:
 def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
     """Canonicalize + dedup seeds into wave-0 frontier rows."""
     s = seeds.select(canonicalize_url(F.col("url")).alias("url"))
-    return (
-        s.groupBy("url")
-        .agg(F.count("*").alias("_n"))
-        .select(
-            "url",
-            url_host(F.col("url")).alias("host"),
-            F.lit(0).alias("depth"),
-            F.lit(0).alias("disc_wave"),
-            F.lit(0).cast("long").alias("disc_pos"),
-        )
+    return s.distinct().select(
+        "url",
+        url_host(F.col("url")).alias("host"),
+        F.lit(0).alias("depth"),
+        F.lit(0).alias("disc_wave"),
+        F.lit(0).cast("long").alias("disc_pos"),
     )
 
 
@@ -268,7 +272,7 @@ def run_crawl(
         frontier = spark.read.parquet(os.path.join(_wave_dir(ckpt_dir, max(completed)), "frontier"))
         # frontier row count for free from the checkpoint's parquet footers
         n_frontier = _parquet_rows(os.path.join(_wave_dir(ckpt_dir, max(completed)), "frontier"))
-        seen = spark.read.parquet(*[os.path.join(_wave_dir(ckpt_dir, w), "fetched") for w in completed]).select(
+        seen = spark.read.parquet(*fetched_paths(ckpt_dir, completed)).select(
             url_hash(F.col("url")).alias("url_hash"), "url", F.col("wave").cast("int").alias("wave")
         )
     else:
@@ -288,7 +292,6 @@ def run_crawl(
         int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
     )
 
-    pages_slim = pages  # full table; Catalyst prunes columns per stage
     debug = os.environ.get("WS_DEBUG_TIMING", "0") == "1"
 
     def _tick(label: str, t0: float) -> float:
@@ -348,9 +351,9 @@ def run_crawl(
             # too big to broadcast flips to the shuffled-hash path.
             small_batch = n_batch <= (BUCKETED_BROADCAST_BATCH_MAX if cfg.corpus_bucketed else BROADCAST_BATCH_MAX)
             batch_side = F.broadcast(batch) if small_batch else batch.hint("SHUFFLE_HASH")
-            hits = pages_slim.join(batch_side, "url", "inner").withColumn("fetch_status", F.lit("ok"))
+            hits = pages.join(batch_side, "url", "inner").withColumn("fetch_status", F.lit("ok"))
             misses = (
-                batch.join(pages_slim.select("url") if small_batch else pages_slim.select("url").hint("SHUFFLE_HASH"),
+                batch.join(pages.select("url") if small_batch else pages.select("url").hint("SHUFFLE_HASH"),
                            "url", "left_anti")
                 .select(
                     "*",
@@ -459,7 +462,7 @@ def _finalize(spark: SparkSession, ckpt_dir: str, completed: list[int]) -> dict[
     # concurrently instead of serializing scan+write barriers.
     from concurrent.futures import ThreadPoolExecutor
 
-    all_fetched = spark.read.parquet(*[os.path.join(_wave_dir(ckpt_dir, w), "fetched") for w in completed])
+    all_fetched = spark.read.parquet(*fetched_paths(ckpt_dir, completed))
 
     def _w_order() -> None:
         all_fetched.select(
