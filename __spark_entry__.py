@@ -1696,142 +1696,6 @@ FROM x GROUP BY event_type
 """
 
 
-def _q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Redirect-chain resolution (L40 in SURVEY §2.10): deterministic
-    redirect edges — intra-block chains (doc_id -> doc_id+1 for
-    doc_id%5<4, so chain lengths 1-4 end at each %5==4 terminal),
-    planted 2-cycles in a disjoint negative-id space (every %101==0
-    doc), and duplicate-src rows (%7==0 adds a second, larger target
-    that the min-dst collapse must ignore) — resolved to final
-    destination + exact hop count by pointer jumping
-    (operators/redirects.py: ceil(log2(max_hops+1)) self-joins, not
-    max_hops sequential ones). The oracle unrolls the same doubling
-    rounds as chained CTEs, so hops and cycle labels replay exactly."""
-    from webscraper_spark.operators.redirects import resolve_redirects
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    i = F.col("doc_id").cast("long")
-    chain = d.filter(i % 5 < 4).select(i.alias("src"), (i + 1).alias("dst"))
-    extra = d.filter(i % 7 == 0).select(i.alias("src"), (i + 2).alias("dst"))
-    cyc = d.filter(i % 101 == 0)
-    cyc1 = cyc.select((-(i + 1)).alias("src"), (-(i + 1) - 1_000_000).alias("dst"))
-    cyc2 = cyc.select((-(i + 1) - 1_000_000).alias("src"), (-(i + 1)).alias("dst"))
-    edges = chain.unionByName(extra).unionByName(cyc1).unionByName(cyc2)
-    return resolve_redirects(edges, max_hops=6)
-
-
-def _sql_redirect_resolve(max_hops: int = 6) -> str:
-    # Pointer-jumping replay: same edge synthesis, same min-dst collapse,
-    # one CTE per doubling round (rounds = ceil(log2(max_hops+1))).
-    import math
-
-    rounds = max(1, math.ceil(math.log2(max_hops + 1)))
-    parts = [
-        """edges AS (
-  SELECT doc_id::BIGINT AS src, (doc_id + 1)::BIGINT AS dst
-  FROM documents WHERE doc_id % 5 < 4
-  UNION ALL
-  SELECT doc_id::BIGINT, (doc_id + 2)::BIGINT FROM documents WHERE doc_id % 7 = 0
-  UNION ALL
-  SELECT (-(doc_id + 1))::BIGINT, (-(doc_id + 1) - 1000000)::BIGINT
-  FROM documents WHERE doc_id % 101 = 0
-  UNION ALL
-  SELECT (-(doc_id + 1) - 1000000)::BIGINT, (-(doc_id + 1))::BIGINT
-  FROM documents WHERE doc_id % 101 = 0
-)""",
-        "m0 AS (SELECT src, min(dst) AS dst, 1::BIGINT AS hops FROM edges GROUP BY src)",
-    ]
-    for k in range(1, rounds + 1):
-        parts.append(
-            f"""m{k} AS (
-  SELECT a.src, coalesce(b.dst, a.dst) AS dst,
-         (CASE WHEN b.src IS NOT NULL THEN a.hops + b.hops ELSE a.hops END)::BIGINT AS hops
-  FROM m{k - 1} a LEFT JOIN m{k - 1} b ON a.dst = b.src
-)"""
-        )
-    return (
-        "WITH " + ",\n".join(parts)
-        + f"""
-SELECT src, dst AS final, hops,
-       CASE WHEN hops > {max_hops} THEN 'cycle' ELSE 'resolved' END AS status
-FROM m{rounds}"""
-    )
-
-
-def _q_url_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL template mining + spider-trap detection (L42 in SURVEY
-    §2.10): URLs synthesized with a 3-slot calendar trap (30% of docs),
-    hex session-id paths (masked to '{hex}' BEFORE the digit rule can
-    shred them), one-slot article listings with query params to strip,
-    and a static page; collapsed to (host, template) groups with trap
-    verdicts (operators/templates.py — two regexp_replace passes + one
-    map-side-combinable aggregate, no UDF). Oracle replays both regexes
-    with the 'g' flag, so templates, counts, examples and verdicts
-    match bit-for-bit."""
-    from webscraper_spark.operators.templates import url_templates
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    i = F.col("doc_id").cast("long")
-    m = i % 10
-    host = F.concat(F.lit("h"), (i % 4).cast("string"), F.lit(".example.com"))
-    path = (
-        F.when(
-            m < 3,
-            F.concat(
-                F.lit("/cal/2026/"), (i % 12 + 1).cast("string"),
-                F.lit("/"), (i % 28 + 1).cast("string"),
-            ),
-        )
-        .when(
-            m.isin(3, 4),
-            F.concat(F.lit("/s/"), F.lower(F.hex(i * 2654435761 + 4026531840))),
-        )
-        .when(m == 9, F.lit("/about"))
-        .otherwise(F.concat(F.lit("/news/article-"), i.cast("string")))
-    )
-    q = F.when(
-        (m >= 5) & (m <= 8), F.concat(F.lit("?ref="), (i % 3).cast("string"))
-    ).otherwise(F.lit(""))
-    urls = d.select(F.concat(F.lit("https://"), host, path, q).alias("url"))
-    return url_templates(urls, trap_min_urls=20)
-
-
-_SQL_URL_TEMPLATES = r"""
-WITH u AS (
-  SELECT doc_id % 10 AS m,
-         'h' || (doc_id % 4)::VARCHAR || '.example.com' AS host,
-    CASE WHEN doc_id % 10 < 3
-           THEN '/cal/2026/' || (doc_id % 12 + 1)::VARCHAR || '/' || (doc_id % 28 + 1)::VARCHAR
-         WHEN doc_id % 10 IN (3, 4)
-           THEN '/s/' || lower(to_hex(doc_id * 2654435761 + 4026531840))
-         WHEN doc_id % 10 = 9 THEN '/about'
-         ELSE '/news/article-' || doc_id::VARCHAR END AS path,
-    CASE WHEN doc_id % 10 BETWEEN 5 AND 8
-         THEN '?ref=' || (doc_id % 3)::VARCHAR ELSE '' END AS q
-  FROM documents
-),
-t AS (
-  SELECT host,
-    regexp_replace(
-      regexp_replace(
-        lower(regexp_extract('https://' || host || path || q, '^[a-z]+://[^/?#]*(/[^?#]*)', 1)),
-        '[0-9a-f]{8,}', '{hex}', 'g'),
-      '[0-9]+', '{n}', 'g') AS template,
-    'https://' || host || path || q AS url
-  FROM u
-),
-a AS (
-  SELECT host, template, count(*)::BIGINT AS n_urls, min(url) AS example
-  FROM t GROUP BY host, template
-)
-SELECT host, template, n_urls,
-  (length(template) - length(replace(template, '{', '')))::INT AS n_slots,
-  example,
-  (n_urls >= 20 AND length(template) - length(replace(template, '{', '')) >= 2) AS is_trap
-FROM a
-"""
-
-
 _PIVOT_LANGS = ("de", "en", "es", "fr", "zh")
 
 
@@ -1865,90 +1729,6 @@ def _sql_lang_pivot() -> str:
         for lg in _PIVOT_LANGS
     )
     return f"SELECT source,\n  {cells}\nFROM documents GROUP BY source"
-
-
-def _q_canonical_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rel=canonical collapse (L45 in SURVEY §2.10): 6-page blocks per
-    host — a canonical target with explicit self-link, two query-string
-    variants, an attribute-order-flipped variant, an unannotated page
-    (self-canonical per RFC 6596), and a cross-host mirror pointing at
-    a central host — collapsed to (canonical, members, representative,
-    cross-host count) clusters (operators/canonical.py, two codegen
-    regexes + one map-side-combinable agg)."""
-    from webscraper_spark.operators.canonical import canonical_clusters
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    i = F.col("doc_id").cast("long")
-    m = i % 6
-    b = (i - m).cast("string")
-    host = F.concat(F.lit("h"), (F.expr("doc_id div 6") % 8).cast("string"), F.lit(".ex.com"))
-    base = F.concat(F.lit("https://"), host, F.lit("/p/"), b)
-    url = (
-        F.when(m == 0, base)
-        .when(m == 1, F.concat(base, F.lit("?ref=a")))
-        .when(m == 2, F.concat(base, F.lit("?utm=b")))
-        .when(m == 3, F.concat(F.lit("https://"), host, F.lit("/q/"), i.cast("string")))
-        .when(m == 4, F.concat(base, F.lit("?s=c")))
-        .otherwise(F.concat(F.lit("https://"), host, F.lit("/m/"), i.cast("string")))
-    )
-    html = (
-        F.when(m == 0, F.concat(F.lit('<html><link rel="canonical" href="'), base, F.lit('"><body>x</body>')))
-        # single-quoted and UPPERCASE variants: same cluster as m=0
-        .when(m == 1, F.concat(F.lit("<link rel='canonical' href='"), base, F.lit("'>")))
-        .when(m == 2, F.concat(F.lit('<LINK REL="CANONICAL" HREF="'), base, F.lit('">')))
-        .when(m == 3, F.lit("<html><body>no canon</body></html>"))
-        # attr-order flipped AND root-relative: must resolve against origin
-        .when(m == 4, F.concat(F.lit('<link href="/p/'), b, F.lit('" rel="canonical"/>')))
-        .otherwise(F.concat(F.lit('<link rel="canonical" href="https://central.ex.com/p/'), b, F.lit('">')))
-    )
-    return canonical_clusters(d.select(url.alias("url"), html.alias("html")))
-
-
-_SQL_CANONICAL_COLLAPSE = r"""
-WITH p AS (
-  SELECT doc_id, doc_id % 6 AS m, (doc_id - doc_id % 6)::VARCHAR AS b,
-         'h' || ((doc_id // 6) % 8)::VARCHAR || '.ex.com' AS host
-  FROM documents
-),
-u AS (
-  SELECT doc_id, m, host,
-    'https://' || host || '/p/' || b AS base,
-    CASE m WHEN 0 THEN 'https://' || host || '/p/' || b
-           WHEN 1 THEN 'https://' || host || '/p/' || b || '?ref=a'
-           WHEN 2 THEN 'https://' || host || '/p/' || b || '?utm=b'
-           WHEN 3 THEN 'https://' || host || '/q/' || doc_id::VARCHAR
-           WHEN 4 THEN 'https://' || host || '/p/' || b || '?s=c'
-           ELSE 'https://' || host || '/m/' || doc_id::VARCHAR END AS url,
-    CASE m WHEN 0 THEN '<html><link rel="canonical" href="' || 'https://' || host || '/p/' || b || '"><body>x</body>'
-           WHEN 1 THEN '<link rel=''canonical'' href=''' || 'https://' || host || '/p/' || b || '''>'
-           WHEN 2 THEN '<LINK REL="CANONICAL" HREF="' || 'https://' || host || '/p/' || b || '">'
-           WHEN 3 THEN '<html><body>no canon</body></html>'
-           WHEN 4 THEN '<link href="/p/' || b || '" rel="canonical"/>'
-           ELSE '<link rel="canonical" href="https://central.ex.com/p/' || b || '">' END AS html
-  FROM p
-),
-hrefed AS (
-  SELECT url,
-    regexp_extract(tag, '(?i)\bhref\s*=\s*(?:"([^"]*)"|''([^'']*)'')', 1)
-      || regexp_extract(tag, '(?i)\bhref\s*=\s*(?:"([^"]*)"|''([^'']*)'')', 2) AS href
-  FROM (SELECT url,
-          regexp_extract(html, '(?i)<link\b[^>]*\brel\s*=\s*["'']?canonical\b[^>]*/?>') AS tag
-        FROM u)
-),
-c AS (
-  SELECT url,
-    CASE WHEN regexp_matches(href, '^[a-z]+://') THEN href
-         WHEN href LIKE '/%'
-           THEN regexp_extract(url, '^([a-z]+://[^/?#]+)', 1) || href
-         ELSE url END AS canonical
-  FROM hrefed
-)
-SELECT canonical, count(*)::BIGINT AS n_members, min(url) AS representative,
-       sum(CASE WHEN regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1)
-                  <> regexp_extract(canonical, '^[a-z]+://([^/:?#]+)', 1)
-                THEN 1 ELSE 0 END)::BIGINT AS n_cross_host
-FROM c GROUP BY canonical
-"""
 
 
 def _q_adaptive_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2007,67 +1787,6 @@ SELECT host, n_waves, latest_wave,
        (100 * (1 << least(latest_wave - coalesce(last_clean, first_wave - 1), 6)))::BIGINT
          AS delay_ms
 FROM ph
-"""
-
-
-def _q_charset_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declared-charset sniffing (L47/S15 in SURVEY §2): HTML heads
-    planted with an XML declaration that must beat a conflicting meta
-    (WHATWG precedence), quoted/unquoted/uppercase meta charsets, an
-    http-equiv Content-Type, silent pages defaulting to utf-8, a
-    charset at second attribute position (must sniff), and a
-    'charset=' inside a content="..." description (must NOT sniff) —
-    folded into the per-host encoding report with the transcode-lane
-    flag (operators/charset.py, codegen regex chain)."""
-    from webscraper_spark.operators.charset import charset_report
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    i = F.col("doc_id").cast("long")
-    m = i % 9
-    host = F.concat(F.lit("h"), (i % 5).cast("string"), F.lit(".ex"))
-    html = (
-        F.when(m == 0, F.lit('<?xml version="1.0" encoding="ISO-8859-1"?><meta charset="utf-8">'))
-        .when(m == 1, F.lit('<meta charset="windows-1252"><body>'))
-        .when(m == 2, F.lit("<META CHARSET='UTF-8'>"))
-        .when(m == 3, F.lit('<meta http-equiv="Content-Type" content="text/html; charset=Shift_JIS">'))
-        .when(m == 4, F.lit("<html><body>silent</body></html>"))
-        .when(m == 5, F.lit("<meta charset='koi8-r'>"))
-        .when(m == 6, F.lit('<meta id="enc" charset="big5">'))
-        .when(m == 7, F.lit('<meta name="description" content="all about charset=big5 pages">'))
-        .otherwise(F.lit('<meta content="text/html; charset=EUC-JP" http-equiv="Content-Type">'))
-    )
-    url = F.concat(F.lit("https://"), host, F.lit("/p/"), i.cast("string"))
-    return charset_report(d.select(url.alias("url"), html.alias("html")))
-
-
-_SQL_CHARSET_SNIFF = r"""
-WITH p AS (
-  SELECT 'h' || (doc_id % 5)::VARCHAR || '.ex' AS host,
-    lower(CASE doc_id % 9
-      WHEN 0 THEN '<?xml version="1.0" encoding="ISO-8859-1"?><meta charset="utf-8">'
-      WHEN 1 THEN '<meta charset="windows-1252"><body>'
-      WHEN 2 THEN '<META CHARSET=''UTF-8''>'
-      WHEN 3 THEN '<meta http-equiv="Content-Type" content="text/html; charset=Shift_JIS">'
-      WHEN 4 THEN '<html><body>silent</body></html>'
-      WHEN 5 THEN '<meta charset=''koi8-r''>'
-      WHEN 6 THEN '<meta id="enc" charset="big5">'
-      WHEN 7 THEN '<meta name="description" content="all about charset=big5 pages">'
-      ELSE '<meta content="text/html; charset=EUC-JP" http-equiv="Content-Type">' END) AS low
-  FROM documents
-),
-c AS (
-  SELECT host,
-    coalesce(
-      nullif(regexp_extract(low, '<\?xml[^>]*encoding=["'']([a-z0-9_.:-]+)["'']', 1), ''),
-      nullif(regexp_extract(low, '<meta(?:[^>"'']|"[^"]*"|''[^'']*'')*?\scharset\s*=\s*["'']?([a-z0-9_.:-]+)', 1), ''),
-      nullif(regexp_extract(low, '<meta[^>]*http-equiv=["'']?content-type["'']?[^>]*charset=([a-z0-9_.:-]+)', 1), ''),
-      nullif(regexp_extract(low, '<meta[^>]*charset=([a-z0-9_.:-]+)[^>]*http-equiv=["'']?content-type', 1), ''),
-      'utf-8') AS charset
-  FROM p
-)
-SELECT host, charset, count(*)::BIGINT AS n_pages,
-       charset NOT IN ('utf-8', 'us-ascii') AS needs_transcode
-FROM c GROUP BY host, charset
 """
 
 
@@ -2181,109 +1900,6 @@ r AS (
 )
 SELECT domain, count(*)::BIGINT AS n_urls, count(DISTINCT host)::BIGINT AS n_hosts
 FROM r GROUP BY domain
-"""
-
-
-def _q_hreflang_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """hreflang edition clustering + reciprocity validation (L50 in
-    SURVEY §2.10): 4-page blocks — en/de/fr editions each declaring the
-    full trio (reciprocal, spec-required self-edge included) plus a
-    rogue page claiming the en edition one-way (the classic hreflang
-    deploy bug / hijack shape) — validated per declaring URL
-    (operators/hreflang.py: regexp_extract_all tag harvest, swapped-key
-    self-join for back-edges). The three edition declarations exercise
-    the full matching contract: en is the plain double-quoted form, de
-    swaps attribute order (href before rel/hreflang) with single
-    quotes, fr is uppercase."""
-    from webscraper_spark.operators.hreflang import hreflang_clusters
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    i = F.col("doc_id").cast("long")
-    b, m = F.expr("doc_id div 4"), i % 4
-    site = F.concat(F.lit("https://s"), (b % 7).cast("string"), F.lit(".ex/"))
-    ed = {lg: F.concat(site, F.lit(lg + "/p"), b.cast("string")) for lg in ("en", "de", "fr")}
-    trio = F.concat(
-        F.concat(
-            F.lit('<link rel="alternate" hreflang="en" href="'), ed["en"], F.lit('"/>')
-        ),
-        F.concat(
-            F.lit("<link href='"), ed["de"], F.lit("' rel='alternate' hreflang='de'>")
-        ),
-        F.concat(
-            F.lit('<LINK REL="ALTERNATE" HREFLANG="FR" HREF="'), ed["fr"], F.lit('"/>')
-        ),
-        # standard x-default pattern: a second declaration of the en URL —
-        # must count as reciprocal, not false-flag the cluster
-        F.concat(
-            F.lit('<link rel="alternate" hreflang="x-default" href="'), ed["en"], F.lit('"/>')
-        ),
-    )
-    rogue_html = F.concat(
-        F.lit('<link rel="alternate" hreflang="en" href="'), ed["en"], F.lit('"/>')
-    )
-    url = (
-        F.when(m == 0, ed["en"])
-        .when(m == 1, ed["de"])
-        .when(m == 2, ed["fr"])
-        .otherwise(F.concat(F.lit("https://rogue.ex/p"), b.cast("string")))
-    )
-    html = F.when(m <= 2, trio).otherwise(rogue_html)
-    return hreflang_clusters(d.select(url.alias("url"), html.alias("html")))
-
-
-_SQL_HREFLANG = r"""
-WITH p AS (
-  SELECT doc_id, doc_id % 4 AS m, doc_id // 4 AS b,
-         'https://s' || ((doc_id // 4) % 7)::VARCHAR || '.ex/' AS site
-  FROM documents
-),
-u AS (
-  SELECT doc_id, m,
-    site || 'en/p' || b::VARCHAR AS en_u,
-    site || 'de/p' || b::VARCHAR AS de_u,
-    site || 'fr/p' || b::VARCHAR AS fr_u,
-    'https://rogue.ex/p' || b::VARCHAR AS rogue_u
-  FROM p
-),
-pages AS (
-  SELECT CASE m WHEN 0 THEN en_u WHEN 1 THEN de_u WHEN 2 THEN fr_u ELSE rogue_u END AS url,
-    CASE WHEN m <= 2 THEN
-      '<link rel="alternate" hreflang="en" href="' || en_u || '"/>'
-      || '<link href=''' || de_u || ''' rel=''alternate'' hreflang=''de''>'
-      || '<LINK REL="ALTERNATE" HREFLANG="FR" HREF="' || fr_u || '"/>'
-      || '<link rel="alternate" hreflang="x-default" href="' || en_u || '"/>'
-    ELSE '<link rel="alternate" hreflang="en" href="' || en_u || '"/>' END AS html
-  FROM u
-),
-tags AS (
-  SELECT url, unnest(regexp_extract_all(html,
-    '(?i)<link\b[^>]*\brel\s*=\s*["'']?alternate\b[^>]*>', 0)) AS tag
-  FROM pages
-),
-e0 AS (
-  SELECT url,
-    lower(regexp_extract(tag, '(?i)\bhreflang\s*=\s*["'']?([a-zA-Z0-9-]+)', 1)) AS lang,
-    regexp_extract(tag, '(?i)\bhref\s*=\s*(?:"([^"]*)"|''([^'']*)'')', 1)
-      || regexp_extract(tag, '(?i)\bhref\s*=\s*(?:"([^"]*)"|''([^'']*)'')', 2) AS alt_url
-  FROM tags
-),
-e AS (
-  SELECT DISTINCT url, lang, alt_url FROM e0 WHERE lang <> '' AND alt_url <> ''
-),
-back AS (SELECT DISTINCT alt_url AS url, url AS alt_url FROM e),
-recip AS (
-  SELECT e.url, e.lang, e.alt_url FROM e
-  WHERE EXISTS (SELECT 1 FROM back b WHERE b.url = e.url AND b.alt_url = e.alt_url)
-),
-agg AS (
-  SELECT url, count(*)::BIGINT AS n_alternates, count(DISTINCT lang)::BIGINT AS n_langs
-  FROM e GROUP BY url
-),
-rc AS (SELECT url, count(*)::BIGINT AS n_reciprocal FROM recip GROUP BY url)
-SELECT a.url, a.n_alternates, a.n_langs,
-       coalesce(rc.n_reciprocal, 0)::BIGINT AS n_reciprocal,
-       coalesce(rc.n_reciprocal, 0) = a.n_alternates AS all_reciprocal
-FROM agg a LEFT JOIN rc ON a.url = rc.url
 """
 
 
@@ -2420,68 +2036,6 @@ FROM st
 """
 
 
-def _q_strip_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tracking-parameter stripping (functions/canon.py
-    strip_tracking_params — the canonicalization that urlfilter's
-    'keep:strip_tracking' verdict calls for): six URL shapes per block —
-    no query, all-tracking query (the '?' must disappear), tracking
-    mixed before/after real params (survivor order preserved), a clean
-    query (untouched), and a tracking query with a fragment (fragment
-    preserved verbatim). Whole expression is JVM-side higher-order
-    filter + array_join; the oracle replays it with list_filter."""
-    from webscraper_spark.functions.canon import strip_tracking_params
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    i = F.col("doc_id").cast("long")
-    m = i % 6
-    base = F.concat(F.lit("https://h"), (i % 7).cast("string"), F.lit(".ex/p/a"), i.cast("string"))
-    url = (
-        F.when(m == 0, base)
-        .when(m == 1, F.concat(base, F.lit("?utm_source=news&utm_medium=mail")))
-        .when(m == 2, F.concat(base, F.lit("?id="), i.cast("string"), F.lit("&utm_campaign=x")))
-        .when(m == 3, F.concat(base, F.lit("?utm_content=a&page=2&gclid=xyz")))
-        .when(m == 4, F.concat(base, F.lit("?a=1&b=2")))
-        .otherwise(F.concat(base, F.lit("?fbclid=1#sec")))
-    )
-    return d.select("doc_id", url.alias("url"), strip_tracking_params(url).alias("stripped"))
-
-
-_SQL_STRIP_TRACKING = r"""
-WITH u AS (
-  SELECT doc_id,
-    'https://h' || (doc_id % 7)::VARCHAR || '.ex/p/a' || doc_id::VARCHAR AS b,
-    doc_id % 6 AS m
-  FROM documents
-),
-w AS (
-  SELECT doc_id,
-    CASE m WHEN 0 THEN b
-           WHEN 1 THEN b || '?utm_source=news&utm_medium=mail'
-           WHEN 2 THEN b || '?id=' || doc_id::VARCHAR || '&utm_campaign=x'
-           WHEN 3 THEN b || '?utm_content=a&page=2&gclid=xyz'
-           WHEN 4 THEN b || '?a=1&b=2'
-           ELSE b || '?fbclid=1#sec' END AS url
-  FROM u
-),
-parts AS (
-  SELECT doc_id, url,
-    regexp_extract(url, '^([^?#]*)', 1) AS base,
-    regexp_extract(url, '\?([^#]*)', 1) AS q,
-    regexp_extract(url, '(#.*)$', 1) AS frag
-  FROM w
-),
-s AS (
-  SELECT doc_id, url, base, q, frag,
-    array_to_string(list_filter(string_split(q, '&'),
-      x -> NOT regexp_matches(x, '^(utm_[a-z]+|gclid|fbclid|mc_eid)=')), '&') AS newq
-  FROM parts
-)
-SELECT doc_id, url,
-  base || CASE WHEN q <> '' AND newq <> '' THEN '?' || newq ELSE '' END || frag AS stripped
-FROM s
-"""
-
-
 def _q_robots_sitemaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sitemap: directive harvest from robots.txt (sitemaps.org
     extension; RFC 9309 §2.2.4 'other records'): 25 hosts whose files
@@ -2530,252 +2084,6 @@ FROM f
 """
 
 
-def _q_bom_charset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BOM-first charset sniffing (WHATWG stage 1, operators/charset.py
-    bom_charset/sniffed_charset): binary payloads built from hex — a
-    UTF-8 BOM that must BEAT a conflicting in-document declaration,
-    UTF-16 BE/LE BOMs, and BOM-less payloads that fall through to the
-    declared chain / the utf-8 default. Payloads via unhex on both
-    engines so the bytes are bit-identical."""
-    from webscraper_spark.operators.charset import sniffed_charset
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    m = F.col("doc_id") % 5
-    koi = '<meta charset="koi8-r">'
-    hexpay = (
-        F.when(m == 0, F.lit("EFBBBF" + koi.encode().hex().upper()))
-        .when(m == 1, F.lit("FEFF0041"))
-        .when(m == 2, F.lit("FFFE4100"))
-        .otherwise(F.lit("3C68746D6C3E"))  # '<html>'
-    )
-    html = (
-        F.when(m == 0, F.lit(koi))
-        .when(m == 3, F.lit('<meta charset="windows-1252">'))
-        .otherwise(F.lit("<html></html>"))
-    )
-    return d.select(
-        "doc_id",
-        sniffed_charset(F.unhex(hexpay), html).alias("charset"),
-    )
-
-
-def _sql_bom_charset() -> str:
-    koi_hex = '<meta charset="koi8-r">'.encode().hex().upper()
-    return f"""
-WITH p AS (
-  SELECT doc_id,
-    CASE doc_id % 5
-      WHEN 0 THEN 'EFBBBF{koi_hex}'
-      WHEN 1 THEN 'FEFF0041'
-      WHEN 2 THEN 'FFFE4100'
-      ELSE '3C68746D6C3E' END AS hexpay,
-    lower(CASE doc_id % 5
-      WHEN 0 THEN '<meta charset="koi8-r">'
-      WHEN 3 THEN '<meta charset="windows-1252">'
-      ELSE '<html></html>' END) AS low
-  FROM documents
-),
-h AS (SELECT doc_id, hex(unhex(hexpay)) AS hx, low FROM p)
-SELECT doc_id,
-  coalesce(
-    CASE WHEN substr(hx, 1, 6) = 'EFBBBF' THEN 'utf-8'
-         WHEN substr(hx, 1, 4) = 'FEFF' THEN 'utf-16be'
-         WHEN substr(hx, 1, 4) = 'FFFE' THEN 'utf-16le' END,
-    nullif(regexp_extract(low, '<\\?xml[^>]*encoding=["'']([a-z0-9_.:-]+)["'']', 1), ''),
-    nullif(regexp_extract(low, '<meta(?:[^>"'']|"[^"]*"|''[^'']*'')*?\\scharset\\s*=\\s*["'']?([a-z0-9_.:-]+)', 1), ''),
-    nullif(regexp_extract(low, '<meta[^>]*http-equiv=["'']?content-type["'']?[^>]*charset=([a-z0-9_.:-]+)', 1), ''),
-    nullif(regexp_extract(low, '<meta[^>]*charset=([a-z0-9_.:-]+)[^>]*http-equiv=["'']?content-type', 1), ''),
-    'utf-8') AS charset
-FROM h
-"""
-
-
-def _q_crawl_wave_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hygiene-wave integration (plans/hygiene.py — the L40/L45/L35/L42/
-    L46 family run as ONE frontier pass): 10-row blocks synthesize every
-    hygiene case — a canonical article, a 2-hop redirect alias into it, a
-    ?ref= canonical variant of it, a blocklisted URL, a 10-deep path, a
-    calendar-trap URL (2 digit slots, dense per-host), a tracking-param
-    variant (STRIPPED into the article's cluster), a redirect 2-cycle
-    (dropped), a 7-param URL, and a URL on a throttling host. The
-    pipeline resolves redirects (pointer jumping), collapses canonicals,
-    strips tracking params, dedups to the minimal discovery record,
-    applies the URL-quality verdict, masks trap templates, and schedules
-    per-host FIFO with AIMD-backoff-fed delays (slow.ex throttled 2
-    waves -> 100<<2 = 400ms; clean hosts 100ms)."""
-    from webscraper_spark.plans.hygiene import hygiene_frontier
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    i = F.col("doc_id").cast("long")
-    m, b = i % 10, F.expr("doc_id div 10")
-    hostb = F.concat(F.lit("h"), (b % 5).cast("string"), F.lit(".ex"))
-    art = F.concat(
-        F.lit("https://"), hostb, F.lit("/art/item-"), b.cast("string"), F.lit("-page")
-    )
-    url = (
-        F.when(m == 0, art)
-        .when(m == 1, F.concat(F.lit("https://"), hostb, F.lit("/r/"), i.cast("string")))
-        .when(m == 2, F.concat(art, F.lit("?ref=x")))
-        .when(m == 3, F.concat(F.lit("https://"), hostb, F.lit("/casino/x"), i.cast("string")))
-        .when(m == 4, F.concat(F.lit("https://"), hostb, F.lit("/a/b/c/d/e/f/g/h/x"), i.cast("string")))
-        .when(m == 5, F.concat(F.lit("https://trap.ex/cal/"),
-                               F.expr("doc_id div 7").cast("string"), F.lit("/"),
-                               (i % 7).cast("string")))
-        .when(m == 6, F.concat(art, F.lit("?utm_source=x")))
-        .when(m == 7, F.concat(F.lit("https://"), hostb, F.lit("/loop/a"), i.cast("string")))
-        .when(m == 8, F.concat(art, F.lit("?p1=1&p2=1&p3=1&p4=1&p5=1&p6=1&p7=1")))
-        .otherwise(F.concat(F.lit("https://slow.ex/item-"), i.cast("string"), F.lit("-x")))
-    )
-    cand = d.select(
-        url.alias("url"),
-        F.regexp_extract(url, r"^[a-z]+://([^/:?#]+)", 1).alias("host"),
-        F.lit(1).cast("int").alias("depth"),
-        F.lit(1).cast("int").alias("disc_wave"),
-        i.alias("disc_pos"),
-    )
-    m1 = d.filter(m == 1)
-    m7 = d.filter(m == 7)
-    edges = (
-        m1.select(
-            F.concat(F.lit("https://"), hostb, F.lit("/r/"), i.cast("string")).alias("src"),
-            F.concat(F.lit("https://"), hostb, F.lit("/r2/"), i.cast("string")).alias("dst"),
-        )
-        .unionByName(m1.select(
-            F.concat(F.lit("https://"), hostb, F.lit("/r2/"), i.cast("string")).alias("src"),
-            art.alias("dst"),
-        ))
-        .unionByName(m7.select(
-            F.concat(F.lit("https://"), hostb, F.lit("/loop/a"), i.cast("string")).alias("src"),
-            F.concat(F.lit("https://"), hostb, F.lit("/loop/b"), i.cast("string")).alias("dst"),
-        ))
-        .unionByName(m7.select(
-            F.concat(F.lit("https://"), hostb, F.lit("/loop/b"), i.cast("string")).alias("src"),
-            F.concat(F.lit("https://"), hostb, F.lit("/loop/a"), i.cast("string")).alias("dst"),
-        ))
-    )
-    cmap = d.filter(m == 2).select(
-        F.concat(art, F.lit("?ref=x")).alias("url"), art.alias("canonical")
-    )
-    oh = i % 7
-    outcomes = d.select(
-        F.when(oh <= 4, F.concat(F.lit("h"), oh.cast("string"), F.lit(".ex")))
-        .when(oh == 5, F.lit("slow.ex"))
-        .otherwise(F.lit("trap.ex"))
-        .alias("host"),
-        (F.expr("doc_id div 7") % 4).cast("long").alias("wave"),
-        F.when((oh == 5) & (F.expr("doc_id div 7") % 4 >= 2) & (i % 3 != 0), F.lit("429"))
-        .otherwise(F.lit("ok"))
-        .alias("status"),
-    )
-    # max_hops=4: the scenario's chains are 2 hops and its cycles double to
-    # hops=8>4 in ceil(log2(5))=3 pointer-jumping rounds — the 16-hop
-    # default costs 2 extra materialization rounds this input never needs.
-    return hygiene_frontier(
-        cand, redirect_edges=edges, canonical_map=cmap, outcomes=outcomes,
-        wave=1, base_delay_ms=100, trap_min_urls=30, max_hops=4,
-    )
-
-
-_SQL_HYGIENE = r"""
-WITH d AS (SELECT doc_id AS i, doc_id % 10 AS m, doc_id // 10 AS b FROM documents),
-base AS (
-  SELECT i, m, 'h' || (b % 5)::VARCHAR || '.ex' AS hostb,
-    'https://h' || (b % 5)::VARCHAR || '.ex/art/item-' || b::VARCHAR || '-page' AS art
-  FROM d),
-cand AS (
-  SELECT i, m, art,
-    CASE m
-      WHEN 0 THEN art
-      WHEN 1 THEN 'https://' || hostb || '/r/' || i::VARCHAR
-      WHEN 2 THEN art || '?ref=x'
-      WHEN 3 THEN 'https://' || hostb || '/casino/x' || i::VARCHAR
-      WHEN 4 THEN 'https://' || hostb || '/a/b/c/d/e/f/g/h/x' || i::VARCHAR
-      WHEN 5 THEN 'https://trap.ex/cal/' || (i // 7)::VARCHAR || '/' || (i % 7)::VARCHAR
-      WHEN 6 THEN art || '?utm_source=x'
-      WHEN 7 THEN 'https://' || hostb || '/loop/a' || i::VARCHAR
-      WHEN 8 THEN art || '?p1=1&p2=1&p3=1&p4=1&p5=1&p6=1&p7=1'
-      ELSE 'https://slow.ex/item-' || i::VARCHAR || '-x' END AS url
-  FROM base),
--- stage 1+2: m=1 is an exact 2-hop redirect chain into art (resolved);
--- m=7 is a redirect 2-cycle (dropped); m=2 declares art as canonical;
--- m=6 is art?utm_source=x, collapsed by tracking-param stripping
-resolved AS (
-  SELECT i, CASE WHEN m IN (1, 2, 6) THEN art ELSE url END AS url
-  FROM cand WHERE m <> 7),
--- stage 3: dedup by final url, minimal discovery record (disc_pos = i)
-dedup AS (
-  SELECT url, regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1) AS host,
-         min(i)::BIGINT AS disc_pos
-  FROM resolved GROUP BY url),
--- stage 4: url_features + first-failing-rule verdict (operators/urlfilter.py)
-feat AS (
-  SELECT url, host, disc_pos,
-    regexp_replace(regexp_extract(url, '^([^?#]*)', 1), '^[a-z]+://[^/]*', '') AS path,
-    regexp_extract(url, '\?([^#]*)', 1) AS qs
-  FROM dedup),
-f2 AS (
-  SELECT url, host, disc_pos, path,
-    (len(string_split(path, '/')) - 1)::INT AS depth,
-    (CASE WHEN qs = '' THEN 0 ELSE len(string_split(qs, '&')) END)::INT AS n_params,
-    length(regexp_extract(path, '([^/]*)$', 1))::INT AS slug_len,
-    length(regexp_replace(regexp_extract(path, '([^/]*)$', 1), '[^0-9]', '', 'g'))::INT AS slug_digits,
-    regexp_matches(qs, '(^|&)(utm_[a-z]+|gclid|fbclid|ref|mc_eid)=') AS has_tracking,
-    regexp_matches(host || path, '(casino|viagra|warez|phishing|malware)') AS blocked_kw
-  FROM feat),
-kept AS (
-  SELECT url, host, disc_pos, path,
-    CASE WHEN has_tracking THEN 'keep:strip_tracking' ELSE 'keep' END AS verdict
-  FROM f2
-  WHERE NOT blocked_kw AND depth <= 8 AND n_params <= 6
-    AND NOT (slug_len >= 4 AND slug_digits * 2 > slug_len * 1)),
--- stage 5: trap templates ((host, template) with >=30 urls and >=2 slots)
-tmpl AS (
-  SELECT url, host, disc_pos, verdict,
-    regexp_replace(regexp_replace(CASE WHEN path = '' THEN '/' ELSE path END,
-                                  '[0-9a-f]{8,}', '{hex}', 'g'),
-                   '[0-9]+', '{n}', 'g') AS template
-  FROM kept),
-traps AS (
-  SELECT host, template FROM tmpl GROUP BY host, template
-  HAVING count(*) >= 30
-     AND (length(template) - length(replace(template, '{', ''))) >= 2),
-masked AS (
-  SELECT t.url, t.host, t.disc_pos, t.verdict FROM tmpl t
-  WHERE NOT EXISTS (SELECT 1 FROM traps tr
-                    WHERE tr.host = t.host AND tr.template = t.template)),
--- stage 6: AIMD backoff delays from (host, wave, status) outcomes
-o AS (
-  SELECT CASE WHEN i % 7 <= 4 THEN 'h' || (i % 7)::VARCHAR || '.ex'
-              WHEN i % 7 = 5 THEN 'slow.ex' ELSE 'trap.ex' END AS bhost,
-         ((i // 7) % 4)::BIGINT AS wave,
-         CASE WHEN i % 7 = 5 AND ((i // 7) % 4) >= 2 AND i % 3 <> 0
-              THEN '429' ELSE 'ok' END AS status
-  FROM d),
-tw AS (
-  SELECT bhost, wave,
-         (sum(CASE WHEN status IN ('429', '503', 'timeout') THEN 1 ELSE 0 END) * 10
-            >= count(*) * 1) AS thr
-  FROM o GROUP BY bhost, wave),
-ph AS (
-  SELECT bhost, max(wave) AS latest_wave, min(wave) AS first_wave,
-         max(CASE WHEN NOT thr THEN wave END) AS last_clean
-  FROM tw GROUP BY bhost),
-delays AS (
-  SELECT bhost AS host,
-         (100 * (1 << least(latest_wave - coalesce(last_clean, first_wave - 1), 6)))::BIGINT
-           AS delay_ms
-  FROM ph),
-ranked AS (
-  SELECT mk.url, mk.host, 1::INT AS depth, 1::INT AS disc_wave, mk.disc_pos, mk.verdict,
-         row_number() OVER (PARTITION BY mk.host ORDER BY mk.disc_pos, mk.url) AS rank,
-         coalesce(dl.delay_ms, 100)::BIGINT AS delay_ms
-  FROM masked mk LEFT JOIN delays dl ON dl.host = mk.host)
-SELECT url, host, depth, disc_wave, disc_pos, verdict, rank, delay_ms,
-       (10000000 + (rank - 1) * delay_ms)::BIGINT AS sched_ms
-FROM ranked
-"""
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Query registry: name -> (spark, sf_dir) -> DataFrame.
 
@@ -2783,10 +2091,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     (tests/test_registry.py checks this).
     """
     return {
-        "crawl_wave_hygiene": _q_crawl_wave_hygiene,
         "robots_sitemaps": _q_robots_sitemaps,
-        "bom_charset_sniff": _q_bom_charset,
-        "strip_tracking": _q_strip_tracking,
         "stream_backoff_replay": _q_stream_backoff_replay,
         "sitemap_refetch": _q_sitemap_refetch,
         "cdx_index": _q_cdx_index,
@@ -2796,15 +2101,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "event_window_rates": _q_event_window_rates,
         "feed_parse": _q_feed_parse,
         "json_props_extract": _q_json_props,
-        "redirect_resolve": _q_redirect_resolve,
-        "url_templates": _q_url_templates,
         "lang_pivot": _q_lang_pivot,
-        "canonical_collapse": _q_canonical_collapse,
         "adaptive_backoff": _q_adaptive_backoff,
-        "charset_sniff": _q_charset_sniff,
         "coverage_audit": _q_coverage_audit,
         "registered_domain": _q_registered_domain,
-        "hreflang_clusters": _q_hreflang_clusters,
         "crawl_wave_e2e": _q_crawl_wave,
         "tpch_q1_pricing_summary": _q_tpch_q1,
         "eligibility_filter": _q_eligibility_filter,
@@ -2840,10 +2140,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     """DuckDB oracle SQL per query, keyed and ordered as queries()."""
     return {
-        "crawl_wave_hygiene": _SQL_HYGIENE,
         "robots_sitemaps": _SQL_ROBOTS_SITEMAPS,
-        "bom_charset_sniff": _sql_bom_charset(),
-        "strip_tracking": _SQL_STRIP_TRACKING,
         "stream_backoff_replay": _SQL_STREAM_BACKOFF,
         "sitemap_refetch": _SQL_SITEMAP_REFETCH,
         "cdx_index": _SQL_CDX_INDEX,
@@ -2853,15 +2150,10 @@ def oracle_sql() -> dict[str, str]:
         "event_window_rates": _SQL_EVENT_WINDOW_RATES,
         "feed_parse": _SQL_FEED_PARSE,
         "json_props_extract": _SQL_JSON_PROPS,
-        "redirect_resolve": _sql_redirect_resolve(),
-        "url_templates": _SQL_URL_TEMPLATES,
         "lang_pivot": _sql_lang_pivot(),
-        "canonical_collapse": _SQL_CANONICAL_COLLAPSE,
         "adaptive_backoff": _SQL_ADAPTIVE_BACKOFF,
-        "charset_sniff": _SQL_CHARSET_SNIFF,
         "coverage_audit": _SQL_COVERAGE_AUDIT,
         "registered_domain": _sql_registered_domain(),
-        "hreflang_clusters": _SQL_HREFLANG,
         "crawl_wave_e2e": _sql_crawl_wave(),
         "tpch_q1_pricing_summary": _SQL_TPCH_Q1,
         "eligibility_filter": _SQL_ELIGIBILITY,

@@ -604,15 +604,8 @@ def main() -> None:
         "robots_decision", "sitemap_parse", "warc_roundtrip",
         "cdx_index", "corpus_rollup", "url_filter", "mime_route",
         "event_window_rates", "feed_parse", "json_props_extract",
-        "redirect_resolve", "url_templates",
-        "lang_pivot", "canonical_collapse",
-        "adaptive_backoff", "charset_sniff", "coverage_audit",
-        "registered_domain", "hreflang_clusters",
-        # round 5: the hygiene-wave integration pass, robots Sitemap:
-        # harvest, and BOM-first charset sniffing
-        "crawl_wave_hygiene",
-        "robots_sitemaps", "bom_charset_sniff", "strip_tracking",
-        "sitemap_refetch",
+        "lang_pivot", "adaptive_backoff", "coverage_audit",
+        "registered_domain", "robots_sitemaps", "sitemap_refetch",
         # stream_backoff_replay deliberately absent: it measures stream
         # machinery setup (temp write + query start/stop), not operator
         # throughput; adaptive_backoff is the benchmarked batch form.

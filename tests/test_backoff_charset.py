@@ -1,9 +1,7 @@
 """Tests for adaptive AIMD backoff (operators/backoff.py, SURVEY 2.10
-L46/ST7) and declared-charset sniffing (operators/charset.py, L47/S15)."""
+L46/ST7)."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 
 def _outcomes(spark, rows):
@@ -52,82 +50,3 @@ def test_backoff_error_rate_threshold_and_cap(spark):
     assert got["F"] == (0, 100)
     assert got["G"] == (10, 100 << 6)  # streak reported raw, shift capped
 
-
-def test_declared_charset_precedence(spark):
-    from webscraper_spark.operators.charset import declared_charset
-
-    rows = [
-        (0, '<?xml version="1.0" encoding="ISO-8859-1"?><meta charset="utf-8">'),
-        (1, '<meta charset="windows-1252"><body>'),
-        (2, "<META CHARSET='UTF-8'>"),
-        (3, '<meta http-equiv="Content-Type" content="text/html; charset=Shift_JIS">'),
-        (4, "<html><body>silent</body></html>"),
-        # 'charset=' inside a content attribute must NOT sniff (false
-        # positive routed valid UTF-8 pages to the transcode lane)
-        (5, '<meta name="description" content="how to set charset=big5 in html">'),
-        # charset at SECOND attribute position must still sniff (HTML5
-        # allows it anywhere in the tag; the quoted-value guard skips
-        # complete quoted strings but keeps attribute positions live)
-        (6, '<meta id="enc" charset="big5">'),
-        (7, "<meta name='e' charset=koi8-r>"),
-        # both shapes in one doc: quoted mention first, real attr later
-        (8, '<meta content="charset=big5"><meta lang="x" charset="gbk">'),
-        # http-equiv AFTER content (reversed attribute order)
-        (9, '<meta content="text/html; charset=EUC-JP" http-equiv="Content-Type">'),
-    ]
-    df = spark.createDataFrame(rows, "i long, html string")
-    got = {r["i"]: r["cs"] for r in df.select("i", declared_charset(F.col("html")).alias("cs")).collect()}
-    assert got[0] == "iso-8859-1"   # xml decl beats meta
-    assert got[1] == "windows-1252"
-    assert got[2] == "utf-8"        # case-insensitive
-    assert got[3] == "shift_jis"
-    assert got[4] == "utf-8"        # HTML5 default
-    assert got[5] == "utf-8"        # mention inside content attr ignored
-    assert got[6] == "big5"         # second-attribute-position form
-    assert got[7] == "koi8-r"       # unquoted value, single-quoted neighbour
-    assert got[8] == "gbk"          # real attr wins over quoted mention
-    assert got[9] == "euc-jp"       # reversed http-equiv attribute order
-
-
-def test_charset_report_routing(spark):
-    from webscraper_spark.operators.charset import charset_report
-
-    rows = [
-        ("https://a.ex/1", '<meta charset="utf-8">'),
-        ("https://a.ex/2", '<meta charset="koi8-r">'),
-        ("https://a.ex/3", '<meta charset="koi8-r">'),
-        ("https://b.ex/1", "<html>silent</html>"),
-    ]
-    df = spark.createDataFrame(rows, "url string, html string")
-    got = {
-        (r["host"], r["charset"]): (r["n_pages"], r["needs_transcode"])
-        for r in charset_report(df).collect()
-    }
-    assert got[("a.ex", "utf-8")] == (1, False)
-    assert got[("a.ex", "koi8-r")] == (2, True)
-    assert got[("b.ex", "utf-8")] == (1, False)
-
-
-def test_bom_charset_precedence(spark):
-    """WHATWG stage 1: a BOM on the raw payload beats every in-document
-    declaration; BOM-less payloads fall through to the declared chain."""
-    from webscraper_spark.operators.charset import bom_charset, sniffed_charset
-
-    rows = [
-        (0, bytes.fromhex("EFBBBF") + b'<meta charset="koi8-r">', '<meta charset="koi8-r">'),
-        (1, bytes.fromhex("FEFF0041"), "<html></html>"),
-        (2, bytes.fromhex("FFFE4100"), "<html></html>"),
-        (3, b"<html>", '<meta charset="windows-1252">'),
-        (4, b"<html>", "<html></html>"),
-    ]
-    df = spark.createDataFrame(rows, "i long, payload binary, html string")
-    got = {r["i"]: (r["b"], r["s"]) for r in df.select(
-        "i",
-        bom_charset(F.col("payload")).alias("b"),
-        sniffed_charset(F.col("payload"), F.col("html")).alias("s"),
-    ).collect()}
-    assert got[0] == ("utf-8", "utf-8")          # BOM beats declared koi8-r
-    assert got[1] == ("utf-16be", "utf-16be")
-    assert got[2] == ("utf-16le", "utf-16le")
-    assert got[3] == (None, "windows-1252")      # no BOM -> declared chain
-    assert got[4] == (None, "utf-8")             # no BOM, silent -> default

@@ -89,31 +89,3 @@ def test_registered_domain_psl_rules(spark):
     df = spark.createDataFrame([(h,) for h, _ in cases], "host string")
     got = [r["d"] for r in df.select(registered_domain(F.col("host")).alias("d")).collect()]
     assert got == [want for _, want in cases]
-
-
-def test_strip_tracking_params(spark):
-    from webscraper_spark.functions.canon import strip_tracking_params
-
-    cases = [
-        ("https://a.ex/p", "https://a.ex/p"),                            # no query
-        ("https://a.ex/p?utm_source=x", "https://a.ex/p"),               # '?' disappears
-        ("https://a.ex/p?utm_source=x&utm_medium=y", "https://a.ex/p"),
-        ("https://a.ex/p?id=7&utm_campaign=z", "https://a.ex/p?id=7"),
-        ("https://a.ex/p?utm_content=a&page=2&gclid=q", "https://a.ex/p?page=2"),
-        ("https://a.ex/p?a=1&b=2", "https://a.ex/p?a=1&b=2"),            # untouched
-        ("https://a.ex/p?fbclid=1#sec", "https://a.ex/p#sec"),           # fragment kept
-        # `ref` is often functional: flagged by urlfilter, never stripped
-        ("https://a.ex/p?ref=feed&a=1", "https://a.ex/p?ref=feed&a=1"),
-        ("https://a.ex/p?utm_source=x&ref=feed", "https://a.ex/p?ref=feed"),
-        # param NAMED like a prefix of a tracking key must survive
-        ("https://a.ex/p?utms=1", "https://a.ex/p?utms=1"),
-        ("https://a.ex/p?refresh=1", "https://a.ex/p?refresh=1"),
-    ]
-    df = spark.createDataFrame([(u,) for u, _ in cases], "url string")
-    got = {r["url"]: r["s"] for r in df.select("url", strip_tracking_params(F.col("url")).alias("s")).collect()}
-    for u, want in cases:
-        assert got[u] == want, (u, got[u], want)
-    # pure JVM expression: no Python eval anywhere in the plan
-    plan = df.select(strip_tracking_params(F.col("url"))).\
-        _jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan

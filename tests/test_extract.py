@@ -121,119 +121,3 @@ def test_null_and_fieldless_html(spark):
     scalars = [n for n in names if n not in arrays + ["x_attr_map", "x_is_listing"]]
     assert {n: blank[n] for n in scalars} == dict.fromkeys(scalars)
     assert blank.x_status == "err"
-
-
-# --- rel=canonical collapse (operators/canonical.py, SURVEY 2.10 L45) ---
-
-def test_canonical_clusters_collapse_and_flags(spark):
-    from webscraper_spark.operators.canonical import canonical_clusters
-
-    rows = [
-        # canonical target with explicit self-link
-        ("https://a.ex/p/1", '<html><link rel="canonical" href="https://a.ex/p/1"><body>'),
-        # query-string variants pointing at it
-        ("https://a.ex/p/1?ref=x", '<link rel="canonical" href="https://a.ex/p/1">'),
-        ("https://a.ex/p/1?utm=y", '<link href="/p/1" rel="canonical"/>'),  # attr order flipped, ROOT-RELATIVE
-        # no annotation -> self-canonical
-        ("https://a.ex/p/2", "<html><body>plain</body></html>"),
-        # empty href -> self-canonical
-        ("https://a.ex/p/3", '<link rel="canonical" href="">'),
-        # cross-host canonical
-        ("https://b.ex/mirror/1", '<link rel="canonical" href="https://a.ex/p/1">'),
-        # same relative href on a DIFFERENT host must NOT merge with a.ex's
-        # /p/1 cluster nor flag cross-host
-        ("https://c.ex/p/1", '<link rel="canonical" href="/p/1">'),
-        # dot-relative href: conservative self-canonical fallback
-        ("https://a.ex/p/4", '<link rel="canonical" href="../p/4">'),
-        # apostrophe inside a double-quoted href is part of the URL
-        ("https://a.ex/p/5", '<link rel="canonical" href="https://a.ex/o\'brien">'),
-    ]
-    df = spark.createDataFrame(rows, "url string, html string")
-    got = {r["canonical"]: (r["n_members"], r["representative"], r["n_cross_host"])
-           for r in canonical_clusters(df).collect()}
-    assert got["https://a.ex/p/1"] == (4, "https://a.ex/p/1", 1)  # 3 on-host + 1 mirror
-    assert got["https://a.ex/p/2"] == (1, "https://a.ex/p/2", 0)
-    assert got["https://a.ex/p/3"] == (1, "https://a.ex/p/3", 0)
-    assert got["https://c.ex/p/1"] == (1, "https://c.ex/p/1", 0)  # resolved per-origin
-    assert got["https://a.ex/p/4"] == (1, "https://a.ex/p/4", 0)  # dot-relative -> self
-    assert got["https://a.ex/o'brien"] == (1, "https://a.ex/p/5", 0)
-    assert len(got) == 6
-
-
-def test_canonical_case_and_quote_styles(spark):
-    """Uppercase / single-quoted / unquoted-rel annotations must declare
-    the same canonical as the plain form; href case is preserved."""
-    from webscraper_spark.operators.canonical import canonical_clusters
-
-    tgt = "https://a.ex/Mixed/Case"
-    rows = [
-        ("https://a.ex/v0", f'<link rel="canonical" href="{tgt}">'),
-        ("https://a.ex/v1", f"<link rel='canonical' href='{tgt}'>"),
-        ("https://a.ex/v2", f'<LINK REL="CANONICAL" HREF="{tgt}"/>'),
-        ("https://a.ex/v3", f'<link rel=canonical href="{tgt}">'),
-        # rel="canonical-x" must NOT match (\b guard is not a prefix match)
-        ("https://a.ex/v4", f'<link rel="canonicalish" href="{tgt}">'),
-    ]
-    df = spark.createDataFrame(rows, "url string, html string")
-    got = {r["canonical"]: r["n_members"] for r in canonical_clusters(df).collect()}
-    assert got[tgt] == 4
-    assert got["https://a.ex/v4"] == 1  # self-canonical fallback
-
-
-# --- hreflang clustering (operators/hreflang.py, SURVEY 2.10 L50) ---
-
-def _hl(lang, href):
-    return f'<link rel="alternate" hreflang="{lang}" href="{href}"/>'
-
-
-def test_hreflang_edges_and_reciprocity(spark):
-    from webscraper_spark.operators.hreflang import hreflang_clusters, hreflang_edges
-
-    en, de, fr = "https://a.ex/en/p", "https://a.ex/de/p", "https://a.ex/fr/p"
-    rows = [
-        # full reciprocal trio; en page also declares x-default -> en (the
-        # standard pattern: one URL under two hreflang values must stay
-        # all_reciprocal, not undercount)
-        (en, _hl("en", en) + _hl("de", de) + _hl("fr", fr) + _hl("x-default", en)),
-        (de, _hl("en", en) + _hl("de", de) + _hl("fr", fr)),
-        (fr, _hl("en", en) + _hl("de", de) + _hl("fr", fr)),
-        # one-way annotation: claims the en page as alternate, no back-edge
-        ("https://rogue.ex/p", _hl("EN", en)),
-        # no annotations at all
-        ("https://a.ex/plain", "<html><body>x</body></html>"),
-    ]
-    df = spark.createDataFrame(rows, "url string, html string")
-    edges = hreflang_edges(df).collect()
-    assert {(r["url"], r["lang"], r["alt_url"]) for r in edges if r["url"] == "https://rogue.ex/p"} \
-        == {("https://rogue.ex/p", "en", en)}  # lang lowercased
-    got = {r["url"]: (r["n_alternates"], r["n_langs"], r["n_reciprocal"], r["all_reciprocal"])
-           for r in hreflang_clusters(df).collect()}
-    assert got[en] == (4, 4, 4, True)  # x-default row reciprocal too
-    for u in (de, fr):
-        assert got[u] == (3, 3, 3, True)
-    assert got["https://rogue.ex/p"] == (1, 1, 0, False)  # one-way claim flagged
-    assert "https://a.ex/plain" not in got
-
-
-def test_hreflang_attribute_order_case_quotes(spark):
-    """Real pages emit every attribute order / case / quote style; all
-    variants must yield the same edge as the plain double-quoted form."""
-    from webscraper_spark.operators.hreflang import hreflang_edges
-
-    alt = "https://a.ex/De/p"  # mixed-case path: href case must be PRESERVED
-    rows = [
-        ("https://v.ex/0", f'<link rel="alternate" hreflang="de" href="{alt}"/>'),
-        # swapped order, single quotes
-        ("https://v.ex/1", f"<link href='{alt}' rel='alternate' hreflang='de'>"),
-        # uppercase tag + attribute names + rel/lang values
-        ("https://v.ex/2", f'<LINK REL="ALTERNATE" HREFLANG="DE" HREF="{alt}"/>'),
-        # href between rel and hreflang, unquoted rel
-        ("https://v.ex/3", f'<link rel=alternate href="{alt}" hreflang="de"/>'),
-        # alternate-stylesheet link (no hreflang) must yield NO edge
-        ("https://v.ex/4", '<link rel="alternate stylesheet" href="/s.css"/>'),
-        # hreflang but no rel=alternate at all -> tag regex never fires
-        ("https://v.ex/5", f'<link hreflang="de" href="{alt}"/>'),
-    ]
-    df = spark.createDataFrame(rows, "url string, html string")
-    got = {(r["url"], r["lang"], r["alt_url"]) for r in hreflang_edges(df).collect()}
-    assert got == {(f"https://v.ex/{i}", "de", alt) for i in range(4)}

@@ -1,4 +1,5 @@
-"""Physical-plan regression tests for the round-4 operator batch.
+"""Physical-plan regression tests for the URL filter, the MIME router,
+the extraction UDF, the explicit-value pivot and the AIMD backoff.
 
 The scale claims in the operator docstrings ("pure codegen", "no
 shuffle") are properties of the PLAN, not of small-scale output — so
@@ -75,24 +76,8 @@ def test_pivot_explicit_values_single_pass(spark):
     assert "EvalPython" not in plan
 
 
-def test_template_mining_is_codegen_single_agg(spark):
-    from webscraper_spark.operators.templates import url_templates
-
-    plan = _plan(url_templates(_urls(spark)))
-    assert "EvalPython" not in plan          # regex masking is codegen
-    assert plan.count("Exchange") == 1       # one shuffle: the group-by
-
-
 def test_charset_and_backoff_are_codegen(spark):
     from webscraper_spark.operators.backoff import adaptive_backoff
-    from webscraper_spark.operators.charset import charset_report
-
-    pages = spark.createDataFrame(
-        [(f"https://h{i%3}.ex/{i}", '<meta charset="utf-8">') for i in range(12)],
-        "url string, html string",
-    )
-    p1 = _plan(charset_report(pages))
-    assert "EvalPython" not in p1 and p1.count("Exchange") == 1
 
     oc = spark.createDataFrame(
         [(f"h{i%3}", i % 4, "ok") for i in range(24)], "host string, wave long, status string"

@@ -200,7 +200,8 @@ def test_stream_adaptive_backoff_params_match_batch(spark, tmp_path_factory):
     got = {(r.host, r.wave): (r.throttle_streak, r.delay_ms)
            for r in spark.sql("SELECT * FROM backoff_params").collect()}
 
-    batch = adaptive_backoff(spark.read.schema(schema).parquet(d + "/*"), **params).collect()
+    batch_src = spark.read.schema(schema).parquet(os.path.join(d, "b1"), os.path.join(d, "b2"))
+    batch = adaptive_backoff(batch_src, **params).collect()
     want = {(r.host, r.latest_wave): (r.throttle_streak, r.delay_ms) for r in batch}
     assert want == {("A", 4): (4, 200), ("B", 2): (0, 50), ("C", 1): (2, 200)}
     assert {k: got[k] for k in want} == want

@@ -1,6 +1,5 @@
 """Tests for URL-quality filtering (operators/urlfilter.py, SURVEY 2.10
-L35), MIME sniffing/routing (operators/mime.py, 2.1 S14) and URL
-template mining (operators/templates.py, L42)."""
+L35) and MIME sniffing/routing (operators/mime.py, 2.1 S14)."""
 
 from __future__ import annotations
 
@@ -76,36 +75,3 @@ def test_sniff_mime_is_prefix_only(spark):
     assert df.select(sniff_mime("payload").alias("m")).collect()[0]["m"] == (
         "application/octet-stream"
     )
-
-
-# --- URL template mining / trap detection (operators/templates.py, L42) ---
-
-def test_url_templates_masking_and_traps(spark):
-    from webscraper_spark.operators.templates import url_templates
-
-    urls = (
-        [f"https://a.example.com/cal/2026/{m}/{d}" for m in range(1, 6) for d in range(1, 5)]
-        + [f"https://a.example.com/news/article-{i}" for i in range(8)]
-        + ["https://a.example.com/s/deadbeefcafe1234", "https://a.example.com/s/0123456789abcdef"]
-        + ["https://b.example.com/about", "https://b.example.com/about"]
-    )
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = {
-        (r["host"], r["template"]): (r["n_urls"], r["n_slots"], r["is_trap"], r["example"])
-        for r in url_templates(df, trap_min_urls=10).collect()
-    }
-    assert got[("a.example.com", "/cal/{n}/{n}/{n}")] == (
-        20, 3, True, "https://a.example.com/cal/2026/1/1")
-    assert got[("a.example.com", "/news/article-{n}")][0:3] == (8, 1, False)
-    assert got[("a.example.com", "/s/{hex}")][0:3] == (2, 1, False)  # hex masked before digits
-    assert got[("b.example.com", "/about")] == (2, 0, False, "https://b.example.com/about")
-
-
-def test_url_templates_root_and_query_stripping(spark):
-    from webscraper_spark.operators.templates import url_templates
-
-    df = spark.createDataFrame(
-        [("https://c.example.com",), ("https://c.example.com/p?page=9",)], "url string"
-    )
-    got = {r["template"]: r["n_urls"] for r in url_templates(df).collect()}
-    assert got == {"/": 1, "/p": 1}  # bare host -> '/', query params stripped

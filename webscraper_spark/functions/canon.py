@@ -124,38 +124,3 @@ def registered_domain(host: Column) -> Column:
     return F.when(is_two_level & (last3 != ""), last3).otherwise(
         F.when(last2 != "", last2).otherwise(host)
     )
-
-
-# Tracking parameters stripped by strip_tracking_params — the set
-# urlfilter.TRACKING_RE flags (its 'keep:strip_tracking' verdict is the
-# signal; this is the canonicalization it asks for) minus `ref`, which is
-# often functional (branch/tab/referral-content selectors): stripping it
-# could fetch a different resource, so urlfilter only flags it. Public
-# lists (AdGuard's $removeparam rules) run to hundreds of entries; the set
-# here is the documented mechanism-sized stand-in, like urlfilter's
-# blocklist.
-TRACKING_PARAM_RE = r"^(utm_[a-z]+|gclid|fbclid|mc_eid)="
-
-
-def strip_tracking_params(url: Column) -> Column:
-    """URL with tracking query parameters removed, all codegen.
-
-    Split the query string on '&', drop parameters whose NAME matches
-    TRACKING_PARAM_RE, rejoin; the '?' disappears when nothing survives
-    and the fragment is preserved verbatim. Parameter ORDER of the
-    survivors is preserved (this composes with canonicalize_url, which
-    sorts them). URLs without a query pass through unchanged — the whole
-    expression is JVM-side (higher-order filter + array_join), so it
-    belongs in the same scan-fused projection as canonicalize_url."""
-    base = F.regexp_extract(url, r"^([^?#]*)", 1)
-    query = F.regexp_extract(url, r"\?([^#]*)", 1)
-    frag = F.regexp_extract(url, r"(#.*)$", 1)
-    kept = F.filter(
-        F.split(query, "&"), lambda p: ~p.rlike(TRACKING_PARAM_RE)
-    )
-    newq = F.array_join(kept, "&")
-    return F.concat(
-        base,
-        F.when((query != "") & (newq != ""), F.concat(F.lit("?"), newq)).otherwise(F.lit("")),
-        frag,
-    )

@@ -22,8 +22,8 @@ Pure integer arithmetic so any engine replays it bit-for-bit:
   full restore on success — see the function docstring).
 
 One map-side-combinable aggregate per host over (host, wave, status)
-rows + a codegen CASE — no UDF, no join. The output feeds
-schedule.py's min_delay_ms input directly.
+rows + a codegen CASE — no UDF, no join. The output has the shape of
+schedule.py's min_delay_ms input, though the crawl does not feed it there.
 """
 
 from __future__ import annotations

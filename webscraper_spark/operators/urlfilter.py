@@ -8,8 +8,8 @@ auto-generated slugs. The reference crawls a hand-curated seed list and
 has no URL hygiene at all (every harvested href is visited —
 `/root/reference/app/controllers/cars_controller.rb:137-142`); at
 corpus scale the filter IS the crawl-budget guard. This is L35 in
-SURVEY §2.10; the verdict feeds the frontier the same way robots (ST6)
-and the seen anti-join (J1) do.
+SURVEY §2.10. The crawl (plans/wave.py) does not apply it; the
+`url_filter` registry query is its only caller.
 
 Design: every feature is a codegen expression over the raw URL string —
 no UDF, no parse tree. Integer arithmetic only (digit-density compares
@@ -72,8 +72,8 @@ def url_filter(urls: DataFrame, url_col: str = "url") -> DataFrame:
       n_params > MAX_PARAMS -> 'drop:params'
       slug digit density > DIGIT_NUM/DIGIT_DEN (cross-multiplied,
         slugs shorter than 4 chars exempt) -> 'drop:digits'
-      has_tracking -> 'keep:strip_tracking' (kept, but flagged for
-        canonicalization — tracking params alone are not a drop)
+      has_tracking -> 'keep:strip_tracking' (kept; a flag only, nothing
+        strips the parameters — tracking params alone are not a drop)
     """
     f = url_features(F.col(url_col))
     d = urls.withColumn("uf", f)
