@@ -967,394 +967,6 @@ seen0 AS (SELECT NULL::VARCHAR AS url WHERE false)"""]
     return "WITH " + ",".join(parts) + "\n" + final
 
 
-def _robots_synth_spark(spark: SparkSession, sf_dir: str):
-    """Deterministic robots.txt corpus + candidate URLs derived from
-    documents (25 hosts; group structure exercises exact-UA override,
-    '*' fallback, wildcard + '$' patterns, crawl-delay)."""
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    n = F.col("doc_id") % 25
-    host = F.concat(F.lit("h"), n.cast("string"), F.lit(".com"))
-    k = (n % 7).cast("string")
-    txt = F.concat(
-        F.lit("User-agent: googlebot\nDisallow: /\n"),
-        F.lit("User-agent: *\nDisallow: /p"), k,
-        F.lit("\nAllow: /p"), k,
-        F.lit("/ok\nDisallow: /x*z$\nCrawl-delay: "), (1 + n % 3).cast("string"), F.lit("\n"),
-        F.when(n % 4 == 0, F.lit("User-agent: webscraper\nAllow: /p\nDisallow: /other\n"))
-        .otherwise(F.lit("")),
-    )
-    files = d.select(host.alias("host"), txt.alias("robots_txt")).distinct()
-    m = F.col("doc_id") % 4
-    path = (
-        F.when(m == 0, F.concat(F.lit("/p"), (F.col("doc_id") % 7).cast("string"), F.lit("/page")))
-        .when(m == 1, F.concat(F.lit("/p"), (F.col("doc_id") % 7).cast("string"), F.lit("/ok/a")))
-        .when(
-            m == 2,
-            F.concat(
-                F.lit("/x"),
-                (F.col("doc_id") % 3).cast("string"),
-                F.when(F.col("doc_id") % 2 == 0, F.lit("z")).otherwise(F.lit("zq")),
-            ),
-        )
-        .otherwise(F.concat(F.lit("/other/"), F.col("doc_id").cast("string")))
-    )
-    urls = d.select(
-        F.concat(F.lit("https://"), host, path).alias("url"), host.alias("host")
-    ).distinct()
-    return files, urls
-
-
-def _q_robots_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFC 9309 robots.txt parser (S9 in SURVEY §2): raw robots.txt text ->
-    rule rows of the group governing UA 'webscraper' (exact token beats
-    '*'), wildcard/'$' patterns translated to anchored regexes
-    (operators/robots_parse.py)."""
-    from webscraper_spark.operators.robots_parse import parse_robots_txt
-
-    files, _ = _robots_synth_spark(spark, sf_dir)
-    return parse_robots_txt(files, user_agent="webscraper")
-
-
-def _q_robots_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFC 9309 longest-match Allow/Disallow verdict per URL (S10):
-    broadcast host-rules join + per-URL precedence window; allow wins
-    length ties, default-allow when nothing matches."""
-    from webscraper_spark.operators.robots_parse import parse_robots_txt, robots_allowed
-
-    files, urls = _robots_synth_spark(spark, sf_dir)
-    return robots_allowed(urls, parse_robots_txt(files, user_agent="webscraper"))
-
-
-# Shared DuckDB CTE chain replaying _robots_synth_spark + parse_robots_txt.
-_SQL_ROBOTS_RULES_CTES = r"""
-hosts AS (
-  SELECT DISTINCT
-    'h' || (doc_id % 25)::VARCHAR || '.com' AS host,
-    'User-agent: googlebot' || chr(10) || 'Disallow: /' || chr(10) ||
-    'User-agent: *' || chr(10) || 'Disallow: /p' || ((doc_id % 25) % 7)::VARCHAR || chr(10) ||
-    'Allow: /p' || ((doc_id % 25) % 7)::VARCHAR || '/ok' || chr(10) ||
-    'Disallow: /x*z$' || chr(10) ||
-    'Crawl-delay: ' || (1 + (doc_id % 25) % 3)::VARCHAR || chr(10) ||
-    CASE WHEN (doc_id % 25) % 4 = 0
-         THEN 'User-agent: webscraper' || chr(10) || 'Allow: /p' || chr(10) || 'Disallow: /other' || chr(10)
-         ELSE '' END AS robots_txt
-  FROM documents
-),
-lines AS (
-  SELECT host, pos,
-         trim(regexp_replace(string_split(robots_txt, chr(10))[pos], '#.*$', '')) AS line
-  FROM hosts,
-       unnest(generate_series(1, len(string_split(robots_txt, chr(10))))) AS t(pos)
-),
-parsed AS (
-  SELECT host, pos,
-         lower(trim(regexp_extract(line, '^([^:]+):(.*)$', 1))) AS field,
-         trim(regexp_extract(line, '^([^:]+):(.*)$', 2)) AS value
-  FROM lines
-  WHERE lower(trim(regexp_extract(line, '^([^:]+):(.*)$', 1)))
-        IN ('user-agent', 'allow', 'disallow', 'crawl-delay')
-),
-grouped AS (
-  SELECT *,
-         sum(CASE WHEN is_ua = 1 AND coalesce(prev_ua, 0) = 0 THEN 1 ELSE 0 END)
-           OVER (PARTITION BY host ORDER BY pos) AS group_id
-  FROM (
-    SELECT host, pos, field, value,
-           CASE WHEN field = 'user-agent' THEN 1 ELSE 0 END AS is_ua,
-           lag(CASE WHEN field = 'user-agent' THEN 1 ELSE 0 END)
-             OVER (PARTITION BY host ORDER BY pos) AS prev_ua
-    FROM parsed
-  )
-),
-spec AS (
-  SELECT host, group_id,
-         max(CASE WHEN lower(value) = 'webscraper' THEN 2
-                  WHEN value = '*' THEN 1 ELSE 0 END) AS group_spec
-  FROM grouped WHERE is_ua = 1 GROUP BY host, group_id
-),
-chosen AS (
-  SELECT host, group_id FROM (
-    SELECT host, group_id, group_spec, max(group_spec) OVER (PARTITION BY host) AS best
-    FROM spec
-  ) WHERE group_spec = best AND group_spec > 0
-),
-rules0 AS (
-  SELECT DISTINCT g.host, g.field AS rule, g.value AS pattern,
-         length(g.value)::BIGINT AS pattern_len
-  FROM grouped g JOIN chosen c ON g.host = c.host AND g.group_id = c.group_id
-  WHERE g.is_ua = 0 AND g.value <> ''
-),
-rules AS (
-  SELECT host, rule, pattern, pattern_len,
-         CASE WHEN rule = 'crawl-delay' THEN NULL
-              ELSE '^' ||
-                regexp_replace(
-                  regexp_replace(
-                    CASE WHEN ends_with(pattern, '$')
-                         THEN substr(pattern, 1, length(pattern) - 1)
-                         ELSE pattern END,
-                    '([.^$+?(){}\[\]\\|])', '\\\1', 'g'),
-                  '\*', '.*', 'g') ||
-                CASE WHEN ends_with(pattern, '$') THEN '$' ELSE '' END
-         END AS regex
-  FROM rules0
-)"""
-
-_SQL_ROBOTS_PARSE = "WITH " + _SQL_ROBOTS_RULES_CTES + """
-SELECT host, rule, pattern, pattern_len, regex FROM rules
-"""
-
-_SQL_ROBOTS_DECISION = "WITH " + _SQL_ROBOTS_RULES_CTES + r""",
-urls AS (
-  SELECT DISTINCT
-    'https://h' || (doc_id % 25)::VARCHAR || '.com' ||
-      CASE doc_id % 4
-        WHEN 0 THEN '/p' || (doc_id % 7)::VARCHAR || '/page'
-        WHEN 1 THEN '/p' || (doc_id % 7)::VARCHAR || '/ok/a'
-        WHEN 2 THEN '/x' || (doc_id % 3)::VARCHAR ||
-                    CASE WHEN doc_id % 2 = 0 THEN 'z' ELSE 'zq' END
-        ELSE '/other/' || doc_id::VARCHAR END AS url,
-    'h' || (doc_id % 25)::VARCHAR || '.com' AS host,
-    CASE doc_id % 4
-      WHEN 0 THEN '/p' || (doc_id % 7)::VARCHAR || '/page'
-      WHEN 1 THEN '/p' || (doc_id % 7)::VARCHAR || '/ok/a'
-      WHEN 2 THEN '/x' || (doc_id % 3)::VARCHAR ||
-                  CASE WHEN doc_id % 2 = 0 THEN 'z' ELSE 'zq' END
-      ELSE '/other/' || doc_id::VARCHAR END AS path
-  FROM documents
-),
-cand AS (
-  SELECT u.url, u.host, u.path, r.rule, r.pattern, r.pattern_len, r.regex,
-         (r.regex IS NOT NULL AND regexp_matches(u.path, r.regex)) AS hit
-  FROM urls u LEFT JOIN (SELECT * FROM rules WHERE rule IN ('allow', 'disallow')) r
-    ON u.host = r.host
-),
-ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY url
-    ORDER BY hit DESC, pattern_len DESC, rule ASC, pattern ASC
-  ) AS rk FROM cand
-)
-SELECT url, host,
-       CASE WHEN hit THEN rule = 'allow' ELSE TRUE END AS allowed,
-       CASE WHEN hit THEN rule END AS matched_rule,
-       CASE WHEN hit THEN pattern END AS matched_pattern
-FROM ranked WHERE rk = 1
-"""
-
-
-def _q_sitemap_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap XML parsing (S11 in SURVEY §2.1): per-host <urlset> bodies
-    synthesized from documents (optional lastmod/changefreq/priority
-    elements), parsed with codegen regexp_extract_all + explode
-    (operators/sitemap.py) — no Python in the hot path."""
-    from webscraper_spark.operators.sitemap import parse_sitemap
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    host = F.concat(F.lit("h"), (F.col("doc_id") % 20).cast("string"), F.lit(".example"))
-    entry = F.concat(
-        F.lit("<url><loc>https://"), host, F.lit("/d"), F.col("doc_id").cast("string"),
-        F.lit("</loc>"),
-        F.when(
-            F.col("doc_id") % 3 != 0,
-            F.concat(
-                F.lit("<lastmod>2026-01-"),
-                F.lpad((F.col("doc_id") % 28 + 1).cast("string"), 2, "0"),
-                F.lit("</lastmod>"),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 5 == 0, F.lit("<changefreq>daily</changefreq>")).otherwise(
-            F.lit("")
-        ),
-        F.when(
-            F.col("doc_id") % 4 != 0,
-            F.concat(
-                F.lit("<priority>0."), (F.col("doc_id") % 10).cast("string"), F.lit("</priority>")
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("</url>"),
-    )
-    xml = (
-        d.select(host.alias("host"), entry.alias("entry"))
-        .groupBy("host")
-        .agg(
-            F.concat(
-                F.lit('<?xml version="1.0"?><urlset>'),
-                F.array_join(F.array_sort(F.collect_list("entry")), ""),
-                F.lit("</urlset>"),
-            ).alias("sitemap_xml")
-        )
-    )
-    return parse_sitemap(xml)
-
-
-_SQL_SITEMAP_PARSE = """
-WITH entries AS (
-  SELECT 'h' || (doc_id % 20)::VARCHAR || '.example' AS host,
-         'https://h' || (doc_id % 20)::VARCHAR || '.example/d' || doc_id::VARCHAR AS loc,
-         CASE WHEN doc_id % 3 <> 0
-              THEN ('2026-01-' || lpad(((doc_id % 28) + 1)::VARCHAR, 2, '0'))::TIMESTAMP
-         END AS lastmod,
-         CASE WHEN doc_id % 5 = 0 THEN 'daily' END AS changefreq,
-         CASE WHEN doc_id % 4 <> 0 THEN ('0.' || (doc_id % 10)::VARCHAR)::DOUBLE END AS priority,
-         '<url><loc>https://h' || (doc_id % 20)::VARCHAR || '.example/d' || doc_id::VARCHAR
-           || '</loc>'
-           || CASE WHEN doc_id % 3 <> 0
-                   THEN '<lastmod>2026-01-' || lpad(((doc_id % 28) + 1)::VARCHAR, 2, '0') || '</lastmod>'
-                   ELSE '' END
-           || CASE WHEN doc_id % 5 = 0 THEN '<changefreq>daily</changefreq>' ELSE '' END
-           || CASE WHEN doc_id % 4 <> 0
-                   THEN '<priority>0.' || (doc_id % 10)::VARCHAR || '</priority>'
-                   ELSE '' END
-           || '</url>' AS entry
-  FROM documents
-)
-SELECT host, loc, lastmod, changefreq, priority,
-       (row_number() OVER (PARTITION BY host ORDER BY entry) - 1)::BIGINT AS entry_pos
-FROM entries
-"""
-
-
-def _q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC source round-trip (S12 in SURVEY §2.1): documents are packed
-    into ISO 28500 WARC blobs (10 files, payloads carry a planted
-    '\\r\\n\\r\\nWARC/1.0' decoy so only Content-Length framing parses
-    them) and read back with sources/warc.py read_warc; the oracle
-    reconstructs the exact expected records from documents directly."""
-    from webscraper_spark.sources.warc import build_warc, read_warc
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select(
-        F.concat(F.lit("https://doc"), F.col("doc_id").cast("string"), F.lit(".example/")).alias(
-            "url"
-        ),
-        F.lit("2026-01-01T00:00:00Z").alias("warc_date"),
-        F.encode(F.concat(F.col("text"), F.lit("\r\n\r\nWARC/1.0 decoy")), "utf-8").alias(
-            "payload"
-        ),
-        (F.col("doc_id") % 10).alias("fid"),
-    )
-    blobs = build_warc(d, file_key=F.col("fid"))
-    recs = read_warc(blobs)
-    return recs.select(
-        "warc_file_id",
-        "rec_pos",
-        "rec_type",
-        "url",
-        "warc_date",
-        F.decode(F.col("payload"), "utf-8").alias("payload_txt"),
-    )
-
-
-_SQL_WARC_ROUNDTRIP = r"""
-SELECT (doc_id % 10)::BIGINT AS warc_file_id,
-       (row_number() OVER (PARTITION BY doc_id % 10
-                           ORDER BY 'https://doc' || doc_id::VARCHAR || '.example/') - 1)::BIGINT
-         AS rec_pos,
-       'response' AS rec_type,
-       'https://doc' || doc_id::VARCHAR || '.example/' AS url,
-       '2026-01-01T00:00:00Z' AS warc_date,
-       text || e'\r\n\r\nWARC/1.0 decoy' AS payload_txt
-FROM documents
-"""
-
-
-def _cdx_url_expr():
-    """Deterministic capture-URL synth exercising every SURT rule: mixed
-    case, a www. label, an explicit port, unsorted query params, a
-    fragment."""
-    host = F.when(
-        F.col("doc_id") % 3 == 0,
-        F.concat(F.lit("www.H"), (F.col("doc_id") % 20).cast("string"), F.lit(".Example.com")),
-    ).otherwise(
-        F.concat(F.lit("sub"), (F.col("doc_id") % 5).cast("string"), F.lit(".example.org"))
-    )
-    port = F.when(F.col("doc_id") % 11 == 0, F.lit(":8080")).otherwise(F.lit(""))
-    path = F.concat(F.lit("/P"), F.col("doc_id").cast("string"))
-    query = F.when(
-        F.col("doc_id") % 2 == 0,
-        F.concat(
-            F.lit("?b="), (F.col("doc_id") % 7).cast("string"),
-            F.lit("&a="), (F.col("doc_id") % 4).cast("string"),
-        ),
-    ).otherwise(F.lit(""))
-    frag = F.when(F.col("doc_id") % 13 == 0, F.lit("#Sec")).otherwise(F.lit(""))
-    return F.concat(F.lit("https://"), host, port, path, query, frag)
-
-
-def _q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDX capture index over WARC (S13 in SURVEY §2.1): documents packed
-    into WARC blobs (build_warc), read back (read_warc), then indexed —
-    SURT urlkey (scheme/fragment strip, www drop, reversed host labels,
-    sorted query params), payload digest/length, archive locator, and the
-    assembled CDXJ line (operators/cdx.py)."""
-    from webscraper_spark.operators.cdx import build_cdx_index
-    from webscraper_spark.sources.warc import build_warc, read_warc
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select(
-        _cdx_url_expr().alias("url"),
-        F.lit("2026-02-03T04:05:06Z").alias("warc_date"),
-        F.encode(F.col("text"), "utf-8").alias("payload"),
-        (F.col("doc_id") % 10).alias("fid"),
-    )
-    blobs = build_warc(d, file_key=F.col("fid"))
-    return build_cdx_index(read_warc(blobs))
-
-
-_SQL_CDX_URL = """
-CASE WHEN doc_id % 3 = 0
-     THEN 'www.H' || (doc_id % 20)::VARCHAR || '.Example.com'
-     ELSE 'sub' || (doc_id % 5)::VARCHAR || '.example.org' END
-|| CASE WHEN doc_id % 11 = 0 THEN ':8080' ELSE '' END
-|| '/P' || doc_id::VARCHAR
-|| CASE WHEN doc_id % 2 = 0
-        THEN '?b=' || (doc_id % 7)::VARCHAR || '&a=' || (doc_id % 4)::VARCHAR
-        ELSE '' END
-|| CASE WHEN doc_id % 13 = 0 THEN '#Sec' ELSE '' END
-"""
-
-_SQL_CDX_INDEX = rf"""
-WITH caps AS (
-  SELECT doc_id, text, (doc_id % 10)::BIGINT AS warc_file_id,
-         'https://' || {_SQL_CDX_URL} AS url
-  FROM documents
-),
-recs AS (
-  SELECT *,
-         (row_number() OVER (PARTITION BY warc_file_id ORDER BY url) - 1)::BIGINT AS rec_pos
-  FROM caps
-),
-surt AS (
-  SELECT *,
-         regexp_replace(regexp_replace(lower(url), '#.*$', ''), '^[a-z][a-z0-9+.-]*://', '') AS rest
-  FROM recs
-),
-parts AS (
-  SELECT *, regexp_extract(rest, '^([^/?]*)', 1) AS hostport,
-         substr(rest, length(regexp_extract(rest, '^([^/?]*)', 1)) + 1) AS tail
-  FROM surt
-),
-keyed AS (
-  SELECT *,
-         array_to_string(list_reverse(string_split(
-           regexp_replace(regexp_extract(hostport, '^([^:]*)', 1), '^www\.', ''), '.')), ',')
-         || regexp_extract(hostport, '(:[0-9]+)$', 1) || ')'
-         || CASE WHEN regexp_extract(tail, '^([^?]*)', 1) = '' THEN '/'
-                 ELSE regexp_extract(tail, '^([^?]*)', 1) END
-         || CASE WHEN regexp_extract(tail, '\?(.*)$', 1) = '' THEN ''
-                 ELSE '?' || array_to_string(list_sort(string_split(
-                        regexp_extract(tail, '\?(.*)$', 1), '&')), '&') END AS urlkey,
-         md5(text) AS digest,
-         octet_length(encode(text))::BIGINT AS length
-  FROM parts
-)
-SELECT urlkey, '20260203040506' AS timestamp, url, digest, length, warc_file_id, rec_pos,
-       urlkey || ' 20260203040506 {{"url": "' || url || '", "digest": "' || digest
-       || '", "length": ' || length::VARCHAR || ', "file": ' || warc_file_id::VARCHAR
-       || ', "pos": ' || rec_pos::VARCHAR || '}}' AS cdxj
-FROM keyed
-"""
-
-
 def _q_corpus_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus coverage report via ROLLUP (A5 in SURVEY §2.4): doc count,
     char mass, and token mass per (source, lang), per source, and grand
@@ -1570,95 +1182,6 @@ SELECT event_type,
        sum(CAST(floor(value * 1000) AS BIGINT))::BIGINT AS value_millis
 FROM events
 GROUP BY event_type, bucket_start
-"""
-
-
-def _q_feed_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RSS/Atom feed parsing (S15 in SURVEY §2.1): per-host feed bodies
-    synthesized from documents — even hosts publish RSS 2.0 (<item>,
-    text <link>, RFC-822 pubDate), odd hosts Atom (<entry>, href link
-    attr, ISO updated) — parsed in one dual-dialect codegen pass
-    (operators/feed.py). Published timestamps stay strings: format
-    policy belongs to the caller (see feed.py docstring)."""
-    from webscraper_spark.operators.feed import parse_feed
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    i = F.col("doc_id")
-    hostn = i % 20
-    host = F.concat(F.lit("h"), hostn.cast("string"), F.lit(".example"))
-    link = F.concat(F.lit("https://"), host, F.lit("/p"), i.cast("string"))
-    dd = F.lpad((i % 28 + 1).cast("string"), 2, "0")
-    rss_entry = F.concat(
-        F.lit("<item><title>T"), i.cast("string"), F.lit("</title><link>"), link,
-        F.lit("</link><guid>g"), i.cast("string"), F.lit("</guid>"),
-        F.when(
-            i % 3 != 0,
-            F.concat(F.lit("<pubDate>Mon, "), dd, F.lit(" Jan 2026 08:00:00 GMT</pubDate>")),
-        ).otherwise(F.lit("")),
-        F.lit("</item>"),
-    )
-    atom_entry = F.concat(
-        F.lit("<entry><title>T"), i.cast("string"),
-        F.lit('</title><link rel="alternate" href="'), link,
-        F.lit('"/><id>tag:'), i.cast("string"), F.lit("</id>"),
-        F.when(
-            i % 3 != 0,
-            F.concat(F.lit("<updated>2026-01-"), dd, F.lit("T08:00:00Z</updated>")),
-        ).otherwise(F.lit("")),
-        F.lit("</entry>"),
-    )
-    entry = F.when(hostn % 2 == 0, rss_entry).otherwise(atom_entry)
-    xml = (
-        d.select(host.alias("host"), entry.alias("entry"))
-        .groupBy("host")
-        .agg(
-            F.concat(
-                F.lit('<?xml version="1.0"?><feed>'),
-                F.array_join(F.array_sort(F.collect_list("entry")), ""),
-                F.lit("</feed>"),
-            ).alias("feed_xml")
-        )
-    )
-    return parse_feed(xml)
-
-
-_SQL_FEED_PARSE = """
-WITH e AS (
-  SELECT doc_id,
-         'h' || (doc_id % 20)::VARCHAR || '.example' AS host,
-         (doc_id % 20) % 2 = 0 AS is_rss,
-         'https://h' || (doc_id % 20)::VARCHAR || '.example/p' || doc_id::VARCHAR AS link,
-         lpad(((doc_id % 28) + 1)::VARCHAR, 2, '0') AS dd
-  FROM documents
-),
-built AS (
-  SELECT *,
-    CASE WHEN is_rss THEN
-      '<item><title>T' || doc_id::VARCHAR || '</title><link>' || link
-      || '</link><guid>g' || doc_id::VARCHAR || '</guid>'
-      || CASE WHEN doc_id % 3 <> 0
-              THEN '<pubDate>Mon, ' || dd || ' Jan 2026 08:00:00 GMT</pubDate>' ELSE '' END
-      || '</item>'
-    ELSE
-      '<entry><title>T' || doc_id::VARCHAR || '</title><link rel="alternate" href="' || link
-      || '"/><id>tag:' || doc_id::VARCHAR || '</id>'
-      || CASE WHEN doc_id % 3 <> 0
-              THEN '<updated>2026-01-' || dd || 'T08:00:00Z</updated>' ELSE '' END
-      || '</entry>'
-    END AS entry
-  FROM e
-)
-SELECT host,
-       CASE WHEN is_rss THEN 'rss' ELSE 'atom' END AS dialect,
-       link,
-       'T' || doc_id::VARCHAR AS title,
-       CASE WHEN is_rss THEN 'g' || doc_id::VARCHAR ELSE 'tag:' || doc_id::VARCHAR END AS guid,
-       CASE WHEN doc_id % 3 <> 0 THEN
-            CASE WHEN is_rss THEN 'Mon, ' || dd || ' Jan 2026 08:00:00 GMT'
-                 ELSE '2026-01-' || dd || 'T08:00:00Z' END
-       END AS published,
-       (row_number() OVER (PARTITION BY host ORDER BY entry) - 1)::BIGINT AS entry_pos
-FROM built
 """
 
 
@@ -1903,64 +1426,6 @@ FROM r GROUP BY domain
 """
 
 
-def _q_sitemap_refetch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemaps-protocol recrawl classification (operators/sitemap.py
-    sitemap_refetch, from the publisher's lastmod/changefreq hints):
-    entries planted with every state — lastmod after the fetch (stale),
-    lastmod before it (fresh), elapsed daily changefreq (due),
-    yearly/absent/'never' changefreq (fresh), 'always' (due), and a
-    never-crawled entry (uncrawled). Fixed as_of instant, all-integer
-    millis comparisons."""
-    from webscraper_spark.operators.sitemap import sitemap_refetch
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    i = F.col("doc_id").cast("long")
-    m = i % 8
-    host = F.concat(F.lit("sm"), (i % 4).cast("string"), F.lit(".ex"))
-    loc = F.concat(F.lit("https://"), host, F.lit("/p/"), i.cast("string"))
-    lastmod = (
-        F.when(m == 0, F.lit("2026-03-10 00:00:00"))
-        .when(m == 1, F.lit("2026-03-01 00:00:00"))
-        .cast("timestamp")
-    )
-    changefreq = (
-        F.when(m == 2, F.lit("daily"))
-        .when(m == 3, F.lit("yearly"))
-        .when(m == 6, F.lit("always"))
-        .when(m == 7, F.lit("never"))
-    )
-    priority = F.when(m == 0, F.lit(0.9)).when(m == 3, F.lit(0.2))
-    entries = d.select(
-        host.alias("host"), loc.alias("loc"), lastmod.alias("lastmod"),
-        changefreq.alias("changefreq"), priority.alias("priority"),
-    )
-    crawled = d.filter(m != 5).select(
-        loc.alias("url"),
-        F.lit("2026-03-05 00:00:00").cast("timestamp").alias("fetched_ts"),
-    )
-    return sitemap_refetch(entries, crawled, as_of="2026-03-20 00:00:00")
-
-
-_SQL_SITEMAP_REFETCH = r"""
-WITH e AS (
-  SELECT doc_id AS i, doc_id % 8 AS m,
-    'sm' || (doc_id % 4)::VARCHAR || '.ex' AS host,
-    'https://sm' || (doc_id % 4)::VARCHAR || '.ex/p/' || doc_id::VARCHAR AS loc
-  FROM documents
-)
-SELECT loc, host,
-  CASE WHEN m = 5 THEN 'uncrawled'
-       WHEN m = 0 THEN 'stale'
-       WHEN m IN (2, 6) THEN 'due'
-       ELSE 'fresh' END AS state,
-  CASE m WHEN 0 THEN TIMESTAMP '2026-03-10 00:00:00'
-         WHEN 1 THEN TIMESTAMP '2026-03-01 00:00:00' END AS lastmod,
-  CASE WHEN m <> 5 THEN TIMESTAMP '2026-03-05 00:00:00' END AS fetched_ts,
-  CASE m WHEN 0 THEN 0.9 WHEN 3 THEN 0.2 ELSE 0.5 END AS priority
-FROM e
-"""
-
-
 def _q_stream_backoff_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured-Streaming AIMD backoff driven end-to-end through a real
     stream (streaming/stream.py stream_adaptive_backoff,
@@ -2036,54 +1501,6 @@ FROM st
 """
 
 
-def _q_robots_sitemaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap: directive harvest from robots.txt (sitemaps.org
-    extension; RFC 9309 §2.2.4 'other records'): 25 hosts whose files
-    carry — by host index mod 4 — one plain directive, two directives in
-    mixed case (one pointing at a CDN host), a commented-out directive
-    (must NOT extract), or none. Flat codegen line harvest
-    (operators/robots_parse.py robots_sitemaps), feeding the sitemap
-    source (S11) and coverage audit (J5)."""
-    from webscraper_spark.operators.robots_parse import robots_sitemaps
-
-    d = spark.read.parquet(_t(sf_dir, "documents")).select("doc_id")
-    n = F.col("doc_id") % 25
-    ns = n.cast("string")
-    m = n % 4
-    host = F.concat(F.lit("h"), ns, F.lit(".com"))
-    txt = F.concat(
-        F.lit("User-agent: *\nDisallow: /tmp\n"),
-        F.when(m == 0, F.concat(F.lit("Sitemap: https://h"), ns, F.lit(".com/sitemap.xml\n")))
-        .when(m == 1, F.concat(
-            F.lit("sitemap: https://h"), ns, F.lit(".com/sm/a.xml\n"),
-            F.lit("SITEMAP: https://cdn.ex/h"), ns, F.lit(".xml\n"),
-        ))
-        .when(m == 2, F.concat(F.lit("# Sitemap: https://h"), ns, F.lit(".com/commented.xml\n")))
-        .otherwise(F.lit("")),
-    )
-    files = d.select(host.alias("host"), txt.alias("robots_txt")).distinct()
-    return robots_sitemaps(files)
-
-
-_SQL_ROBOTS_SITEMAPS = r"""
-WITH f AS (
-  SELECT DISTINCT 'h' || (doc_id % 25)::VARCHAR || '.com' AS host,
-    'User-agent: *
-Disallow: /tmp
-' || CASE (doc_id % 25) % 4
-      WHEN 0 THEN 'Sitemap: https://h' || (doc_id % 25)::VARCHAR || '.com/sitemap.xml' || chr(10)
-      WHEN 1 THEN 'sitemap: https://h' || (doc_id % 25)::VARCHAR || '.com/sm/a.xml' || chr(10)
-               || 'SITEMAP: https://cdn.ex/h' || (doc_id % 25)::VARCHAR || '.xml' || chr(10)
-      WHEN 2 THEN '# Sitemap: https://h' || (doc_id % 25)::VARCHAR || '.com/commented.xml' || chr(10)
-      ELSE '' END AS robots_txt
-  FROM documents
-)
-SELECT host, unnest(regexp_extract_all(robots_txt,
-  '(?im)^[ \t]*sitemap[ \t]*:[ \t]*(\S+)', 1)) AS sitemap_url
-FROM f
-"""
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Query registry: name -> (spark, sf_dir) -> DataFrame.
 
@@ -2091,15 +1508,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     (tests/test_registry.py checks this).
     """
     return {
-        "robots_sitemaps": _q_robots_sitemaps,
         "stream_backoff_replay": _q_stream_backoff_replay,
-        "sitemap_refetch": _q_sitemap_refetch,
-        "cdx_index": _q_cdx_index,
         "corpus_rollup": _q_corpus_rollup,
         "url_filter": _q_url_filter,
         "mime_route": _q_mime_route,
         "event_window_rates": _q_event_window_rates,
-        "feed_parse": _q_feed_parse,
         "json_props_extract": _q_json_props,
         "lang_pivot": _q_lang_pivot,
         "adaptive_backoff": _q_adaptive_backoff,
@@ -2130,25 +1543,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sessionize_events": _q_sessionize,
         "wave_metrics_agg": _q_wave_metrics,
         "running_total_window": _q_running_sum,
-        "robots_parse": _q_robots_parse,
-        "robots_decision": _q_robots_decision,
-        "sitemap_parse": _q_sitemap_parse,
-        "warc_roundtrip": _q_warc_roundtrip,
     }
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB oracle SQL per query, keyed and ordered as queries()."""
     return {
-        "robots_sitemaps": _SQL_ROBOTS_SITEMAPS,
         "stream_backoff_replay": _SQL_STREAM_BACKOFF,
-        "sitemap_refetch": _SQL_SITEMAP_REFETCH,
-        "cdx_index": _SQL_CDX_INDEX,
         "corpus_rollup": _SQL_CORPUS_ROLLUP,
         "url_filter": _sql_url_filter(),
         "mime_route": _sql_mime_route(),
         "event_window_rates": _SQL_EVENT_WINDOW_RATES,
-        "feed_parse": _SQL_FEED_PARSE,
         "json_props_extract": _SQL_JSON_PROPS,
         "lang_pivot": _sql_lang_pivot(),
         "adaptive_backoff": _SQL_ADAPTIVE_BACKOFF,
@@ -2179,8 +1584,4 @@ def oracle_sql() -> dict[str, str]:
         "sessionize_events": _SQL_SESSIONIZE,
         "wave_metrics_agg": _SQL_WAVE_METRICS,
         "running_total_window": _SQL_RUNNING_SUM,
-        "robots_parse": _SQL_ROBOTS_PARSE,
-        "robots_decision": _SQL_ROBOTS_DECISION,
-        "sitemap_parse": _SQL_SITEMAP_PARSE,
-        "warc_roundtrip": _SQL_WARC_ROUNDTRIP,
     }

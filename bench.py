@@ -600,27 +600,21 @@ def main() -> None:
     bench_queries = [
         "tpch_q1_pricing_summary", "eligibility_filter", "anti_join_seen",
         "frontier_rank_per_host", "url_canonicalize", "cross_join_pricing_matrix",
-        "sessionize_events",
-        "robots_decision", "sitemap_parse", "warc_roundtrip",
-        "cdx_index", "corpus_rollup", "url_filter", "mime_route",
-        "event_window_rates", "feed_parse", "json_props_extract",
-        "lang_pivot", "adaptive_backoff", "coverage_audit",
-        "registered_domain", "robots_sitemaps", "sitemap_refetch",
+        "sessionize_events", "corpus_rollup", "url_filter", "mime_route",
+        "event_window_rates", "json_props_extract", "lang_pivot",
+        "adaptive_backoff", "coverage_audit", "registered_domain",
         # stream_backoff_replay deliberately absent: it measures stream
         # machinery setup (temp write + query start/stop), not operator
         # throughput; adaptive_backoff is the benchmarked batch form.
     ]
     # Min over reps per query: single-shot numbers on this shared host swing
     # 2-3x with neighbour load (see scaling notes), and the first run of a
-    # query also pays its codegen compile. The pandas-UDF-bound family gets
-    # min-of-3 (host noise hid a 3x regression behind min-of-2 once); all
-    # reps land in the JSON so regressions can't hide behind the min.
-    udf_bound = {"warc_roundtrip", "cdx_index"}
+    # query also pays its codegen compile. All reps land in the JSON so
+    # regressions can't hide behind the min.
     base_reps = int(os.environ.get("BENCH_QUERY_REPS", "2"))
     for name in bench_queries:
-        reps_n = max(base_reps, 3) if name in udf_bound else base_reps
         times = []
-        for _ in range(reps_n):
+        for _ in range(base_reps):
             t0 = time.time()
             _noop_write(qfns[name](spark, sf_dir))
             times.append(round(time.time() - t0, 3))

@@ -248,6 +248,27 @@ def test_duplicate_host_policy_rows_rejected(spark):
     assert [(r.host, r.max_pages, r.delay_ms) for r in policy.collect()] == [("a.ex", 2, 100)]
 
 
+def test_apply_robots_matches_prefix_oracle(spark, params):
+    """apply_robots keeps exactly the urls whose path starts with none of
+    their host's disallow prefixes, computed in plain Python from
+    seq_oracle.path_of; a host with no robots row keeps everything."""
+    from webscraper_spark.operators.robots import apply_robots
+    from webscraper_spark.oracle.seq_oracle import path_of
+    from webscraper_spark.sources.synth import gen_robots
+
+    robots = gen_robots(spark, params)
+    rules = {r.host: list(r.disallow_prefixes) for r in robots.limit(40).collect()}
+    unlisted = "norobots.example"
+    rows = [(f"https://{h}{p}", h) for h in [*rules, unlisted]
+            for p in ("/ad/private/1", "/ad/public/1", "/x")]
+    want = {u for u, h in rows if not any(path_of(u).startswith(p) for p in rules.get(h, []))}
+    cand = spark.createDataFrame(rows, "url string, host string")
+    got = {r.url for r in apply_robots(cand, robots).collect()}
+    assert got == want
+    assert f"https://{unlisted}/ad/private/1" in got
+    assert len(want) < len(rows)  # the corpus rules block something
+
+
 def test_bucketed_corpus_join_identical(spark, corpus_dir, inputs, oracle_result, tmp_path_factory, monkeypatch):
     """The bucketed-corpus fetch path (pages as a bucketed catalog table,
     BUCKETED_BROADCAST_BATCH_MAX=0 so EVERY wave takes the bucket-aligned

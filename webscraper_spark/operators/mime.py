@@ -2,13 +2,12 @@ r"""MIME sniffing from payload magic bytes (binary columns, codegen).
 
 A fetched-payload corpus routes each record by its real content type,
 not the server's Content-Type header (which lies often enough that the
-WHATWG standardized sniffing): images to the `multimodal` lane, HTML
-to extraction, PDFs/archives to their own lanes, junk to quarantine.
+WHATWG standardized sniffing): HTML to extraction, images, PDFs and
+archives to their own lanes, junk to quarantine.
 The reference only ever sees
 browser-rendered HTML (`/root/reference/app/controllers/
 cars_controller.rb:131` — Capybara `visit`), so sniffing is engine
-scope: S14 in SURVEY §2.1, the router between the WARC source (S12)
-and the per-modality operators.
+scope: S14 in SURVEY §2.1.
 
 Signature subset (the unambiguous leading-bytes core of the public
 WHATWG/`file(1)` tables):

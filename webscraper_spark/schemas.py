@@ -1,19 +1,12 @@
-"""Explicit StructTypes for every engine table.
+"""StructType of the pages input table; a stream read needs it explicitly.
 
-The reference keeps everything as strings (reference db/schema.rb:24-69 — 45
-string columns); we keep scraped raw fields as strings for fidelity and add
-typed derived columns. Input-table shape is mandated by BASELINE.json
-input_hint: pages(url string, warc_ts timestamp, html binary, text string,
-lang string).
+Input-table shape is mandated by BASELINE.json input_hint: pages(url string,
+warc_ts timestamp, html binary, text string, lang string).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# ---------------------------------------------------------------------------
-# Corpus / crawl tables
-# ---------------------------------------------------------------------------
 
 PAGES = T.StructType(
     [
@@ -22,117 +15,5 @@ PAGES = T.StructType(
         T.StructField("html", T.BinaryType(), True),
         T.StructField("text", T.StringType(), True),
         T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-SEEDS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("priority", T.DoubleType(), False),
-    ]
-)
-
-ROBOTS = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("disallow_prefixes", T.ArrayType(T.StringType()), False),
-        T.StructField("crawl_delay_ms", T.LongType(), False),
-    ]
-)
-
-POLITENESS = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("max_pages_per_wave", T.LongType(), False),
-        T.StructField("min_delay_ms", T.LongType(), False),
-    ]
-)
-
-FRONTIER = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("disc_wave", T.IntegerType(), False),
-        T.StructField("disc_pos", T.LongType(), False),
-    ]
-)
-
-SEEN = T.StructType(
-    [
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("wave", T.IntegerType(), False),
-    ]
-)
-
-CRAWL_ORDER = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("wave", T.IntegerType(), False),
-        T.StructField("rank", T.IntegerType(), False),
-        T.StructField("sched_ms", T.LongType(), False),
-    ]
-)
-
-CHECKPOINT = T.StructType(
-    [
-        T.StructField("wave", T.IntegerType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("urls_scheduled", T.LongType(), False),
-        T.StructField("urls_ok", T.LongType(), False),
-        T.StructField("urls_err", T.LongType(), False),
-        T.StructField("bytes_fetched", T.LongType(), False),
-        T.StructField("outlinks", T.LongType(), False),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Extraction output — the 47-field record of the search pipeline
-# (reference cars_controller.rb:40-89) as a struct; images/features are
-# arrays (reference flattens them to delimited strings / positional columns).
-# ---------------------------------------------------------------------------
-
-EXTRACTED_FIELDS = [
-    ("title", T.StringType()),
-    ("price", T.StringType()),
-    ("category", T.StringType()),
-    ("mileage", T.StringType()),
-    ("power", T.StringType()),
-    ("fuel", T.StringType()),
-    ("first_registration", T.StringType()),
-    ("transmission", T.StringType()),
-    ("damage_condition", T.StringType()),
-    ("country_version", T.StringType()),
-    ("consumption", T.StringType()),
-    ("emission", T.StringType()),
-    ("cubic_capacity", T.StringType()),
-    ("num_owners", T.StringType()),
-    ("num_seats", T.StringType()),
-    ("door_count", T.StringType()),
-    ("emission_class", T.StringType()),
-    ("emission_sticker", T.StringType()),
-    ("hu", T.StringType()),
-    ("climatisation", T.StringType()),
-    ("color", T.StringType()),
-    ("manufacturer_color_name", T.StringType()),
-    ("interior", T.StringType()),
-    ("dealer_name", T.StringType()),
-    ("dealer_postal_code", T.StringType()),
-    ("dealer_city", T.StringType()),
-    ("dealer_address", T.StringType()),
-    ("dealer_phone", T.StringType()),
-    ("publishing_date", T.StringType()),
-]
-
-EXTRACTED = T.StructType(
-    [T.StructField(n, t, True) for n, t in EXTRACTED_FIELDS]
-    + [
-        T.StructField("features", T.ArrayType(T.StringType()), True),
-        T.StructField("images", T.ArrayType(T.StringType()), True),
-        T.StructField("attrs", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("status", T.StringType(), False),
     ]
 )

@@ -398,30 +398,6 @@ def gen_robots(spark: SparkSession, p: CorpusParams) -> DataFrame:
     return hosts.select(F.col("host"), disallow.alias("disallow_prefixes"), delay.cast("long").alias("crawl_delay_ms"))
 
 
-def gen_robots_txt(spark: SparkSession, p: CorpusParams) -> DataFrame:
-    """Raw robots.txt rendition of gen_robots: (host, robots_txt).
-
-    The text-ingestion path: operators/robots_parse.robots_rules_from_txt
-    parses these bodies back into exactly gen_robots' rule-table shape
-    (round-trip pytest), so the crawl pipeline can start from raw
-    Common-Crawl-style robots bodies instead of pre-parsed tables.
-    Crawl-delay is rendered in RFC seconds (decimal) from the ms column."""
-    r = gen_robots(spark, p)
-    dis_lines = F.aggregate(
-        F.col("disallow_prefixes"),
-        F.lit(""),
-        lambda acc, x: F.concat(acc, F.lit("Disallow: "), x, F.lit("\n")),
-    )
-    txt = F.concat(
-        F.lit("# synthetic corpus robots\nUser-agent: *\n"),
-        dis_lines,
-        F.lit("Crawl-delay: "),
-        (F.col("crawl_delay_ms") / 1000.0).cast("string"),
-        F.lit("\n"),
-    )
-    return r.select("host", txt.alias("robots_txt"))
-
-
 def gen_politeness(spark: SparkSession, p: CorpusParams) -> DataFrame:
     hosts = spark.range(p.n_hosts).select(
         F.col("id").cast("int").alias("host_id"),
