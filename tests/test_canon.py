@@ -69,23 +69,3 @@ def test_arrow_engine_matches_native(spark, corpus_dir):
         if ((None, None) if r.raw is None else _canon_host_py(r.raw)) != (r.n_url, r.n_host)
     ]
     assert not bad, bad[:5]
-
-
-# --- registered-domain extraction (functions/canon.py, SURVEY 2.10 L49) ---
-
-def test_registered_domain_psl_rules(spark):
-    from webscraper_spark.functions.canon import registered_domain
-    from pyspark.sql import functions as F
-
-    cases = [
-        ("www.shop.example.co.uk", "example.co.uk"),   # two-level suffix
-        ("a.b.example.com", "example.com"),
-        ("example.com", "example.com"),
-        ("s1.news.example.com.au", "example.com.au"),
-        ("CO.UK", "CO.UK"),                            # bare suffix: no extra label
-        ("localhost", "localhost"),                    # single label passthrough
-        ("example.de", "example.de"),
-    ]
-    df = spark.createDataFrame([(h,) for h, _ in cases], "host string")
-    got = [r["d"] for r in df.select(registered_domain(F.col("host")).alias("d")).collect()]
-    assert got == [want for _, want in cases]

@@ -1,5 +1,6 @@
 """The engine reads only the environment variables listed here. Plan and
-session choices are code or CrawlConfig fields, never environment switches."""
+session choices are code or CrawlConfig fields, never environment switches,
+and the session sets only confs that differ from Spark's defaults."""
 
 from __future__ import annotations
 
@@ -55,3 +56,21 @@ def test_scan_finds_every_read_form():
         "e = {}.get('E')\n"
     )
     assert [k for _, k in _env_keys(ast.parse(src))] == ["A", "B", "C", None]
+
+
+def test_session_restates_no_spark_default(spark):
+    """get_spark sets no spark.sql conf to the value Spark gives it anyway,
+    leaves spark.default.parallelism to local[N], and turns the console
+    progress bar off: its carriage-return output garbles any log that
+    takes both stdout and stderr."""
+    conf = dict(spark.sparkContext.getConf().getAll())
+    assert conf["spark.ui.showConsoleProgress"] == "false"
+    assert "spark.default.parallelism" not in conf
+    defaults = spark._jvm.org.apache.spark.sql.internal.SQLConf()
+    restated = {
+        k: v
+        for k, v in conf.items()
+        # the time zone's default is the host's zone; UTC is pinned on every host
+        if k.startswith("spark.sql.") and k != "spark.sql.session.timeZone" and defaults.getConfString(k) == v
+    }
+    assert not restated, restated

@@ -121,3 +121,18 @@ def test_null_and_fieldless_html(spark):
     scalars = [n for n in names if n not in arrays + ["x_attr_map", "x_is_listing"]]
     assert {n: blank[n] for n in scalars} == dict.fromkeys(scalars)
     assert blank.x_status == "err"
+
+
+def test_extraction_is_one_arrow_udf_in_one_projection(spark):
+    # one Python evaluation per row, its struct fields unpacked after the
+    # input columns, then the derived status
+    from webscraper_spark.functions.extract_pandas import X_STRUCT
+
+    df = spark.createDataFrame(
+        [(i, f"https://h.ex/{i}", bytearray(b"<h1>t</h1>")) for i in range(4)],
+        "doc_id long, url string, html binary",
+    )
+    out = with_extraction_arrow(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert out.columns == df.columns + X_STRUCT.fieldNames() + ["x_status"]

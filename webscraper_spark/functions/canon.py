@@ -85,42 +85,3 @@ def _canon_host_py(u: str) -> tuple[str, str]:
     q = m.group(4) or ""
     q = "?" + "&".join(sorted(q[1:].split("&"))) if len(q) > 1 else ""
     return f"{scheme}://{auth}{path}{q}", host
-
-
-# ---------------------------------------------------------------------------
-# Registered-domain extraction (public-suffix-style)
-# ---------------------------------------------------------------------------
-
-# Stand-in for the Mozilla Public Suffix List (the real list ships ~9k
-# rules and updates weekly; the operator only needs the mechanism — at
-# deployment the set is swapped for the full PSL, same plan shape). Keys
-# are TWO-LABEL public suffixes; every one-label TLD is implicitly a
-# public suffix.
-TWO_LEVEL_SUFFIXES = (
-    "co.uk", "org.uk", "ac.uk", "gov.uk",
-    "com.au", "net.au", "org.au",
-    "co.jp", "ne.jp", "or.jp",
-    "com.br", "com.cn", "com.mx", "co.in", "co.nz", "co.za",
-)
-
-
-def registered_domain(host: Column) -> Column:
-    """The registrable domain of a hostname: the public suffix plus one
-    label ('www.shop.example.co.uk' -> 'example.co.uk',
-    'a.b.example.com' -> 'example.com').
-
-    Politeness, budgets, and spam scoring must key on the REGISTRABLE
-    domain, not the hostname — one site fans out over countless
-    subdomains (s1.example.com, s2.example.com...), and host-keyed
-    politeness would hammer the one origin behind them with
-    per-subdomain budgets. Pure codegen: grab the last two / three
-    labels with anchored regexes, pick three when the last two are a
-    two-level public suffix. Hosts with fewer labels than the rule
-    needs (bare TLDs, 'localhost') pass through unchanged.
-    """
-    last2 = F.regexp_extract(host, r"([^.]+\.[^.]+)$", 1)
-    last3 = F.regexp_extract(host, r"([^.]+\.[^.]+\.[^.]+)$", 1)
-    is_two_level = F.lower(last2).isin(*TWO_LEVEL_SUFFIXES)
-    return F.when(is_two_level & (last3 != ""), last3).otherwise(
-        F.when(last2 != "", last2).otherwise(host)
-    )

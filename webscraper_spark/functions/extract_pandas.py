@@ -158,10 +158,10 @@ def extract_all_udf(html_s: pd.Series) -> pd.DataFrame:
     return out
 
 
-def with_extraction_arrow(df: DataFrame, html_col: str = "html") -> DataFrame:
+def with_extraction_arrow(df: DataFrame) -> DataFrame:
     """Append every extracted `x_*` column plus `x_status` (listing / ok /
     err). Input needs `html` (binary); one Python evaluation per row."""
-    out = df.withColumn("_x", extract_all_udf(F.col(html_col).cast("string")))
+    out = df.withColumn("_x", extract_all_udf(F.col("html").cast("string")))
     x = F.col("_x")
     status: Column = (
         F.when(x["x_is_listing"], F.lit("listing"))

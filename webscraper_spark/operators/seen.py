@@ -7,8 +7,8 @@ seen set is the union of every completed wave's fetched urls, and a wave's
 candidates are the frontier rows whose url is not in it.
 
 Catalyst's runtime bloom filter (spark.sql.optimizer.runtime.bloomFilter,
-enabled in session.py) already prunes the probe side of this join when the
-seen side is large. An explicit per-bucket bloom in front of the exact join
+on by default) already prunes the probe side of this join when the seen
+side is large. An explicit per-bucket bloom in front of the exact join
 pays off only once the seen side can no longer be broadcast or co-located;
 on the crawl benchmark it was slower than the plain join at every scale up
 to sf0.1 (17k to 171k URLs).

@@ -19,7 +19,7 @@ job"), mirroring the reference's page-batch loop
        in a stage sized to the batch: max(slots, ceil(rows / rows_per_task))
        partitions, not one task per corpus scan split
     6. new frontier = outlinks canonicalized, deduped, minus seen  (S3-S5)
-    7. checkpoint: frontier/seen-delta/order/metrics parquet + manifest
+    7. checkpoint: fetched + frontier parquet + manifest
        -> any wave is resumable (ST3/ST5)
 
 Every wave materializes its state to parquet: that is simultaneously the
@@ -44,7 +44,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from webscraper_spark.functions.canon import canonicalize_url, url_hash, url_host
+from webscraper_spark.functions.canon import canonicalize_url, url_host
 from webscraper_spark.functions.extract import extracted_text, listing_text
 from webscraper_spark.functions.extract_pandas import with_extraction_arrow
 from webscraper_spark.operators.robots import resolve_host_policy
@@ -255,9 +255,10 @@ def run_crawl(
     resume: bool = False,
 ) -> dict[str, str]:
     """Run the crawl to frontier exhaustion (or max_waves). Returns paths of
-    the accumulated order/seen/results/metrics tables. The crawl sets no
-    session conf, so the caller's session is unchanged on return, also
-    when a wave raises."""
+    the accumulated order table, the seen set (the same directory: its
+    `(url, wave)` columns) and the results glob. The crawl sets no session
+    conf, so the caller's session is unchanged on return, also when a wave
+    raises."""
     cfg = config or CrawlConfig()
     os.makedirs(ckpt_dir, exist_ok=True)
 
@@ -272,14 +273,12 @@ def run_crawl(
         frontier = spark.read.parquet(os.path.join(_wave_dir(ckpt_dir, max(completed)), "frontier"))
         # frontier row count for free from the checkpoint's parquet footers
         n_frontier = _parquet_rows(os.path.join(_wave_dir(ckpt_dir, max(completed)), "frontier"))
-        seen = spark.read.parquet(*fetched_paths(ckpt_dir, completed)).select(
-            url_hash(F.col("url")).alias("url_hash"), "url", F.col("wave").cast("int").alias("wave")
-        )
+        seen = spark.read.parquet(*fetched_paths(ckpt_dir, completed)).select("url")
     else:
         start_wave = 0
         frontier = seeds_to_frontier(seeds)
         n_frontier = frontier.count()  # seed-table-sized job, milliseconds
-        seen = spark.createDataFrame([], "url_hash long, url string, wave int")
+        seen = spark.createDataFrame([], "url string")
 
     # robots rules + budgets + delays of every known host, resolved ONCE per
     # crawl into a driver-local table; its '*' defaults become literals.
@@ -401,14 +400,12 @@ def run_crawl(
             fetched = spark.read.parquet(os.path.join(wdir, "fetched"))
             tw = _tick(f"w{wave} fetched-footers+reread", tw)
 
-            # 6. outlinks -> next frontier. seen/order/results/metrics are all
+            # 6. outlinks -> next frontier. seen/order/results are all
             # projections of the materialized `fetched` — no extra per-wave
-            # writes (finalized ONCE after the loop; at 10^10 scale these are
-            # metadata-only views over the wave files).
+            # writes (order is finalized ONCE after the loop; at 10^10 scale
+            # these are metadata-only views over the wave files).
             new_cand = expand_outlinks(fetched, wave)
-            seen_delta = fetched.select(
-                url_hash(F.col("url")).alias("url_hash"), "url", F.col("wave").cast("int").alias("wave")
-            )
+            seen_delta = fetched.select("url")
 
             # No seen anti-join here: already-fetched urls are eliminated by
             # the next wave's anti-join anyway, and filtering now would
@@ -443,53 +440,24 @@ def _finalize(spark: SparkSession, ckpt_dir: str, completed: list[int]) -> dict[
     (measured: the copy was ~50% of total wall at sf2.5). At cluster scale
     this is the Iceberg metadata-only view over the wave partitions; the
     glob is its sandbox equivalent. The wave files carry a superset of
-    RESULT_COLS; parquet is columnar, so unread extras cost nothing."""
+    RESULT_COLS; parquet is columnar, so unread extras cost nothing.
+
+    `order` is the one table written. `seen` names the same directory: the
+    seen set is the order table's `(url, wave)` columns."""
+    order = os.path.join(ckpt_dir, "order")
     paths = {
         "ckpt_dir": ckpt_dir,
         "waves": json.dumps(completed),
-        "order": os.path.join(ckpt_dir, "order"),
+        "order": order,
         "results": os.path.join(ckpt_dir, "wave=*", "fetched"),
-        "seen": os.path.join(ckpt_dir, "seen"),
-        "metrics": os.path.join(ckpt_dir, "metrics"),
+        "seen": order,
     }
     if not completed:
         return paths
-    # three small projections re-scan the wave files; a persist() here is
-    # a trap (columnar-cache build of the array columns cost 410s of GC
-    # at sf0.4 — parquet re-reads are far cheaper than caching fat rows).
-    # The writes are independent jobs over disjoint output paths —
-    # submitted from separate threads so they share the executor pool
-    # concurrently instead of serializing scan+write barriers.
-    from concurrent.futures import ThreadPoolExecutor
-
-    all_fetched = spark.read.parquet(*fetched_paths(ckpt_dir, completed))
-
-    def _w_order() -> None:
-        all_fetched.select(
-            "url", "host", "wave", F.col("rank").cast("int").alias("rank"), "sched_ms"
-        ).write.mode("overwrite").parquet(paths["order"])
-
-    def _w_seen() -> None:
-        all_fetched.select(
-            url_hash(F.col("url")).alias("url_hash"), "url", F.col("wave").cast("int").alias("wave")
-        ).write.mode("overwrite").parquet(paths["seen"])
-
-    def _w_metrics() -> None:
-        (
-            all_fetched.groupBy("wave", "host")
-            .agg(
-                F.count("*").alias("urls_scheduled"),
-                F.sum(F.when(F.col("x_status") == "ok", 1).otherwise(0)).alias("urls_ok"),
-                F.sum(F.when(F.col("x_status") == "err", 1).otherwise(0)).alias("urls_err"),
-                F.sum("fetch_bytes").alias("bytes_fetched"),
-                F.sum(F.coalesce(F.size("x_outlinks"), F.lit(0)).cast("long")).alias("outlinks"),
-            )
-            .write.mode("overwrite")
-            .parquet(paths["metrics"])
-        )
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [pool.submit(f) for f in (_w_order, _w_seen, _w_metrics)]
-        for fut in futures:
-            fut.result()
+    # a persist() of the wave files here is a trap (columnar-cache build of
+    # the array columns cost 410s of GC at sf0.4 — a parquet re-scan is far
+    # cheaper than caching fat rows).
+    spark.read.parquet(*fetched_paths(ckpt_dir, completed)).select(
+        "url", "host", "wave", F.col("rank").cast("int").alias("rank"), "sched_ms"
+    ).write.mode("overwrite").parquet(order)
     return paths

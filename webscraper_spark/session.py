@@ -1,9 +1,12 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory.
 
-Tuned for the sandbox (single JVM, local[N]) but every conf here is the one
-you'd set on a 1000-executor cluster too: AQE with skew-join handling,
-runtime bloom-filter joins for large anti-joins, Arrow for every
-Python-boundary crossing, UTC session time zone (oracle comparisons).
+It sets only confs whose value differs from pyspark's own on local[N]:
+shuffle partitions sized to the cores, Arrow for every Python-boundary
+crossing with 1024-row batches, UTC session time zone (oracle
+comparisons), a driver heap that fits the machine, no UI or console
+progress bar, and the join-strategy choices below. AQE (with partition
+coalescing and skew-join splitting), the runtime bloom filter and
+spark.default.parallelism = N are Spark's defaults and are not restated.
 """
 
 from __future__ import annotations
@@ -50,13 +53,6 @@ def get_spark(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(cores))
-        # AQE: runtime re-planning, partition coalescing, skew-join splitting.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Runtime bloom-filter pushdown for big joins (the J1 anti-join path).
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # Arrow everywhere Python touches data.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 1024-row Arrow batches: at ~3KB/page a batch is ~3MB — resident in
@@ -73,6 +69,9 @@ def get_spark(
         # machine has to spare.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _driver_memory())
         .config("spark.ui.enabled", "false")
+        # The progress bar's carriage-return output lands in front of log
+        # lines whenever stdout and stderr share a file.
+        .config("spark.ui.showConsoleProgress", "false")
         # Broadcast only genuinely small sides: large broadcast builds are
         # single-threaded on the driver and scale with data — the seen-set
         # anti-joins must shuffle (parallel) instead once they grow.
