@@ -248,6 +248,61 @@ def test_duplicate_host_policy_rows_rejected(spark):
     assert [(r.host, r.max_pages, r.delay_ms) for r in policy.collect()] == [("a.ex", 2, 100)]
 
 
+def test_policy_rows_follow_the_documented_rules(spark):
+    """resolve_budgets' docstring, row by row: delay = max(politeness delay
+    [host override else '*'], robots crawl_delay); budget = host override
+    else '*'; duplicate '*' rows collapse to their minimum. Every host named
+    by either table gets a row, and resolve_host_policy returns the same
+    rows without '*' plus the '*' values as its defaults."""
+    from webscraper_spark.operators.robots import resolve_budgets, resolve_host_policy
+
+    robots = spark.createDataFrame(
+        [("slow.ex", ["/private"], 2000),  # robots delay above the '*' delay
+         ("fast.ex", [], 100),  # robots delay below the '*' delay
+         ("over.ex", None, 0),
+         ("robots-only.ex", ["/"], 0)],
+        "host string, disallow_prefixes array<string>, crawl_delay_ms long",
+    )
+    politeness = spark.createDataFrame(
+        [("*", 7, 350), ("*", 5, 400), ("over.ex", 2, 900), ("polite-only.ex", 3, 50)],
+        "host string, max_pages_per_wave long, min_delay_ms long",
+    )
+    hosts = robots.select("host").unionByName(politeness.select("host"))
+    got = {r.host: (r.disallow_prefixes, r.max_pages, r.delay_ms)
+           for r in resolve_budgets(hosts, robots, politeness).collect()}
+    assert got == {
+        "slow.ex": (["/private"], 5, 2000),
+        "fast.ex": ([], 5, 350),
+        "over.ex": (None, 2, 900),
+        "robots-only.ex": (["/"], 5, 350),
+        "polite-only.ex": (None, 3, 50),
+        "*": (None, 5, 350),
+    }
+
+    policy, defaults = resolve_host_policy(robots, politeness)
+    assert defaults == (5, 350)
+    assert {r.host: (r.disallow_prefixes, r.max_pages, r.delay_ms) for r in policy.collect()} == {
+        h: v for h, v in got.items() if h != "*"}
+
+
+def test_policy_without_star_row_uses_module_defaults(spark):
+    """No politeness '*' row at all: every host without an override, and the
+    '*' row itself, get (DEFAULT_MAX_PAGES, DEFAULT_DELAY_MS) = (40, 1000)."""
+    from webscraper_spark.operators.robots import DEFAULT_DELAY_MS, DEFAULT_MAX_PAGES, resolve_budgets
+
+    assert (DEFAULT_MAX_PAGES, DEFAULT_DELAY_MS) == (40, 1000)
+    robots = spark.createDataFrame(
+        [("a.ex", [], 0), ("b.ex", [], 1500)],
+        "host string, disallow_prefixes array<string>, crawl_delay_ms long",
+    )
+    politeness = spark.createDataFrame(
+        [("b.ex", 9, 200)], "host string, max_pages_per_wave long, min_delay_ms long",
+    )
+    got = {r.host: (r.max_pages, r.delay_ms)
+           for r in resolve_budgets(robots.select("host"), robots, politeness).collect()}
+    assert got == {"a.ex": (40, 1000), "b.ex": (9, 1500), "*": (40, 1000)}
+
+
 def test_apply_robots_matches_prefix_oracle(spark, params):
     """apply_robots keeps exactly the urls whose path starts with none of
     their host's disallow prefixes, computed in plain Python from
@@ -359,6 +414,26 @@ def test_run_crawl_restores_session_on_error(spark, inputs, tmp_path_factory, mo
         assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= cached_before
     finally:
         spark.conf.set(keys[2], prev_coalesce)
+
+
+# Spark jobs of a 2-wave crawl of the test corpus, as measured: none for the
+# host policy, the seen seed or a re-read's schema inference.
+TWO_WAVE_CRAWL_JOBS = 27
+
+
+def test_two_wave_crawl_job_count(spark, inputs, tmp_path_factory):
+    """A crawl's fixed cost is mostly its Spark jobs: a 2-wave crawl runs at
+    most TWO_WAVE_CRAWL_JOBS of them."""
+    sc = spark.sparkContext
+    group = "test_two_wave_crawl_job_count"
+    sc.setJobGroup(group, "2-wave crawl")
+    try:
+        paths = run_crawl(spark, *inputs, str(tmp_path_factory.mktemp("ckpt_jobs")), CrawlConfig(max_waves=2))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert json.loads(paths["waves"]) == [0, 1]
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= TWO_WAVE_CRAWL_JOBS
 
 
 def test_extract_partitions_sizing():

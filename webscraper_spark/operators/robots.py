@@ -5,15 +5,17 @@ The reference ignores robots entirely (its site served a placeholder,
 (car_dealers_controller.rb:156 `sleep(1)`); north_rule adds real robots
 enforcement + per-host delays. Both live in ONE host-keyed policy table
 (host, disallow_prefixes, max_pages, delay_ms): the rules tables are tiny
-relative to the frontier, so a crawl resolves the table once on the driver
-and each wave joins it once, as a broadcast, before ranking.
+relative to the frontier, so a crawl collects them (one small scan each)
+and resolves the table once, in plain Python on the driver, with no Spark
+plan; each wave joins it once, as a broadcast, before ranking.
 """
 
 from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from webscraper_spark.functions.canon import url_path
@@ -21,6 +23,13 @@ from webscraper_spark.functions.canon import url_path
 # Politeness when the politeness table carries no '*' row at all.
 DEFAULT_MAX_PAGES = 40
 DEFAULT_DELAY_MS = 1000
+
+POLICY_SCHEMA = pa.schema([
+    ("host", pa.string()),
+    ("disallow_prefixes", pa.list_(pa.string())),
+    ("max_pages", pa.int64()),
+    ("delay_ms", pa.int64()),
+])
 
 
 def robots_blocked(url: Column, disallow: Column) -> Column:
@@ -47,6 +56,47 @@ def apply_robots(candidates: DataFrame, robots: DataFrame) -> DataFrame:
     return joined.filter(~robots_blocked(F.col("url"), F.col("r_disallow"))).drop("r_host", "r_disallow")
 
 
+def _resolve(hosts: list[str], robots: list[Row], politeness: list[Row]) -> tuple[list[tuple], tuple[int, int]]:
+    """The policy rules on collected rows: (host, disallow_prefixes,
+    max_pages, delay_ms) for each named host, and the '*' defaults
+    (max_pages, delay_ms). Raises ValueError when robots or politeness has
+    more than one row for a named host."""
+    dups = sorted({h for rows in (robots, politeness)
+                   for h, n in Counter(r.host for r in rows if r.host not in ("*", None)).items() if n > 1})
+    if dups:
+        raise ValueError(f"more than one robots or politeness row for host(s): {', '.join(dups)}")
+    rules = {r.host: r for r in robots}
+    overrides = {r.host: r for r in politeness if r.host != "*"}
+    star = [r for r in politeness if r.host == "*"]
+    d_max = min((r.max_pages_per_wave for r in star if r.max_pages_per_wave is not None), default=DEFAULT_MAX_PAGES)
+    d_delay = min((r.min_delay_ms for r in star if r.min_delay_ms is not None), default=DEFAULT_DELAY_MS)
+    out = []
+    for h in sorted(set(hosts) - {"*", None}):
+        r, o = rules.get(h), overrides.get(h)
+        o_max, o_delay = (o.max_pages_per_wave, o.min_delay_ms) if o else (None, None)
+        r_disallow, r_delay = (r.disallow_prefixes, r.crawl_delay_ms) if r else (None, None)
+        out.append((
+            h,
+            r_disallow,
+            d_max if o_max is None else o_max,
+            max(d_delay if o_delay is None else o_delay, r_delay or 0),
+        ))
+    return out, (d_max, max(d_delay, 0))
+
+
+def _collect(robots: DataFrame, politeness: DataFrame) -> tuple[list[Row], list[Row]]:
+    return (
+        robots.select("host", "disallow_prefixes", "crawl_delay_ms").collect(),
+        politeness.select("host", "max_pages_per_wave", "min_delay_ms").collect(),
+    )
+
+
+def _policy_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """A driver-local relation: its broadcast runs no Spark job."""
+    return spark.createDataFrame(pa.Table.from_pylist([dict(zip(POLICY_SCHEMA.names, r)) for r in rows],
+                                                      schema=POLICY_SCHEMA))
+
+
 def resolve_budgets(hosts: DataFrame, robots: DataFrame, politeness: DataFrame) -> DataFrame:
     """Per-host policy: (host, disallow_prefixes, max_pages, delay_ms).
 
@@ -60,61 +110,23 @@ def resolve_budgets(hosts: DataFrame, robots: DataFrame, politeness: DataFrame) 
     defaults, not hardcoded fallbacks. Duplicate '*' rows collapse to their
     minimum; no '*' row at all means (DEFAULT_MAX_PAGES, DEFAULT_DELAY_MS).
     """
-    default_row = politeness.filter(F.col("host") == "*").groupBy().agg(
-        F.coalesce(F.min("max_pages_per_wave"), F.lit(DEFAULT_MAX_PAGES).cast("long")).alias("d_max"),
-        F.coalesce(F.min("min_delay_ms"), F.lit(DEFAULT_DELAY_MS).cast("long")).alias("d_delay"),
-    )
-    overrides = politeness.filter(F.col("host") != "*").select(
-        F.col("host").alias("o_host"),
-        F.col("max_pages_per_wave").alias("o_max"),
-        F.col("min_delay_ms").alias("o_delay"),
-    )
-    rd = robots.select(F.col("host").alias("rb_host"), "disallow_prefixes", "crawl_delay_ms")
-    named = hosts.filter(F.col("host") != "*")
-    out = (
-        named.crossJoin(F.broadcast(default_row))
-        .join(F.broadcast(overrides), named["host"] == overrides["o_host"], "left")
-        .join(F.broadcast(rd), named["host"] == rd["rb_host"], "left")
-        .select(
-            "host",
-            "disallow_prefixes",
-            F.coalesce(F.col("o_max"), F.col("d_max")).alias("max_pages"),
-            F.greatest(
-                F.coalesce(F.col("o_delay"), F.col("d_delay")),
-                F.coalesce(F.col("crawl_delay_ms"), F.lit(0)),
-            ).alias("delay_ms"),
-        )
-    )
-    star = default_row.select(
-        F.lit("*").alias("host"),
-        F.lit(None).cast("array<string>").alias("disallow_prefixes"),
-        F.col("d_max").alias("max_pages"),
-        F.greatest(F.col("d_delay"), F.lit(0)).alias("delay_ms"),
-    )
-    return out.unionByName(star)
+    rows, (d_max, d_delay) = _resolve([r.host for r in hosts.select("host").collect()], *_collect(robots, politeness))
+    return _policy_frame(politeness.sparkSession, [*rows, ("*", None, d_max, d_delay)])
 
 
 def resolve_host_policy(robots: DataFrame, politeness: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
     """The crawl's host policy, resolved once per crawl on the driver.
 
-    Returns (table, (default_max_pages, default_delay_ms)): the table holds
-    every host named by robots or politeness and is a driver-local relation
-    (its broadcast runs no Spark job), and the '*' defaults come back as
-    plain values for schedule_ranked to apply as literals. A broadcast table
-    passes through the driver anyway; collecting it once replaces a
-    broadcast job per table per wave.
+    Collects the two input tables (one small scan each) and applies
+    resolve_budgets' rules to every host they name. Returns (table,
+    (default_max_pages, default_delay_ms)): the table is a driver-local
+    relation (its broadcast runs no Spark job), and the '*' defaults come
+    back as plain values for schedule_ranked to apply as literals.
 
     Raises ValueError when robots or politeness has more than one row for a
-    host: the joins would give that host one policy row per pair of its
-    rows, and every candidate of the host would be scheduled once per row.
-    Duplicate '*' rows are allowed and collapse to their minimum."""
-    spark = politeness.sparkSession
-    hosts = robots.select("host").unionByName(politeness.select("host")).distinct()
-    policy = resolve_budgets(hosts, robots, politeness).toArrow()
-    host_names = policy.column("host").to_pylist()
-    dups = sorted(h for h, n in Counter(host_names).items() if n > 1)
-    if dups:
-        raise ValueError(f"more than one robots or politeness row for host(s): {', '.join(dups)}")
-    star = host_names.index("*")
-    defaults = (policy.column("max_pages")[star].as_py(), policy.column("delay_ms")[star].as_py())
-    return spark.createDataFrame(policy.filter([h != "*" for h in host_names])), defaults
+    host: the policy join would give that host one policy row per pair of
+    its rows, and every candidate of the host would be scheduled once per
+    row. Duplicate '*' rows are allowed and collapse to their minimum."""
+    robots_rows, politeness_rows = _collect(robots, politeness)
+    rows, defaults = _resolve([r.host for r in robots_rows + politeness_rows], robots_rows, politeness_rows)
+    return _policy_frame(politeness.sparkSession, rows), defaults

@@ -3,8 +3,12 @@
 The reference avoids re-visits only through loop structure (each ad visited
 once per harvested list, cars_controller.rb:147) — re-runs duplicate whole
 files (12x AH-SCHACHTSCHNEIDER CSVs in the reference's lib/data/). Here the
-seen set is the union of every completed wave's fetched urls, and a wave's
-candidates are the frontier rows whose url is not in it.
+seen set is every completed wave's fetched urls, and a wave's candidates
+are the frontier rows whose url is not in it. The crawl reads the seen side
+straight from those waves' `fetched` parquet with an explicit `url string`
+schema: no schema-inference job, and known file sizes, so the planner
+broadcasts a small seen set without a runtime re-plan. A wave with no
+completed wave before it has no seen side and skips the join.
 
 Catalyst's runtime bloom filter (spark.sql.optimizer.runtime.bloomFilter,
 on by default) already prunes the probe side of this join when the seen

@@ -5,11 +5,14 @@ job"), mirroring the reference's page-batch loop
 (/root/reference/app/controllers/cars_controller.rb:140-337) as batch waves:
 
   once per crawl:
-    host policy = robots rules + budgets + delays per host, resolved on the
-    driver; the politeness '*' defaults become literals      (ST1, ST6)
+    host policy = robots rules + budgets + delays per host, resolved in
+    plain Python on the driver from the two collected rules tables; the
+    politeness '*' defaults become literals                  (ST1, ST6)
 
   wave w:
     1. candidates = frontier ANTI-JOIN seen            (J1)
+       seen = the `fetched` urls of every completed wave, read back from
+       their parquet files; wave 0 of a fresh crawl has none and skips it
     2. ONE broadcast join of the host policy: robots filter, then
        per-host rank, then budget gate + simulated clock  (ST6, W1-W4, ST1)
     3. barrier: one aggregate over the persisted schedule materializes it
@@ -20,11 +23,13 @@ job"), mirroring the reference's page-batch loop
        partitions, not one task per corpus scan split
     6. new frontier = outlinks canonicalized, deduped, minus seen  (S3-S5)
     7. checkpoint: fetched + frontier parquet + manifest
-       -> any wave is resumable (ST3/ST5)
+       -> any wave is resumable (ST3/ST5); every re-read of them names its
+       schema, so none runs a schema-inference job
 
 Every wave materializes its state to parquet: that is simultaneously the
 checkpoint, the lineage truncation (iterative plans would otherwise grow
-unboundedly), and at cluster scale the bucketed seen-table append.
+unboundedly), and at cluster scale the bucketed seen-table append. A fresh
+crawl and a resumed one build the seen set the same way, from those files.
 
 Determinism: discovery position disc_pos = parent_rank * 1024 + link_pos,
 ordering key (depth, disc_wave, disc_pos, url) — a total order, independent
@@ -52,6 +57,12 @@ from webscraper_spark.operators.schedule import schedule_ranked
 from webscraper_spark.operators.seen import anti_join_seen
 
 MAX_LINKS_PER_PAGE = 1024
+
+# Columns of the order table, as the `fetched` files store them.
+ORDER_SCHEMA = "url string, host string, wave int, rank int, sched_ms long"
+
+# Columns of a frontier table: the seeds' and every wave's checkpoint.
+FRONTIER_SCHEMA = "url string, host string, depth int, disc_wave int, disc_pos long"
 
 RESULT_COLS = [
     "url", "host", "wave", "rank", "sched_ms", "depth", "fetch_status",
@@ -270,15 +281,15 @@ def run_crawl(
 
     if completed:
         start_wave = max(completed) + 1
-        frontier = spark.read.parquet(os.path.join(_wave_dir(ckpt_dir, max(completed)), "frontier"))
+        frontier_dir = os.path.join(_wave_dir(ckpt_dir, max(completed)), "frontier")
+        frontier = spark.read.schema(FRONTIER_SCHEMA).parquet(frontier_dir)
         # frontier row count for free from the checkpoint's parquet footers
-        n_frontier = _parquet_rows(os.path.join(_wave_dir(ckpt_dir, max(completed)), "frontier"))
-        seen = spark.read.parquet(*fetched_paths(ckpt_dir, completed)).select("url")
+        n_frontier = _parquet_rows(frontier_dir)
     else:
         start_wave = 0
         frontier = seeds_to_frontier(seeds)
-        n_frontier = frontier.count()  # seed-table-sized job, milliseconds
-        seen = spark.createDataFrame([], "url string")
+        # not counted: an empty seed set ends the crawl at the schedule barrier
+        n_frontier = None
 
     # robots rules + budgets + delays of every known host, resolved ONCE per
     # crawl into a driver-local table; its '*' defaults become literals.
@@ -302,16 +313,22 @@ def run_crawl(
     sched = None
     try:
         for wave in range(start_wave, cfg.max_waves):
-            # Empty frontier = crawl done, known from parquet footers (or the
-            # seed count) with ZERO Spark jobs.
+            # Empty frontier = crawl done, known from parquet footers with
+            # ZERO Spark jobs.
             if n_frontier == 0:
                 break
             wdir = _wave_dir(ckpt_dir, wave)
             os.makedirs(wdir, exist_ok=True)
             tw = time.time()
 
-            # 1. candidates minus seen
-            cand = anti_join_seen(frontier, seen)
+            # 1. candidates minus seen, the fetched urls of every completed
+            # wave. Read from parquet, the seen side has known file sizes, so
+            # the planner can broadcast it from the start.
+            if completed:
+                seen = spark.read.schema("url string").parquet(*fetched_paths(ckpt_dir, completed))
+                cand = anti_join_seen(frontier, seen)
+            else:
+                cand = frontier
 
             # 2-3. one broadcast join of the host policy: robots filter, then
             # rank, then budget gate + simulated politeness clock.
@@ -397,7 +414,7 @@ def run_crawl(
             # sort-before-repartition + a full shuffle of those bytes.)
             fetched.write.mode("overwrite").parquet(os.path.join(wdir, "fetched"))
             tw = _tick(f"w{wave} fetch+extract+write", tw)
-            fetched = spark.read.parquet(os.path.join(wdir, "fetched"))
+            fetched = spark.read.schema(fetched.schema).parquet(os.path.join(wdir, "fetched"))
             tw = _tick(f"w{wave} fetched-footers+reread", tw)
 
             # 6. outlinks -> next frontier. seen/order/results are all
@@ -405,7 +422,6 @@ def run_crawl(
             # writes (order is finalized ONCE after the loop; at 10^10 scale
             # these are metadata-only views over the wave files).
             new_cand = expand_outlinks(fetched, wave)
-            seen_delta = fetched.select("url")
 
             # No seen anti-join here: already-fetched urls are eliminated by
             # the next wave's anti-join anyway, and filtering now would
@@ -420,9 +436,8 @@ def run_crawl(
             completed.append(wave)
             _write_manifest(ckpt_dir, completed)
 
-            frontier = spark.read.parquet(os.path.join(wdir, "frontier"))
+            frontier = spark.read.schema(FRONTIER_SCHEMA).parquet(os.path.join(wdir, "frontier"))
             n_frontier = _parquet_rows(os.path.join(wdir, "frontier"))
-            seen = seen.unionByName(seen_delta)
             tw = _tick(f"w{wave} manifest+frontier-footers", tw)
 
         paths = _finalize(spark, ckpt_dir, completed)
@@ -457,7 +472,6 @@ def _finalize(spark: SparkSession, ckpt_dir: str, completed: list[int]) -> dict[
     # a persist() of the wave files here is a trap (columnar-cache build of
     # the array columns cost 410s of GC at sf0.4 — a parquet re-scan is far
     # cheaper than caching fat rows).
-    spark.read.parquet(*fetched_paths(ckpt_dir, completed)).select(
-        "url", "host", "wave", F.col("rank").cast("int").alias("rank"), "sched_ms"
-    ).write.mode("overwrite").parquet(order)
+    rows = spark.read.schema(ORDER_SCHEMA).parquet(*fetched_paths(ckpt_dir, completed))
+    rows.write.mode("overwrite").parquet(order)
     return paths
