@@ -49,23 +49,16 @@ def test_corpus_urls_already_canonical(spark, corpus_dir):
 
 
 def test_arrow_engine_matches_native(spark, corpus_dir):
-    """_canon_host_py (the canonicalizer inside the Arrow extraction UDF)
-    must equal canonicalize_url/url_host on every outlink in the corpus plus
-    the edge cases."""
-    from webscraper_spark.functions.canon import _canon_host_py
+    """_canonicalize_py (the canonicalizer inside the Arrow extraction UDF)
+    must equal canonicalize_url on every outlink in the corpus plus the edge
+    cases."""
+    from webscraper_spark.functions.canon import _canonicalize_py
     from webscraper_spark.functions.extract_pandas import with_extraction_arrow
 
     pages = spark.read.parquet(corpus_dir["pages"])
     links = with_extraction_arrow(pages).select(F.explode("x_outlinks").alias("raw"))
     edge = spark.createDataFrame([(c,) for c in CASES], "raw string")
-    rows = links.unionByName(edge).select(
-        "raw",
-        canonicalize_url(F.col("raw")).alias("n_url"),
-        url_host(canonicalize_url(F.col("raw"))).alias("n_host"),
-    ).collect()
+    rows = links.unionByName(edge).select("raw", canonicalize_url(F.col("raw")).alias("n_url")).collect()
     assert len(rows) > len(CASES)
-    bad = [
-        r for r in rows
-        if ((None, None) if r.raw is None else _canon_host_py(r.raw)) != (r.n_url, r.n_host)
-    ]
+    bad = [r for r in rows if (None if r.raw is None else _canonicalize_py(r.raw)) != r.n_url]
     assert not bad, bad[:5]

@@ -99,7 +99,6 @@ def test_outlinks_in_document_order(spark):
     row = with_extraction_arrow(df).collect()[0]
     assert row.x_outlinks == ["https://h.example/b", "https://h.example/a"]
     assert row.x_outlinks_canon == ["https://h.example/b", "https://h.example/a"]
-    assert row.x_outlink_hosts == ["h.example", "h.example"]
 
 
 def test_null_and_fieldless_html(spark):
@@ -113,7 +112,7 @@ def test_null_and_fieldless_html(spark):
     assert {n: rows["u1"][n] for n in names} == dict.fromkeys(names)
     assert rows["u1"].x_status == "err"
 
-    arrays = ["x_features", "x_images", "x_outlinks", "x_outlinks_canon", "x_outlink_hosts"]
+    arrays = ["x_features", "x_images", "x_outlinks", "x_outlinks_canon"]
     blank = rows["u2"]
     assert blank.x_attr_map == {}
     assert {n: blank[n] for n in arrays} == {n: [] for n in arrays}

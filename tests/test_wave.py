@@ -416,9 +416,81 @@ def test_run_crawl_restores_session_on_error(spark, inputs, tmp_path_factory, mo
         spark.conf.set(keys[2], prev_coalesce)
 
 
+def test_merge_frontier_keeps_min_record_per_url(spark):
+    """merge_frontier is the frontier's one dedup: one row per url with the
+    minimal (depth, disc_wave, disc_pos) over the deferred rows and the raw
+    outlink records, and the host of the url itself (port stripped)."""
+    from webscraper_spark.oracle.seq_oracle import host_of
+    from webscraper_spark.plans.wave import merge_frontier
+
+    deferred = spark.createDataFrame(
+        [("https://a.example/p", "a.example", 2, 1, 5)],
+        "url string, host string, depth int, disc_wave int, disc_pos long",
+    )
+    links = spark.createDataFrame(
+        [("https://a.example/p", 1, 2, 9000),
+         ("https://b.example:8080/x", 2, 2, 1025),
+         ("https://a.example/p", 1, 2, 3000)],
+        "url string, depth int, disc_wave int, disc_pos long",
+    )
+    got = merge_frontier(deferred, links).collect()
+    assert sorted((r.url, r.host, r.depth, r.disc_wave, r.disc_pos) for r in got) == [
+        ("https://a.example/p", "a.example", 1, 2, 3000),
+        ("https://b.example:8080/x", "b.example", 2, 2, 1025),
+    ]
+    assert all(r.host == host_of(r.url) for r in got)
+
+
+def test_crawl_stops_on_empty_batch_fresh_and_resumed(spark, inputs, tmp_path_factory, monkeypatch):
+    """Seeds whose pages carry no outlinks (a missing page and a detail page
+    without links) leave an empty frontier: the crawl ends after wave 0 at
+    the schedule barrier, leaving no wave=1 dir, and a resume with more waves
+    allowed runs no new wave and changes neither the manifest nor the
+    order."""
+    import os
+    from pathlib import Path
+
+    from webscraper_spark.oracle.seq_oracle import host_of, path_of
+
+    pages, _, robots, politeness = inputs
+    rules = {r.host: list(r.disallow_prefixes or []) for r in robots.collect()}
+    detail = next(
+        r.url for r in pages.filter(~F.col("html").cast("string").contains('href="')).select("url").collect()
+        if not any(path_of(r.url).startswith(p) for p in rules.get(host_of(r.url), []))
+    )
+    missing = f"https://{host_of(detail)}/ad/absent-1"
+    seeds = spark.createDataFrame([(detail,), (missing,)], "url string")
+    want_order, want_seen, _ = _oracle(pages, seeds, robots, politeness, max_waves=3)
+    assert want_seen == {detail: 0, missing: 0}
+
+    ckpt = str(tmp_path_factory.mktemp("ckpt_stop"))
+    manifest = Path(ckpt, "manifest.json")
+
+    def wave_dirs():
+        return sorted(d for d in os.listdir(ckpt) if d.startswith("wave="))
+
+    paths = run_crawl(spark, pages, seeds, robots, politeness, ckpt, CrawlConfig(max_waves=3))
+    assert json.loads(paths["waves"]) == [0]
+    order = {(r.url, r.host, r.wave, r.rank) for r in spark.read.parquet(paths["order"]).collect()}
+    assert order == set(want_order)
+    written = manifest.read_text()
+    assert wave_dirs() == ["wave=0"]
+
+    def boom(*_a, **_k):
+        raise AssertionError("a resumed crawl with an empty frontier fetched a wave")
+
+    monkeypatch.setattr(wave_mod, "with_extraction_arrow", boom)
+    paths = run_crawl(spark, pages, seeds, robots, politeness, ckpt, CrawlConfig(max_waves=6), resume=True)
+    assert json.loads(paths["waves"]) == [0]
+    assert manifest.read_text() == written
+    assert {(r.url, r.host, r.wave, r.rank) for r in spark.read.parquet(paths["order"]).collect()} == order
+    assert wave_dirs() == ["wave=0"]
+
+
 # Spark jobs of a 2-wave crawl of the test corpus, as measured: none for the
-# host policy, the seen seed or a re-read's schema inference.
-TWO_WAVE_CRAWL_JOBS = 27
+# host policy, the seen seed or a re-read's schema inference, and one url
+# aggregate per wave for the next frontier.
+TWO_WAVE_CRAWL_JOBS = 25
 
 
 def test_two_wave_crawl_job_count(spark, inputs, tmp_path_factory):

@@ -69,19 +69,16 @@ _URL_RE_PY = _re.compile(r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://([^/?#]*)([^?#]*)(\?[^#
 _PORT_RE_PY = _re.compile(r":[0-9]+$")
 
 
-def _canon_host_py(u: str) -> tuple[str, str]:
+def _canonicalize_py(u: str) -> str:
     u = u.strip(" ")  # F.trim strips spaces only
     m = _URL_RE_PY.match(u)
     if not m:
-        return u, ""
+        return u
     scheme = m.group(1).lower()
     auth = m.group(2).lower()
     if (scheme == "https" and auth.endswith(":443")) or (scheme == "http" and auth.endswith(":80")):
         auth = _PORT_RE_PY.sub("", auth)
-    host = _PORT_RE_PY.sub("", auth)
     path = m.group(3) or "/"
-    if path == "":
-        path = "/"
     q = m.group(4) or ""
     q = "?" + "&".join(sorted(q[1:].split("&"))) if len(q) > 1 else ""
-    return f"{scheme}://{auth}{path}{q}", host
+    return f"{scheme}://{auth}{path}{q}"

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from webscraper_spark.functions.canon import _canon_host_py
+from webscraper_spark.functions.canon import _canonicalize_py
 
 _S = lambda: T.StringType()  # noqa: E731
 X_STRUCT = T.StructType(
@@ -51,11 +51,10 @@ X_STRUCT = T.StructType(
         T.StructField("x_quantity_ratings", _S()),
         T.StructField("x_pubdate", _S()),
         T.StructField("x_outlinks", T.ArrayType(_S())),
-        # canonical form + host per outlink, computed IN the same UDF pass:
-        # chaining a second pandas UDF behind this one doubles the Python
-        # worker set per task and was measured to anti-scale 3x at local[32]
+        # canonical form of each outlink, computed in the same UDF pass: a
+        # second pandas UDF chained behind this one would add a Python
+        # worker per task
         T.StructField("x_outlinks_canon", T.ArrayType(_S())),
-        T.StructField("x_outlink_hosts", T.ArrayType(_S())),
         T.StructField("x_is_listing", T.BooleanType()),
     ]
 )
@@ -115,11 +114,7 @@ def extract_all_udf(html_s: pd.Series) -> pd.DataFrame:
     attr_map = [dict(zip(a, b)) if a is not None else None for a, b in zip(dts, dds)]
     imgs = [["https:" + u for u in lst] if lst is not None else None for lst in findall(h, _P["img"])]
     outlinks = findall(h, _P["href"])
-    canon_pairs = [
-        [(_canon_host_py(u)) for u in lst] if lst is not None else None for lst in outlinks
-    ]
-    canon_urls = [[p[0] for p in lst] if lst is not None else None for lst in canon_pairs]
-    canon_hosts = [[p[1] for p in lst] if lst is not None else None for lst in canon_pairs]
+    canon_urls = [[_canonicalize_py(u) for u in lst] if lst is not None else None for lst in outlinks]
 
     out = pd.DataFrame(
         {
@@ -151,7 +146,6 @@ def extract_all_udf(html_s: pd.Series) -> pd.DataFrame:
             "x_pubdate": _x1(h, _P["pubdate"]),
             "x_outlinks": outlinks,
             "x_outlinks_canon": canon_urls,
-            "x_outlink_hosts": canon_hosts,
             "x_is_listing": h.str.contains('<ul class="resultList">', regex=False).astype(object).where(h.notna(), None),
         }
     )

@@ -21,10 +21,15 @@ job"), mirroring the reference's page-batch loop
     5. extract fields/outlinks, quarantine errors      (P1/P2/P5, F1-F19),
        in a stage sized to the batch: max(slots, ceil(rows / rows_per_task))
        partitions, not one task per corpus scan split
-    6. new frontier = outlinks canonicalized, deduped, minus seen  (S3-S5)
+    6. new frontier = deferred rows + canonical outlinks, one aggregate
+       per url keeping the minimal discovery record  (S3-S5); the next
+       wave's step 1 takes out the seen urls
     7. checkpoint: fetched + frontier parquet + manifest
        -> any wave is resumable (ST3/ST5); every re-read of them names its
        schema, so none runs a schema-inference job
+
+The crawl ends at max_waves or at a wave whose schedule holds no in-budget
+row (step 3), whether the crawl is fresh or resumed.
 
 Every wave materializes its state to parquet: that is simultaneously the
 checkpoint, the lineage truncation (iterative plans would otherwise grow
@@ -97,22 +102,6 @@ class CrawlConfig:
     max_waves: int = 16
     # Pages is a bucketed catalog table: selects BUCKETED_BROADCAST_BATCH_MAX.
     corpus_bucketed: bool = False
-
-
-def _parquet_rows(path: str) -> int:
-    """Row count from parquet footers — zero Spark jobs. Footer reads are
-    fanned out over a thread pool: with ~1 scan split per core the wave
-    files number in the hundreds, and a serial driver loop over them was a
-    measurable slice of the per-wave serial floor (round-3 verdict)."""
-    import pyarrow.parquet as pq
-
-    files = [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
-    if len(files) > 8:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(32, len(files))) as pool:
-            return sum(pool.map(lambda p: pq.read_metadata(p).num_rows, files))
-    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 # Rows one extraction task takes: two Arrow batches of the session's
@@ -212,40 +201,30 @@ def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
     )
 
 
+DISCOVERY_COLS = ["url", "depth", "disc_wave", "disc_pos"]
+
+
 def expand_outlinks(fetched: DataFrame, wave: int) -> DataFrame:
-    """Outlinks of fetched pages -> new frontier candidates (dedup by url,
-    keeping the minimal (depth, disc_wave, disc_pos) discovery record)."""
-    links = (
-        fetched.filter(F.col("x_outlinks_canon").isNotNull() & (F.size("x_outlinks_canon") > 0))
-        .select(
-            F.col("depth").alias("p_depth"),
-            F.col("rank").alias("p_rank"),
-            # canonical url + host were computed inside the extraction UDF
-            # (one compiled-regex match per URL, zero extra Python stages —
-            # a chained canon UDF here doubled the per-task Python worker
-            # set and anti-scaled 3x at local[32])
-            F.posexplode(F.arrays_zip("x_outlinks_canon", "x_outlink_hosts")).alias("link_pos", "lk"),
-        )
-        .select(
-            F.col("lk.x_outlinks_canon").alias("url"),
-            F.col("lk.x_outlink_hosts").alias("host"),
-            (F.col("p_depth") + 1).cast("int").alias("depth"),
-            F.lit(wave + 1).cast("int").alias("disc_wave"),
-            (F.col("p_rank").cast("long") * MAX_LINKS_PER_PAGE
-             + F.least(F.col("link_pos").cast("long"), F.lit(MAX_LINKS_PER_PAGE - 1))).alias("disc_pos"),
-        )
+    """One discovery record (url, depth, disc_wave, disc_pos) per outlink of
+    the fetched pages, in link order. Not deduped: merge_frontier does that.
+    The urls were canonicalized inside the extraction UDF."""
+    return fetched.select(
+        F.col("depth").alias("p_depth"),
+        F.col("rank").alias("p_rank"),
+        F.posexplode("x_outlinks_canon").alias("link_pos", "url"),
+    ).select(
+        "url",
+        (F.col("p_depth") + 1).cast("int").alias("depth"),
+        F.lit(wave + 1).cast("int").alias("disc_wave"),
+        (F.col("p_rank").cast("long") * MAX_LINKS_PER_PAGE
+         + F.least(F.col("link_pos").cast("long"), F.lit(MAX_LINKS_PER_PAGE - 1))).alias("disc_pos"),
     )
-    dedup = (
-        links.groupBy("url")
-        .agg(F.min(F.struct("depth", "disc_wave", "disc_pos")).alias("m"), F.max("host").alias("host"))
-        .select("url", "host", F.col("m.depth").alias("depth"), F.col("m.disc_wave").alias("disc_wave"),
-                F.col("m.disc_pos").alias("disc_pos"))
-    )
-    return dedup
 
 
 def merge_frontier(deferred: DataFrame, new_cand: DataFrame) -> DataFrame:
-    both = deferred.unionByName(new_cand)
+    """The next frontier: deferred rows and outlink records, one row per url
+    with its minimal (depth, disc_wave, disc_pos) and the url's host."""
+    both = deferred.select(*DISCOVERY_COLS).unionByName(new_cand.select(*DISCOVERY_COLS))
     return (
         both.groupBy("url")
         .agg(F.min(F.struct("depth", "disc_wave", "disc_pos")).alias("m"))
@@ -283,13 +262,9 @@ def run_crawl(
         start_wave = max(completed) + 1
         frontier_dir = os.path.join(_wave_dir(ckpt_dir, max(completed)), "frontier")
         frontier = spark.read.schema(FRONTIER_SCHEMA).parquet(frontier_dir)
-        # frontier row count for free from the checkpoint's parquet footers
-        n_frontier = _parquet_rows(frontier_dir)
     else:
         start_wave = 0
         frontier = seeds_to_frontier(seeds)
-        # not counted: an empty seed set ends the crawl at the schedule barrier
-        n_frontier = None
 
     # robots rules + budgets + delays of every known host, resolved ONCE per
     # crawl into a driver-local table; its '*' defaults become literals.
@@ -313,10 +288,6 @@ def run_crawl(
     sched = None
     try:
         for wave in range(start_wave, cfg.max_waves):
-            # Empty frontier = crawl done, known from parquet footers with
-            # ZERO Spark jobs.
-            if n_frontier == 0:
-                break
             wdir = _wave_dir(ckpt_dir, wave)
             os.makedirs(wdir, exist_ok=True)
             tw = time.time()
@@ -347,17 +318,17 @@ def run_crawl(
             # COLD cache at once and duplicate/serialize the whole schedule
             # computation: measured 115.2s -> 61.9s for the sf0.4 crawl at
             # local[8]. The count it returns sizes the fetch stage below,
-            # picks the fetch-join strategy and ends the crawl on an empty
-            # batch before any fetch job is submitted.
+            # picks the fetch-join strategy and is the crawl's one stop
+            # condition: an empty batch (empty frontier, or every row seen
+            # or robots-filtered) ends it before any fetch job is submitted.
             sched = schedule_ranked(cand, policy, wave, policy_defaults).persist()
             n_batch = sched.agg(F.count_if("in_budget")).first()[0]
             tw = _tick(f"w{wave} schedule+barrier", tw)
             if n_batch == 0:
-                # every frontier row was seen or robots-filtered — crawl done
                 shutil.rmtree(wdir, ignore_errors=True)
                 break
             batch = sched.filter(F.col("in_budget"))
-            deferred = sched.filter(~F.col("in_budget")).select("url", "host", "depth", "disc_wave", "disc_pos")
+            deferred = sched.filter(~F.col("in_budget"))
 
             # 4. fetch = join against the pages corpus on canonical url.
             # The batch is ALWAYS the broadcast side — never let Catalyst
@@ -417,18 +388,17 @@ def run_crawl(
             fetched = spark.read.schema(fetched.schema).parquet(os.path.join(wdir, "fetched"))
             tw = _tick(f"w{wave} fetched-footers+reread", tw)
 
-            # 6. outlinks -> next frontier. seen/order/results are all
-            # projections of the materialized `fetched` — no extra per-wave
-            # writes (order is finalized ONCE after the loop; at 10^10 scale
-            # these are metadata-only views over the wave files).
-            new_cand = expand_outlinks(fetched, wave)
-
+            # 6. deferred rows + outlinks -> next frontier, deduped by one
+            # aggregate. seen/order/results are all projections of the
+            # materialized `fetched` — no extra per-wave writes (order is
+            # finalized ONCE after the loop).
+            #
             # No seen anti-join here: already-fetched urls are eliminated by
             # the next wave's anti-join anyway, and filtering now would
             # broadcast/shuffle the whole seen set once more per wave. (The
             # frontier checkpoint may therefore carry some seen urls — the
             # crawl order/seen-set semantics are unchanged; oracle-verified.)
-            next_frontier = merge_frontier(deferred, new_cand)
+            next_frontier = merge_frontier(deferred, expand_outlinks(fetched, wave))
             next_frontier.write.mode("overwrite").parquet(os.path.join(wdir, "frontier"))
             sched.unpersist()
             tw = _tick(f"w{wave} frontier-merge+write", tw)
@@ -437,7 +407,7 @@ def run_crawl(
             _write_manifest(ckpt_dir, completed)
 
             frontier = spark.read.schema(FRONTIER_SCHEMA).parquet(os.path.join(wdir, "frontier"))
-            n_frontier = _parquet_rows(os.path.join(wdir, "frontier"))
+            # perfbench/trace.py parses this label as the manifest phase.
             tw = _tick(f"w{wave} manifest+frontier-footers", tw)
 
         paths = _finalize(spark, ckpt_dir, completed)
